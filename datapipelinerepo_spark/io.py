@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import TABLES, _fs
+from .session import local_frame
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -717,7 +718,7 @@ class TableStore:
             return None
         from pyspark.sql.types import StructType
 
-        return self.spark.createDataFrame([], StructType.fromJson(json.loads(s)))
+        return local_frame(self.spark, [], StructType.fromJson(json.loads(s)))
 
     def _widened_schema_json(self, name: str, schema) -> str:
         """The stored meta schema widened by ``schema``'s new fields
@@ -2426,8 +2427,8 @@ class TableStore:
             # semi-join against the live file list, not a 100k-literal
             # isin: the list is driver-small either way, but the join
             # keeps the plan sane at large file counts
-            live_df = self.spark.createDataFrame(
-                [(f,) for f in doc["files"]], "file string"
+            live_df = local_frame(
+                self.spark, [(f,) for f in doc["files"]], "file string"
             )
             idx = self._bloom_index_df(bdir)
             total = idx.count()
@@ -4713,8 +4714,8 @@ class TableStore:
                 )
             from pyspark.sql.types import StructType
 
-            return self.spark.createDataFrame(
-                [], StructType.fromJson(json.loads(schema_json))
+            return local_frame(
+                self.spark, [], StructType.fromJson(json.loads(schema_json))
             )
         schema_json = doc.get("schema")
         if schema_json is not None:
@@ -5004,16 +5005,22 @@ class TableStore:
         generalization of the reference's delete-then-append (S10) from
         a date slice to arbitrary keys.
 
-        Backend routing: when a lakehouse format is on the classpath
-        (Delta — see ``lakehouse_format()``), this issues a real
-        ``MERGE`` that rewrites only the files containing matched keys;
-        on plain parquet it falls back to anti-join + union + overwrite,
-        which rewrites the whole table — semantically identical,
-        operationally fine for dimension-sized tables, and the
-        documented reason a 100 TB deployment should sit on a lakehouse
-        format. The incoming batch is deduplicated on the key
-        (last-writer-wins within a batch is not defined — dropDuplicates
-        keeps one) before merging, in both backends."""
+        Routing, all semantically identical:
+
+        - Delta (a lakehouse format on the classpath, see
+          ``lakehouse_format()``): a real ``MERGE`` that rewrites only
+          the files containing matched keys.
+        - A keyed table (``overwrite_keyed``) merged on its own key:
+          only the buckets the batch's keys hash to are rewritten —
+          appended and published by manifest on a versioned table,
+          staged and swapped under a journal on an unversioned one.
+        - Any other plain-parquet table: anti-join + union + overwrite,
+          which rewrites the whole table (fine for dimension-sized
+          tables; key the table to avoid it at scale).
+
+        The incoming batch is deduplicated on the key (last-writer-wins
+        within a batch is not defined — dropDuplicates keeps one)
+        before merging, on every route."""
         keys = [key] if isinstance(key, str) else list(key)
         incoming = self._enforce_constraints(name, df).dropDuplicates(keys)
         # MERGE only on tables that ARE Delta (or don't exist yet, so
@@ -5427,7 +5434,7 @@ class TableStore:
         Returns None when a key type is outside the validated set
         (temporal/float keys carry normalization subtleties), sending
         the caller to the keyed_buckets Spark path. Probe values have
-        already passed createDataFrame's typed-schema coercion, so
+        already passed local_frame's typed-schema verification, so
         they conform to the stored key types."""
         if not types:
             return None
@@ -5518,10 +5525,9 @@ class TableStore:
         # wrong-typed probe value fails loudly at conversion instead.
         if types:
             schema = ", ".join(f"`{k}` {t}" for k, t in zip(keys, types))
-            probe = self.spark.createDataFrame(rows, schema)
         else:
-            probe = self.spark.createDataFrame(rows, keys)
-        probe = probe.dropDuplicates(keys)
+            schema = self.spark._inferSchemaFromList(rows, names=keys)
+        probe = local_frame(self.spark, rows, schema).dropDuplicates(keys)
         buckets = self._route_buckets(rows, types, _n)
         if buckets is None:
             buckets = self.keyed_buckets(name, probe)

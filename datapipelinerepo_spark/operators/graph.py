@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def connected_components(
     edges: DataFrame,
@@ -213,7 +215,7 @@ def _py_connected_components(spark, edge_rows, schema) -> DataFrame:
     # hint is gated on a FIXED row bound, not the cap (ADVICE r14:
     # driver_edge_cap is a public parameter, so a caller raising it
     # must not silently push a multi-GB relation into every executor).
-    out = spark.createDataFrame(rows, out_schema)
+    out = local_frame(spark, rows, out_schema)
     if len(rows) <= _CC_BROADCAST_ROWS_MAX:
         out = F.broadcast(out)
     return out

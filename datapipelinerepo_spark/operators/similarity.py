@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..session import local_frame
+
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
@@ -1148,7 +1150,7 @@ def kcenter_coreset(
 
     seed_rows = base.orderBy(F.col(id_col).asc()).limit(1).collect()
     if not seed_rows:
-        return spark.createDataFrame([], "sel_round int, vec_id long, d2_r6 double")
+        return local_frame(spark, [], "sel_round int, vec_id long, d2_r6 double")
     seed = seed_rows[0]
     picks = [(0, seed[id_col], 0.0)]
     cvec = [float(x) for x in seed["_v"]]
@@ -1182,8 +1184,8 @@ def kcenter_coreset(
         ).localCheckpoint(eager=False)
     # round in a Spark expression: Python's round() is banker's
     # rounding, Spark/DuckDB round half-up — they differ at exact .5
-    return spark.createDataFrame(
-        picks, "sel_round int, vec_id long, d2 double"
+    return local_frame(
+        spark, picks, "sel_round int, vec_id long, d2 double"
     ).select("sel_round", "vec_id", F.round("d2", 6).alias("d2_r6"))
 
 

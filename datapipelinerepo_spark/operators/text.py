@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 TOKEN_RE = r"\S+"
 WORD_RE = r"[A-Za-z]+"
 BPE_ISH_RE = r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"
@@ -1223,7 +1225,7 @@ def bpe_learn(
                 if batch == 1
                 else py_bpe_learn_batched(counts, n_merges, batch)
             )
-            return df.sparkSession.createDataFrame(rules, out_schema)
+            return local_frame(df.sparkSession, rules, out_schema)
     vocab = (
         wc.select(F.split(F.col("_w"), "").alias("_t"), "_n")
         .localCheckpoint(eager=False)
@@ -1286,7 +1288,7 @@ def bpe_learn(
         vocab = vocab.select(col.alias("_t"), "_n").localCheckpoint(
             eager=False
         )
-    return df.sparkSession.createDataFrame(merges, out_schema)
+    return local_frame(df.sparkSession, merges, out_schema)
 
 
 def py_bpe_learn(

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -63,3 +63,50 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples, lists, dicts or
+    Rows) typed by ``schema`` (a DDL string or a ``StructType``).
+
+    ``spark.createDataFrame(list, schema)`` pickles the rows into a
+    PythonRDD, so every evaluation of the frame runs one Python-worker
+    task per default-parallelism slot just to hand the rows back (SCALE.md
+    "Driver-built frames"). Here the rows ship as an Arrow table instead:
+    small frames plan as a local relation, and large ones (above
+    ``spark.sql.execution.arrow.localRelationThreshold``) parallelize one
+    Arrow batch per partition, cut into ``min(len(rows),
+    defaultParallelism)`` batches so a work list still fans out to
+    ``fetch_map``'s executors. Each row is checked with PySpark's own
+    type verifier first, so a wrong-typed value (``1.0`` into ``long``)
+    fails loudly as it does in ``createDataFrame``, and values convert
+    through ``StructType.toInternal`` exactly as the classic path does.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _make_type_verifier, _parse_datatype_string
+
+    struct = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    verify = _make_type_verifier(struct)
+    internal = []
+    for r in rows:
+        verify(r)
+        internal.append(struct.toInternal(r))
+    arrow_schema = to_arrow_schema(struct)
+
+    def batch(chunk):
+        # built per chunk, not sliced from one batch: PySpark's timestamp
+        # localization rejects sliced list arrays that carry nulls
+        columns = list(zip(*chunk)) if chunk else [()] * len(struct.fields)
+        return pa.RecordBatch.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+            schema=arrow_schema,
+        )
+
+    n = len(internal)
+    k = max(1, min(n, spark.sparkContext.defaultParallelism))
+    cuts = [i * n // k for i in range(k + 1)]
+    table = pa.Table.from_batches(
+        [batch(internal[lo:hi]) for lo, hi in zip(cuts, cuts[1:])], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, struct)

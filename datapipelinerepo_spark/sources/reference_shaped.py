@@ -34,6 +34,7 @@ from ..plans.pipeline import (
     monthly_quota_gate,
     watermark_gate,
 )
+from ..session import local_frame
 from .base import RetryPolicy, fetch_map
 from .html import html_records
 
@@ -99,7 +100,8 @@ class WeatherSource(DataSource):
 
     def extract(self, ctx: SourceContext) -> DataFrame:
         pull_date = ctx.clock.yesterday()
-        worklist = ctx.spark.createDataFrame(
+        worklist = local_frame(
+            ctx.spark,
             [(z, f"weather://{z}/{pull_date}") for z in self.zipcodes],
             "zip_code string, url string",
         )
@@ -139,8 +141,10 @@ class GeoSource(DataSource):
         return annual_refresh_gate(ctx.store, self.table_name, ctx.clock)
 
     def extract(self, ctx: SourceContext) -> DataFrame:
-        worklist = ctx.spark.createDataFrame(
-            [(st, f"geo://{st.lower()}") for st in self.states], "state string, url string"
+        worklist = local_frame(
+            ctx.spark,
+            [(st, f"geo://{st.lower()}") for st in self.states],
+            "state string, url string",
         )
         pages = fetch_map(worklist, "url", self.fetcher, self.policy).filter(
             F.col("payload").isNotNull()
@@ -177,7 +181,8 @@ class TeamsSource(DataSource):
         return not existence_gate(ctx.store, self.table_name) or ctx.manual
 
     def extract(self, ctx: SourceContext) -> DataFrame:
-        worklist = ctx.spark.createDataFrame(
+        worklist = local_frame(
+            ctx.spark,
             [(c, f"teams://{c.lower()}") for c in self.conferences],
             "conference string, url string",
         )
@@ -268,7 +273,7 @@ class GamesSource(DataSource):
     def extract(self, ctx: SourceContext) -> DataFrame:
         teams = ctx.store.read(self.teams_table).select("id")
         season = self.season_years(ctx)
-        years = ctx.spark.createDataFrame([(y,) for y in season], "year string")
+        years = local_frame(ctx.spark, [(y,) for y in season], "year string")
         worklist = R.driving_cross_join(teams, years).withColumn(
             "url", F.concat_ws("/", F.lit("games:/"), F.col("id"), F.col("year"))
         )
@@ -416,7 +421,7 @@ class WebsiteEventsSource(DataSource):
         return True
 
     def extract(self, ctx: SourceContext) -> DataFrame:
-        raw = ctx.spark.createDataFrame([(p,) for p in self.payloads], "data string")
+        raw = local_frame(ctx.spark, [(p,) for p in self.payloads], "data string")
         line = S.b64_decode_utf8(F.col("data"))
         return (
             raw.select(F.from_json(line, TRAFFIC_SCHEMA).alias("r"))

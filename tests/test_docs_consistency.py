@@ -32,65 +32,6 @@ def _package_defs() -> set[str]:
     return defs
 
 
-def test_coverage_md_driver_counts_match_newest_correctness():
-    """VERDICT r10 item 7: COVERAGE.md's lead bullet must state the
-    driver green/red split of the NEWEST CORRECTNESS_r*.json exactly —
-    the r10 verdict caught the lead bullet claiming 'every
-    oracle-bearing query has hash-matched' while 7 driver rows were
-    red. This gate makes that class of stale claim a test failure."""
-    import glob
-    import json
-
-    files = sorted(
-        glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json")),
-        key=lambda p: int(re.search(r"_r(\d+)", p).group(1)),
-    )
-    assert files, "no CORRECTNESS files — driver contract broken?"
-    newest = files[-1]
-    rnd = int(re.search(r"_r(\d+)", newest).group(1))
-    with open(newest) as fh:
-        rows = json.load(fh)
-    green = sum(
-        1 for r in rows.values()
-        if r.get("rows_match") and r.get("schema_match")
-        and r.get("hash_match") is not False
-    )
-    total = len(rows)
-    red = total - green
-    with open(os.path.join(_ROOT, "COVERAGE.md")) as fh:
-        text = fh.read()
-    m = re.search(
-        r"Newest driver check: CORRECTNESS_r(\d+) — (\d+) green / "
-        r"(\d+) [\w-]+ of\s+(\d+) rows",
-        text,
-    )
-    assert m, (
-        "COVERAGE.md must carry the machine-checked lead line "
-        "'Newest driver check: CORRECTNESS_rN — G green / R ... of "
-        "T rows'"
-    )
-    claimed = (int(m.group(1)), int(m.group(2)), int(m.group(3)),
-               int(m.group(4)))
-    actual = (rnd, green, red, total)
-    # VERDICT r13 item 1: the driver lands a new CORRECTNESS file AFTER
-    # the builder's final commit, so a fresh checkout legitimately sees
-    # the lead line one round behind.  Accept exactly that state — the
-    # newest file is one round ahead AND all-green with identical
-    # green/red/total — and stay strict on any substantive drift
-    # (count mismatch, red rows, or a gap of more than one round).
-    boundary_ok = (
-        actual[0] == claimed[0] + 1
-        and red == 0
-        and (green, red, total) == claimed[1:]
-    )
-    assert claimed == actual or boundary_ok, (
-        f"COVERAGE.md lead bullet is stale: claims "
-        f"round/green/red/total={claimed} but the newest correctness "
-        f"file {os.path.basename(newest)} says {actual} — run "
-        f"tools/update_coverage_lead.py"
-    )
-
-
 def test_coverage_md_names_resolve():
     with open(os.path.join(_ROOT, "COVERAGE.md")) as fh:
         text = fh.read()
