@@ -18,6 +18,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the directory holding this package, so Spark's Python workers can
+# import ``_worker_daemon`` from any working directory
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -32,6 +35,12 @@ def get_spark(
     shuffles this config requests down to what the data needs, splits
     skewed partitions) and partitionOverwriteMode=dynamic (so re-loads
     replace only the touched date partitions, not the table).
+
+    Python workers start from ``_worker_daemon``, which takes Spark's
+    pyspark/py4j zips and the spark-core jar off their ``sys.path`` (SCALE.md
+    "Python workers import pyspark unzipped"). This package's parent
+    directory is appended to ``spark.executorEnv.PYTHONPATH``, after any
+    value given in ``extra_conf``.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -60,7 +69,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    paths = [p for p in conf.get("spark.executorEnv.PYTHONPATH", "").split(os.pathsep) if p]
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(dict.fromkeys(paths + [PACKAGE_PARENT]))
+    b = b.config("spark.python.daemon.module", "datapipelinerepo_spark._worker_daemon")
+    for k, v in conf.items():
         b = b.config(k, v)
     return b.getOrCreate()
 
