@@ -3240,29 +3240,15 @@ class TableStore:
         self, name: str, version: int, doc: dict, keep: list[str]
     ) -> DataFrame:
         """Plan a logical-schema scan over a pruned subset of a
-        snapshot's files (shared by read_where and read_point): widen
-        to the manifest-recorded schema when pruning dropped every
-        file carrying a late-added column, translate physical → logical
-        names, drop the bucket column."""
-        base = self._dir(name)
-        if not keep:
-            out = self._read_manifest_df(name, version, doc=doc)
+        snapshot's files (shared by read_where and read_point), under
+        the manifest-recorded schema like ``_read_manifest_df``: no
+        footer job, and a late-added column stays in the frame even
+        when pruning dropped every file carrying it. Translates
+        physical → logical names and drops the bucket column."""
+        if keep:
+            out = self._read_manifest_df(name, version, doc={**doc, "files": keep})
         else:
-            out = (
-                self.spark.read.option("mergeSchema", "true")
-                .option("basePath", base)
-                .parquet(*[os.path.join(base, f) for f in keep])
-            )
-        schema_json = doc.get("schema")
-        if schema_json is not None:
-            from pyspark.sql.types import StructType
-
-            for fld in StructType.fromJson(json.loads(schema_json)).fields:
-                if fld.name != "_kb" and fld.name not in out.columns:
-                    out = out.withColumn(
-                        fld.name, F.lit(None).cast(fld.dataType)
-                    )
-        out = out if keep else out.limit(0)
+            out = self._read_manifest_df(name, version, doc=doc).limit(0)
         return self._to_logical(out, doc.get("colmap")).drop("_kb")
 
     def last_txn(self, name: str, app_id: str) -> int | None:

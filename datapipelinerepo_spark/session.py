@@ -21,6 +21,8 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # the directory holding this package, so Spark's Python workers can
 # import ``_worker_daemon`` from any working directory
 PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# Spark's default 100 holds under one analytics round (~400 classes): every rerun recompiled
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -41,6 +43,10 @@ def get_spark(
     "Python workers import pyspark unzipped"). This package's parent
     directory is appended to ``spark.executorEnv.PYTHONPATH``, after any
     value given in ``extra_conf``.
+
+    The generated-code cache holds ``CODEGEN_CACHE_ENTRIES`` classes, so a
+    session that reruns its query shapes compiles each one once (SCALE.md
+    "Codegen cache holds the session's query set").
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -68,6 +74,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     conf = dict(extra_conf or {})
     paths = [p for p in conf.get("spark.executorEnv.PYTHONPATH", "").split(os.pathsep) if p]

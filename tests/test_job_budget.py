@@ -1,0 +1,89 @@
+"""Spark-job budgets of the store verbs: the exact number of Spark jobs
+each verb launches on a small versioned keyed table with a bloom index.
+
+Job counts do not vary between runs, so they pin the Spark layer
+without timing noise: a verb that gains a job (a parquet footer read, a
+second evaluation of its input) fails here. Jobs are counted through a
+job group and the status tracker, which launches no job of its own."""
+
+from __future__ import annotations
+
+import uuid
+
+import pytest
+from pyspark.sql import functions as F
+
+from datapipelinerepo_spark.io import TableStore
+
+# reads collect their frame, so each count includes the scan itself
+BUDGETS = {
+    "upsert": 5,
+    "merge_when": 7,
+    "delete_where": 4,
+    "read_where": 1,
+    "read_point": 1,
+    "count_where": 2,
+}
+
+
+def _jobs(spark, fn) -> int:
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description")
+    saved = {k: sc.getLocalProperty(k) for k in keys}
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        fn()
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows(spark, lo, hi, bump=0.0):
+    return spark.range(lo, hi).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 97).alias("cust"),
+        (F.col("id") * 1.5 + bump).alias("amt"),
+    )
+
+
+@pytest.fixture(scope="module")
+def store(spark, tmp_path_factory):
+    store = TableStore(spark, str(tmp_path_factory.mktemp("budget")))
+    store.overwrite_keyed(_rows(spark, 0, 400), "t", "k", n_buckets=8, versioned=True)
+    store.build_bloom_index("t", "cust", m_bits=1 << 14)
+    return store
+
+
+@pytest.fixture(scope="module")
+def verb_jobs(spark, store):
+    """Run each verb once, in order, on one table; map verb → jobs."""
+    cdc = _rows(spark, 100, 130, 2.0).withColumn(
+        "op", F.when(F.col("k") % 3 == 0, "D").otherwise("U")
+    )
+    verbs = {
+        "upsert": lambda: store.upsert(_rows(spark, 390, 410, 1.0), "t", "k"),
+        "merge_when": lambda: store.merge_when(
+            cdc, "t", "k", when_matched_update="all",
+            when_matched_delete="s.op = 'D'",
+            when_not_matched_insert="s.op <> 'D'", source_meta_cols=["op"],
+        ),
+        "delete_where": lambda: store.delete_where("t", where={"k": slice(200, 210)}),
+        "read_where": lambda: store.read("t", where={"k": 57}).collect(),
+        "read_point": lambda: store.read_point("t", "cust", 13).collect(),
+        "count_where": lambda: store.count_where("t", {"cust": 13}),
+    }
+    return {name: _jobs(spark, fn) for name, fn in verbs.items()}
+
+
+@pytest.mark.parametrize("verb", sorted(BUDGETS))
+def test_store_verb_job_budget(verb_jobs, verb):
+    assert verb_jobs[verb] == BUDGETS[verb]
+
+
+def test_pruned_reads_plan_without_a_job(spark, store):
+    """Planning a pruned read takes its schema from the manifest, so no
+    footer job runs before the caller asks for rows."""
+    assert _jobs(spark, lambda: store.read("t", where={"k": 57}).schema) == 0
+    assert _jobs(spark, lambda: store.read_point("t", "cust", 13).schema) == 0
