@@ -55,8 +55,8 @@ def rollup_maintain(
     """Merge one delta batch into the rollup table: aggregate the batch
     to (bucket, key) partials, add them to any existing bucket rows,
     upsert the result. Buckets untouched by the delta are not read or
-    rewritten beyond the upsert's survivors pass (a real MERGE on a
-    lakehouse format touches only matching files)."""
+    rewritten beyond the upsert's survivors pass (on a keyed table the
+    upsert rewrites only the buckets the batch's keys hash to)."""
     delta = _partial(events_delta, ts_col, key_col, value_col, bucket)
     if store.exists(table):
         existing = store.read(table)

@@ -95,27 +95,6 @@ def test_upsert_null_keys_replace_not_accumulate(spark, tmp_path):
     assert store.read("t").count() == 2
 
 
-def test_upsert_delta_backend_when_available(spark, tmp_path):
-    """The MERGE INTO path runs when a lakehouse format is on the
-    classpath; in environments without delta-spark (this sandbox) the
-    parquet fallback above is the tested behavior and this case skips.
-    Both backends satisfy the same upsert contract, so the assertions
-    are identical to test_upsert_replaces_by_key."""
-    import pytest
-
-    from datapipelinerepo_spark.io import lakehouse_format
-
-    if lakehouse_format() != "delta":
-        pytest.skip("delta-spark not installed; parquet fallback covered above")
-    store = TableStore(spark, str(tmp_path))
-    base = spark.createDataFrame([(1, "a"), (2, "b")], ["id", "val"])
-    store.upsert(base, "t", "id")
-    assert (tmp_path / "t" / "_delta_log").is_dir()  # really went through Delta
-    store.upsert(spark.createDataFrame([(2, "B2"), (3, "c")], ["id", "val"]), "t", "id")
-    got = {r["id"]: r["val"] for r in store.read("t").collect()}
-    assert got == {1: "a", 2: "B2", 3: "c"}
-
-
 def test_rollup_incremental_equals_recompute(spark, sf_dir, tmp_path):
     """Continuous-aggregate contract: maintaining the rollup over delta
     batches produces exactly the full-recompute table, regardless of
@@ -3949,9 +3928,8 @@ def test_tables_and_describe_detail(spark, tmp_path):
 
 def test_describe_detail_edge_states(spark, tmp_path):
     """code-review r12 hardening: describe_detail must report (not
-    crash) through the overwrite-reset heal window, must not count
-    _delta_log checkpoints as data, and must not list a crashed
-    build's .tmp-* sidecar leftovers as indexed columns."""
+    crash) through the overwrite-reset heal window, and must not list
+    a crashed build's .tmp-* sidecar leftovers as indexed columns."""
     import os
 
     from datapipelinerepo_spark.io import TableStore
@@ -3977,20 +3955,6 @@ def test_describe_detail_edge_states(spark, tmp_path):
     d2 = store.describe_detail("kv")
     assert d2["version"] is None and d2["n_versions"] == 0
     assert d2["n_files"] > 0  # the data files still report
-
-    # delta-marked dir: format flips, log checkpoints excluded
-    store.overwrite(spark.range(5).toDF("x"), "dl")
-    log = os.path.join(str(tmp_path), "dl", "_delta_log")
-    os.makedirs(log)
-    spark.range(3).toDF("y").coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(log, "0.checkpoint.parquet")
-    )
-    d3 = store.describe_detail("dl")
-    assert d3["format"] == "delta"
-    # only the table's own parquet counts, not the checkpoint
-    plain = TableStore(spark, str(tmp_path / "p2"))
-    plain.overwrite(spark.range(5).toDF("x"), "dl2")
-    assert d3["n_files"] == plain.describe_detail("dl2")["n_files"]
 
 
 # --- r13 continuation: stats-answered scalar aggregates ---------------
@@ -4491,3 +4455,63 @@ def test_unversioned_swap_crash_recovery(spark, tmp_path):
     store.upsert(inc, "t", "k")
     got = sorted((r["k"], r["v"]) for r in store.read("t").collect())
     assert got == merged_expect
+
+
+def test_unversioned_swap_concurrent_healers(spark, tmp_path, monkeypatch):
+    """A reader heals pending swap journals at the head of read(), so
+    it can replay the same journal its writer is still replaying. Force
+    the worst interleaving: the writer's first staged-file move lands
+    between the reader's two existence probes for that move. Neither
+    healer may roll back the other's work, and the table must hold
+    exactly the merged rows afterwards."""
+    import os
+
+    from datapipelinerepo_spark import _fs
+
+    store = TableStore(spark, str(tmp_path))
+    base = spark.range(40).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+    )
+    store.overwrite_keyed(base, "t", "k", n_buckets=4)
+    inc = spark.range(10, 20).select(
+        F.col("id").alias("k"), F.lit(-1).alias("v")
+    )
+
+    real_replace, real_isfile = _fs.replace, os.path.isfile
+    pending: list[tuple[str, str]] = []
+    fired = []
+
+    def racing_isfile(path):
+        hit = real_isfile(path)
+        if pending and not fired and path in pending[0]:
+            # the writer's move lands right after this probe
+            fired.append(path)
+            real_replace(*pending[0])
+        return hit
+
+    def writer_replace(src, dst):
+        if pending or ".stagein-" not in src:
+            return real_replace(src, dst)
+        # the writer is about to move its first staged file: a reader
+        # heals the journal now (what read() runs at its head)
+        pending.append((src, dst))
+        monkeypatch.setattr(os.path, "isfile", racing_isfile)
+        try:
+            store._heal_swaps("t")
+        finally:
+            monkeypatch.setattr(os.path, "isfile", real_isfile)
+        if not fired:
+            real_replace(src, dst)
+
+    monkeypatch.setattr(_fs, "replace", writer_replace)
+    store.upsert(inc, "t", "k")
+    monkeypatch.setattr(_fs, "replace", real_replace)
+
+    assert fired, "the reader never probed the writer's first move"
+    got = sorted((r["k"], r["v"]) for r in store.read("t").collect())
+    assert got == sorted(
+        [(k, -1 if 10 <= k < 20 else k * 10) for k in range(40)]
+    )
+    assert not [
+        e for e in os.listdir(store._dir("t")) if e.startswith("._swap-")
+    ]

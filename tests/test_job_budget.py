@@ -23,6 +23,7 @@ BUDGETS = {
     "read_where": 1,
     "read_point": 1,
     "count_where": 2,
+    "update_bloom_index": 4,
 }
 
 
@@ -74,7 +75,13 @@ def verb_jobs(spark, store):
         "read_point": lambda: store.read_point("t", "cust", 13).collect(),
         "count_where": lambda: store.count_where("t", {"cust": 13}),
     }
-    return {name: _jobs(spark, fn) for name, fn in verbs.items()}
+    jobs = {name: _jobs(spark, fn) for name, fn in verbs.items()}
+    # bloom maintenance after a new write scans the files it left
+    store.upsert(_rows(spark, 410, 430, 3.0), "t", "k")
+    jobs["update_bloom_index"] = _jobs(
+        spark, lambda: store.update_bloom_index("t", "cust")
+    )
+    return jobs
 
 
 @pytest.mark.parametrize("verb", sorted(BUDGETS))

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from datapipelinerepo_spark.io import Query, read_bucketed, register_views, write_bucketed
+from datapipelinerepo_spark.io import Query, register_views, write_bucketed
 from datapipelinerepo_spark.operators import skew as K
 
 
@@ -91,14 +91,14 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path_factory):
         prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
-            joined = read_bucketed(spark, "b_orders").join(
-                read_bucketed(spark, "b_lineitem"), on="o_orderkey"
+            joined = spark.table("b_orders").join(
+                spark.table("b_lineitem"), on="o_orderkey"
             )
             plan = joined._jdf.queryExecution().executedPlan().toString()
             assert "Exchange" not in plan, "bucketed join still shuffles"
             assert joined.count() > 0
             # and the bucketed GROUP BY on the same key is shuffle-free too
-            agg = read_bucketed(spark, "b_lineitem").groupBy("o_orderkey").count()
+            agg = spark.table("b_lineitem").groupBy("o_orderkey").count()
             agg_plan = agg._jdf.queryExecution().executedPlan().toString()
             assert "Exchange" not in agg_plan
         finally:
