@@ -120,3 +120,17 @@ def touch(path: str) -> None:
 def remove(path: str) -> None:
     """Delete; FileNotFoundError when already gone."""
     os.remove(path)
+
+
+def process_start(pid: int) -> str | None:
+    """The start time (clock ticks since boot) of the live process
+    ``pid``, or None when it is gone or a zombie: with the pid it names
+    one process even after the pid is reused. The liveness channel of
+    claims held by a local process (Linux ``/proc``; elsewhere every
+    holder reads as gone)."""
+    try:
+        with open(f"/proc/{pid}/stat") as fh:
+            fields = fh.read().rsplit(")", 1)[1].split()
+    except (OSError, IndexError):
+        return None
+    return None if fields[0] in ("Z", "X") else fields[19]

@@ -442,6 +442,66 @@ def _acquire_claim(path: str, stale_s: float) -> str | None:
     return None
 
 
+# a claim body still empty after this long lost its creator between
+# the exclusive create and the write of its pid
+_EMPTY_CLAIM_S = 10.0
+
+
+def _claim_journal(claim: str) -> str | None:
+    """Hold ``claim``, the per-journal claim of an unversioned bucket
+    swap, waiting while another live process or thread holds it.
+
+    The body is ``<pid>:<start>:<thread>:<uuid>``, created exclusive
+    through ``_fs.put_if_absent`` (``O_CREAT|O_EXCL``); ``start`` is the
+    holder's ``_fs.process_start``, so a reused pid does not keep a
+    dead holder's claim alive. Returns the claim's identity token, or
+    None when this thread already holds it (a heal nested in the same
+    thread's replay). A claim whose holder is dead is taken over with
+    ``_acquire_claim``'s steal: an atomic rename to a unique grave, and
+    a restore when the grave turns out to hold a different (live) body
+    than the dead one read before the rename."""
+    import threading
+    import uuid
+
+    pid = os.getpid()
+    me = f"{pid}:{_fs.process_start(pid)}:{threading.get_ident()}"
+    while True:
+        tok = _fs.put_if_absent(claim, f"{me}:{uuid.uuid4().hex}".encode())
+        if tok is not None:
+            return tok
+        try:
+            with open(claim) as fh:
+                body = fh.read()
+            age = time.time() - _fs.mtime(claim)
+        except FileNotFoundError:
+            continue  # released between the create and the read
+        holder = body.rsplit(":", 1)[0]
+        if holder == me:
+            return None
+        other, start = (holder.split(":") + ["", ""])[:2]
+        live = other.isdigit() and _fs.process_start(int(other)) == start
+        if live or (not body and age < _EMPTY_CLAIM_S):
+            time.sleep(0.01)
+            continue
+        grave = f"{claim}.stolen-{uuid.uuid4().hex}"
+        try:
+            _fs.rename(claim, grave)
+        except FileNotFoundError:
+            continue
+        with open(grave) as fh:
+            if fh.read() != body:
+                _fs.link_if_absent(grave, claim)
+        _fs.remove(grave)
+
+
+def _release_journal(claim: str, token: str | None) -> None:
+    if token is not None and _fs.identity(claim) == token:
+        try:
+            _fs.remove(claim)
+        except FileNotFoundError:
+            pass
+
+
 class _ClaimHeartbeat:
     """Keeps a HELD claim visibly alive while its protected write runs
     (ADVICE r9): a daemon thread ``os.utime``s the claim file every
@@ -5118,13 +5178,27 @@ class TableStore:
         self._replay_swap(name, jpath)
 
     def _replay_swap(self, name: str, jpath: str) -> None:
+        """Finish or roll back one swap, serialized per journal with the
+        writer and every other healer by ``<journal>.claim``. Without
+        it a healer that loaded the journal could stall, wake after a
+        later swap of the same bucket deleted this journal's adds, read
+        them as never moved and roll back the rest."""
+        claim = jpath + ".claim"
+        token = _claim_journal(claim)
+        try:
+            self._replay_journal(name, jpath)
+        finally:
+            _release_journal(claim, token)
+
+    def _replay_journal(self, name: str, jpath: str) -> None:
         base = self._dir(name)
         try:
             with open(jpath) as fh:
                 j = json.load(fh)
         except (OSError, ValueError):
-            # half-written journal (crash before the atomic replace
-            # never leaves this; a vanished file means a racer healed)
+            # read under the claim: a vanished journal means a racer
+            # finished it (a crash before the atomic replace never
+            # leaves a half-written one)
             return
         stage = j["stage"]
         # roll forward only if every add is still completable —

@@ -1501,8 +1501,9 @@ def _bpe_word_tokens_py(
 
 # 'auto' engine switch point: 'fold' (pure-JVM chained column folds) up
 # to this many rules, 'arrow' beyond. MEASURED, not asserted (VERDICT
-# r7 item 7, tools/bench_bpe_crossover.py + a 200k-word synthetic-vocab
-# probe, both median-of-3): arrow wins at EVERY size on both the
+# r7 item 7, the since-deleted tools/bench_bpe_crossover.py + a
+# 200k-word synthetic-vocab probe, both median-of-3): arrow wins at
+# EVERY size on both the
 # testdata corpus (8 rules: 0.94 s vs fold 1.46 s; 128 rules: 0.64 vs
 # 6.4 s at sf0.1) and a wide 200k-word vocabulary (8 rules: 1.7 s vs
 # 12.7 s; 32 rules: 0.95 s vs 38 s — fold's per-rule plan/codegen and

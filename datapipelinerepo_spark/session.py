@@ -13,9 +13,12 @@ default master.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from datapipelinerepo_spark import _cds
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # the directory holding this package, so Spark's Python workers can
@@ -47,6 +50,16 @@ def get_spark(
     The generated-code cache holds ``CODEGEN_CACHE_ENTRIES`` classes, so a
     session that reruns its query shapes compiles each one once (SCALE.md
     "Codegen cache holds the session's query set").
+
+    When this call launches the driver JVM, the JVM starts from a
+    class-data-sharing archive of Spark's classes (``_cds``, SCALE.md
+    "Cold start: class-data-sharing archive"): the first session on a
+    JDK and Spark jar set records one into the per-user cache when its
+    JVM exits, and later sessions map it. The flag is appended to
+    ``spark.driver.extraJavaOptions`` after any value in ``extra_conf``.
+    CDS is skipped, with one log line on the ``datapipelinerepo_spark``
+    logger, when Spark's conf directory holds anything but templates or
+    another variable adds to the JVM's class path.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -80,9 +93,14 @@ def get_spark(
     paths = [p for p in conf.get("spark.executorEnv.PYTHONPATH", "").split(os.pathsep) if p]
     conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(dict.fromkeys(paths + [PACKAGE_PARENT]))
     b = b.config("spark.python.daemon.module", "datapipelinerepo_spark._worker_daemon")
+    caller_opts = conf.get("spark.driver.extraJavaOptions", "")
+    cds = _cds.prepare(caller_opts, conf.get("spark.driver.extraClassPath", ""))
+    if cds is not None:
+        conf["spark.driver.extraJavaOptions"] = f"{caller_opts} {cds.flag}".strip()
     for k, v in conf.items():
         b = b.config(k, v)
-    return b.getOrCreate()
+    with cds.launch() if cds is not None else contextlib.nullcontext():
+        return b.getOrCreate()
 
 
 def local_frame(spark: SparkSession, rows, schema) -> DataFrame:

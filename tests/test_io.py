@@ -4515,3 +4515,108 @@ def test_unversioned_swap_concurrent_healers(spark, tmp_path, monkeypatch):
     assert not [
         e for e in os.listdir(store._dir("t")) if e.startswith("._swap-")
     ]
+
+
+# A healer in another process: lists the table's swap journals, replays
+# them, and parks at its first probe of a journal's adds (after loading
+# the journal) until the release file appears.
+PARKED_HEALER = """
+import os, sys, time
+from datapipelinerepo_spark.io import TableStore
+
+base, parked, release = sys.argv[1:]
+store = object.__new__(TableStore)
+store._dir = lambda name: base
+real_isfile = os.path.isfile
+
+def parked_isfile(path):
+    os.path.isfile = real_isfile
+    open(parked, "w").close()
+    while not os.path.exists(release):
+        time.sleep(0.01)
+    return real_isfile(path)
+
+os.path.isfile = parked_isfile
+store._heal_swaps("t")
+"""
+
+
+def test_unversioned_swap_stale_journal_healer(spark, tmp_path, monkeypatch):
+    """A healer in another process loads a swap journal and stalls
+    before probing its adds. Meanwhile the writer could finish that
+    swap, and a later swap of one of its buckets delete those adds;
+    woken, the healer would read them as never moved and roll back the
+    adds of the journal's other buckets. The per-journal claim makes
+    the writer wait for the healer instead, and the healer that takes
+    a claim after its journal is gone does nothing."""
+    import os
+    import subprocess
+    import sys
+    import threading
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    store = TableStore(spark, str(tmp_path / "store"))
+    base_rows = spark.range(40).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+    )
+    store.overwrite_keyed(base_rows, "t", "k", n_buckets=4)
+    base = store._dir("t")
+    kb = {
+        r["k"]: r["_kb"]
+        for r in spark.read.parquet(base).select("k", "_kb").collect()
+    }
+    first = list(range(10, 20))
+    assert len({kb[k] for k in first}) >= 2
+    # a later swap of one of the first swap's buckets, and no other
+    later = next(k for k in range(40) if k not in first and kb[k] == kb[first[0]])
+
+    def rows(keys, v):
+        return spark.createDataFrame([(k, v) for k in keys], "k long, v long")
+
+    inc_first, inc_later = rows(first, -1), rows([later], -2)
+    real_replay = store._replay_swap
+    written, go = threading.Event(), threading.Event()
+
+    def paused_replay(name, jpath):
+        # the first swap's journal is on disk; its writer waits here
+        if not written.is_set():
+            written.set()
+            go.wait(120)
+        real_replay(name, jpath)
+
+    monkeypatch.setattr(store, "_replay_swap", paused_replay)
+    errors = []
+
+    def writes():
+        try:
+            store.upsert(inc_first, "t", "k")
+            store.upsert(inc_later, "t", "k")
+        except BaseException as e:  # re-raised in the test thread
+            errors.append(e)
+
+    writer = threading.Thread(target=writes)
+    writer.start()
+    assert written.wait(120)
+    parked, release = tmp_path / "parked", tmp_path / "release"
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join([root, os.environ.get("PYTHONPATH", "")]))
+    healer = subprocess.Popen(
+        [sys.executable, "-c", PARKED_HEALER, base, str(parked), str(release)],
+        cwd=str(tmp_path), env=env,
+    )
+    try:
+        while not parked.exists():
+            assert healer.poll() is None, "the healer exited before loading the journal"
+            threading.Event().wait(0.05)
+        go.set()
+        # without the claim both swaps finish here, under the parked healer
+        writer.join(timeout=10)
+    finally:
+        release.touch()
+        assert healer.wait(60) == 0
+    writer.join(120)
+    assert not writer.is_alive() and not errors, errors
+
+    got = sorted((r["k"], r["v"]) for r in store.read("t").collect())
+    want = {k: k * 10 for k in range(40)} | {k: -1 for k in first} | {later: -2}
+    assert got == sorted(want.items())
+    assert not [e for e in os.listdir(base) if e.startswith("._swap-")]

@@ -1,8 +1,8 @@
 """Same-day A/B micro-bench for arbitrary REGISTRY queries (VERDICT
-r11 item 5 — generalizes tools/bench_tc_ab.py, which settles one
-hard-coded verb): BENCH_r11 recorded q5_region_volume at 1.32x r10's
-number with registry.py untouched, the same pattern the r10/r11
-table_changes flag showed before its A/B adjudicated machine-day
+r11 item 5 — generalizes the since-deleted tools/bench_tc_ab.py, which
+settled one hard-coded verb): BENCH_r11 recorded q5_region_volume at
+1.32x r10's number with registry.py untouched, the same pattern the
+r10/r11 table_changes flag showed before its A/B adjudicated machine-day
 drift. Run THIS script against two checkouts in one sitting for a
 same-machine-day comparison (SCALE.md playbook rule 4).
 
