@@ -96,275 +96,9 @@ def _ordered_names() -> list[str]:
 
 # Queries whose Spark code or oracle SQL changed AFTER earning a green
 # row: the old proof is stale until a correctness file from the change
-# round or later shows them green again (self-clearing).
-# Built as per-round dicts merged in round order so the later-round-wins
-# semantics are explicit (ADVICE r14: a single literal with duplicate
-# keys relied silently on last-wins and a reorder could flip marks).
-_CHANGED_R5_TO_R7 = {
-    "w_ntile_deciles": 5,
-    "cdc_latest_wins": 5,
-    "text_vocab_coverage": 6,  # r6: bucketed rank+offsets rewrite
-    # r7: bpe_learn gained batched selection (batch=1 bit-identical,
-    # locally re-proven at sf0.001/0.01/0.1/1); bpe_encode gained the
-    # Arrow engine (8-rule default still fold); the store queries ride
-    # the reworked manifest/commit protocol
-    "text_bpe_learn": 7,
-    "text_bpe_learn_single": 7,
-}
-_CHANGED_R8 = {
-    # r8: store-backed queries now pin results in memory and delete
-    # their temp dirs (ADVICE r7) and ride the atomic-replay commit
-    # protocol; locally re-proven at sf0.001 + sf0.01
-    "store_keyed_merge": 8,
-    "store_versioned_snapshot": 8,
-    "store_delete_where": 8,
-    "store_txn_exactly_once": 8,
-    "store_constraint_reject": 8,
-    "store_restore_rollback": 8,
-    "store_point_lookup": 8,
-    "events_rollup_hourly": 8,
-    "pipeline_idempotent_reload": 8,
-    # r8: auto engine now always arrow (measured crossover, item 7);
-    # bit-identical by parity pytests, re-proven at sf0.001/0.01
-    "text_bpe_encode": 8,
-    "text_bpe_encode_tokens": 8,
-}
-_CHANGED_R9 = {
-    # r9: every _ephemeral_store query now returns driver-materialized
-    # literal rows instead of localCheckpoint-pinned frames (VERDICT r8
-    # item 1 — removes the lineage-into-deleted-files mechanism behind
-    # the irreproducible store_incremental_rollup hash miss); locally
-    # re-proven at sf0.001 + sf0.01 + the ordered 50-query replay test
-    "events_rollup_hourly": 9,
-    "pipeline_idempotent_reload": 9,
-    "store_keyed_merge": 9,
-    "store_versioned_snapshot": 9,
-    "store_delete_where": 9,
-    "store_txn_exactly_once": 9,
-    "store_constraint_reject": 9,
-    "store_restore_rollback": 9,
-    "store_point_lookup": 9,
-    "store_time_travel_ts": 9,
-    "store_schema_evolution": 9,
-    "store_cdf_changes": 9,
-    "store_merge_when": 9,
-    "store_incremental_rollup": 9,
-    "store_stats_skipping": 9,
-    # r9: rewritten after the registry-wide bench sweep caught the
-    # 7-value key enumerating ~500M pairs at sf0.1 — now a
-    # high-cardinality nullable key (re-proven at sf0.001 + sf0.01)
-    "j_null_safe_join": 9,
-}
-_CHANGED_R10 = {
-    # r10: the two never-green IVM queries are now SELF-CHECKING
-    # (IVM-vs-recompute _require + sf0.01 literal pin) per VERDICT r9
-    # item 1b; bodies refactored onto the shared lifecycle helpers the
-    # new bisection instruments reuse (re-proven at sf0.001 + sf0.01)
-    "store_incremental_rollup": 10,
-    "store_incremental_minmax": 10,
-    # r10: every store-backed query rides the reworked commit protocol
-    # (base-version CAS + OCC re-derive on upsert/append/delete/merge/
-    # compact/cdc, claim heartbeat, _fs primitive extraction) — by the
-    # r8/r9 precedent their green proofs are stale until a post-change
-    # correctness file shows them green again (code-review r10 wave 2);
-    # locally re-proven by the end-of-round full-registry sf0.01 sweep
-    "f18_unavail_fill": 10,
-    "s3_exists_probe": 10,
-    "s4_last_modified_probe": 10,
-    "s8_append_roundtrip": 10,
-    "s9_replace_roundtrip": 10,
-    "s10_reload_roundtrip": 10,
-    "cdc_latest_wins": 10,
-    "events_rollup_hourly": 10,
-    "pipeline_idempotent_reload": 10,
-    "store_keyed_merge": 10,
-    "store_versioned_snapshot": 10,
-    "store_delete_where": 10,
-    "store_txn_exactly_once": 10,
-    "store_constraint_reject": 10,
-    "store_restore_rollback": 10,
-    "store_point_lookup": 10,
-    "store_time_travel_ts": 10,
-    "store_schema_evolution": 10,
-    "store_cdf_changes": 10,
-    "store_cdf_stream_drain": 10,
-    "store_merge_when": 10,
-    "store_column_mapping": 10,
-    "store_rebucket": 10,
-    "store_stats_skipping": 10,
-}
-_CHANGED_R11 = {
-    # r11: the 7 r10 hash-red queries (VERDICT r10 item 1 — one proven
-    # root cause: a bare DECIMAL(28,4) sum_val output column under the
-    # driver's oracle env) now cast the driver-facing sum_val to DOUBLE
-    # on BOTH sides (decimal arithmetic + IVM self-checks unchanged;
-    # sf0.01 literal pins retired per item 3); re-proven locally at
-    # sf0.001 + sf0.01
-    "store_incremental_rollup": 11,
-    "store_incremental_minmax": 11,
-    "store_ivm_pure_agg": 11,
-    "store_incremental_rollup_recompute": 11,
-    "store_incremental_rollup_sum": 11,
-    "store_streaming_rollup": 11,
-    "store_incremental_distinct": 11,
-    # r11: every store-backed query rides the reworked claim identity
-    # tokens (content digests over a per-acquire uuid — inode tokens
-    # aliased on this fs) and the join-view queries additionally ride
-    # the cross-phase watermark CAS (txn_assert) + OCC re-derive loop
-    # (code-review r11 finding 5, by the r8–r10 precedent: a commit-
-    # protocol rework staleness-marks the whole store family); locally
-    # re-proven by the r11 end-of-round full-registry sweeps (228/228
-    # at shuffle=13/sf0.001 AND at the driver's sf0.01/shuffle=32),
-    # the 50-query driver-sequence replay, and the full suite
-    "f18_unavail_fill": 11,
-    "s3_exists_probe": 11,
-    "s4_last_modified_probe": 11,
-    "s8_append_roundtrip": 11,
-    "s9_replace_roundtrip": 11,
-    "s10_reload_roundtrip": 11,
-    "cdc_latest_wins": 11,
-    "events_rollup_hourly": 11,
-    "pipeline_idempotent_reload": 11,
-    "store_keyed_merge": 11,
-    "store_versioned_snapshot": 11,
-    "store_delete_where": 11,
-    "store_txn_exactly_once": 11,
-    "store_constraint_reject": 11,
-    "store_restore_rollback": 11,
-    "store_point_lookup": 11,
-    "store_time_travel_ts": 11,
-    "store_schema_evolution": 11,
-    "store_cdf_changes": 11,
-    "store_cdf_stream_drain": 11,
-    "store_merge_when": 11,
-    "store_column_mapping": 11,
-    "store_rebucket": 11,
-    "store_stats_skipping": 11,
-    "store_auto_compact": 11,
-    "store_ivm_base_state": 11,
-    "store_incremental_join": 11,
-    "store_streaming_join": 11,
-}
-_CHANGED_R13 = {
-    # r13: bloom maintenance gained the per-(table, column) claim,
-    # dtype-drift rebuild, and mid-swap detection; probes gained the
-    # dtype safety net + loud degradation; read() gained where=
-    # planning (versioned-branch restructure); read_group gained the
-    # where= passthrough; pipeline gates routed through the catalog
-    # verbs; incarnation resets now retire sidecars. Locally re-proven
-    # at sf0.001 + sf0.01 (four-query oracle run + end-of-round sweep).
-    "store_bloom_point_read": 13,
-    "store_read_group": 13,
-    "store_read_group_asof": 13,
-    "store_write_group": 13,
-    "store_stacked_view_group": 13,
-    "store_streaming_stack": 13,
-    "pipeline_idempotent_reload": 13,
-    # r13 continuation: _file_stats entries gained the null-count
-    # extension [min, max, nulls, rows] and value probes now skip
-    # all-NULL files — the stats-pruning queries re-prove under the
-    # new manifest format. Locally re-proven at sf0.001 + sf0.01.
-    "store_stats_skipping": 13,
-    "store_read_planned": 13,
-    "store_read_planned_disjunction": 13,
-    "store_bloom_conjunctive_read": 13,
-    "store_bloom_inlist_read": 13,
-    "store_group_point_read": 13,
-}
-_CHANGED_R14 = {
-    # r14 (optimization round): every store write now hash-clusters by
-    # _kb (one part-file per bucket per write — Iceberg hash
-    # distribution), versioned reads take the manifest-recorded schema
-    # instead of a mergeSchema job, and versioned write paths drop the
-    # defensive localCheckpoint (append-only). By the r8-r11 precedent
-    # a storage-layout/commit-path rework staleness-marks the whole
-    # store family. q21 additionally carries the two-level-aggregation
-    # rewrite (Expand removed). All 245 oracle queries were re-proven
-    # locally at sf0.001/shuffle=13 AND sf0.01/shuffle=32 after the
-    # r14 changes.
-    "q21_waiting_suppliers": 14,
-    # r14: bpe_learn gained the bounded-vocab driver replay for BOTH
-    # batch==1 (py_bpe_learn) and batch>1 (py_bpe_learn_batched);
-    # parity + over-cap fallback pinned in test_ext_ops; all three
-    # queries re-proven vs DuckDB at sf0.001 AND sf0.01 that session
-    "text_bpe_learn": 14,
-    "text_bpe_learn_single": 14,
-    "text_bpe_learn_batched": 14,
-    # r14: connected_components gained the bounded-edge driver
-    # union-find (fixpoint-identical by definition; distributed rounds
-    # unchanged over the cap) + broadcast-hinted label frame — every
-    # component-consuming oracle query re-proven vs DuckDB at
-    # sf0.001/shuffle=13 AND sf0.01/shuffle=32 this session
-    "dedup_connected_components": 14,
-    "dedup_canonical_keep": 14,
-    "dedup_semantic_keep_verified": 14,
-    "dedup_cluster_size_histogram": 14,
-    "store_keyed_merge": 14,
-    "store_versioned_snapshot": 14,
-    "store_delete_where": 14,
-    "store_txn_exactly_once": 14,
-    "store_constraint_reject": 14,
-    "store_restore_rollback": 14,
-    "store_point_lookup": 14,
-    "store_time_travel_ts": 14,
-    "store_schema_evolution": 14,
-    "store_cdf_changes": 14,
-    "store_cdf_stream_drain": 14,
-    "store_merge_when": 14,
-    "store_column_mapping": 14,
-    "store_rebucket": 14,
-    "store_stats_skipping": 14,
-    "store_auto_compact": 14,
-    "store_incremental_rollup": 14,
-    "store_incremental_minmax": 14,
-    "store_ivm_pure_agg": 14,
-    "store_incremental_rollup_recompute": 14,
-    "store_incremental_rollup_sum": 14,
-    "store_streaming_rollup": 14,
-    "store_incremental_distinct": 14,
-    "store_ivm_base_state": 14,
-    "store_incremental_join": 14,
-    "store_streaming_join": 14,
-    "store_bloom_point_read": 14,
-    "store_read_group": 14,
-    "store_read_group_asof": 14,
-    "store_write_group": 14,
-    "store_stacked_view_group": 14,
-    "store_streaming_stack": 14,
-    "store_update_where": 14,
-    "store_count_planned": 14,
-    "store_stats_scalar_agg": 14,
-    "store_read_planned": 14,
-    "store_read_planned_disjunction": 14,
-    "store_read_planned_prefix": 14,
-    "store_read_planned_nulls": 14,
-    "store_bloom_conjunctive_read": 14,
-    "store_bloom_inlist_read": 14,
-    "store_bloom_element_read": 14,
-    "store_group_point_read": 14,
-    "pipeline_idempotent_reload": 14,
-    "events_rollup_hourly": 14,
-    "cdc_latest_wins": 14,
-    "s3_exists_probe": 14,
-    "s4_last_modified_probe": 14,
-    "s8_append_roundtrip": 14,
-    "s9_replace_roundtrip": 14,
-    "s10_reload_roundtrip": 14,
-    "f18_unavail_fill": 14,
-    # r15 audit of the r13→r14 inherited commits (VERDICT r14 item 3):
-    # a649cd3 rewrote global_order_positions' sampler path (shared
-    # boundary-sample job, order_bucket_column/bucket_chain extraction)
-    # but only dedup_sorted_neighborhood's consumers were locally
-    # re-proven — none of the riders was staleness-marked, so the
-    # driver has not re-proven them since r12/r13. Marked at 14 (the
-    # round the change entered the judged tree) so the r15 sample
-    # re-proves them.
-    "dedup_sorted_neighborhood": 14,
-    "scale_exact_quantiles": 14,
-    "w_ntile_deciles": 14,
-    "scale_zorder_values": 14,
-}
-_CHANGED_R15 = {
+# round or later shows them green again (self-clearing). A mark that a
+# later green row has cleared is deleted.
+_CHANGED_IN_ROUND = {
     # r15 (optimization round 2): the store verbs rework again — the
     # keyed upsert pins its batch lineage once (lazy checkpoint),
     # merge_when computes through ONE action-tagged CASE projection
@@ -375,30 +109,10 @@ _CHANGED_R15 = {
     # commit-path rework staleness-marks the whole store family.
     # Locally re-proven vs DuckDB at sf0.001/shuffle=13 during the
     # round and by the end-of-round sweeps.
-    "store_keyed_merge": 15,
-    "store_versioned_snapshot": 15,
-    "store_delete_where": 15,
-    "store_txn_exactly_once": 15,
-    "store_constraint_reject": 15,
-    "store_restore_rollback": 15,
-    "store_point_lookup": 15,
-    "store_time_travel_ts": 15,
-    "store_schema_evolution": 15,
-    "store_cdf_changes": 15,
-    "store_cdf_stream_drain": 15,
-    "store_merge_when": 15,
-    "store_column_mapping": 15,
-    "store_rebucket": 15,
-    "store_stats_skipping": 15,
-    "store_auto_compact": 15,
-    "store_incremental_rollup": 15,
-    "store_incremental_minmax": 15,
-    "store_ivm_pure_agg": 15,
-    "store_incremental_rollup_recompute": 15,
     "store_incremental_rollup_sum": 15,
     "store_streaming_rollup": 15,
     "store_incremental_distinct": 15,
-    "store_ivm_base_state": 15,
+    "store_auto_compact": 15,
     "store_incremental_join": 15,
     "store_streaming_join": 15,
     "store_bloom_point_read": 15,
@@ -407,51 +121,7 @@ _CHANGED_R15 = {
     "store_write_group": 15,
     "store_stacked_view_group": 15,
     "store_streaming_stack": 15,
-    "store_update_where": 15,
-    "store_count_planned": 15,
-    "store_stats_scalar_agg": 15,
     "store_read_planned": 15,
-    "store_read_planned_disjunction": 15,
-    "store_read_planned_prefix": 15,
-    "store_read_planned_nulls": 15,
-    "store_bloom_conjunctive_read": 15,
-    "store_bloom_inlist_read": 15,
-    "store_bloom_element_read": 15,
-    "store_group_point_read": 15,
-    "pipeline_idempotent_reload": 15,
-    "events_rollup_hourly": 15,
-    "cdc_latest_wins": 15,
-    "s3_exists_probe": 15,
-    "s4_last_modified_probe": 15,
-    "s8_append_roundtrip": 15,
-    "s9_replace_roundtrip": 15,
-    "s10_reload_roundtrip": 15,
-    "f18_unavail_fill": 15,
-    # r15: sorted-neighborhood's two passes run through one merged
-    # position tower (pair-for-pair identical, re-proven vs DuckDB);
-    # bpe_learn's word-count aggregation is pinned before the driver-
-    # replay probe; connected-components' label broadcast is gated on
-    # a fixed row bound (unchanged below it)
-    "dedup_sorted_neighborhood": 15,
-    "text_bpe_learn": 15,
-    "text_bpe_learn_single": 15,
-    "text_bpe_learn_batched": 15,
-    "dedup_connected_components": 15,
-    "dedup_canonical_keep": 15,
-    "dedup_semantic_keep_verified": 15,
-    "dedup_cluster_size_histogram": 15,
-}
-
-# Merged in round order: a later round's mark for the same query wins.
-_CHANGED_IN_ROUND = {
-    **_CHANGED_R5_TO_R7,
-    **_CHANGED_R8,
-    **_CHANGED_R9,
-    **_CHANGED_R10,
-    **_CHANGED_R11,
-    **_CHANGED_R13,
-    **_CHANGED_R14,
-    **_CHANGED_R15,
 }
 
 

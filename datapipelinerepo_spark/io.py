@@ -4451,10 +4451,9 @@ class TableStore:
     # updated map (metadata-only, like Delta). Reads translate
     # physical → logical at egress (read / read_buckets / lookup /
     # read_where / table_changes); incremental writes translate
-    # logical → physical at ingress (_upsert_keyed / append /
-    # overwrite_buckets), so merge internals and manifest stats stay
-    # purely physical. Time travel reads each version under ITS OWN
-    # map. Key columns cannot be renamed or dropped (they route
+    # logical → physical at ingress (append / overwrite_buckets), so
+    # commit internals and manifest stats stay purely physical. Time
+    # travel reads each version under ITS OWN map. Key columns cannot be renamed or dropped (they route
     # buckets and thread through every merge — model a key change as
     # a rewrite); re-adding a dropped logical name is refused (the old
     # physical data would resurrect through mergeSchema — Delta avoids
@@ -4966,14 +4965,14 @@ class TableStore:
         generalization of the reference's delete-then-append (S10) from
         a date slice to arbitrary keys.
 
-        Three routes, all semantically identical:
+        Two routes, semantically identical:
 
-        - A versioned keyed table (``overwrite_keyed(...,
-          versioned=True)``) merged on its own key: only the buckets
-          the batch's keys hash to are rewritten, appended and
-          published by snapshot manifest.
-        - An unversioned keyed table merged on its own key: the same
-          touched buckets are staged and swapped in under a journal.
+        - A keyed table (``overwrite_keyed``) merged on its own key:
+          only the buckets the batch's keys hash to are rewritten,
+          through ``overwrite_buckets`` like every other keyed write
+          verb — appended and published by snapshot manifest on a
+          versioned table, staged and swapped in under a journal on
+          an unversioned one.
         - Any other table: anti-join + union + overwrite, which
           rewrites the whole table (fine for dimension-sized tables;
           key the table to avoid it at scale).
@@ -4985,7 +4984,7 @@ class TableStore:
         incoming = self._enforce_constraints(name, df).dropDuplicates(keys)
         spec = self.keyed_spec(name) if self.exists(name) else None
         if spec is not None and list(spec[0]) == keys:
-            self._upsert_keyed(incoming, name, keys, spec[1])
+            self._upsert_keyed(incoming, name, keys)
             return
         if self._table_initialized(name):
             existing = self.read(name)
@@ -5140,12 +5139,12 @@ class TableStore:
     # renaming the staged one in.
 
     def _commit_swap(
-        self, name: str, stage: str, replace_buckets=None
+        self, name: str, stage: str, replace_buckets: list[int]
     ) -> None:
         """``replace_buckets``: bucket ids whose old files must go even
-        when the staged write produced NO rows for them (the
-        overwrite_buckets contract — a bucket fully emptied by deletes
-        is pruned from disk); the staged buckets are always replaced."""
+        when the staged write produced NO rows for them (a bucket fully
+        emptied by deletes is pruned from disk); the staged buckets are
+        always replaced."""
         import uuid
 
         base = self._dir(name)
@@ -5158,7 +5157,7 @@ class TableStore:
                 if f.endswith(".parquet"):
                     moves.append([f"{d}/{f}", f"{d}/{token}-{f}"])
         replaced = {m[1].split("/", 1)[0] for m in moves} | {
-            f"_kb={b}" for b in (replace_buckets or [])
+            f"_kb={b}" for b in replace_buckets
         }
         dels: list[str] = []
         for d in sorted(replaced):
@@ -5275,133 +5274,47 @@ class TableStore:
         incoming: DataFrame,
         name: str,
         keys: list[str],
-        n_buckets: int,
         txn: tuple[str, int] | None = None,
         check_replay: bool = False,
     ) -> None:
         """Bucket-partitioned MERGE: read ONLY the buckets the incoming
-        keys hash to (partition pruning), anti-join the survivors,
-        rewrite exactly those buckets. Untouched buckets' files are
-        never read or rewritten.
-
-        Unversioned tables stage the merged bucket contents and swap
-        the affected buckets' files in under a roll-forward journal
-        (r15 — see _commit_swap); versioned tables instead APPEND the
-        merged bucket contents as new part-files and publish a new
-        manifest (prior version's untouched-bucket files + the new
-        files), so every prior snapshot's files survive until vacuum."""
-        incoming = self._to_physical(incoming, self._colmap_doc(name))
-        stamped = incoming.withColumn(
-            "_kb", self._kb_expr(name, keys, n_buckets)
-        )
-        # r15 (guide §1.2/§5): pin the batch lineage ONCE — the probe
-        # job below materializes the lazy checkpoint as it computes,
-        # and the merge's two references (anti-join key side + union
-        # side) then read the cache instead of re-running the lineage.
-        # The old flow evaluated the batch THREE times per upsert; for
-        # an expensive upstream batch at 100 TB that triples the cost
-        # of every upsert, and a non-deterministic lineage could hash
-        # rows into buckets outside the probed set. A full two-phase
+        keys hash to, anti-join the survivors against the batch, union
+        the batch in and rewrite exactly those buckets through
+        ``overwrite_buckets`` (versioned: append + publish a manifest;
+        unversioned: journaled bucket swap). Untouched buckets' files
+        are never read or rewritten."""
+        # pin the batch lineage ONCE: the bucket probe materializes the
+        # lazy checkpoint, and the merge's two references (anti-join
+        # key side + union side) read the cache instead of re-running
+        # the lineage, so a non-deterministic lineage cannot hash rows
+        # into buckets outside the probed set. A full two-phase
         # parquet staging of the batch was prototyped and measured
         # SLOWER locally (+0.75 s per 3-upsert lifecycle, interleaved
         # median-of-7: the extra staging job + tiny-file read-back cost
         # more than the saved evaluations); the checkpoint gets the
         # same single-evaluation property with no extra job.
-        stamped = stamped.localCheckpoint(eager=False)
-        affected = [r[0] for r in stamped.select("_kb").distinct().collect()]
-        versioned = self.is_versioned(name)
-        if not versioned:
-            self._heal_swaps(name)  # finish interrupted swaps (r15)
+        incoming = incoming.localCheckpoint(eager=False)
+        affected = self.keyed_buckets(name, incoming)
 
-        def _merge_with(raw: DataFrame) -> DataFrame:
-            slice_ = raw.filter(F.col("_kb").isin(affected))
-            inc_keys, cond = _key_match(keys, stamped, "_ik_")
-            survivors = slice_.join(inc_keys, cond, how="left_anti")
-            merged = survivors.unionByName(stamped, allowMissingColumns=True)
-            # both paths write the merged frame in a SINGLE pass: the
-            # versioned path appends + publishes a manifest (r14), the
-            # unversioned path stages to a private dir and swaps files
-            # under a roll-forward journal (r15) — neither overwrites
-            # what it reads, so no defensive materialization is needed
-            return merged
-
-        if versioned:
-            def _attempt() -> None:
-                # the merge input must be the CURRENT SNAPSHOT's files,
-                # not the directory (which also holds older versions'
-                # files); the publish CASes on base_v, so a concurrent
-                # commit between this read and the publish re-runs the
-                # merge against the new version instead of silently
-                # dropping the racer's files (ADVICE r9)
-                base_v, base_ident = self._pin_base(name)
-                merged = _merge_with(self._read_manifest_df(name, base_v))
-                aff = set(affected)
-                kept = [
-                    f
-                    for f in self._manifest_files(name, base_v)
-                    if self._bucket_of(f) not in aff
-                ]
-                self._append_and_publish(
-                    merged,
-                    name,
-                    affected,
-                    kept,
-                    txn=txn,
-                    op="upsert",
-                    check_replay=check_replay,
-                    version_expect=base_v,
-                    version_expect_ident=base_ident,
-                )
-
-            self._retry_base_conflicts(_attempt)
-            return
-        raw = (
-            self._meta_schema_df(name)  # fully-emptied table: revive
-            if not self._dir_has_parquet(name)
-            else None
-        )
-        if raw is None:
-            raw = self.spark.read.option("mergeSchema", "true").parquet(
-                self._dir(name)
+        def _attempt() -> None:
+            v0, v0_ident = (
+                self._pin_base(name)
+                if self.is_versioned(name)
+                else (None, None)
             )
-        merged = _merge_with(raw)
-        # r15 (optimization, guide §5): stage-and-swap instead of
-        # localCheckpoint + dynamic partition overwrite. The old form
-        # materialized the WHOLE merged result in executor memory
-        # (a full extra evaluation locally; cache pressure proportional
-        # to the affected buckets at scale) purely to sever the
-        # read-from-overwritten-path lineage. Writing the merged frame
-        # to a private staging dir reads the live files and writes new
-        # ones — one pass, no cache — and the journaled file swap
-        # (_commit_swap) replaces the affected buckets' files with a
-        # roll-forward heal that is strictly SAFER than the dynamic
-        # committer's crash window (which could drop a bucket between
-        # its delete and rename): the journal lands before any
-        # mutation, adds precede deletes, and readers/writers heal
-        # pending journals before listing the directory.
-        import uuid
-
-        swap_stage = os.path.join(
-            self.root, f".stagein-{name}-{uuid.uuid4().hex[:12]}"
-        )
-        try:
-            (
-                self._cluster_kb(merged, int(n_buckets))
-                .write.mode("append")
-                .partitionBy("_kb")
-                .parquet(swap_stage)
+            inc_keys, cond = _key_match(keys, incoming, "_ik_")
+            survivors = self.read_buckets(name, affected).join(
+                inc_keys, cond, how="left_anti"
             )
-            self._commit_swap(name, swap_stage)
-        finally:
-            shutil.rmtree(swap_stage, ignore_errors=True)
-        self._touch_meta(
-            name,
-            keyed_on=keys,
-            key_buckets=n_buckets,
-            # refresh: an evolving upsert widens the stored schema the
-            # emptied-table fallback serves (code-review r7)
-            schema=self._widened_schema_json(name, merged.schema),
-        )
+            self.overwrite_buckets(
+                survivors.unionByName(incoming, allowMissingColumns=True),
+                name, affected, op="upsert", txn=txn,
+                check_replay=check_replay,
+                version_expect=v0, version_expect_ident=v0_ident,
+                rows_within_buckets=True,
+            )
+
+        self._retry_base_conflicts(_attempt)
 
     @staticmethod
     def _route_buckets(rows, types, n_buckets: int) -> list[int] | None:
@@ -5900,7 +5813,6 @@ class TableStore:
                 df.dropDuplicates(keys),
                 name,
                 keys,
-                spec[1],
                 txn=(app_id, int(txn_version)),
                 check_replay=True,
             )

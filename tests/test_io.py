@@ -455,8 +455,8 @@ def test_versioned_publish_crash_window_heals(spark, tmp_path, monkeypatch):
 
 
 def test_unversioned_upsert_crash_before_meta_heals(spark, tmp_path, monkeypatch):
-    """VERDICT r5 item 6: kill the write between _upsert_keyed's bucket
-    overwrite and _touch_meta. The data is already merged on disk, the
+    """VERDICT r5 item 6: kill the write between overwrite_buckets'
+    bucket swap and _touch_meta. The data is already merged on disk, the
     keyed marker is stale-but-valid, and re-running the upsert is
     idempotent — the table heals on the next operation."""
     store = TableStore(spark, str(tmp_path))

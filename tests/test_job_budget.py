@@ -1,5 +1,6 @@
 """Spark-job budgets of the store verbs: the exact number of Spark jobs
-each verb launches on a small versioned keyed table with a bloom index.
+each verb launches on a small versioned keyed table with a bloom index,
+and on a small unversioned keyed table.
 
 Job counts do not vary between runs, so they pin the Spark layer
 without timing noise: a verb that gains a job (a parquet footer read, a
@@ -24,6 +25,15 @@ BUDGETS = {
     "read_point": 1,
     "count_where": 2,
     "update_bloom_index": 4,
+    "update_where": 4,
+}
+
+# the unversioned keyed route: journaled bucket swaps, no manifest
+UNVERSIONED_BUDGETS = {
+    "upsert": 6,
+    "merge_when": 8,
+    "delete_where": 6,
+    "update_where": 6,
 }
 
 
@@ -49,6 +59,23 @@ def _rows(spark, lo, hi, bump=0.0):
     )
 
 
+def _merge_when(store, spark):
+    cdc = _rows(spark, 100, 130, 2.0).withColumn(
+        "op", F.when(F.col("k") % 3 == 0, "D").otherwise("U")
+    )
+    store.merge_when(
+        cdc, "t", "k", when_matched_update="all",
+        when_matched_delete="s.op = 'D'",
+        when_not_matched_insert="s.op <> 'D'", source_meta_cols=["op"],
+    )
+
+
+def _update_where(store):
+    store.update_where(
+        "t", {"amt": "amt + 1"}, condition="k >= 300 AND k < 305"
+    )
+
+
 @pytest.fixture(scope="module")
 def store(spark, tmp_path_factory):
     store = TableStore(spark, str(tmp_path_factory.mktemp("budget")))
@@ -60,16 +87,9 @@ def store(spark, tmp_path_factory):
 @pytest.fixture(scope="module")
 def verb_jobs(spark, store):
     """Run each verb once, in order, on one table; map verb → jobs."""
-    cdc = _rows(spark, 100, 130, 2.0).withColumn(
-        "op", F.when(F.col("k") % 3 == 0, "D").otherwise("U")
-    )
     verbs = {
         "upsert": lambda: store.upsert(_rows(spark, 390, 410, 1.0), "t", "k"),
-        "merge_when": lambda: store.merge_when(
-            cdc, "t", "k", when_matched_update="all",
-            when_matched_delete="s.op = 'D'",
-            when_not_matched_insert="s.op <> 'D'", source_meta_cols=["op"],
-        ),
+        "merge_when": lambda: _merge_when(store, spark),
         "delete_where": lambda: store.delete_where("t", where={"k": slice(200, 210)}),
         "read_where": lambda: store.read("t", where={"k": 57}).collect(),
         "read_point": lambda: store.read_point("t", "cust", 13).collect(),
@@ -81,12 +101,34 @@ def verb_jobs(spark, store):
     jobs["update_bloom_index"] = _jobs(
         spark, lambda: store.update_bloom_index("t", "cust")
     )
+    jobs["update_where"] = _jobs(spark, lambda: _update_where(store))
     return jobs
+
+
+@pytest.fixture(scope="module")
+def unversioned_jobs(spark, tmp_path_factory):
+    """The keyed verbs, in order, on one unversioned keyed table."""
+    store = TableStore(spark, str(tmp_path_factory.mktemp("budget_unv")))
+    store.overwrite_keyed(_rows(spark, 0, 400), "t", "k", n_buckets=8)
+    verbs = {
+        "upsert": lambda: store.upsert(_rows(spark, 390, 410, 1.0), "t", "k"),
+        "merge_when": lambda: _merge_when(store, spark),
+        "delete_where": lambda: store.delete_where(
+            "t", condition="k >= 200 AND k < 210"
+        ),
+        "update_where": lambda: _update_where(store),
+    }
+    return {name: _jobs(spark, fn) for name, fn in verbs.items()}
 
 
 @pytest.mark.parametrize("verb", sorted(BUDGETS))
 def test_store_verb_job_budget(verb_jobs, verb):
     assert verb_jobs[verb] == BUDGETS[verb]
+
+
+@pytest.mark.parametrize("verb", sorted(UNVERSIONED_BUDGETS))
+def test_unversioned_verb_job_budget(unversioned_jobs, verb):
+    assert unversioned_jobs[verb] == UNVERSIONED_BUDGETS[verb]
 
 
 def test_pruned_reads_plan_without_a_job(spark, store):
