@@ -557,34 +557,37 @@ class _ClaimHeartbeat:
         self._thread.join(timeout=5)
 
 
-def run_claim_serialized(
-    claim: str,
-    settled,
-    seed,
-    wait_s: float,
-    stale_s: float,
-    what: str,
-    acquire=None,
-):
+# Timing of every claim run_claim_serialized takes: losers wait up to
+# CLAIM_WAIT_S for the holder, and a claim untouched for CLAIM_STALE_S
+# is presumed orphaned by a crashed holder and stolen. The holder's
+# heartbeat keeps a long legitimate write from going stale.
+CLAIM_WAIT_S = 300.0
+CLAIM_STALE_S = 600.0
+
+
+def run_claim_serialized(claim: str, settled, seed, what: str, acquire=None):
     """Serialize a FIRST-WRITER window behind a create-exclusive,
-    heartbeated claim — the one protocol first-time rollup seeding and
-    join-view seeding share (code-review r10 wave 4 extracted it; two
-    drifting copies of subtle concurrency code is how a future fix
-    misses one). Exactly one racer runs ``seed()`` (under the claim +
-    heartbeat); losers poll ``settled()`` — which must return the
-    result once a winner finished, None while not — and converge on
-    it; a claim orphaned by a crashed winner goes stale after
-    ``stale_s`` and is stolen, and the stealer re-checks ``settled()``
-    under the claim before redoing any destructive work.
+    heartbeated claim — the one acquire/identity-check/heartbeat/
+    release loop in the package (two drifting copies of subtle
+    concurrency code is how a future fix misses one). Exactly one
+    racer runs ``seed()`` (under the claim + heartbeat); losers poll
+    ``settled()`` — which must return the result once a winner
+    finished, None while not — and converge on it; a claim orphaned
+    by a crashed winner goes stale after ``CLAIM_STALE_S`` and is
+    stolen, and the stealer re-checks ``settled()`` under the claim
+    before redoing any destructive work. ``settled=lambda: None``
+    makes it a heartbeated mutex: every caller runs its own ``seed``,
+    one at a time. A claim still held after ``CLAIM_WAIT_S`` raises
+    TxnConflict.
 
     ``acquire`` defaults to the module's _acquire_claim; callers pass
     their own module-resolved alias so tests can interpose on ONE
-    seeding path without touching the others (the rollup/viewmaint
-    race tests barrier inside it)."""
+    seeding path without touching the others (the rollup race test
+    barriers inside it)."""
     acquire = acquire or _acquire_claim
-    deadline = time.time() + wait_s
+    deadline = time.time() + CLAIM_WAIT_S
     while True:
-        tok = acquire(claim, stale_s)
+        tok = acquire(claim, CLAIM_STALE_S)
         if tok is not None:
             # identity self-check before anything destructive: a
             # racing staleness-stealer may have displaced this claim
@@ -601,9 +604,9 @@ def run_claim_serialized(
                 w = settled()
                 if w is not None:
                     return w
-                # heartbeat: a seed running longer than stale_s must
-                # not look orphaned and get stolen mid-overwrite
-                with _ClaimHeartbeat(claim, tok, stale_s):
+                # heartbeat: a seed running longer than CLAIM_STALE_S
+                # must not look orphaned and get stolen mid-overwrite
+                with _ClaimHeartbeat(claim, tok, CLAIM_STALE_S):
                     return seed()
             finally:
                 # release only OUR claim: after a (pathological)
@@ -622,8 +625,8 @@ def run_claim_serialized(
             return w
         if time.time() >= deadline:
             raise TxnConflict(
-                f"{what}: concurrent first-time seed did not complete "
-                f"within {wait_s}s — claim file {claim} still held"
+                f"{what}: claim file {claim} still held after "
+                f"{CLAIM_WAIT_S}s"
             )
         time.sleep(0.05)
 
@@ -1392,35 +1395,18 @@ class TableStore:
                 f"{name}: read_where needs a versioned table (the stats "
                 "live in the snapshot manifests)"
             )
-        ranges = self._normalize_ranges(col, between, ranges)
+        where = self._normalize_ranges(col, between, ranges)
         v = self._ensure_latest(name) if version is None else version
-        doc = self._manifest_doc(name, v)
-        cm = doc.get("colmap")
-        # stats are keyed by PHYSICAL column names: translate the
-        # requested logical prune columns through the snapshot's map
-        cm_renames = (cm or {}).get("renames", {})
-        phys_ranges = {cm_renames.get(c, c): b for c, b in ranges.items()}
-        keep_set: set | None = None
-        for c, b in phys_ranges.items():
-            self._warn_if_stats_inert(name, doc, c)
-            kept_c = set(self._pruned_files(doc, c, b))
-            keep_set = kept_c if keep_set is None else (keep_set & kept_c)
-        keep = [f for f in doc["files"] if f in keep_set]
-        # _scan_files carries the schema-evolution guard (code-review
-        # r8 wave 2): when pruning drops every file CARRYING the
-        # queried column, the frame widens to the manifest-recorded
-        # snapshot schema so the filter can't raise UNRESOLVED_COLUMN
-        out = self._scan_files(name, v, doc, keep)
-        for c, b in ranges.items():
-            out = out.filter(F.col(c).between(F.lit(b[0]), F.lit(b[1])))
-        return out
+        return self._read_planned(name, where, v, self._manifest_doc(name, v))
 
     @staticmethod
     def _normalize_ranges(col, between, ranges) -> dict:
         """The one validation of read_where/pruned_file_count's two
         calling forms (code-review r8 wave 4: the first cut let
         col-without-between, between-without-col, and an empty ranges
-        dict crash deep in pruning with opaque TypeErrors)."""
+        dict crash deep in pruning with opaque TypeErrors). Returns
+        the planner's conjunct dict: one inclusive ``slice(lo, hi)``
+        per column."""
         if ranges is not None:
             if col is not None or between is not None:
                 raise ValueError("pass col+between OR ranges, exactly one")
@@ -1438,18 +1424,18 @@ class TableStore:
             }
             if bad:
                 raise ValueError(f"malformed ranges entries: {bad}")
-            return dict(ranges)
+            return {c: slice(*b) for c, b in ranges.items()}
         if col is None or between is None:
             raise ValueError("pass col+between OR ranges, exactly one")
         if not isinstance(between, (tuple, list)) or len(between) != 2:
             raise ValueError(f"between must be (lo, hi), got {between!r}")
-        return {col: between}
+        return {col: slice(*between)}
 
     def _pruned_files(self, doc: dict, col: str, between: tuple) -> list[str]:
-        """The ONE pruning decision (shared by read_where and
-        pruned_file_count, so the observability counter can never
-        drift from what the plan actually opens — the _key_match
-        lesson): keep a file when its recorded [min, max] for ``col``
+        """The ONE stats pruning decision (plan_read's, for ranges and
+        equalities, so the observability counters can never drift
+        from what the plan actually opens — the _key_match lesson):
+        keep a file when its recorded [min, max] for ``col``
         overlaps the bounds, or when no stat / no encodable bound
         exists (absent stats mean 'cannot prune', never 'no rows');
         incomparable encodings also keep — pruning is an optimization,
@@ -1879,21 +1865,14 @@ class TableStore:
     ) -> tuple[int, int]:
         """(files the read_where plan would open, total live files) —
         the observability hook tests and capacity planning use to see
-        data skipping actually skipping. Mirrors read_where's two
-        calling forms exactly (same normalization, same per-column
-        intersection), so the counter can never drift from the plan
-        (code-review r8 wave 4)."""
-        ranges = self._normalize_ranges(col, between, ranges)
-        v = self._ensure_latest(name) if version is None else version
-        doc = self._manifest_doc(name, v)
-        cm_renames = (doc.get("colmap") or {}).get("renames", {})
-        keep_set: set | None = None
-        for c, b in ranges.items():
-            c = cm_renames.get(c, c)
-            self._warn_if_stats_inert(name, doc, c)
-            kept_c = set(self._pruned_files(doc, c, b))
-            keep_set = kept_c if keep_set is None else (keep_set & kept_c)
-        return len(keep_set), len(doc["files"])
+        data skipping actually skipping. Takes read_where's two
+        calling forms and plans them through the same plan_read, so
+        the counter can never drift from the plan."""
+        keep, report = self.plan_read(
+            name, self._normalize_ranges(col, between, ranges),
+            version=version,
+        )
+        return len(keep), report["total_files"]
 
     def _warn_if_stats_inert(self, name: str, doc: dict, col: str) -> None:
         """LOUD no-stats signal (VERDICT r8 item 3 'what's wrong'):
@@ -2144,49 +2123,24 @@ class TableStore:
         are keyed physically; the index dir likewise)."""
         return (doc.get("colmap") or {}).get("renames", {}).get(col, col)
 
-    def _bloom_claim(
-        self, name: str, phys: str,
-        wait_s: float = 300.0, stale_s: float = 600.0,
-    ):
-        """Serialize the sidecar MAINTENANCE verbs per (table, column)
-        behind the store's create-exclusive heartbeated claim (VERDICT
-        r12 item 5): build/update/compact on the same index are
-        mutually exclusive, closing the documented lost-part window
-        where an update racing compact's directory swap landed its
-        part in the retiring dir. Probes stay claim-free — they only
-        read, and degrade to no-pruning under any race. The claim
+    def _bloom_claim(self, name: str, phys: str, body):
+        """Run ``body()`` as a sidecar MAINTENANCE verb, serialized per
+        (table, column) behind the store's create-exclusive heartbeated
+        claim (VERDICT r12 item 5): build/update/compact on the same
+        index are mutually exclusive, closing the documented lost-part
+        window where an update racing compact's directory swap landed
+        its part in the retiring dir. Probes stay claim-free — they
+        only read, and degrade to no-pruning under any race. The claim
         lives BESIDE the index dir (not inside it) because compact
         renames the dir itself. A claim orphaned by a crashed verb
-        goes stale after ``stale_s`` and is stolen; the heartbeat
-        keeps a long legitimate build from looking orphaned."""
-        import contextlib
-
+        goes stale after ``CLAIM_STALE_S`` and is stolen; the
+        heartbeat keeps a long legitimate build from looking
+        orphaned."""
         claim = os.path.join(self._dir(name), f".bloomidx-claim-{phys}")
-
-        @contextlib.contextmanager
-        def _held():
-            deadline = time.time() + wait_s
-            while True:
-                tok = _acquire_claim(claim, stale_s)
-                if tok is not None and _fs.identity(claim) == tok:
-                    break
-                if time.time() >= deadline:
-                    raise TxnConflict(
-                        f"{name}.{phys}: bloom index maintenance claim "
-                        f"still held after {wait_s}s ({claim})"
-                    )
-                time.sleep(0.05)
-            try:
-                with _ClaimHeartbeat(claim, tok, stale_s):
-                    yield
-            finally:
-                try:
-                    if _fs.identity(claim) == tok:
-                        _fs.remove(claim)
-                except FileNotFoundError:
-                    pass
-
-        return _held()
+        return run_claim_serialized(
+            claim, lambda: None, body,
+            f"{name}.{phys}: bloom index maintenance",
+        )
 
     def build_bloom_index(
         self,
@@ -2259,7 +2213,8 @@ class TableStore:
         )
         final = self._bloom_dir(name, phys)
         tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
-        with self._bloom_claim(name, phys):
+
+        def _publish() -> None:
             try:
                 merged.write.mode("overwrite").parquet(
                     os.path.join(tmp, "parts", "full.parquet")
@@ -2283,6 +2238,8 @@ class TableStore:
                 os.rename(tmp, final)
             finally:
                 shutil.rmtree(tmp, ignore_errors=True)
+
+        self._bloom_claim(name, phys, _publish)
         return len(doc["files"])
 
     def update_bloom_index(
@@ -2331,7 +2288,8 @@ class TableStore:
                 elements=bool(meta.get("elements")),
             )
             return len(doc["files"])
-        with self._bloom_claim(name, phys):
+
+        def _update() -> int:
             covered = {
                 r["file"] for r in self._bloom_index_df(bdir)
                 .select("file").collect()
@@ -2355,7 +2313,9 @@ class TableStore:
                 )
             finally:
                 shutil.rmtree(tmp, ignore_errors=True)
-        return len(new)
+            return len(new)
+
+        return self._bloom_claim(name, phys, _update)
 
     def _bloom_meta(self, name: str, col: str, bdir: str) -> dict:
         """Load the sidecar's meta.json for a MAINTENANCE verb,
@@ -2460,7 +2420,8 @@ class TableStore:
         doc = self._manifest_doc(name, v)
         phys = self._bloom_resolve(name, col, doc)
         bdir = self._bloom_dir(name, phys)
-        with self._bloom_claim(name, phys):
+
+        def _compact() -> tuple[int, int]:
             meta = self._bloom_meta(name, col, bdir)
             # semi-join against the live file list, not a 100k-literal
             # isin: the list is driver-small either way, but the join
@@ -2503,7 +2464,9 @@ class TableStore:
                 shutil.rmtree(old, ignore_errors=True)
             finally:
                 shutil.rmtree(tmp, ignore_errors=True)
-        return n_live, total - n_live
+            return n_live, total - n_live
+
+        return self._bloom_claim(name, phys, _compact)
 
     def bloom_coverage(
         self, name: str, col: str, version: int | None = None
@@ -3278,7 +3241,7 @@ class TableStore:
         self, name: str, version: int, doc: dict, keep: list[str]
     ) -> DataFrame:
         """Plan a logical-schema scan over a pruned subset of a
-        snapshot's files (shared by read_where and read_point), under
+        snapshot's files (shared by _read_planned and count_where), under
         the manifest-recorded schema like ``_read_manifest_df``: no
         footer job, and a late-added column stays in the frame even
         when pruning dropped every file carrying it. Translates
@@ -5713,8 +5676,6 @@ class TableStore:
         app_id: str,
         txn_version: int,
         n_buckets: int = 64,
-        create_wait_s: float = 300.0,
-        create_stale_s: float = 600.0,
     ) -> bool:
         """EXACTLY-ONCE keyed upsert (Delta's txnAppId/txnVersion
         pattern on the plain-parquet versioned store): the write and
@@ -5749,13 +5710,13 @@ class TableStore:
         contract: per-batch cost is the batch's buckets, replay cost
         is one manifest read.
 
-        ``create_wait_s``/``create_stale_s`` size the first-write
-        claim (ADVICE r9): losers wait up to ``create_wait_s`` for the
-        winner, and a claim untouched for ``create_stale_s`` is
-        presumed crashed and stolen. The holder HEARTBEATS the claim
-        while its overwrite runs (_ClaimHeartbeat), so staleness
-        measures silence, not duration — a first write may run longer
-        than ``create_stale_s`` safely."""
+        The first-write claim (ADVICE r9) uses the module's claim
+        timing: losers wait up to ``CLAIM_WAIT_S`` for the winner, and
+        a claim untouched for ``CLAIM_STALE_S`` is presumed crashed and
+        stolen. The holder HEARTBEATS the claim while its overwrite
+        runs (_ClaimHeartbeat), so staleness measures silence, not
+        duration — a first write may run longer than
+        ``CLAIM_STALE_S`` safely."""
         keys = [key] if isinstance(key, str) else list(key)
         spec = self.keyed_spec(name)
         if not self._table_initialized(name) or (
@@ -5774,8 +5735,7 @@ class TableStore:
             # create while the other converges and falls through to
             # the steady-state replay check below.
             created = self._create_txn_serialized(
-                df, name, keys, app_id, int(txn_version), int(n_buckets),
-                wait_s=create_wait_s, stale_s=create_stale_s,
+                df, name, keys, app_id, int(txn_version), int(n_buckets)
             )
             if created:
                 return True
@@ -5864,8 +5824,6 @@ class TableStore:
         app_id: str,
         txn_version: int,
         n_buckets: int,
-        wait_s: float = 300.0,
-        stale_s: float = 600.0,
     ) -> bool:
         """upsert_txn's FIRST-WRITE path, serialized behind a
         create-exclusive claim (code-review r9 wave 1): two writers
@@ -5877,9 +5835,10 @@ class TableStore:
         one racer creates; the other returns False and falls through
         to the steady-state path, where the ordinary manifest replay
         check decides whether its batch still applies. A claim
-        orphaned by a crashed creator goes stale after ``stale_s`` and
-        is stolen; the stealer's creation safely re-truncates partial
-        state (the _creation_crashed retry contract)."""
+        orphaned by a crashed creator goes stale after
+        ``CLAIM_STALE_S`` and is stolen; the stealer's creation safely
+        re-truncates partial state (the _creation_crashed retry
+        contract)."""
         claim = os.path.join(self.root, f".createclaim_{name}")
 
         def _created() -> bool:
@@ -5888,42 +5847,23 @@ class TableStore:
                 and self.keyed_spec(name) is not None
             )
 
-        deadline = time.time() + wait_s
-        while True:
-            tok = _acquire_claim(claim, stale_s)
-            if tok is not None:
-                if _fs.identity(claim) != tok:
-                    continue  # displaced by a stealer: re-contend
-                try:
-                    if _created():
-                        return False  # a racer finished: converge
-                    # heartbeat: a first write running longer than
-                    # stale_s must not look orphaned (ADVICE r9)
-                    with _ClaimHeartbeat(claim, tok, stale_s):
-                        self.overwrite_keyed(
-                            df.dropDuplicates(keys),
-                            name,
-                            keys,
-                            n_buckets=n_buckets,
-                            versioned=True,
-                            txn=(app_id, int(txn_version)),
-                        )
-                    return True
-                finally:
-                    try:
-                        if _fs.identity(claim) == tok:
-                            _fs.remove(claim)
-                    except FileNotFoundError:
-                        pass
-            if _created():
-                return False  # the winner finished: converge
-            if time.time() >= deadline:
-                raise TxnConflict(
-                    f"{name}: concurrent first-write creation did not "
-                    f"complete within {wait_s}s — claim file {claim} "
-                    "still held"
-                )
-            time.sleep(0.05)
+        def _create() -> bool:
+            self.overwrite_keyed(
+                df.dropDuplicates(keys),
+                name,
+                keys,
+                n_buckets=n_buckets,
+                versioned=True,
+                txn=(app_id, int(txn_version)),
+            )
+            return True
+
+        return run_claim_serialized(
+            claim,
+            lambda: False if _created() else None,  # a racer finished
+            _create,
+            f"{name}: first-write creation",
+        )
 
     def _meta_lost_one_commit(self, name: str) -> bool:
         """Meta-only damage signature: bucket-partitioned data, no

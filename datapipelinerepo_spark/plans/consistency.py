@@ -518,8 +518,6 @@ def write_group(
     store: TableStore,
     group: str,
     writes: dict,
-    wait_s: float = 300.0,
-    stale_s: float = 600.0,
 ) -> int:
     """MULTI-TABLE TRANSACTIONAL WRITE — the dual of read_group: apply
     one write per table as a single logical transaction that
@@ -562,7 +560,8 @@ def write_group(
     detail listed first; code-review r11 finding 3 — the previous
     sorted-by-name order made that pattern depend on alphabetical
     naming). A concurrent group writer holding the claim past
-    ``wait_s`` raises io.TxnConflict.
+    ``io.CLAIM_WAIT_S`` raises io.TxnConflict; a claim untouched for
+    ``io.CLAIM_STALE_S`` is presumed crashed and stolen.
 
     Returns the group sequence committed (or resumed)."""
     import os as _os
@@ -617,6 +616,5 @@ def write_group(
     # so this degenerates to a heartbeated mutex — every caller runs
     # its own body, serialized.
     return run_claim_serialized(
-        claim, lambda: None, _body, wait_s, stale_s,
-        f"write_group({group})",
+        claim, lambda: None, _body, f"write_group({group})"
     )

@@ -579,8 +579,6 @@ def sync_rollup(
     distinct_col: str | None = None,
     distinct_sketch_col: str | None = None,
     n_buckets: int = 16,
-    seed_wait_s: float = 300.0,
-    seed_stale_s: float = 600.0,
 ) -> int:
     """EXACTLY-ONCE catch-up of a maintained rollup to the base
     table's CURRENT version — the driver loop around seed_rollup /
@@ -617,9 +615,9 @@ def sync_rollup(
     serialized by a create-exclusive claim file (VERDICT r8 item 6):
     exactly one racer runs the overwrite — two concurrent physical
     overwrites of one directory would corrupt each other — while
-    losers wait (up to ``seed_wait_s``) for the winner's watermark to
-    appear and converge on it; a claim orphaned by a crashed seeder
-    goes stale after ``seed_stale_s`` and is stolen by the next
+    losers wait (up to ``io.CLAIM_WAIT_S``) for the winner's watermark
+    to appear and converge on it; a claim orphaned by a crashed seeder
+    goes stale after ``io.CLAIM_STALE_S`` and is stolen by the next
     caller, whose re-seed safely re-truncates any partial state.
     Steady-state concurrent syncs are safe per the CAS above. A
     no-change call is one manifest read. Returns the base version the
@@ -686,8 +684,7 @@ def sync_rollup(
             return current
 
         return run_claim_serialized(
-            claim, _settled, _seed, seed_wait_s, seed_stale_s,
-            rollup_table,
+            claim, _settled, _seed, rollup_table,
             # late-bound module alias: the concurrent-seed race test
             # barriers inside it (monkeypatching rollup's name)
             acquire=lambda p, s: _acquire_seed_claim(p, s),

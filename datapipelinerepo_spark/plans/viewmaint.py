@@ -49,7 +49,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..io import CrossTxnConflict, TableStore, TxnAlreadyApplied
-from ..io import _acquire_claim as _acquire_seed_claim  # test seam
 
 
 def _fact_app(store: TableStore, fact_table: str) -> str:
@@ -112,14 +111,14 @@ def sync_join_view(
     fact_join_col: str,
     dim_join_col: str,
     n_buckets: int = 16,
-    seed_wait_s: float = 300.0,
-    seed_stale_s: float = 600.0,
 ) -> tuple[int, int]:
     """EXACTLY-ONCE catch-up of the materialized LEFT-join view to both
     base tables' CURRENT versions. First call seeds (serialized behind
     a create-exclusive, heartbeated claim — two concurrent first-time
     seeds would run two static overwrites of one directory); later
-    calls apply only the two change-feed windows. Returns the
+    calls apply only the two change-feed windows. The seed claim uses
+    the store's claim timing (``io.CLAIM_WAIT_S`` wait,
+    ``io.CLAIM_STALE_S`` stale). Returns the
     (fact_version, dim_version) the view now reflects. Both bases must
     be versioned keyed tables.
 
@@ -182,7 +181,7 @@ def sync_join_view(
         return _seed_join_view(
             store, fact_table, dim_table, view_table, fkeys,
             fact_join_col, dim_join_col, payload, n_buckets,
-            cur_f, cur_d, fact_app, dim_app, seed_wait_s, seed_stale_s,
+            cur_f, cur_d, fact_app, dim_app,
         )
 
     # Cross-phase OCC loop (ADVICE r10 medium): each phase's merge
@@ -203,8 +202,7 @@ def sync_join_view(
             return _seed_join_view(
                 store, fact_table, dim_table, view_table, fkeys,
                 fact_join_col, dim_join_col, payload, n_buckets,
-                cur_f, cur_d, fact_app, dim_app, seed_wait_s,
-                seed_stale_s,
+                cur_f, cur_d, fact_app, dim_app,
             )
         vf, vd = int(vf), int(vd)
         try:
@@ -439,7 +437,7 @@ def _stamp_watermark(store, view_table, fkeys, txn, txn_expect=None):
 def _seed_join_view(
     store, fact_table, dim_table, view_table, fkeys,
     fact_join_col, dim_join_col, payload, n_buckets,
-    cur_f, cur_d, fact_app, dim_app, seed_wait_s, seed_stale_s,
+    cur_f, cur_d, fact_app, dim_app,
 ) -> tuple[int, int]:
     from ..io import run_claim_serialized
 
@@ -492,8 +490,4 @@ def _seed_join_view(
         _stamp_watermark(store, view_table, fkeys, (dim_app, cur_d))
         return cur_f, cur_d
 
-    return run_claim_serialized(
-        claim, _settled, _seed, seed_wait_s, seed_stale_s, view_table,
-        # late-bound module alias (test seam, same pattern as rollup)
-        acquire=lambda p, s: _acquire_seed_claim(p, s),
-    )
+    return run_claim_serialized(claim, _settled, _seed, view_table)

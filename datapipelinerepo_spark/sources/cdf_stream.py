@@ -15,12 +15,11 @@ Execution model, designed for the 100 TB posture:
   with a full-outer join using null-safe key equality — the exact
   semantics of ``TableStore.table_changes`` (and of this repo's oracle
   layer) — with no Spark job inside the reader and no driver collect.
-  Two interchangeable engines (picked ONCE at stream start, r10):
-  embedded DuckDB (``IS NOT DISTINCT FROM``, the faster diff) or a
-  pure-pyarrow fallback (vectorized full-outer join on
-  (filled value, was-null) key pairs), so the duckdb wheel is an
-  optimization, not a per-executor hard dependency. Feed cost per
-  micro-batch tracks CHURN, not table size.
+  The diff runs in embedded DuckDB (``IS NOT DISTINCT FROM``), so the
+  duckdb wheel is needed on the driver and every executor; its
+  spilling operators bound a large bucket's window by DuckDB's
+  memory_limit. Feed cost per micro-batch tracks CHURN, not table
+  size.
 - Offsets replay deterministically: manifests are immutable, so
   re-planning a window after a crash reproduces the identical batch
   (``readBetweenOffsets`` semantics for free). Replays of vacuumed
@@ -39,7 +38,6 @@ Reference shape: Delta Lake ``spark.readStream.option
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass, field
 
@@ -55,23 +53,22 @@ from pyspark.sql.types import StructField, StructType
 # logical-schema derivation — a layout change there cannot strand this
 # source on a stale private copy (code-review r9 wave 3)
 from ..io import (
-    list_versions as _versions_of,
+    TableStore,
+    list_versions,
     logical_fields as _logical_fields,
     read_manifest,
     read_meta,
 )
 
 
-# When the DUCKDB diff engine is selected, read() runs embedded DuckDB
-# on every executor — the probe below runs at stream START on the
-# driver, so a missing/ancient wheel fails the query up front (or
-# routes auto mode to the arrow fallback) instead of an ImportError
-# thrown from deep inside a Python data source at task time, mid-drain.
-# (The driver's environment is the proxy check — on a real cluster,
-# whichever engine is selected must be importable on executors too,
-# e.g. via a cluster image; pyarrow ships with PySpark's own
-# requirements, which is why it is the fallback.)
-_DUCKDB_MIN = (0, 9, 0)
+# read() runs embedded DuckDB on every executor — the probe below runs
+# when the reader is built on the driver, so a missing/ancient wheel
+# fails the query up front instead of an ImportError thrown from deep
+# inside a Python data source at task time, mid-drain. (The driver's
+# environment is the proxy check — on a real cluster the wheel must be
+# importable on executors too, e.g. via a cluster image.) The floor is
+# pyproject.toml's.
+_DUCKDB_MIN = (1, 0, 0)
 
 
 def _require_duckdb() -> None:
@@ -89,9 +86,9 @@ def _require_duckdb() -> None:
         if not p.isdigit():
             break
         parts.append(int(p))
-    # pad to the floor's arity: '0.9' or '0.9.1-dev1' (third component
-    # non-digit) must compare as (0,9,0)/(0,9,0), not the shorter tuple
-    # (0,9) < (0,9,0) — which spuriously rejected satisfying wheels
+    # pad to the floor's arity: '1.0' or '1.0.1-dev1' (third component
+    # non-digit) must compare as (1,0,0)/(1,0,0), not the shorter tuple
+    # (1,0) < (1,0,0) — which spuriously rejected satisfying wheels
     # (code-review r10 wave 2)
     while len(parts) < len(_DUCKDB_MIN):
         parts.append(0)
@@ -104,66 +101,6 @@ def _require_duckdb() -> None:
         )
 
 
-def _resolve_diff_engine(requested: str | None) -> str:
-    """Pick the executor-side diff engine at STREAM START (r10: the
-    duckdb wheel is no longer a hard dependency — a pure-pyarrow
-    implementation of the identical null-safe diff serves as the
-    fallback, and pyarrow ships with PySpark's own requirements).
-    ``requested``: "duckdb" / "arrow" force one (and fail loudly at
-    start if it is unavailable); None/"auto" prefers duckdb (the
-    faster diff) and falls back to arrow.
-
-    Memory asymmetry (ADVICE r10): the arrow engine materializes BOTH
-    versions' bucket slices plus the full-outer join result in
-    executor RAM before emitting (only the OUTPUT is batched at 10k
-    rows) — a bulk-load window classifying a whole large bucket as
-    inserts holds roughly 2× the bucket in memory. The duckdb engine
-    runs the same diff through its spilling operators, bounded by
-    duckdb's memory_limit. "auto" silently picks arrow when duckdb is
-    absent, so operators streaming changes off LARGE buckets (≳ a few
-    hundred MB per bucket per window) should install duckdb on the
-    executors — or rebucket so per-bucket windows stay executor-RAM
-    sized. The per-bucket partitioning already bounds the unit of work;
-    this note is about the constant factor within one bucket."""
-    if requested in (None, "auto"):
-        try:
-            _require_duckdb()
-            return "duckdb"
-        except RuntimeError as duck_err:
-            try:
-                import pyarrow  # noqa: F401
-                import pyarrow.compute  # noqa: F401
-            except ImportError as arrow_err:
-                # name BOTH missing engines: the user never selected
-                # arrow, so an arrow-only message would hide that
-                # installing duckdb is an equally valid fix
-                # (code-review r10 wave 6)
-                raise RuntimeError(
-                    "the tablestore_changes stream has no usable diff "
-                    f"engine: duckdb unavailable ({duck_err}); pyarrow "
-                    f"unavailable ({arrow_err}) — install either on "
-                    "the driver and every executor"
-                ) from arrow_err
-            return "arrow"
-    if requested == "duckdb":
-        _require_duckdb()
-        return "duckdb"
-    if requested == "arrow":
-        try:
-            import pyarrow  # noqa: F401
-            import pyarrow.compute  # noqa: F401
-        except ImportError as e:
-            raise RuntimeError(
-                "the tablestore_changes stream's arrow diff engine "
-                "needs pyarrow on the driver AND every executor"
-            ) from e
-        return "arrow"
-    raise ValueError(
-        f"diff_engine must be 'auto', 'duckdb' or 'arrow' — got "
-        f"{requested!r}"
-    )
-
-
 def _sql_path_list(paths: list[str]) -> str:
     """DuckDB list literal of path strings, single-quote-escaped — a
     store root or table name containing a quote must not break (or
@@ -171,18 +108,6 @@ def _sql_path_list(paths: list[str]) -> str:
     is not an option here: the list feeds read_parquet inside CREATE
     VIEW, and DuckDB prepared parameters are not allowed in DDL."""
     return "[" + ", ".join("'" + p.replace("'", "''") + "'" for p in paths) + "]"
-
-
-def _manifest(root: str, table: str, v: int) -> dict:
-    return read_manifest(root, table, v)
-
-
-def _versions(root: str, table: str) -> list[int]:
-    return _versions_of(root, table)
-
-
-def _meta(root: str, table: str) -> dict:
-    return read_meta(root, table)
 
 
 _DUCK_TYPES = {
@@ -216,188 +141,6 @@ def _duck_type(spark_type: str) -> str:
         ) from None
 
 
-def _bucket_of(rel: str) -> int:
-    return int(rel.split("=", 1)[1].split("/", 1)[0])
-
-
-# --- arrow diff engine (r10): same null-safe diff, no duckdb ------------
-
-
-def _arrow_type(spark_type: str):
-    """The arrow type a logical column materializes as on the arrow
-    diff path. 'timestamp' (Spark LTZ) carries tz=UTC — the store
-    writes UTC-adjusted TIMESTAMP_MICROS, and arrow's naive→tz cast
-    attaches the zone without moving the epoch, so values surface as
-    tz-AWARE datetimes (the shape the Python-data-source converter
-    needs; naive values would shift by the executor OS zone)."""
-    import pyarrow as pa
-
-    t = spark_type.lower()
-    if t.startswith("decimal"):
-        p, s = t[t.index("(") + 1: t.index(")")].split(",")
-        return pa.decimal128(int(p), int(s))
-    return {
-        "bigint": pa.int64(), "int": pa.int32(), "integer": pa.int32(),
-        "smallint": pa.int16(), "tinyint": pa.int8(),
-        "double": pa.float64(), "float": pa.float32(),
-        "string": pa.string(), "boolean": pa.bool_(),
-        "date": pa.date32(),
-        "timestamp": pa.timestamp("us", tz="UTC"),
-        "timestamp_ntz": pa.timestamp("us"),
-        "binary": pa.binary(),
-    }[t]  # exactly _DUCK_TYPES' surface, validated at plan time
-
-
-def _fill_scalar(at):
-    """A type-default used ONLY as the null-replacement half of the
-    null-safe join-key pair (value, was_null) — the companion boolean
-    keeps a real default-valued key distinct from a NULL one."""
-    import datetime as _dt
-    import decimal as _dec
-
-    import pyarrow as pa
-
-    if pa.types.is_integer(at) or pa.types.is_floating(at):
-        return pa.scalar(0, at)
-    if pa.types.is_decimal(at):
-        return pa.scalar(_dec.Decimal(0), at)
-    if pa.types.is_string(at):
-        return pa.scalar("", at)
-    if pa.types.is_binary(at):
-        return pa.scalar(b"", at)
-    if pa.types.is_boolean(at):
-        return pa.scalar(False, at)
-    if pa.types.is_date(at):
-        return pa.scalar(_dt.date(1970, 1, 1), at)
-    if pa.types.is_timestamp(at):
-        v = (
-            _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
-            if at.tz
-            else _dt.datetime(1970, 1, 1)
-        )
-        return pa.scalar(v, at)
-    raise ValueError(f"CDF stream: unsupported join-key type {at}")
-
-
-def _read_side_arrow(base_dir: str, files: list[str], cols: list[tuple]):
-    """One side of the diff as a pyarrow Table in the LOGICAL end
-    schema: per-file projection + physical→logical rename + cast
-    (schema evolution / column mapping), with missing physical columns
-    as typed NULLs — union_by_name semantics without duckdb."""
-    import pyarrow as pa
-
-    fields = [(log, phys, _arrow_type(st)) for log, phys, _, st in cols]
-    schema = pa.schema([(log, at) for log, _, at in fields])
-    tables = []
-    needed = {phys for _, phys, _ in fields}
-    for f in files:
-        import pyarrow.parquet as pq
-
-        path = os.path.join(base_dir, f)
-        # projection pushed into the scan (footer-only cost to prune):
-        # dropped/renamed-away physical columns in old files must not
-        # be decoded just to be discarded (code-review r10 wave 6)
-        have = [
-            c
-            for c in pq.ParquetFile(path).schema_arrow.names
-            if c in needed
-        ]
-        t = pq.read_table(path, columns=have)
-        n = t.num_rows
-        data = {}
-        for log, phys, at in fields:
-            if phys in t.column_names:
-                data[log] = t[phys].cast(at)
-            else:
-                data[log] = pa.nulls(n, at)
-        tables.append(pa.table(data))
-    if not tables:
-        return schema.empty_table()
-    return pa.concat_tables(tables)
-
-
-def _read_arrow(partition: ChangesPartition):
-    """The arrow twin of the DuckDB diff: a full-outer join on
-    null-safe key pairs (filled value + was-null boolean — arrow joins
-    are SQL-semantics, NULL matches nothing, so the pair encodes
-    IS NOT DISTINCT FROM), presence markers on both sides, and
-    per-column null-safe payload equality for the update split.
-    Vectorized end to end; rows materialize to Python only at yield."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    cols = partition.cols
-    names = [log for log, _, _, _ in cols]
-    keys = partition.keys
-    payload = [c for c in names if c not in keys]
-    old = _read_side_arrow(partition.base_dir, partition.old_files, cols)
-    new = _read_side_arrow(partition.base_dir, partition.new_files, cols)
-
-    def _prep(t, prefix: str, marker: str):
-        data = {}
-        for c in names:
-            data[prefix + c] = t[c]
-        for k in keys:
-            arr = t[k]
-            data["_jk_" + k] = pc.fill_null(
-                arr, _fill_scalar(t.schema.field(k).type)
-            )
-            data["_jn_" + k] = pc.is_null(arr)
-        data[marker] = pa.nulls(t.num_rows, pa.bool_()).fill_null(True)
-        return pa.table(data)
-
-    jk = [p + k for k in keys for p in ("_jk_", "_jn_")]
-    j = _prep(old, "_o_", "_op").join(
-        _prep(new, "_n_", "_np"), keys=jk, join_type="full outer"
-    )
-    op = pc.fill_null(j["_op"], False)
-    np_ = pc.fill_null(j["_np"], False)
-    both = pc.and_(op, np_)
-    same = None
-    for c in payload:
-        a, b = j["_o_" + c], j["_n_" + c]
-        e = pc.or_(
-            pc.fill_null(pc.equal(a, b), False),
-            pc.and_(pc.is_null(a), pc.is_null(b)),
-        )
-        if pa.types.is_floating(j.schema.field("_o_" + c).type):
-            # NaN: pc.equal is IEEE (NaN != NaN) but the diff contract
-            # is IS NOT DISTINCT FROM / eqNullSafe (NaN == NaN, like
-            # the duckdb engine and TableStore.table_changes) — an
-            # unchanged NaN row in a rewritten bucket must not surface
-            # as a phantom update (code-review r10 wave 6). fill_null:
-            # is_nan(NULL) is NULL and arrow's and_/or_ are NOT Kleene
-            # — an unfilled NULL here would poison `same` and silently
-            # DROP the row from every change class
-            e = pc.or_(
-                e,
-                pc.fill_null(
-                    pc.and_(pc.is_nan(a), pc.is_nan(b)), False
-                ),
-            )
-        same = e if same is None else pc.and_(same, e)
-    if same is None:  # key-only table: presence IS equality
-        same = pa.nulls(j.num_rows, pa.bool_()).fill_null(True)
-    changed = pc.and_(both, pc.invert(same))
-
-    def _emit(sub, prefix, tag):
-        # stream per record batch — never the whole filtered result as
-        # simultaneous full-size Python lists (code-review r10 wave 6:
-        # a bulk-load window classifies a whole bucket as inserts, and
-        # the duckdb engine bounds residency at 10k rows via fetchmany)
-        want = [prefix + c for c in names]
-        for batch in sub.select(want).to_batches(max_chunksize=10_000):
-            arrays = [batch.column(i).to_pylist() for i in range(len(want))]
-            for row in zip(*arrays):
-                yield (*row, tag)
-
-    chg = j.filter(changed)  # computed ONCE for both update images
-    yield from _emit(j.filter(pc.and_(np_, pc.invert(op))), "_n_", "insert")
-    yield from _emit(j.filter(pc.and_(op, pc.invert(np_))), "_o_", "delete")
-    yield from _emit(chg, "_o_", "update_preimage")
-    yield from _emit(chg, "_n_", "update_postimage")
-
-
 @dataclass
 class ChangesPartition(InputPartition):
     base_dir: str
@@ -406,17 +149,16 @@ class ChangesPartition(InputPartition):
     keys: list[str] = field(default_factory=list)
     # (logical_name, physical_name, duckdb_type, spark_type) per column
     cols: list[tuple] = field(default_factory=list)
-    engine: str = "duckdb"  # resolved ONCE at stream start (driver)
 
 
 class TableChangesStreamReader(DataSourceStreamReader):
     def __init__(self, options):
-        # engine availability is proven at stream start, not mid-drain
-        self.engine = _resolve_diff_engine(options.get("diff_engine"))
+        # the executors' duckdb is proven at stream start, not mid-drain
+        _require_duckdb()
         self.root = options["path"]
         self.table = options["table"]
         self.start_opt = options.get("starting_version")
-        meta = _meta(self.root, self.table)
+        meta = read_meta(self.root, self.table)
         if not meta.get("versioned") or "keyed_on" not in meta:
             raise ValueError(
                 f"{self.table}: the CDF stream needs a versioned keyed "
@@ -424,12 +166,12 @@ class TableChangesStreamReader(DataSourceStreamReader):
             )
         self.keys = list(meta["keyed_on"])
         self.incarnation = meta.get("incarnation")
-        vs = _versions(self.root, self.table)
+        vs = list_versions(self.root, self.table)
         if not vs:
             raise ValueError(f"{self.table}: no published versions")
         self.current = vs[-1]
         # the stream's fixed logical schema (end columns + _change_type)
-        self.fields = _logical_fields(_manifest(self.root, self.table, self.current))
+        self.fields = _logical_fields(read_manifest(self.root, self.table, self.current))
 
     # -- offsets ------------------------------------------------------------
     def _offset(self, v: int) -> dict:
@@ -448,7 +190,7 @@ class TableChangesStreamReader(DataSourceStreamReader):
     def initialOffset(self) -> dict:
         if self.start_opt is not None:
             v = int(self.start_opt)
-            if v not in _versions(self.root, self.table):
+            if v not in list_versions(self.root, self.table):
                 raise ValueError(
                     f"{self.table}: starting_version {v} is not a "
                     "retained version (vacuumed or never published)"
@@ -457,22 +199,22 @@ class TableChangesStreamReader(DataSourceStreamReader):
         return self._offset(self.current)
 
     def latestOffset(self) -> dict:
-        meta = _meta(self.root, self.table)
+        meta = read_meta(self.root, self.table)
         if meta.get("incarnation") != self.incarnation:
             raise ValueError(
                 f"{self.table}: table was reseeded mid-stream (new "
                 "incarnation) — restart the stream from a fresh "
                 "checkpoint"
             )
-        vs = _versions(self.root, self.table)
+        vs = list_versions(self.root, self.table)
         return self._offset(vs[-1] if vs else self.current)
 
     # -- planning (driver, manifests only) ----------------------------------
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
         v0, v1 = self._check_offset(start), self._check_offset(end)
         d0, d1 = (
-            _manifest(self.root, self.table, v0),
-            _manifest(self.root, self.table, v1),
+            read_manifest(self.root, self.table, v0),
+            read_manifest(self.root, self.table, v1),
         )
         end_fields = _logical_fields(d1)
         if [(f.name, f.dataType) for f in end_fields] != [
@@ -504,14 +246,13 @@ class TableChangesStreamReader(DataSourceStreamReader):
                     base_dir=os.path.join(self.root, self.table),
                     keys=self.keys,
                     cols=cols,
-                    engine=self.engine,
                 )
             return by_bucket[b]
 
         for f in sorted(old_only):
-            _slot(_bucket_of(f)).old_files.append(f)
+            _slot(TableStore._bucket_of(f)).old_files.append(f)
         for f in sorted(new_only):
-            _slot(_bucket_of(f)).new_files.append(f)
+            _slot(TableStore._bucket_of(f)).new_files.append(f)
         # a metadata-only window (compaction diffs cancel per row;
         # rename/drop/restore reference the same files) may leave no
         # churned buckets: one empty partition keeps the batch planner
@@ -523,12 +264,7 @@ class TableChangesStreamReader(DataSourceStreamReader):
     # -- execution (executor, bucket-local diff) -----------------------------
     def read(self, partition: ChangesPartition):
         if not partition.old_files and not partition.new_files:
-            return iter(())
-        if partition.engine == "arrow":
-            return _read_arrow(partition)
-        return self._read_duckdb(partition)
-
-    def _read_duckdb(self, partition: ChangesPartition):
+            return
         import duckdb
 
         con = duckdb.connect()
@@ -624,14 +360,7 @@ class TableChangesStreamReader(DataSourceStreamReader):
 
 class TableChangesDataSource(DataSource):
     """``spark.readStream.format("tablestore_changes")`` — options:
-    ``path`` (store root), ``table``, optional ``starting_version``,
-    optional ``diff_engine`` ("auto" default: duckdb if available,
-    else the pure-pyarrow fallback; "duckdb"/"arrow" force one).
-
-    Engine sizing: the arrow fallback diffs one bucket-window fully
-    in executor RAM (~2× the bucket for an all-insert window), while
-    duckdb spills — see _resolve_diff_engine's docstring before
-    relying on "auto" over large buckets (ADVICE r10)."""
+    ``path`` (store root), ``table``, optional ``starting_version``."""
 
     @classmethod
     def name(cls) -> str:
@@ -664,14 +393,12 @@ def read_changes_stream(
     store,
     table: str,
     starting_version: int | None = None,
-    diff_engine: str | None = None,
 ):
     """Convenience wrapper: register the source and open the stream on
     ``store``'s ``table``. The first micro-batch starts AFTER
     ``starting_version`` (default: the version current at stream
     start — like Delta, history before the stream began is not
-    replayed unless asked for). ``diff_engine``: "auto" (default),
-    "duckdb", or "arrow" — see TableChangesDataSource."""
+    replayed unless asked for)."""
     spark.dataSource.register(TableChangesDataSource)
     r = (
         spark.readStream.format("tablestore_changes")
@@ -680,6 +407,4 @@ def read_changes_stream(
     )
     if starting_version is not None:
         r = r.option("starting_version", int(starting_version))
-    if diff_engine is not None:
-        r = r.option("diff_engine", diff_engine)
     return r.load()

@@ -480,6 +480,60 @@ def test_bloom_maintenance_serialized_no_coverage_loss(spark, tmp_path):
     )
 
 
+def test_bloom_maintenance_claim_waits_then_steals_orphans(spark, tmp_path):
+    """The maintenance claim beside the index dir: while another holder
+    keeps it, update_bloom_index waits, then runs and releases it; an
+    orphaned claim (its holder crashed, mtime far past the stale
+    horizon) is taken over at once instead of blocking the verb."""
+    import os
+    import threading
+    import time
+
+    from datapipelinerepo_spark.io import CLAIM_STALE_S, _acquire_claim
+
+    store = _mk(spark, tmp_path)
+    store.build_bloom_index("t", "cust", m_bits=1 << 14)
+    claim = os.path.join(str(tmp_path), "t", ".bloomidx-claim-cust")
+
+    def _new_rows(k):
+        store.upsert(
+            spark.createDataFrame(
+                [(k, 1234, 1.0)], "k long, cust long, amt double"
+            ),
+            "t", "k",
+        )
+
+    _new_rows(10_000)
+    held, released = threading.Event(), []
+
+    def _holder():
+        assert _acquire_claim(claim, CLAIM_STALE_S) is not None
+        held.set()
+        time.sleep(1.0)
+        released.append(time.time())
+        os.remove(claim)
+
+    th = threading.Thread(target=_holder)
+    th.start()
+    assert held.wait(30)
+    n = store.update_bloom_index("t", "cust")
+    done = time.time()
+    th.join()
+    assert n > 0 and released and done >= released[0]
+    assert not os.path.exists(claim)
+
+    # orphan: a live claim would make the verb wait out CLAIM_WAIT_S
+    # and raise TxnConflict
+    _new_rows(10_001)
+    with open(claim, "w") as fh:
+        fh.write("999999:dead")
+    old = time.time() - 10_000
+    os.utime(claim, (old, old))
+    assert store.update_bloom_index("t", "cust") > 0
+    assert not os.path.exists(claim)
+    assert _probe_rows(store, 1234) == [10_000, 10_001]
+
+
 def test_describe_detail_excludes_bloom_sidecar(spark, tmp_path):
     """ADVICE r12 (low): in the no-manifest heal window the dir walk
     must not count sidecar bitmap parquet as data files."""

@@ -4,6 +4,7 @@ Arrow, with no Python-worker pass, and behave like
 
 from __future__ import annotations
 
+import ast
 import base64
 import datetime as dt
 import json
@@ -148,3 +149,34 @@ def test_library_builds_no_frame_from_a_python_list():
                 line = text.count("\n", 0, m.start()) + 1
                 offenders.append(f"{os.path.relpath(f, _PKG)}:{line}")
     assert not offenders, offenders
+
+
+def test_one_claim_loop_in_the_package():
+    """The claim acquire/identity-check/heartbeat/release loop exists
+    once, in ``io.run_claim_serialized``: ``_acquire_claim`` and
+    ``_ClaimHeartbeat`` are called nowhere else in the library, so a
+    fix to the loop cannot miss a hand-copied twin."""
+    offenders = []
+    for d, _, fs in os.walk(_PKG):
+        for f in fs:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(d, f)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for fn in ast.walk(tree):
+                if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                for node in ast.walk(fn):
+                    if isinstance(node, ast.Call) and getattr(
+                        node.func, "id", getattr(node.func, "attr", None)
+                    ) in ("_acquire_claim", "_ClaimHeartbeat"):
+                        offenders.append(
+                            f"{os.path.relpath(path, _PKG)}:{node.lineno}"
+                            f" in {fn.name}"
+                        )
+    allowed = {
+        o for o in offenders if o.startswith("io.py:")
+        and o.endswith(" in run_claim_serialized")
+    }
+    assert allowed and set(offenders) == allowed, offenders

@@ -1240,15 +1240,12 @@ def test_cdf_stream_type_coverage(spark, tmp_path):
 
 
 def test_cdf_stream_duckdb_fence_and_quoted_paths(spark, tmp_path):
-    """VERDICT r9 item 6 + the r10 arrow fallback. (a) With duckdb
-    unavailable, AUTO falls back to the arrow engine at STREAM START
-    (the wheel is an optimization, not a per-executor hard dep); a
-    FORCED duckdb engine still refuses loudly in the constructor —
-    never an ImportError from inside a task mid-drain. (b) An ancient
-    wheel trips the version floor (forced) and falls back (auto).
-    (c) ADVICE r9: a store root containing a single quote must
-    round-trip through the executor-side SQL (paths are escaped into
-    the read_parquet list literal, not repr-injected)."""
+    """VERDICT r9 item 6. (a) With duckdb unavailable, the reader
+    refuses loudly when it is built — never an ImportError from inside
+    a task mid-drain. (b) An ancient wheel trips the version floor the
+    same way. (c) ADVICE r9: a store root containing a single quote
+    must round-trip through the executor-side SQL (paths are escaped
+    into the read_parquet list literal, not repr-injected)."""
     import sys
     import types
 
@@ -1269,92 +1266,71 @@ def test_cdf_stream_duckdb_fence_and_quoted_paths(spark, tmp_path):
     )
     opts = {"path": str(root), "table": "t"}
 
-    # (a) missing wheel: auto falls back to arrow; forced duckdb refuses
     real = sys.modules.get("duckdb")
-    sys.modules["duckdb"] = None  # forces ImportError on import
-    try:
-        assert TableChangesStreamReader(opts).engine == "arrow"
-        with pytest.raises(RuntimeError, match="every executor"):
-            TableChangesStreamReader({**opts, "diff_engine": "duckdb"})
-    finally:
-        if real is not None:
-            sys.modules["duckdb"] = real
-        else:
-            sys.modules.pop("duckdb", None)
-
-    # (b) ancient wheel: version floor when forced, fallback on auto
     fake = types.ModuleType("duckdb")
     fake.__version__ = "0.5.1"
-    sys.modules["duckdb"] = fake
-    try:
-        with pytest.raises(RuntimeError, match="needs duckdb>="):
-            TableChangesStreamReader({**opts, "diff_engine": "duckdb"})
-        assert TableChangesStreamReader(opts).engine == "arrow"
-    finally:
-        # mirror part (a): re-inserting None on a duckdb-less machine
-        # would poison every later `import duckdb` in the session
-        if real is not None:
-            sys.modules["duckdb"] = real
-        else:
-            sys.modules.pop("duckdb", None)
+    # (a) missing wheel (None forces ImportError); (b) ancient wheel
+    for stub, msg in ((None, "every executor"), (fake, "needs duckdb>=")):
+        sys.modules["duckdb"] = stub
+        try:
+            with pytest.raises(RuntimeError, match=msg):
+                TableChangesStreamReader(opts)
+        finally:
+            # re-inserting None on a duckdb-less machine would poison
+            # every later `import duckdb` in the session
+            if real is not None:
+                sys.modules["duckdb"] = real
+            else:
+                sys.modules.pop("duckdb", None)
 
-    # an unknown engine name refuses at start
-    with pytest.raises(Exception, match="diff_engine"):
-        TableChangesStreamReader({**opts, "diff_engine": "sqlite"})
-
-    # (c) quoted path round-trips through the executor-side SQL —
-    # drained once per engine, identical output required
+    # (c) quoted path round-trips through the executor-side SQL
     store.upsert(
         spark.createDataFrame([(2, 20.0), (3, 3.0)], "id long, v double"),
         "t", "id",
     )
-    expected = {
+    out, ckpt = tmp_path / "out", tmp_path / "ckpt"
+    (
+        read_changes_stream(spark, store, "t", starting_version=1)
+        .writeStream.format("parquet")
+        .option("path", str(out))
+        .option("checkpointLocation", str(ckpt))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    got = {
+        (r["id"], r["v"], r["_change_type"])
+        for r in spark.read.parquet(str(out)).collect()
+    }
+    assert got == {
         (2, 2.0, "update_preimage"),
         (2, 20.0, "update_postimage"),
         (3, 3.0, "insert"),
     }
-    for engine in ("duckdb", "arrow"):
-        out = tmp_path / f"out_{engine}"
-        ckpt = tmp_path / f"ckpt_{engine}"
-        (
-            read_changes_stream(
-                spark, store, "t", starting_version=1, diff_engine=engine
-            )
-            .writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        got = {
-            (r["id"], r["v"], r["_change_type"])
-            for r in spark.read.parquet(str(out)).collect()
-        }
-        assert got == expected, engine
 
 
 def test_cdf_stream_engine_parity_exotic_types(spark, tmp_path):
-    """The two diff engines must produce IDENTICAL multisets on the
-    exotic-type surface: NULL keys (null-safe matching), NULL payload,
-    non-null decimals (changed AND carried), NaN doubles (NaN == NaN
-    per the IS-NOT-DISTINCT-FROM contract — an unchanged NaN row in a
-    rewritten bucket must emit NOTHING), dates, LTZ timestamps
-    (tz-aware out of both engines), strings, binary, and
-    schema-evolution NULL backfill. n_buckets=1 forces every window to
-    rewrite ALL rows, so the unchanged-row cancellation path is
-    exercised for every type."""
+    """The DuckDB diff must produce the SAME multiset as the batch
+    twin ``table_changes`` (Spark's eqNullSafe — an independent
+    implementation) on the exotic-type surface: NULL keys (null-safe
+    matching), NULL payload, non-null decimals (changed AND carried),
+    NaN doubles (NaN == NaN per the IS-NOT-DISTINCT-FROM contract — an
+    unchanged NaN row in a rewritten bucket must emit NOTHING), dates,
+    LTZ timestamps, strings, binary, and schema-evolution NULL
+    backfill. n_buckets=1 forces every window to rewrite ALL rows, so
+    the unchanged-row cancellation path is exercised for every
+    type."""
     import datetime as dt
     from collections import Counter
     from decimal import Decimal
 
     from datapipelinerepo_spark.io import TableStore
     from datapipelinerepo_spark.sources.cdf_stream import (
-        TableChangesStreamReader,
+        read_changes_stream,
     )
 
     nan = float("nan")
-    store = TableStore(spark, str(tmp_path))
+    store = TableStore(spark, str(tmp_path / "store"))
     schema = (
         "id long, d decimal(12,4), dd date, ts timestamp, s string, "
         "b binary, x double"
@@ -1376,7 +1352,7 @@ def test_cdf_stream_engine_parity_exotic_types(spark, tmp_path):
     # window: update the NULL-keyed row (its NaN carries), change row
     # 6's DECIMAL, delete row 1, insert row 4 (NaN payload), and widen
     # the schema (NULL backfill on the old side). Row 5 is untouched —
-    # but the single bucket rewrites, so both engines must cancel it.
+    # but the single bucket rewrites, so the diff must cancel it.
     up = [
         (None, Decimal("2"), None, None, "CHANGED", None, nan, 9.5),
         (4, None, dt.date(2022, 1, 1),
@@ -1388,33 +1364,29 @@ def test_cdf_stream_engine_parity_exotic_types(spark, tmp_path):
         spark.createDataFrame(up, schema + ", extra double"), "t", "id"
     )
     store.delete_where("t", "id = 1")
-    rdr = TableChangesStreamReader({"path": str(tmp_path), "table": "t"})
-    parts = rdr.partitions(rdr._offset(1), rdr._offset(rdr.current))
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    (
+        read_changes_stream(spark, store, "t", starting_version=1)
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
-    def drain(engine):
-        out = []
-        for p in parts:
-            p2 = type(p)(
-                base_dir=p.base_dir, old_files=p.old_files,
-                new_files=p.new_files, keys=p.keys, cols=p.cols,
-                engine=engine,
-            )
-            out.extend(rdr.read(p2))
-        def norm(v):
-            # isoformat: the engines attach DIFFERENT (but equal-UTC)
-            # tzinfo objects — pytz StaticTzInfo vs arrow's — and repr
-            # would flag that cosmetic difference; repr elsewhere keeps
-            # NaN comparable (NaN != NaN under ==) and decimals exact
-            if isinstance(v, dt.datetime):
-                return v.isoformat()
-            return repr(v)
+    def norm(df):
+        # repr keeps NaN comparable (NaN != NaN under ==) and decimals
+        # exact
+        return Counter(
+            tuple(repr(v) for v in r) for r in df.collect()
+        )
 
-        return Counter(tuple(norm(v) for v in r) for r in out)
-
-    duck, arrow = drain("duckdb"), drain("arrow")
-    assert duck == arrow, (
-        f"engines diverged:\n  duck-only={duck - arrow}\n  "
-        f"arrow-only={arrow - duck}"
+    duck = norm(spark.read.parquet(out))
+    twin = norm(store.table_changes("t", 1))
+    assert duck == twin, (
+        f"diff diverged from table_changes:\n  duck-only={duck - twin}"
+        f"\n  twin-only={twin - duck}"
     )
     # sanity: every change class fired, and the untouched NaN row
     # (id=5) emitted NOTHING despite its bucket being rewritten twice
