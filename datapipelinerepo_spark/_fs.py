@@ -24,8 +24,10 @@ The contracts, and their object-store translations:
   staged bytes at ``dst`` (content is immutable once committed, so
   copying equals linking).
 - ``replace(src, dst)``: atomic last-writer-wins replace (staged
-  part-file publication) — readers see the old object or the new one,
-  never a partial write. Local: ``os.replace``. Object store: a plain
+  part-file publication, and the table meta file
+  ``_meta_<table>.json`` that ``TableStore._write_meta`` stages beside
+  it) — readers see the old object or the new one, never a partial
+  write. Local: ``os.replace``. Object store: a plain
   PUT (object-store writes are already all-or-nothing); the local
   RENAME-not-COPY property matters only for cost, not correctness.
 - ``identity(path) -> token | None``: the CURRENT object's identity

@@ -672,11 +672,10 @@ class TableStore:
     def last_modified_date(self, name: str) -> dt.date | None:
         """S4 catalog metadata read (DATE(TIMESTAMP_MILLIS(last_modified_time)),
         datasources.py:394-396)."""
-        p = self._meta_path(name)
-        if not os.path.isfile(p):
+        meta = read_meta(self.root, name)
+        if not meta:
             return None
-        with open(p) as f:
-            millis = json.load(f)["last_modified_millis"]
+        millis = meta["last_modified_millis"]
         return dt.datetime.fromtimestamp(millis / 1000, dt.timezone.utc).date()
 
     def _dir_has_parquet(self, name: str) -> bool:
@@ -692,28 +691,43 @@ class TableStore:
         return False
 
     def _touch_meta(self, name: str, **extra) -> None:
-        meta = {}
-        p = self._meta_path(name)
-        if os.path.isfile(p):
-            with open(p) as f:
-                meta = json.load(f)
+        meta = read_meta(self.root, name)
         meta.update(extra)
         meta["last_modified_millis"] = int(time.time() * 1000)
-        with open(p, "w") as f:
-            json.dump(meta, f)
+        self._write_meta(name, meta)
+
+    def _write_meta(self, name: str, meta: dict) -> None:
+        """The one writer of the meta file: stage the JSON beside it
+        under a name ``tables()`` does not list, then publish it with
+        ``_fs.replace``, so a concurrent ``read_meta`` sees the old
+        file or the new one, never a partial write."""
+        import uuid
+
+        p = self._meta_path(name)
+        tmp = f"{p}.{uuid.uuid4().hex}.tmp"
+        try:
+            with open(tmp, "w") as f:
+                json.dump(meta, f)
+            _fs.replace(tmp, p)
+        except BaseException:
+            try:
+                os.remove(tmp)
+            except FileNotFoundError:
+                pass
+            raise
+
+    @staticmethod
+    def _keyed_spec_of(meta: dict) -> tuple[list[str], int] | None:
+        """keyed_spec's answer from an already-read meta dict."""
+        if "keyed_on" not in meta:
+            return None
+        return list(meta["keyed_on"]), int(meta["key_buckets"])
 
     def keyed_spec(self, name: str) -> tuple[list[str], int] | None:
         """(keys, n_buckets) when the table was written by
         overwrite_keyed, else None — the routing marker for the
         bucket-partitioned upsert fast path."""
-        p = self._meta_path(name)
-        if not os.path.isfile(p):
-            return None
-        with open(p) as f:
-            meta = json.load(f)
-        if "keyed_on" not in meta:
-            return None
-        return list(meta["keyed_on"]), int(meta["key_buckets"])
+        return self._keyed_spec_of(read_meta(self.root, name))
 
     def table_incarnation(self, name: str) -> str | None:
         """Identity of the table's current LIFETIME: minted fresh by
@@ -722,18 +736,7 @@ class TableStore:
         change-feed cursors, sync watermarks — must not be applied to
         the new one). None for tables predating the marker or never
         keyed-written."""
-        p = self._meta_path(name)
-        if not os.path.isfile(p):
-            return None
-        with open(p) as f:
-            return json.load(f).get("incarnation")
-
-    def _key_types(self, name: str) -> list[str] | None:
-        p = self._meta_path(name)
-        if not os.path.isfile(p):
-            return None
-        with open(p) as f:
-            return json.load(f).get("key_types")
+        return read_meta(self.root, name).get("incarnation")
 
     def _meta_schema_df(self, name: str) -> DataFrame | None:
         """Empty frame with the schema recorded in the keyed meta
@@ -755,11 +758,7 @@ class TableStore:
         data loss where the pre-fallback code failed loudly)."""
         if not os.path.isfile(os.path.join(self._dir(name), "_SUCCESS")):
             return None
-        p = self._meta_path(name)
-        if not os.path.isfile(p):
-            return None
-        with open(p) as f:
-            s = json.load(f).get("schema")
+        s = read_meta(self.root, name).get("schema")
         if s is None:
             return None
         from pyspark.sql.types import StructType
@@ -774,15 +773,10 @@ class TableStore:
         emptied-table fallback serves (code-review r7)."""
         from pyspark.sql.types import StructType
 
-        p = self._meta_path(name)
-        stored = None
-        if os.path.isfile(p):
-            with open(p) as f:
-                s = json.load(f).get("schema")
-            if s:
-                stored = StructType.fromJson(json.loads(s))
-        if stored is None:
+        s = read_meta(self.root, name).get("schema")
+        if not s:
             return schema.json()
+        stored = StructType.fromJson(json.loads(s))
         have = {f.name for f in stored.fields}
         merged = StructType(
             list(stored.fields)
@@ -820,19 +814,14 @@ class TableStore:
         table unstamped, so a stale marker would route the NEXT upsert
         into the bucket fast path against a table with no _kb column
         (code-review r5: reproduced AnalysisException)."""
-        p = self._meta_path(name)
-        if not os.path.isfile(p):
-            return
-        with open(p) as f:
-            meta = json.load(f)
+        meta = read_meta(self.root, name)
         if "keyed_on" in meta or meta.get("versioned"):
             for k in (
                 "keyed_on", "key_buckets", "key_types", "versioned",
                 "version", "incarnation",
             ):
                 meta.pop(k, None)
-            with open(p, "w") as f:
-                json.dump(meta, f)
+            self._write_meta(name, meta)
             # the snapshot history died with the files
             shutil.rmtree(self._manifest_dir(name), ignore_errors=True)
             self._retire_bloom_indexes(name)
@@ -849,15 +838,11 @@ class TableStore:
         leaves a readable table; the in-progress overwrite window
         itself fails loudly via the _SUCCESS guard, same as
         overwrite_keyed's reset window."""
-        p = self._meta_path(name)
-        if os.path.isfile(p):
-            with open(p) as f:
-                meta = json.load(f)
-            if meta.get("versioned") or "version" in meta:
-                meta.pop("versioned", None)
-                meta.pop("version", None)
-                with open(p, "w") as f:
-                    json.dump(meta, f)
+        meta = read_meta(self.root, name)
+        if meta.get("versioned") or "version" in meta:
+            meta.pop("versioned", None)
+            meta.pop("version", None)
+            self._write_meta(name, meta)
         shutil.rmtree(self._manifest_dir(name), ignore_errors=True)
         self._retire_bloom_indexes(name)
 
@@ -871,7 +856,7 @@ class TableStore:
         # uncast incoming batch would route rows to the wrong bucket
         # (code-review r5: reproduced duplicate keys, and in the CDC
         # path a bucket wipe).
-        types = types or self._key_types(name)
+        types = types or read_meta(self.root, name).get("key_types")
         cols = [
             F.col(k).cast(t) if types else F.col(k)
             for k, t in zip(keys, types or keys)
@@ -927,11 +912,7 @@ class TableStore:
         return manifest_path(self.root, name, version)
 
     def is_versioned(self, name: str) -> bool:
-        p = self._meta_path(name)
-        if not os.path.isfile(p):
-            return False
-        with open(p) as f:
-            return bool(json.load(f).get("versioned"))
+        return bool(read_meta(self.root, name).get("versioned"))
 
     def versions(self, name: str) -> list[int]:
         return list_versions(self.root, name)
@@ -1390,14 +1371,17 @@ class TableStore:
         This is the stats-only specialized verb; ``read(name,
         where=...)`` (r13) is the general entry point that also
         consults bloom sidecars and bucket routing per conjunct."""
-        if not self.is_versioned(name):
+        meta = read_meta(self.root, name)
+        if not meta.get("versioned"):
             raise ValueError(
                 f"{name}: read_where needs a versioned table (the stats "
                 "live in the snapshot manifests)"
             )
         where = self._normalize_ranges(col, between, ranges)
         v = self._ensure_latest(name) if version is None else version
-        return self._read_planned(name, where, v, self._manifest_doc(name, v))
+        return self._read_planned(
+            name, where, v, self._manifest_doc(name, v), meta
+        )
 
     @staticmethod
     def _normalize_ranges(col, between, ranges) -> dict:
@@ -1727,7 +1711,8 @@ class TableStore:
                 "count a disjunction as branch counts minus overlaps, "
                 "or scan read(where=[...])"
             )
-        if not self.is_versioned(name):
+        meta = read_meta(self.root, name)
+        if not meta.get("versioned"):
             raise ValueError(
                 f"{name}: count_where needs a versioned table (the "
                 "stats live in the snapshot manifests)"
@@ -1751,7 +1736,7 @@ class TableStore:
                 f"{name}: no column(s) {bad} (dropped from the "
                 "logical schema)"
             )
-        keep_set, _cols = self._plan_branch(name, where, v, doc)
+        keep_set, _cols = self._plan_branch(name, where, v, doc, meta)
         specs = [
             (cm_renames.get(c, c), *self._classify_spec(c, spec))
             for c, spec in where.items()
@@ -2802,13 +2787,14 @@ class TableStore:
         bucket routing for free; ``read(name, where=...)`` is the
         general multi-conjunct entry point."""
         self._bloom_values(value)  # validate probe shape loudly
+        meta = self._planning_meta(name)
         v = self._ensure_latest(name) if version is None else version
         doc = self._manifest_doc(name, v)
         spec = (
             list(value) if isinstance(value, (list, tuple, set))
             else value
         )
-        return self._read_planned(name, {col: spec}, v, doc)
+        return self._read_planned(name, {col: spec}, v, doc, meta)
 
     def read_point_where(
         self, name: str, eq: dict, version: int | None = None
@@ -2828,13 +2814,14 @@ class TableStore:
         ``read(name, where=...)`` additionally accepts ranges."""
         if not eq:
             raise ValueError("read_point_where needs at least one column")
+        meta = self._planning_meta(name)
         v = self._ensure_latest(name) if version is None else version
         doc = self._manifest_doc(name, v)
         where = {
             c: (list(val) if isinstance(val, (list, tuple, set)) else val)
             for c, val in eq.items()
         }
-        return self._read_planned(name, where, v, doc)
+        return self._read_planned(name, where, v, doc, meta)
 
     # -- unified predicate-driven read planning (VERDICT r12 item 3) ---
     #
@@ -2963,14 +2950,28 @@ class TableStore:
         uncovered files keep, loosely-typed key probes skip bucket
         routing, and read() re-applies the exact predicate on the
         scan."""
-        if not self.is_versioned(name):
+        meta = self._planning_meta(name)
+        v = self._ensure_latest(name) if version is None else version
+        if doc is None:
+            doc = self._manifest_doc(name, v)
+        return self._plan(name, where, v, doc, meta)
+
+    def _planning_meta(self, name: str) -> dict:
+        """The table's meta, read once for a whole plan; raises when
+        the table is not versioned."""
+        meta = read_meta(self.root, name)
+        if not meta.get("versioned"):
             raise ValueError(
                 f"{name}: where= planning needs a versioned table (the "
                 "stats and indexes live in/next to snapshot manifests)"
             )
-        v = self._ensure_latest(name) if version is None else version
-        if doc is None:
-            doc = self._manifest_doc(name, v)
+        return meta
+
+    def _plan(
+        self, name: str, where, v: int, doc: dict, meta: dict
+    ) -> tuple[list[str], dict]:
+        """plan_read's body over a resolved version and an already-read
+        meta."""
         files = doc["files"]
         if isinstance(where, (list, tuple)):
             branches = list(where)
@@ -2986,7 +2987,7 @@ class TableStore:
                         "a disjunctive where is a list of conjunct "
                         f"DICTS ({{col: spec}}), got {type(b).__name__}"
                     )
-                b_keep, b_cols = self._plan_branch(name, b, v, doc)
+                b_keep, b_cols = self._plan_branch(name, b, v, doc, meta)
                 keep_set |= b_keep
                 branch_reports.append(
                     {"columns": b_cols, "kept": len(b_keep)}
@@ -2999,7 +3000,7 @@ class TableStore:
                 "kept_files": len(keep_set),
             }
             return [f for f in files if f in keep_set], report
-        keep_set, cols = self._plan_branch(name, where, v, doc)
+        keep_set, cols = self._plan_branch(name, where, v, doc, meta)
         report = {
             "table": name,
             "version": v,
@@ -3010,7 +3011,7 @@ class TableStore:
         return [f for f in files if f in keep_set], report
 
     def _plan_branch(
-        self, name: str, where: dict, v: int, doc: dict
+        self, name: str, where: dict, v: int, doc: dict, meta: dict
     ) -> tuple[set, dict]:
         """One conjunct dict's kept set (intersection across its
         columns) + per-column report — plan_read's branch core."""
@@ -3024,11 +3025,11 @@ class TableStore:
         # version pins: rebucket is a reseed (new incarnation, old
         # manifests retired), so any resolvable version of this table
         # shares the current spec's bucketing.
-        kspec = self.keyed_spec(name)
+        kspec = self._keyed_spec_of(meta)
+        ktypes = meta.get("key_types")
         key_phys = key_nb = key_type = None
         if kspec is not None and len(kspec[0]) == 1:
             key_phys, key_nb = kspec[0][0], kspec[1]
-            ktypes = self._key_types(name)
             key_type = ktypes[0] if ktypes else None
         keep_set = set(files)
         columns: dict = {}
@@ -3138,7 +3139,6 @@ class TableStore:
         # keys are handled per-column above.
         if kspec is not None and len(kspec[0]) > 1:
             keys, n_b = kspec
-            ktypes = self._key_types(name)
             if ktypes and len(ktypes) == len(keys):
                 phys_specs = {
                     cm_renames.get(c, c): spec
@@ -3219,15 +3219,13 @@ class TableStore:
         return expr
 
     def _read_planned(
-        self, name: str, where, version: int, doc: dict
+        self, name: str, where, version: int, doc: dict, meta: dict
     ) -> DataFrame:
         """read(where=...)'s body: plan the pruned scan, then apply
         the EXACT predicate on it (correctness never rides pruning).
         A dict filters as an AND chain; a list of dicts as the OR of
         its branches' AND chains (matching plan_read's union)."""
-        keep, _report = self.plan_read(
-            name, where, version=version, doc=doc
-        )
+        keep, _report = self._plan(name, where, version, doc, meta)
         out = self._scan_files(name, version, doc, keep)
         if isinstance(where, (list, tuple)):
             expr = None
@@ -3469,11 +3467,7 @@ class TableStore:
         self._touch_meta(name, **props)
 
     def table_property(self, name: str, key: str):
-        p = self._meta_path(name)
-        if not os.path.isfile(p):
-            return None
-        with open(p) as f:
-            return json.load(f).get(key)
+        return read_meta(self.root, name).get(key)
 
     def _maybe_auto_compact(self, name: str, op: str | None) -> None:
         """Write-path auto-compaction: runs after an INCREMENTAL write
@@ -3913,22 +3907,17 @@ class TableStore:
         if not self.exists(name):
             raise ValueError(f"{name}: no such table")
         out: dict = {"name": name, "format": "parquet"}
-        spec = self.keyed_spec(name)
+        meta = read_meta(self.root, name)
+        spec = self._keyed_spec_of(meta)
         if spec is not None:
             out["key_cols"], out["n_buckets"] = spec
-        out["incarnation"] = self.table_incarnation(name)
-        props = {}
-        p = self._meta_path(name)
-        if os.path.isfile(p):
-            with open(p) as f:
-                meta = json.load(f)
-            props = {
-                k: v
-                for k, v in meta.items()
-                if k in ("auto_compact_files_per_bucket", "bloom_index_cols")
-                and v is not None
-            }
-        out["properties"] = props
+        out["incarnation"] = meta.get("incarnation")
+        out["properties"] = {
+            k: v
+            for k, v in meta.items()
+            if k in ("auto_compact_files_per_bucket", "bloom_index_cols")
+            and v is not None
+        }
         bdir = os.path.join(self._dir(name), ".bloomidx")
         out["bloom_index_cols"] = (
             sorted(
@@ -3942,7 +3931,7 @@ class TableStore:
             if os.path.isdir(bdir)
             else []
         )
-        vs = self.versions(name) if self.is_versioned(name) else []
+        vs = self.versions(name) if meta.get("versioned") else []
         if not vs:
             # plain tables have no _kb layout (walk the dir); a
             # versioned table with NO retained manifests is the
@@ -3952,16 +3941,7 @@ class TableStore:
             # unversioned tables carry their S4 mod-time in meta, not
             # manifests — surface it so describe_detail is the one
             # catalog verb pipeline gates need (VERDICT r12 item 7).
-            # Re-read rather than reuse the props-block local: that
-            # one is bound only if the meta file existed at ITS check,
-            # and a meta appearing in between must not NameError.
-            try:
-                with open(p) as f:
-                    out["last_modified_ts_millis"] = json.load(f).get(
-                        "last_modified_millis"
-                    )
-            except (OSError, ValueError):
-                pass
+            out["last_modified_ts_millis"] = meta.get("last_modified_millis")
             files = []
             base_dir = self._dir(name)
             for dirpath, dirnames, fnames in os.walk(base_dir):
@@ -4040,19 +4020,14 @@ class TableStore:
         files are unknown — calling them reclaimable would convert a
         recoverable metadata problem into data loss); a crashed
         rebucket's durable stage counts as ``stage_bytes`` debt."""
-        meta = None
+        meta: dict = {}
         meta_issue = None
-        p = self._meta_path(name)
-        if os.path.isfile(p):
-            try:
-                with open(p) as f:
-                    meta = json.load(f)
-            except Exception as ex:
-                meta_issue = f"unreadable meta file ({ex})"
+        try:
+            meta = read_meta(self.root, name)
+        except (OSError, ValueError) as ex:
+            meta_issue = f"unreadable meta file ({ex})"
         vs = self.versions(name)
-        if meta_issue is None and not (
-            (meta or {}).get("versioned") or vs
-        ):
+        if meta_issue is None and not (meta.get("versioned") or vs):
             # a CLEARLY unversioned keyed table has no manifests, so
             # EVERY live file would read as a reclaimable orphan — a
             # dangerously wrong report (code-review r8 wave 5). A
@@ -4130,29 +4105,28 @@ class TableStore:
                 "(a crashed rebucket; the next rebucket resumes from it, "
                 "drop() removes it)"
             )
-        if meta is not None:
-            try:
-                ptr = int(meta.get("version", 0))
-                if vs and ptr > max(vs):
-                    report["issues"].append(
-                        f"meta version pointer {ptr} ahead of published "
-                        f"history (max v{max(vs)})"
-                    )
-            except (TypeError, ValueError):
+        try:
+            ptr = int(meta.get("version", 0))
+            if vs and ptr > max(vs):
                 report["issues"].append(
-                    f"malformed meta version pointer {meta.get('version')!r}"
+                    f"meta version pointer {ptr} ahead of published "
+                    f"history (max v{max(vs)})"
                 )
-            keys = meta.get("keyed_on")
-            types = meta.get("key_types")
-            if (
-                keys is not None
-                and types is not None
-                and len(keys) != len(types)
-            ):
-                report["issues"].append(
-                    f"keyed spec mismatch: {len(keys)} keys vs "
-                    f"{len(types)} key_types"
-                )
+        except (TypeError, ValueError):
+            report["issues"].append(
+                f"malformed meta version pointer {meta.get('version')!r}"
+            )
+        keys = meta.get("keyed_on")
+        types = meta.get("key_types")
+        if (
+            keys is not None
+            and types is not None
+            and len(keys) != len(types)
+        ):
+            report["issues"].append(
+                f"keyed spec mismatch: {len(keys)} keys vs "
+                f"{len(types)} key_types"
+            )
         return report
 
     def history(self, name: str) -> list[dict]:
@@ -4750,17 +4724,18 @@ class TableStore:
             raise ValueError("pass version= or as_of_ts=, not both")
         if as_of_ts is not None:
             version = self.version_as_of(name, as_of_ts)
-        if where is not None and not self.is_versioned(name):
+        meta = read_meta(self.root, name)
+        if where is not None and not meta.get("versioned"):
             raise ValueError(
                 f"{name}: where= planning needs a versioned table "
                 "(overwrite_keyed(..., versioned=True)); filter an "
                 "ordinary read instead"
             )
-        if self.is_versioned(name):
+        if meta.get("versioned"):
             v = self.latest_version(name) if version is None else version
             if v is not None and where is not None:
                 return self._read_planned(
-                    name, where, v, self._manifest_doc(name, v)
+                    name, where, v, self._manifest_doc(name, v), meta
                 )
             if v is None and where is not None:
                 raise ValueError(
@@ -4789,14 +4764,15 @@ class TableStore:
                 f"{name} is not versioned (overwrite_keyed(..., versioned=True))"
             )
         self._heal_swaps(name)  # finish any interrupted bucket swap (r15)
-        if self.keyed_spec(name) is not None and not self._dir_has_parquet(name):
+        keyed = "keyed_on" in meta
+        if keyed and not self._dir_has_parquet(name):
             fallback = self._meta_schema_df(name)
             if fallback is not None:
                 return fallback.drop("_kb")  # fully-emptied keyed table
         df = self.spark.read.option("mergeSchema", "true").parquet(
             self._dir(name)
         )
-        if self.keyed_spec(name) is not None:
+        if keyed:
             df = df.drop("_kb")  # internal bucket column stays internal
         return df
 
@@ -5358,7 +5334,8 @@ class TableStore:
         At 100 TB with n_buckets sized to a few files per bucket, a
         k-key lookup touches ≤ k bucket directories' footers — the
         poor man's primary-key index that bucketing already paid for."""
-        spec = self.keyed_spec(name)
+        meta = read_meta(self.root, name)
+        spec = self._keyed_spec_of(meta)
         if spec is None:
             raise ValueError(
                 f"{name}: lookup() needs a keyed table "
@@ -5372,7 +5349,7 @@ class TableStore:
         ]
         if not rows:
             return self.read(name).limit(0)
-        types = self._key_types(name)
+        types = meta.get("key_types")
         # EXPLICIT schema from the stored key types (code-review r7
         # wave 3): inference dies on an all-None probe, and a lazy cast
         # of an uncastable value would become NULL and eqNullSafe-match
@@ -5555,11 +5532,7 @@ class TableStore:
         )
 
     def constraints(self, name: str) -> dict[str, str]:
-        p = self._meta_path(name)
-        if not os.path.isfile(p):
-            return {}
-        with open(p) as f:
-            return json.load(f).get("constraints", {})
+        return read_meta(self.root, name).get("constraints", {})
 
     def validate(self, name: str) -> dict[str, int]:
         """Audit the CURRENT table against its declared constraints:
@@ -5637,11 +5610,7 @@ class TableStore:
           CHECK (which lets UNKNOWN pass) BY DESIGN — in a training
           pipeline a null sneaking past a gate is almost always a bug;
           write "x IS NULL OR <pred>" to opt into SQL's laxness."""
-        meta = {}
-        p = self._meta_path(name)
-        if os.path.isfile(p):
-            with open(p) as f:
-                meta = json.load(f)  # one read serves constraints AND schema
+        meta = read_meta(self.root, name)  # serves constraints AND schema
         cons = meta.get("constraints", {})
         if not cons:
             return df
@@ -6335,9 +6304,10 @@ class TableStore:
             self._overwrite_raw(survivors, name)
             return [-1]
         def _attempt() -> list[int]:
+            meta = read_meta(self.root, name)
             v0, v0_ident = (
                 self._pin_base(name)
-                if self.is_versioned(name)
+                if meta.get("versioned")
                 else (None, None)
             )
             if where is not None:
@@ -6345,7 +6315,7 @@ class TableStore:
                 # predicate on the skipped scan, pinned at v0 so the
                 # OCC retry re-plans against a fresh snapshot
                 matches = self._read_planned(
-                    name, where, v0, self._manifest_doc(name, v0)
+                    name, where, v0, self._manifest_doc(name, v0), meta
                 )
             else:
                 matches = self.read(name).filter(condition)
@@ -6457,14 +6427,15 @@ class TableStore:
             return [-1]
 
         def _attempt() -> list[int]:
+            meta = read_meta(self.root, name)
             v0, v0_ident = (
                 self._pin_base(name)
-                if self.is_versioned(name)
+                if meta.get("versioned")
                 else (None, None)
             )
             if where is not None:
                 matches = self._read_planned(
-                    name, where, v0, self._manifest_doc(name, v0)
+                    name, where, v0, self._manifest_doc(name, v0), meta
                 )
             else:
                 matches = self.read(name).filter(condition)

@@ -1499,25 +1499,9 @@ def _bpe_word_tokens_py(
     return toks
 
 
-# 'auto' engine switch point: 'fold' (pure-JVM chained column folds) up
-# to this many rules, 'arrow' beyond. MEASURED, not asserted (VERDICT
-# r7 item 7, the since-deleted tools/bench_bpe_crossover.py + a
-# 200k-word synthetic-vocab probe, both median-of-3): arrow wins at
-# EVERY size on both the
-# testdata corpus (8 rules: 0.94 s vs fold 1.46 s; 128 rules: 0.64 vs
-# 6.4 s at sf0.1) and a wide 200k-word vocabulary (8 rules: 1.7 s vs
-# 12.7 s; 32 rules: 0.95 s vs 38 s — fold's per-rule plan/codegen and
-# per-rule passes over the vocab frame dominate long before any Python
-# overhead matters). So the measured crossover is 0: 'auto' is always
-# 'arrow'. The fold engine stays available explicitly (engine="fold")
-# as the no-Python-worker fallback, held bit-identical by the parity
-# pytests.
-_BPE_AUTO_FOLD_MAX = 0
-
-
 def _bpe_arrow_ctx(merges):
     """(rules, ranks, fast) shared by bpe_encode / bpe_encode_tokens'
-    Arrow engines — one construction of the rule list, rank index, and
+    pandas UDFs — one construction of the rule list, rank index, and
     the sequential-safety gate decision, so the count path and the
     token-sequence path can never drift (code-review r7 wave 2)."""
     rules = [(left, right) for left, right in merges]
@@ -1530,7 +1514,6 @@ def bpe_encode(
     merges: list[tuple[str, str]],
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str = "auto",
 ) -> DataFrame:
     """Apply a learned BPE merge list to the corpus — the ENCODE half
     of the tokenizer (bpe_learn trains the rules; this tokenizes with
@@ -1551,57 +1534,30 @@ def bpe_encode(
     constant — a tokenizer model is a bounded artifact (the
     k-means-parameter class).
 
-    ``engine`` picks the vocabulary rewrite (VERDICT r6 item 1):
-    - 'fold': one chained JVM column fold per rule — whole-stage
-      codegen, zero Python, ideal for short lists, but the expression
-      tree grows with the rule count (a 30k-rule list would build a
-      30k-deep plan: analysis/codegen blowup).
-    - 'arrow': ONE Arrow-batched pandas UDF carrying the whole rule
-      list; per word it runs priority merging (cost independent of
-      list size) when bpe_rules_sequential_safe proves it equivalent
-      to the fold, else the literal sequential passes. Bit-identical
-      to 'fold' either way (pinned by the 8-rule DuckDB oracle, a
-      fold-vs-arrow pytest, and a 1k-rule python-reference pytest).
-    - 'auto': 'arrow' — measured fastest at every rule-list size and
-      vocabulary width tried (see _BPE_AUTO_FOLD_MAX); pass
-      engine='fold' explicitly for the no-Python-worker path."""
-    if engine == "auto":
-        engine = "fold" if len(merges) <= _BPE_AUTO_FOLD_MAX else "arrow"
+    The vocabulary rewrite is ONE Arrow-batched pandas UDF carrying
+    the whole rule list (VERDICT r6 item 1): per word it runs
+    priority merging (cost independent of list size) when
+    bpe_rules_sequential_safe proves it equivalent to the sequential
+    per-rule fold, else the literal sequential passes. Pinned by the
+    8-rule DuckDB oracle and pytests against a pure-Python sequential
+    fold."""
+    from pyspark.sql.functions import pandas_udf
+
     words = df.select(
         F.col(id_col), F.explode(ws_tokens(F.col(text_col))).alias("_w")
     )
-    vocab = words.select("_w").distinct()
-    if engine == "fold":
-        vocab = vocab.withColumn("_t", F.split("_w", ""))
-        for i, (left, right) in enumerate(merges, 1):
-            vocab = vocab.withColumn("_t", _bpe_fold("_t", left, right))
-            if i % 64 == 0:
-                # bound the expression-tree depth: past ~1k chained
-                # folds the analyzer's recursion overflows the JVM
-                # stack (observed at 1024); materializing the small
-                # vocabulary frame every 64 rules keeps each segment's
-                # plan shallow with identical semantics
-                vocab = vocab.localCheckpoint(eager=True)
-        n_tokens = F.size("_t")
-    elif engine == "arrow":
-        from pyspark.sql.functions import pandas_udf
+    rules, ranks, fast = _bpe_arrow_ctx(merges)
 
-        rules, ranks, fast = _bpe_arrow_ctx(merges)
+    @pandas_udf("int")
+    def _bpe_ntokens(w):  # pd.Series[str] -> pd.Series[int]
+        return w.map(
+            lambda s: len(_bpe_word_tokens_py(s, rules, ranks, fast))
+        )
 
-        @pandas_udf("int")
-        def _bpe_ntokens(w):  # pd.Series[str] -> pd.Series[int]
-            return w.map(
-                lambda s: len(_bpe_word_tokens_py(s, rules, ranks, fast))
-            )
-
-        vocab = vocab.withColumn("_t_n", _bpe_ntokens(F.col("_w")))
-        n_tokens = F.col("_t_n")
-    else:
-        raise ValueError(f"engine must be auto|fold|arrow, got {engine!r}")
-    vlen = vocab.select(
+    vlen = words.select("_w").distinct().select(
         "_w",
         F.length("_w").alias("_cl"),
-        n_tokens.alias("_bl"),
+        _bpe_ntokens(F.col("_w")).alias("_bl"),
     )
     return (
         words.join(vlen, "_w")
@@ -1622,7 +1578,6 @@ def bpe_encode_tokens(
     merges: list[tuple[str, str]],
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str = "auto",
 ) -> DataFrame:
     """Tokenize the corpus and return the actual per-document TOKEN
     SEQUENCE in document order — what a training pipeline feeds the
@@ -1636,38 +1591,23 @@ def bpe_encode_tokens(
     collect_list of (pos, word-tokens) sorted in-plan and flattened —
     the per-group buffer is bounded by document length (the
     text_chunking class), never corpus-sized, and document order is
-    deterministic regardless of partitioning. ``engine`` mirrors
-    bpe_encode exactly (code-review r7: the production-size 30k-rule
-    list this function's use case implies must not compile 30k chained
-    folds): 'fold' = per-rule JVM folds, 'arrow' = one pandas UDF
-    returning each word's token array via priority merging with the
-    sequential-safety gate, 'auto' = arrow (measured fastest at every
-    size — see _BPE_AUTO_FOLD_MAX)."""
-    if engine == "auto":
-        engine = "fold" if len(merges) <= _BPE_AUTO_FOLD_MAX else "arrow"
+    deterministic regardless of partitioning. The vocabulary rewrite is
+    bpe_encode's pandas UDF, returning each word's token array."""
+    from pyspark.sql.functions import pandas_udf
+
     words = df.select(
         F.col(id_col),
         F.posexplode(ws_tokens(F.col(text_col))).alias("_pos", "_w"),
     )
-    vocab = words.select("_w").distinct()
-    if engine == "fold":
-        vocab = vocab.withColumn("_t", F.split("_w", ""))
-        for i, (left, right) in enumerate(merges, 1):
-            vocab = vocab.withColumn("_t", _bpe_fold("_t", left, right))
-            if i % 64 == 0:
-                vocab = vocab.localCheckpoint(eager=True)  # see bpe_encode
-    elif engine == "arrow":
-        from pyspark.sql.functions import pandas_udf
+    rules, ranks, fast = _bpe_arrow_ctx(merges)
 
-        rules, ranks, fast = _bpe_arrow_ctx(merges)
+    @pandas_udf("array<string>")
+    def _bpe_tokens(w):  # pd.Series[str] -> pd.Series[list[str]]
+        return w.map(lambda s: _bpe_word_tokens_py(s, rules, ranks, fast))
 
-        @pandas_udf("array<string>")
-        def _bpe_tokens(w):  # pd.Series[str] -> pd.Series[list[str]]
-            return w.map(lambda s: _bpe_word_tokens_py(s, rules, ranks, fast))
-
-        vocab = vocab.withColumn("_t", _bpe_tokens(F.col("_w")))
-    else:
-        raise ValueError(f"engine must be auto|fold|arrow, got {engine!r}")
+    vocab = words.select("_w").distinct().withColumn(
+        "_t", _bpe_tokens(F.col("_w"))
+    )
     return (
         words.join(vocab, "_w")
         .groupBy(id_col)

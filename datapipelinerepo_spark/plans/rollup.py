@@ -232,14 +232,7 @@ def _check_rollup_spec(store, table: str, spec: dict) -> None:
     extrema columns stale forever — internally inconsistent with no
     error (code-review r9 wave 1). Rollups seeded before the spec was
     recorded skip the check."""
-    import json as _json
-    import os as _os
-
-    p = store._meta_path(table)
-    if not _os.path.isfile(p):
-        return
-    with open(p) as fh:
-        stored = _json.load(fh).get("rollup_spec")
+    stored = store.table_property(table, "rollup_spec")
     if stored is None:
         return
     diffs = {

@@ -3927,7 +3927,7 @@ def text_bpe_encode_1k(spark, sf_dir):
         .collect()
     }
     rules = _padded_rule_list(wc, 1024)
-    return T.bpe_encode(docs, rules, engine="arrow")
+    return T.bpe_encode(docs, rules)
 
 
 # fixed rank-ordered merge list for the encode query: decoupled from

@@ -295,14 +295,9 @@ def near_dup_ingest_stream(
             "_batch_id",
         )
 
-    w = (
-        docs.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _start_foreach_batch(
+        docs, _ingest, checkpoint_dir, available_now, "append"
     )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
 
 
 def curate_ingest_stream(
@@ -405,16 +400,18 @@ def curate_ingest_stream(
 
         from pyspark import inheritable_thread_target
 
+        # the batch's session carries the caller's tags to both jobs
+        inherit = inheritable_thread_target(batch.sparkSession)
         with ThreadPoolExecutor(max_workers=2) as pool:
             futs = [
                 pool.submit(
-                    inheritable_thread_target(store.reload_partitions),
+                    inherit(store.reload_partitions),
                     clean.withColumn("_batch_id", F.lit(batch_id)),
                     clean_table,
                     "_batch_id",
                 ),
                 pool.submit(
-                    inheritable_thread_target(store.reload_partitions),
+                    inherit(store.reload_partitions),
                     rejects.withColumn("_batch_id", F.lit(batch_id)),
                     rejected_table,
                     "_batch_id",
@@ -423,14 +420,9 @@ def curate_ingest_stream(
             for f in futs:
                 f.result()  # propagate either failure to the batch
 
-    w = (
-        docs.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _start_foreach_batch(
+        docs, _ingest, checkpoint_dir, available_now, "append"
     )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
 
 
 def cdc_ingest_stream(
@@ -513,14 +505,9 @@ def cdc_ingest_stream(
         _check_landed_rows(store, base_table, merged, batch, key)
         store._overwrite_raw(merged, base_table)
 
-    w = (
-        changes.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _start_foreach_batch(
+        changes, _apply, checkpoint_dir, available_now, "update"
     )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
 
 
 def _check_landed_rows(store, base_table, merged, batch, key) -> None:
@@ -632,15 +619,21 @@ def cdc_apply_txn(
 
 
 def _start_foreach_batch(
-    updates: DataFrame, apply, checkpoint_dir: str, available_now: bool
+    stream: DataFrame,
+    apply,
+    checkpoint_dir: str,
+    available_now: bool,
+    output_mode: str,
 ) -> StreamingQuery:
-    """The shared foreachBatch starter the maintained-table streams use
-    (ONE definition — code-review r10 wave 7: three copies of the same
-    8-line scaffolding drift apart on the next shape change)."""
+    """The one foreachBatch starter every ingest and maintained-table
+    stream uses (code-review r10 wave 7: copies of the same 8-line
+    scaffolding drift apart on the next shape change). ``output_mode``
+    is ``"append"`` for the document sinks and ``"update"`` for the
+    change streams."""
     w = (
-        updates.writeStream.foreachBatch(apply)
+        stream.writeStream.foreachBatch(apply)
         .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+        .outputMode(output_mode)
     )
     if available_now:
         w = w.trigger(availableNow=True)
@@ -683,7 +676,7 @@ def versioned_upsert_stream(
         )
 
     return _start_foreach_batch(
-        updates, _apply, checkpoint_dir, available_now
+        updates, _apply, checkpoint_dir, available_now, "update"
     )
 
 
@@ -756,7 +749,7 @@ def maintained_rollup_stream(
         )
 
     return _start_foreach_batch(
-        updates, _apply, checkpoint_dir, available_now
+        updates, _apply, checkpoint_dir, available_now, "update"
     )
 
 
@@ -834,7 +827,7 @@ def maintained_join_view_stream(
         )
 
     return _start_foreach_batch(
-        updates, _apply, checkpoint_dir, available_now
+        updates, _apply, checkpoint_dir, available_now, "update"
     )
 
 
@@ -921,5 +914,5 @@ def maintained_stack_stream(
         )
 
     return _start_foreach_batch(
-        updates, _apply, checkpoint_dir, available_now
+        updates, _apply, checkpoint_dir, available_now, "update"
     )

@@ -1693,7 +1693,7 @@ def test_global_desc_rank_cumsum_matches_global_window(spark):
 def test_bpe_encode_matches_python_reference_and_roundtrips(spark):
     """Encode with a merge list equals a pure-Python greedy fold per
     word; and encoding with rules LEARNED from the same corpus
-    (train→encode round-trip through the shared _bpe_fold) shrinks the
+    (train→encode round-trip) shrinks the
     token count for every document containing a learned pair."""
     from datapipelinerepo_spark.operators import text as T2
 
@@ -1783,6 +1783,43 @@ def _word_counts(texts):
     return dict(words)
 
 
+def _py_bpe_tokens(rows, rules):
+    """The definitional sequential per-rule fold, pure Python:
+    {doc_id: token list} over the ws_tokens words (documents with no
+    words produce no entry, as in bpe_encode_tokens)."""
+    import re
+
+    from datapipelinerepo_spark.operators.text import _bpe_merge_pass_py
+
+    out = {}
+    for doc_id, text in rows:
+        toks = []
+        for w in re.sub(r"\s+", " ", (text or "").lower()).split(" "):
+            if not w:
+                continue
+            t = list(w)
+            for left, right in rules:
+                if len(t) < 2:
+                    break
+                t = _bpe_merge_pass_py(t, left, right)
+            toks.append((w, t))
+        if toks:
+            out[doc_id] = toks
+    return out
+
+
+def _py_bpe_counts(rows, rules):
+    """{doc_id: (n_words, n_chars, n_bpe_tokens)} of _py_bpe_tokens."""
+    return {
+        d: (
+            len(ws),
+            sum(len(w) for w, _ in ws),
+            sum(len(t) for _, t in ws),
+        )
+        for d, ws in _py_bpe_tokens(rows, rules).items()
+    }
+
+
 def test_py_bpe_learn_matches_spark_trainer(spark, docs):
     """The incremental driver-side trainer (py_bpe_learn — the
     production-size rule-list generator) learns the IDENTICAL sequence
@@ -1805,41 +1842,33 @@ def test_py_bpe_learn_matches_spark_trainer(spark, docs):
 
 
 def test_bpe_encode_arrow_equals_fold_on_learned_rules(spark, docs):
-    """VERDICT r6 item 1 parity chain, Spark-side link: the Arrow
-    engine (priority merging — the 30k-rule-tractable path) produces
-    byte-identical output to the chained-fold engine on a 48-rule
-    LEARNED list over real corpus text."""
+    """VERDICT r6 item 1 parity chain, Spark-side link: bpe_encode's
+    Arrow path (priority merging — the 30k-rule-tractable path)
+    produces the same per-document counts as the sequential per-rule
+    fold on a 48-rule LEARNED list over real corpus text."""
     from datapipelinerepo_spark.operators import text as T2
 
     sl = docs.filter(F.col("doc_id") < 200).select("doc_id", "text")
-    wc = _word_counts([r["text"] for r in sl.collect()])
+    rows = [(r["doc_id"], r["text"]) for r in sl.collect()]
+    wc = _word_counts([t for _, t in rows])
     rules = [(l, r) for _, l, r, _, _ in T2.py_bpe_learn(wc, 48)]
     assert len(rules) == 48 and T2.bpe_rules_sequential_safe(rules)
-    fold = {
-        tuple(r)
-        for r in T2.bpe_encode(sl, rules, engine="fold").collect()
-    }
     arrow = {
-        tuple(r)
-        for r in T2.bpe_encode(sl, rules, engine="arrow").collect()
+        r["doc_id"]: (r["n_words"], r["n_chars"], r["n_bpe_tokens"])
+        for r in T2.bpe_encode(sl, rules).collect()
     }
-    assert fold == arrow
+    assert arrow == _py_bpe_counts(rows, rules)
 
 
 @pytest.mark.slow
 def test_bpe_encode_arrow_equals_fold_on_1k_rules(spark):
-    """VERDICT r6 item 1 parity chain, production-size link: literal
-    fold-vs-Arrow equality on a 1024-rule LEARNED list. The driver
-    testdata's documents table has a 31-word vocabulary (only ~89
-    learnable merges), so the list is learned from a SEEDED synthetic
-    corpus rich enough to support 1k merges. The fold engine at this
-    depth is exactly the expression-tree blowup the Arrow path exists
-    to avoid (≈90 s to compile+run here, hours at 30k) — it still
-    runs, which is what makes this direct cross-check possible. Also
-    pins the per-doc counts against the definitional pure-Python
-    sequential fold."""
+    """VERDICT r6 item 1 parity chain, production-size link: the Arrow
+    path equals the definitional pure-Python sequential fold on a
+    1024-rule LEARNED list. The driver testdata's documents table has
+    a 31-word vocabulary (only ~89 learnable merges), so the list is
+    learned from a SEEDED synthetic corpus rich enough to support 1k
+    merges."""
     import random
-    import re
 
     from datapipelinerepo_spark.operators import text as T2
 
@@ -1860,30 +1889,9 @@ def test_bpe_encode_arrow_equals_fold_on_1k_rules(spark):
 
     arrow = {
         r["doc_id"]: (r["n_words"], r["n_chars"], r["n_bpe_tokens"])
-        for r in T2.bpe_encode(df, rules, engine="arrow").collect()
+        for r in T2.bpe_encode(df, rules).collect()
     }
-    fold = {
-        r["doc_id"]: (r["n_words"], r["n_chars"], r["n_bpe_tokens"])
-        for r in T2.bpe_encode(df, rules, engine="fold").collect()
-    }
-    assert arrow == fold
-
-    def py_doc(text):
-        n_words = n_chars = n_bpe = 0
-        for w in re.sub(r"\s+", " ", text.lower()).split(" "):
-            if not w:
-                continue
-            t = list(w)
-            for left, right in rules:  # definitional sequential passes
-                if len(t) < 2:
-                    break
-                t = T2._bpe_merge_pass_py(t, left, right)
-            n_words += 1
-            n_chars += len(w)
-            n_bpe += len(t)
-        return n_words, n_chars, n_bpe
-
-    assert arrow == {d: py_doc(t) for d, t in rows}
+    assert arrow == _py_bpe_counts(rows, rules)
 
 
 def _py_bpe_learn_batched(word_counts, n_merges, batch, m_factor=4):
@@ -1974,30 +1982,32 @@ def test_bpe_learn_batched_driver_replay_matches_distributed(
 
 
 def test_bpe_encode_tokens_arrow_equals_fold(spark, docs):
-    """bpe_encode_tokens' Arrow engine (code-review r7: the sequence
-    form needs the production-size path too) returns byte-identical
-    token sequences to the fold engine on a learned list over real
-    corpus text."""
+    """bpe_encode_tokens' Arrow path (code-review r7: the sequence
+    form needs the production-size path too) returns the token
+    sequences of the sequential per-rule fold, in document order, on
+    a learned list over real corpus text."""
     from datapipelinerepo_spark.operators import text as T2
 
     sl = docs.filter(F.col("doc_id") < 150).select("doc_id", "text")
-    wc = _word_counts([r["text"] for r in sl.collect()])
+    rows = [(r["doc_id"], r["text"]) for r in sl.collect()]
+    wc = _word_counts([t for _, t in rows])
     rules = [(l, r) for _, l, r, _, _ in T2.py_bpe_learn(wc, 40)]
-    fold = {
-        r["doc_id"]: list(r["tokens"])
-        for r in T2.bpe_encode_tokens(sl, rules, engine="fold").collect()
-    }
     arrow = {
         r["doc_id"]: list(r["tokens"])
-        for r in T2.bpe_encode_tokens(sl, rules, engine="arrow").collect()
+        for r in T2.bpe_encode_tokens(sl, rules).collect()
     }
-    assert fold == arrow and len(fold) == 150
+    fold = {
+        d: [tok for _, t in ws for tok in t]
+        for d, ws in _py_bpe_tokens(rows, rules).items()
+    }
+    assert arrow == fold and len(arrow) == 150
 
 
 def test_bpe_encode_arrow_fallback_on_unsafe_rules(spark):
     """A rule list the equivalence gate rejects (here: a component that
-    no earlier rule produces) routes the Arrow engine onto the literal
-    sequential passes — still byte-identical to the fold engine."""
+    no earlier rule produces) routes the Arrow path onto the literal
+    sequential passes. The rows are pinned by hand: priority merging
+    would give 4 tokens per document instead."""
     from datapipelinerepo_spark.operators import text as T2
 
     # ("ab","c") before ("a","b"): ill-formed — "ab" exists as a token
@@ -2008,9 +2018,8 @@ def test_bpe_encode_arrow_fallback_on_unsafe_rules(spark):
     df = spark.createDataFrame(
         [(1, "abc abd ab"), (2, "cab abcabc")], "doc_id long, text string"
     )
-    fold = {tuple(r) for r in T2.bpe_encode(df, rules, engine="fold").collect()}
-    arrow = {tuple(r) for r in T2.bpe_encode(df, rules, engine="arrow").collect()}
-    assert fold == arrow
+    got = {tuple(r) for r in T2.bpe_encode(df, rules).collect()}
+    assert got == {(1, 3, 8, 5, 1.6), (2, 2, 9, 6, 1.5)}
 
 
 def test_global_desc_rank_cumsum_tiny_and_empty(spark):

@@ -4620,3 +4620,95 @@ def test_unversioned_swap_stale_journal_healer(spark, tmp_path, monkeypatch):
     want = {k: k * 10 for k in range(40)} | {k: -1 for k in first} | {later: -2}
     assert got == sorted(want.items())
     assert not [e for e in os.listdir(base) if e.startswith("._swap-")]
+
+
+def test_meta_reads_never_see_a_partial_write(spark, tmp_path):
+    """The meta file is published by an atomic replace: a reader racing
+    a writer that rewrites it in a loop always parses a whole file, and
+    the staged copies never show up as tables."""
+    import sys
+    import threading
+    import time
+
+    store = TableStore(spark, str(tmp_path))
+    store._touch_meta(
+        "t", keyed_on=["k"], key_buckets=4, key_types=["bigint"],
+        versioned=True, version=0,
+    )
+    stop = threading.Event()
+    errors: list[BaseException] = []
+    reads = [0]
+
+    def write():
+        i = 0
+        while not stop.is_set():
+            i += 1
+            try:
+                store._touch_meta("t", version=i)
+            except BaseException as e:  # re-raised in the test thread
+                errors.append(e)
+                return
+
+    def read():
+        while not stop.is_set():
+            try:
+                assert store.is_versioned("t")
+                assert store.keyed_spec("t") == (["k"], 4)
+                assert store.table_property("t", "version") is not None
+            except BaseException as e:  # re-raised in the test thread
+                errors.append(e)
+            reads[0] += 1
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    threads = [threading.Thread(target=write), threading.Thread(target=read)]
+    try:
+        for t in threads:
+            t.start()
+        time.sleep(2)
+    finally:
+        stop.set()
+        for t in threads:
+            t.join(30)
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert reads[0] > 0 and not errors, (len(errors), errors[:3])
+    assert store.tables() == ["t"]
+
+
+def test_planned_reads_open_the_meta_once(spark, tmp_path, monkeypatch):
+    """read(where=...) and read_point read the table meta once per call
+    and hand it to every planner helper."""
+    import builtins
+    import os
+
+    store = TableStore(spark, str(tmp_path))
+    store.overwrite_keyed(
+        spark.range(0, 200).select(
+            F.col("id").alias("k"), (F.col("id") % 7).alias("cust")
+        ),
+        "t", "k", n_buckets=4, versioned=True,
+    )
+    meta = store._meta_path("t")
+    real_open = builtins.open
+    opens = [0]
+
+    def counting_open(f, *a, **kw):
+        if os.fspath(f) == meta:
+            opens[0] += 1
+        return real_open(f, *a, **kw)
+
+    monkeypatch.setattr(builtins, "open", counting_open)
+    calls = {
+        "range": lambda: store.read("t", where={"k": slice(10, 20)}),
+        "eq": lambda: store.read("t", where={"k": 57}),
+        "read_point": lambda: store.read_point("t", "cust", 3),
+    }
+    counts = {}
+    for label, call in calls.items():
+        opens[0] = 0
+        call()
+        counts[label] = opens[0]
+    monkeypatch.setattr(builtins, "open", real_open)
+    assert counts == {"range": 1, "eq": 1, "read_point": 1}
+    assert store.read("t", where={"k": 57}).count() == 1

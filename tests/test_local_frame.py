@@ -180,3 +180,73 @@ def test_one_claim_loop_in_the_package():
         and o.endswith(" in run_claim_serialized")
     }
     assert allowed and set(offenders) == allowed, offenders
+
+
+def _meta_path_opens(fn) -> list[int]:
+    """Lines in ``fn`` where ``open(`` gets the table meta path: a
+    ``meta_path(``/``_meta_path(`` call, or a local name assigned from
+    one (directly or through other such names)."""
+
+    def derived(expr, names) -> bool:
+        return any(
+            isinstance(n, ast.Call)
+            and getattr(n.func, "id", getattr(n.func, "attr", None))
+            in ("meta_path", "_meta_path")
+            or isinstance(n, ast.Name) and n.id in names
+            for n in ast.walk(expr)
+        )
+
+    names: set[str] = set()
+    grew = True
+    while grew:
+        grew = False
+        for node in ast.walk(fn):
+            if isinstance(node, (ast.Assign, ast.AnnAssign)) and node.value:
+                targets = (
+                    node.targets if isinstance(node, ast.Assign)
+                    else [node.target]
+                )
+                if derived(node.value, names):
+                    for t in targets:
+                        for n in ast.walk(t):
+                            if isinstance(n, ast.Name) and n.id not in names:
+                                names.add(n.id)
+                                grew = True
+    return [
+        node.lineno
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "id", None) == "open"
+        and node.args
+        and derived(node.args[0], names)
+    ]
+
+
+def test_one_meta_reader_and_writer_in_the_package():
+    """The table meta file (``_meta_<table>.json``) is opened in two
+    places only: ``io.read_meta`` reads it, and
+    ``TableStore._write_meta`` stages and atomically replaces it. A
+    hand-copied ``open()`` elsewhere could read a half-written file or
+    write one in place."""
+    offenders = []
+    for d, _, fs in os.walk(_PKG):
+        for f in fs:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(d, f)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for fn in ast.walk(tree):
+                if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    offenders += [
+                        f"{os.path.relpath(path, _PKG)}:{line} in {fn.name}"
+                        for line in _meta_path_opens(fn)
+                    ]
+    allowed = {
+        o for o in offenders if o.startswith("io.py:")
+        and o.endswith((" in read_meta", " in _write_meta"))
+    }
+    assert {o.rsplit(" in ", 1)[1] for o in allowed} == {
+        "read_meta", "_write_meta"
+    }, offenders
+    assert set(offenders) == allowed, offenders

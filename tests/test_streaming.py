@@ -285,7 +285,10 @@ def test_curate_ingest_stream(spark, tmp_path):
     exact copy is rejected even though no clean table exists yet (the
     in-batch digest dedup); batch 2's exact copy of a batch-1 survivor
     is rejected as exact_dup against the STANDING clean table; a
-    drained re-run changes nothing."""
+    drained re-run changes nothing. The two concurrent sink writes get
+    the batch's session, so PySpark never warns that tags are lost."""
+    import warnings
+
     from datapipelinerepo_spark.io import TableStore
     from datapipelinerepo_spark.plans.training_prep import PrepConfig
     from datapipelinerepo_spark.streaming.ingest import curate_ingest_stream
@@ -313,7 +316,12 @@ def test_curate_ingest_stream(spark, tmp_path):
         q = curate_ingest_stream(stream, store, ckpt, cfg=cfg)
         q.awaitTermination()
 
-    run()
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        run()
+    assert not [
+        w for w in caught if "Spark session is not provided" in str(w.message)
+    ]
     clean = {r["doc_id"]: r["text"] for r in store.read("clean_corpus").collect()}
     assert set(clean) == {1, 3}
     assert "a@b.com" not in clean[3] and "<EMAIL>" in clean[3]
