@@ -691,10 +691,30 @@ class TableStore:
         return False
 
     def _touch_meta(self, name: str, **extra) -> None:
-        meta = read_meta(self.root, name)
-        meta.update(extra)
-        meta["last_modified_millis"] = int(time.time() * 1000)
-        self._write_meta(name, meta)
+        def touch(meta):
+            meta.update(extra)
+            meta["last_modified_millis"] = int(time.time() * 1000)
+
+        self._update_meta(name, touch)
+
+    def _update_meta(self, name: str, fn) -> bool:
+        """Read-modify-write the meta file under its claim
+        (``<meta>.claim``, through ``run_claim_serialized``), so two
+        concurrent updates cannot drop each other's keys. ``fn`` edits
+        the meta dict in place and returns False to leave the file as
+        it is; returns whether the file was written."""
+
+        def update():
+            meta = read_meta(self.root, name)
+            if fn(meta) is False:
+                return False
+            self._write_meta(name, meta)
+            return True
+
+        return run_claim_serialized(
+            self._meta_path(name) + ".claim", settled=lambda: None,
+            seed=update, what=f"{name}: meta update",
+        )
 
     def _write_meta(self, name: str, meta: dict) -> None:
         """The one writer of the meta file: stage the JSON beside it
@@ -814,14 +834,16 @@ class TableStore:
         table unstamped, so a stale marker would route the NEXT upsert
         into the bucket fast path against a table with no _kb column
         (code-review r5: reproduced AnalysisException)."""
-        meta = read_meta(self.root, name)
-        if "keyed_on" in meta or meta.get("versioned"):
+        def clear(meta):
+            if "keyed_on" not in meta and not meta.get("versioned"):
+                return False
             for k in (
                 "keyed_on", "key_buckets", "key_types", "versioned",
                 "version", "incarnation",
             ):
                 meta.pop(k, None)
-            self._write_meta(name, meta)
+
+        if self._update_meta(name, clear):
             # the snapshot history died with the files
             shutil.rmtree(self._manifest_dir(name), ignore_errors=True)
             self._retire_bloom_indexes(name)
@@ -838,11 +860,13 @@ class TableStore:
         leaves a readable table; the in-progress overwrite window
         itself fails loudly via the _SUCCESS guard, same as
         overwrite_keyed's reset window."""
-        meta = read_meta(self.root, name)
-        if meta.get("versioned") or "version" in meta:
+        def unversion(meta):
+            if not meta.get("versioned") and "version" not in meta:
+                return False
             meta.pop("versioned", None)
             meta.pop("version", None)
-            self._write_meta(name, meta)
+
+        self._update_meta(name, unversion)
         shutil.rmtree(self._manifest_dir(name), ignore_errors=True)
         self._retire_bloom_indexes(name)
 

@@ -60,6 +60,21 @@ def get_spark(
     CDS is skipped, with one log line on the ``datapipelinerepo_spark``
     logger, when Spark's conf directory holds anything but templates or
     another variable adds to the JVM's class path.
+
+    PySpark's per-call call-site capture
+    (``spark.python.sql.dataFrameDebugging.enabled``) is off: with it on,
+    every call-site-capturing ``Column`` or ``DataFrame`` call walks the
+    Python stack, tries to import IPython and ipykernel, and makes
+    several py4j calls to record where it was called from (SCALE.md
+    "Driver: PySpark call-site capture off"). What is lost: a runtime
+    error's ``== DataFrame ==`` context no longer names the caller's
+    ``file:line``; the error class, SQLSTATE and message stay, and so
+    does the Python traceback of the action. A caller who wants the
+    call sites back passes
+    ``{"spark.python.sql.dataFrameDebugging.enabled": "true"}`` in
+    ``extra_conf``. PySpark reads the flag once per process, at its
+    first call-site-capturing call, and keeps it for every later
+    session.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -88,6 +103,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     conf = dict(extra_conf or {})
     paths = [p for p in conf.get("spark.executorEnv.PYTHONPATH", "").split(os.pathsep) if p]

@@ -4676,6 +4676,50 @@ def test_meta_reads_never_see_a_partial_write(spark, tmp_path):
     assert store.tables() == ["t"]
 
 
+def test_concurrent_meta_updates_keep_every_key(spark, tmp_path):
+    """Meta updates are read-modify-writes serialized by the meta
+    file's claim: a version bump looping in one thread and 2,000
+    single-key property writes in another lose none of the keys, and
+    no claim file outlives the updates."""
+    import os
+    import sys
+    import threading
+
+    from datapipelinerepo_spark.io import read_meta
+
+    store = TableStore(spark, str(tmp_path))
+    store._touch_meta("t", version=0)
+    stop = threading.Event()
+    errors: list[BaseException] = []
+
+    def bump():
+        i = 0
+        while not stop.is_set():
+            i += 1
+            try:
+                store._touch_meta("t", version=i)
+            except BaseException as e:  # re-raised in the test thread
+                errors.append(e)
+                return
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    bumper = threading.Thread(target=bump)
+    bumper.start()
+    try:
+        for i in range(2000):
+            store._touch_meta("t", **{f"p{i}": i})
+    finally:
+        stop.set()
+        bumper.join(30)
+        sys.setswitchinterval(old)
+    assert not bumper.is_alive() and not errors, errors[:3]
+    meta = read_meta(store.root, "t")
+    assert [i for i in range(2000) if meta.get(f"p{i}") != i] == []
+    assert meta["version"] > 0
+    assert os.listdir(tmp_path) == ["_meta_t.json"]
+
+
 def test_planned_reads_open_the_meta_once(spark, tmp_path, monkeypatch):
     """read(where=...) and read_point read the table meta once per call
     and hand it to every planner helper."""

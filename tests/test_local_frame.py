@@ -222,13 +222,37 @@ def _meta_path_opens(fn) -> list[int]:
     ]
 
 
+def _callers(tree, callee: str) -> list[str]:
+    """The outermost function around each call of ``callee`` (a plain
+    name or an attribute) in ``tree``."""
+    out = []
+
+    def visit(node, owner):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, owner or child.name)
+                continue
+            if isinstance(child, ast.Call) and getattr(
+                child.func, "id", getattr(child.func, "attr", None)
+            ) == callee:
+                out.append(owner)
+            visit(child, owner)
+
+    visit(tree, None)
+    return out
+
+
 def test_one_meta_reader_and_writer_in_the_package():
     """The table meta file (``_meta_<table>.json``) is opened in two
     places only: ``io.read_meta`` reads it, and
     ``TableStore._write_meta`` stages and atomically replaces it. A
     hand-copied ``open()`` elsewhere could read a half-written file or
-    write one in place."""
+    write one in place. ``_write_meta`` is called only from
+    ``TableStore._update_meta``, which holds the meta file's claim
+    around the read-modify-write, so concurrent updates keep each
+    other's keys."""
     offenders = []
+    writers = []
     for d, _, fs in os.walk(_PKG):
         for f in fs:
             if not f.endswith(".py"):
@@ -242,6 +266,10 @@ def test_one_meta_reader_and_writer_in_the_package():
                         f"{os.path.relpath(path, _PKG)}:{line} in {fn.name}"
                         for line in _meta_path_opens(fn)
                     ]
+            writers += [
+                f"{os.path.relpath(path, _PKG)} in {owner}"
+                for owner in _callers(tree, "_write_meta")
+            ]
     allowed = {
         o for o in offenders if o.startswith("io.py:")
         and o.endswith((" in read_meta", " in _write_meta"))
@@ -250,3 +278,4 @@ def test_one_meta_reader_and_writer_in_the_package():
         "read_meta", "_write_meta"
     }, offenders
     assert set(offenders) == allowed, offenders
+    assert writers == ["io.py in _update_meta"], writers
