@@ -690,6 +690,58 @@ class TableStore:
                 return True
         return False
 
+    def _date_partitions(self, name: str, col: str) -> dict[dt.date, list[str]] | None:
+        """The committed ``col=YYYY-MM-DD`` partitions of an
+        unversioned table partitioned by ``col`` alone (the
+        ``reload_partitions`` shape), as date → its parquet files —
+        zero Spark jobs, a directory listing. The pipeline gates answer
+        MAX(col) and a month's COUNT(*) from it (the ``stats_scalar``
+        exact-or-refuse contract for the ``Daily_Weather`` layout).
+
+        Entries Spark's partition discovery skips are skipped: names
+        starting with ``.``, or with ``_`` and holding no ``=``
+        (``_SUCCESS``, ``_temporary``, ``.spark-staging-*``; a ``_kb=3``
+        directory is data). So are the NULL partition
+        (``__HIVE_DEFAULT_PARTITION__``: it neither sets a MAX nor falls
+        in a month) and partitions holding no parquet file. Returns
+        None — the caller runs the real scan — for any layout this
+        cannot prove: a versioned table, a file at the table root,
+        another or a nested partition column, a value that is not a
+        canonical date, or a non-parquet data file."""
+        d = self._dir(name)
+        if read_meta(self.root, name).get("versioned") or not os.path.isdir(d):
+            return None
+        def hidden(entry) -> bool:
+            n = entry.name
+            return n.startswith(".") or (n.startswith("_") and "=" not in n)
+
+        out: dict[dt.date, list[str]] = {}
+        prefix = f"{col}="
+        for e in os.scandir(d):
+            if hidden(e):
+                continue
+            if not (e.is_dir() and e.name.startswith(prefix)):
+                return None
+            value = e.name[len(prefix):]
+            files = []
+            for f in os.scandir(e.path):
+                if hidden(f):
+                    continue
+                if not (f.is_file() and f.name.endswith(".parquet")):
+                    return None
+                files.append(f.path)
+            if value == "__HIVE_DEFAULT_PARTITION__":
+                continue
+            try:
+                day = dt.date.fromisoformat(value)
+            except ValueError:
+                return None
+            if day.isoformat() != value:  # e.g. 20240101, 2024-W01-1
+                return None
+            if files:
+                out[day] = files
+        return out
+
     def _touch_meta(self, name: str, **extra) -> None:
         def touch(meta):
             meta.update(extra)
@@ -887,7 +939,7 @@ class TableStore:
         ]
         return F.pmod(F.xxhash64(*cols), F.lit(n_buckets))
 
-    def _cluster_kb(self, df: DataFrame, n_buckets: int) -> DataFrame:
+    def _cluster_kb(self, df: DataFrame) -> DataFrame:
         """Hash-cluster a ``_kb``-stamped frame so each bucket's rows
         land in ONE write task → one part-file per bucket per write
         (r14 optimization; Iceberg ``write.distribution-mode=hash``,
@@ -899,10 +951,17 @@ class TableStore:
         the many-small-files failure mode. Cost: one shuffle of
         exactly the rows being written — the documented lakehouse
         tradeoff, and strictly less I/O than the downstream reads it
-        saves. n_buckets is the design file-sizing knob ("one bucket ≈
-        a few files at target size"), so one file per bucket per write
-        is the intended layout at any scale."""
-        return df.repartition(n_buckets, F.col("_kb"))
+        saves.
+
+        The shuffle takes no partition count: AQE sizes it like every
+        other shuffle in the session (``spark.sql.shuffle.partitions``,
+        coalesced to the advisory partition size). Hash partitions
+        coalesce but are never split, so a bucket never spans two
+        tasks, and a 20-row upsert writes in one task instead of one
+        per bucket — each write task deserializes the Hadoop conf, a
+        fixed cost that dominated small keyed writes (SCALE.md "Keyed
+        writes: AQE sizes the clustering shuffle")."""
+        return df.repartition(F.col("_kb"))
 
     # -- snapshot manifests (versioned keyed tables) -----------------------
     #
@@ -3407,7 +3466,7 @@ class TableStore:
             # passes pre_clustered=True because it already
             # repartitioned by _kb and SORTED within partitions, which
             # a re-shuffle would undo
-            stamped = self._cluster_kb(stamped, spec[1])
+            stamped = self._cluster_kb(stamped)
         try:
             stamped.write.mode("append").partitionBy("_kb").parquet(stage)
             base = self._dir(name)
@@ -3666,7 +3725,7 @@ class TableStore:
         )
         fat_set = set(fat)
         kept = [f for b, fs in by_bucket.items() if b not in fat_set for f in fs]
-        # repartition on _kb → one task per bucket → ~one file per dir.
+        # repartition on _kb → each bucket in one task → one file per dir.
         # ``sort_cols`` re-CLUSTERS the rewritten buckets while we're
         # already paying to rewrite them (the OPTIMIZE ... ZORDER/sort
         # maintenance pattern): rows sort on the given columns within
@@ -4864,7 +4923,7 @@ class TableStore:
                     rederive_kept=_rederive,
                 )
                 return
-            self._cluster_kb(df, n).write.mode("append").partitionBy(
+            self._cluster_kb(df).write.mode("append").partitionBy(
                 "_kb"
             ).parquet(self._dir(name))
             # evolving appends widen the stored schema the
@@ -5036,7 +5095,7 @@ class TableStore:
         # probes casting to it could silently false-negative)
         self._retire_bloom_indexes(name)
         (
-            self._cluster_kb(stamped, int(n_buckets))
+            self._cluster_kb(stamped)
             .write.mode("overwrite")
             .partitionBy("_kb")
             # STATIC overwrite, explicitly: the session default is
@@ -5491,7 +5550,7 @@ class TableStore:
         )
         try:
             (
-                self._cluster_kb(stamped, n)
+                self._cluster_kb(stamped)
                 .write.mode("append")
                 .partitionBy("_kb")
                 .parquet(stage)

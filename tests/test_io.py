@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from datapipelinerepo_spark.io import TableStore
@@ -4382,7 +4383,7 @@ def test_unversioned_swap_crash_recovery(spark, tmp_path):
             .unionByName(stamped)
             .localCheckpoint()
         )
-        store._cluster_kb(merged, 4).write.mode("append").partitionBy(
+        store._cluster_kb(merged).write.mode("append").partitionBy(
             "_kb"
         ).parquet(stage)
         # build the journal exactly as _commit_swap would, then stop
@@ -4756,3 +4757,70 @@ def test_planned_reads_open_the_meta_once(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(builtins, "open", real_open)
     assert counts == {"range": 1, "eq": 1, "read_point": 1}
     assert store.read("t", where={"k": 57}).count() == 1
+
+
+def _part_files(store, name) -> set[str]:
+    import os
+
+    base = store._dir(name)
+    return {
+        f"{d}/{f}"
+        for d in os.listdir(base)
+        if d.startswith("_kb=")
+        for f in os.listdir(os.path.join(base, d))
+        if f.endswith(".parquet")
+    }
+
+
+@pytest.mark.parametrize("versioned", [False, True])
+@pytest.mark.parametrize("shuffle_partitions", ["2", "16"])
+def test_keyed_writes_leave_one_file_per_touched_bucket(
+    spark, tmp_path, versioned, shuffle_partitions
+):
+    """AQE sizes the clustering shuffle before every keyed write, with
+    the session's shuffle partitions below or above n_buckets: hash
+    partitions coalesce but never split, so each bucket a write
+    touches gains exactly one part-file."""
+    from collections import Counter
+
+    def rows(lo, hi, bump):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"), (F.col("id") * 1.5 + bump).alias("amt")
+        )
+
+    store = TableStore(spark, str(tmp_path))
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", shuffle_partitions)
+    try:
+        verbs = {
+            "overwrite_keyed": lambda: store.overwrite_keyed(
+                rows(0, 200, 0.0), "t", "k", n_buckets=8, versioned=versioned
+            ),
+            "upsert": lambda: store.upsert(rows(190, 230, 1.0), "t", "k"),
+            "merge_when": lambda: store.merge_when(
+                rows(20, 60, 2.0).withColumn(
+                    "op", F.when(F.col("k") % 5 == 0, "D").otherwise("U")
+                ),
+                "t", "k", when_matched_delete="s.op = 'D'",
+                when_not_matched_insert="s.op <> 'D'", source_meta_cols=["op"],
+            ),
+            "delete_where": lambda: store.delete_where(
+                "t", condition="k % 7 = 3 AND k < 150"
+            ),
+            "append": lambda: store.append(rows(300, 340, 3.0), "t"),
+        }
+        for verb, fn in verbs.items():
+            before = _part_files(store, "t") if verb != "overwrite_keyed" else set()
+            fn()
+            per_bucket = Counter(
+                f.split("/", 1)[0] for f in _part_files(store, "t") - before
+            )
+            assert len(per_bucket) >= 4, (verb, per_bucket)
+            assert set(per_bucket.values()) == {1}, (verb, per_bucket)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    want = {
+        k for k in range(340)
+        if not (300 > k >= 230 or (k % 7 == 3 and k < 150) or (20 <= k < 60 and k % 5 == 0))
+    }
+    assert {r["k"] for r in store.read("t").collect()} == want

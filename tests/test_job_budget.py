@@ -1,6 +1,8 @@
 """Spark-job budgets of the store verbs: the exact number of Spark jobs
 each verb launches on a small versioned keyed table with a bloom index,
-and on a small unversioned keyed table.
+and on a small unversioned keyed table; the tasks of an upsert's write
+stage; and the jobs of the pipeline's gates and load on a
+date-partitioned table.
 
 Job counts do not vary between runs, so they pin the Spark layer
 without timing noise: a verb that gains a job (a parquet footer read, a
@@ -9,12 +11,20 @@ job group and the status tracker, which launches no job of its own."""
 
 from __future__ import annotations
 
+import datetime as dt
 import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 from datapipelinerepo_spark.io import TableStore
+from datapipelinerepo_spark.plans.pipeline import (
+    DataSource,
+    FixedClock,
+    SourceContext,
+    monthly_quota_gate,
+    watermark_gate,
+)
 
 # reads collect their frame, so each count includes the scan itself
 BUDGETS = {
@@ -37,7 +47,21 @@ UNVERSIONED_BUDGETS = {
 }
 
 
+# a partition-reload source's load: the extract's materialization with
+# its row count (1), then reload_partitions' write (1)
+PIPELINE_BUDGETS = {
+    "watermark_gate": 0,
+    "monthly_quota_gate": 0,
+    "load": 2,
+    "reload_partitions": 1,
+}
+
+
 def _jobs(spark, fn) -> int:
+    return len(_job_ids(spark, fn))
+
+
+def _job_ids(spark, fn) -> list[int]:
     sc = spark.sparkContext
     keys = ("spark.jobGroup.id", "spark.job.description")
     saved = {k: sc.getLocalProperty(k) for k in keys}
@@ -48,7 +72,7 @@ def _jobs(spark, fn) -> int:
     finally:
         for k, v in saved.items():
             sc.setLocalProperty(k, v)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _rows(spark, lo, hi, bump=0.0):
@@ -136,3 +160,60 @@ def test_pruned_reads_plan_without_a_job(spark, store):
     footer job runs before the caller asks for rows."""
     assert _jobs(spark, lambda: store.read("t", where={"k": 57}).schema) == 0
     assert _jobs(spark, lambda: store.read_point("t", "cust", 13).schema) == 0
+
+
+def test_upsert_write_stage_tasks(spark, store, verb_jobs):
+    """The clustering shuffle before a keyed write is sized by AQE, not
+    by n_buckets: a 20-row upsert into the 8-bucket table writes in one
+    task (8 when the shuffle had n_buckets partitions), and still one
+    part-file per touched bucket (tests/test_io.py)."""
+    ids = _job_ids(spark, lambda: store.upsert(_rows(spark, 390, 410, 2.0), "t", "k"))
+    st = spark.sparkContext.statusTracker()
+    write_stage = max(st.getJobInfo(max(ids)).stageIds)  # the last job writes
+    assert st.getStageInfo(write_stage).numTasks == 1
+
+
+class _Reload(DataSource):
+    name = "reload"
+    table_name = "w"
+    write_mode = "partition_reload"
+    partition_col = "date"
+
+    def schedule(self, ctx):
+        return True
+
+    def extract(self, ctx):
+        raise NotImplementedError
+
+
+def _days(spark, days, zips=("a", "b")):
+    return spark.createDataFrame(
+        [(z, d, 1.0) for d in days for z in zips], "zip string, date date, v double"
+    )
+
+
+@pytest.fixture(scope="module")
+def pipeline_jobs(spark, tmp_path_factory):
+    """The Daily_Weather shape: a table reloaded by date partition."""
+    store = TableStore(spark, str(tmp_path_factory.mktemp("budget_pipe")))
+    clock = FixedClock(dt.date(2026, 3, 10))
+    ctx = SourceContext(spark=spark, store=store, clock=clock)
+    history = [dt.date(2026, 2, 20) + dt.timedelta(days=i) for i in range(17)]
+    store.reload_partitions(_days(spark, history), "w", "date")
+    src = _Reload()
+    pinned = _days(spark, [clock.yesterday()]).localCheckpoint(eager=True)
+    return {
+        "watermark_gate": _jobs(spark, lambda: watermark_gate(store, "w", "date", clock)),
+        "monthly_quota_gate": _jobs(
+            spark, lambda: monthly_quota_gate(store, "w", "date", clock, 100, 2)
+        ),
+        "load": _jobs(spark, lambda: src.load(ctx, _days(spark, [clock.yesterday()]))),
+        "reload_partitions": _jobs(
+            spark, lambda: store.reload_partitions(pinned, "w", "date")
+        ),
+    }
+
+
+@pytest.mark.parametrize("step", sorted(PIPELINE_BUDGETS))
+def test_pipeline_job_budget(pipeline_jobs, step):
+    assert pipeline_jobs[step] == PIPELINE_BUDGETS[step]

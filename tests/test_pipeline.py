@@ -30,6 +30,8 @@ from datapipelinerepo_spark.sources.reference_shaped import (
     make_dict_fetcher,
 )
 
+from .test_job_budget import _days
+
 MONDAY = dt.date(2026, 8, 10)  # a Monday in season
 
 
@@ -89,6 +91,102 @@ def test_quota_gate(spark, store):
     store.append(df, "w")
     assert monthly_quota_gate(store, "w", "date", clock, budget=10, upcoming=5)
     assert not monthly_quota_gate(store, "w", "date", clock, budget=9, upcoming=5)
+
+
+# Gates on a table reloaded by date partition (the Daily_Weather shape)
+# answer from the partition directories and parquet footers; each case
+# below checks both gates against a Spark scan of the same files.
+
+
+def _assert_gates_match_scan(spark, store, clock, fast):
+    """Both gates at the exact boundary of the scanned MAX(date) and
+    this month's COUNT(*); ``fast`` says which path the layout proves."""
+    assert (store._date_partitions("w", "date") is not None) == fast
+    scan = spark.read.parquet(store._dir("w"))
+    today = clock.today()
+    used = scan.where(
+        f"month(date) = {today.month} AND year(date) = {today.year}"
+    ).count()
+    assert monthly_quota_gate(store, "w", "date", clock, budget=used + 2, upcoming=2)
+    assert not monthly_quota_gate(store, "w", "date", clock, budget=used + 1, upcoming=2)
+    wm = scan.selectExpr("max(date) AS m").first()["m"]
+    at_wm = FixedClock(wm + dt.timedelta(days=1))  # yesterday == MAX: skip
+    assert not watermark_gate(store, "w", "date", at_wm)
+    assert watermark_gate(store, "w", "date", FixedClock(wm + dt.timedelta(days=2)))
+    return used, wm
+
+
+@pytest.fixture()
+def two_years(spark, store):
+    days = [dt.date(2025, 8, d) for d in range(1, 6)] + [
+        dt.date(2026, 7, 30), dt.date(2026, 7, 31),
+        dt.date(2026, 8, 1), dt.date(2026, 8, 2), dt.date(2026, 8, 3),
+    ]
+    store.reload_partitions(_days(spark, days), "w", "date")
+    return store
+
+
+def test_partition_gates_span_two_years(spark, two_years):
+    # last August's 10 rows must not count against this August
+    assert _assert_gates_match_scan(spark, two_years, FixedClock(MONDAY), True) == (
+        6, dt.date(2026, 8, 3),
+    )
+
+
+def test_partition_gates_skip_the_null_partition(spark, two_years):
+    nulls = _days(spark, [None]).union(_days(spark, [dt.date(2026, 8, 4)]))
+    two_years.reload_partitions(nulls, "w", "date")
+    assert _assert_gates_match_scan(spark, two_years, FixedClock(MONDAY), True) == (
+        8, dt.date(2026, 8, 4),
+    )
+
+
+def test_partition_gates_skip_partitions_without_rows(spark, two_years):
+    """A newest partition left without rows — no parquet file, or a
+    zero-row one from another writer — sets no MAX and counts 0."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base = two_years._dir("w")
+    os.makedirs(os.path.join(base, "date=2026-08-05"))
+    open(os.path.join(base, "date=2026-08-05", "_SUCCESS"), "w").close()
+    os.makedirs(os.path.join(base, "date=2026-08-06"))
+    empty = pa.table({"zip": pa.array([], pa.string()), "v": pa.array([], pa.float64())})
+    pq.write_table(empty, os.path.join(base, "date=2026-08-06", "part-empty.parquet"))
+    assert _assert_gates_match_scan(spark, two_years, FixedClock(MONDAY), True) == (
+        6, dt.date(2026, 8, 3),
+    )
+
+
+def test_partition_gates_fall_back_on_a_root_level_file(spark, two_years):
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root_file = pa.table({"zip": ["r"], "v": [1.0], "date": [dt.date(2026, 8, 9)]})
+    pq.write_table(root_file, os.path.join(two_years._dir("w"), "part-root.parquet"))
+    _assert_gates_match_scan(spark, two_years, FixedClock(MONDAY), False)
+
+
+def test_partition_gates_fall_back_on_a_keyed_table(spark, store):
+    """``_kb=`` bucket directories are data, not hidden entries."""
+    store.overwrite_keyed(
+        _days(spark, [dt.date(2026, 8, 1), dt.date(2025, 8, 1)]), "w", "zip",
+        n_buckets=4,
+    )
+    assert _assert_gates_match_scan(spark, store, FixedClock(MONDAY), False) == (
+        2, dt.date(2026, 8, 1),
+    )
+
+
+def test_partition_gates_fall_back_on_an_appended_table(spark, store):
+    store.append(_days(spark, [dt.date(2026, 8, 1), dt.date(2025, 8, 1)]), "w")
+    assert _assert_gates_match_scan(spark, store, FixedClock(MONDAY), False) == (
+        2, dt.date(2026, 8, 1),
+    )
 
 
 def test_calendar_gate():
