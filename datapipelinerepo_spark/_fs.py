@@ -48,6 +48,11 @@ The contracts, and their object-store translations:
   object metadata copy-in-place; GCS metadata patch).
 - ``remove(path)``: delete, raising FileNotFoundError when absent
   (callers distinguish "I released it" from "someone took it").
+- ``remove_empty_dir(path)``: delete a directory only while it holds
+  nothing, raising OSError otherwise — an emptied bucket directory
+  goes, one a concurrent writer just moved a file into stays. Local:
+  ``os.rmdir``. Object store: nothing to do (a prefix exists only
+  while objects carry it).
 
 Exceptions are part of the contract: FileExistsError/FileNotFoundError
 map to the object store's 412/404 preconditions.
@@ -122,6 +127,11 @@ def touch(path: str) -> None:
 def remove(path: str) -> None:
     """Delete; FileNotFoundError when already gone."""
     os.remove(path)
+
+
+def remove_empty_dir(path: str) -> None:
+    """Delete an empty directory; OSError when absent or not empty."""
+    os.rmdir(path)
 
 
 def process_start(pid: int) -> str | None:

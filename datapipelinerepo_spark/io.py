@@ -442,66 +442,6 @@ def _acquire_claim(path: str, stale_s: float) -> str | None:
     return None
 
 
-# a claim body still empty after this long lost its creator between
-# the exclusive create and the write of its pid
-_EMPTY_CLAIM_S = 10.0
-
-
-def _claim_journal(claim: str) -> str | None:
-    """Hold ``claim``, the per-journal claim of an unversioned bucket
-    swap, waiting while another live process or thread holds it.
-
-    The body is ``<pid>:<start>:<thread>:<uuid>``, created exclusive
-    through ``_fs.put_if_absent`` (``O_CREAT|O_EXCL``); ``start`` is the
-    holder's ``_fs.process_start``, so a reused pid does not keep a
-    dead holder's claim alive. Returns the claim's identity token, or
-    None when this thread already holds it (a heal nested in the same
-    thread's replay). A claim whose holder is dead is taken over with
-    ``_acquire_claim``'s steal: an atomic rename to a unique grave, and
-    a restore when the grave turns out to hold a different (live) body
-    than the dead one read before the rename."""
-    import threading
-    import uuid
-
-    pid = os.getpid()
-    me = f"{pid}:{_fs.process_start(pid)}:{threading.get_ident()}"
-    while True:
-        tok = _fs.put_if_absent(claim, f"{me}:{uuid.uuid4().hex}".encode())
-        if tok is not None:
-            return tok
-        try:
-            with open(claim) as fh:
-                body = fh.read()
-            age = time.time() - _fs.mtime(claim)
-        except FileNotFoundError:
-            continue  # released between the create and the read
-        holder = body.rsplit(":", 1)[0]
-        if holder == me:
-            return None
-        other, start = (holder.split(":") + ["", ""])[:2]
-        live = other.isdigit() and _fs.process_start(int(other)) == start
-        if live or (not body and age < _EMPTY_CLAIM_S):
-            time.sleep(0.01)
-            continue
-        grave = f"{claim}.stolen-{uuid.uuid4().hex}"
-        try:
-            _fs.rename(claim, grave)
-        except FileNotFoundError:
-            continue
-        with open(grave) as fh:
-            if fh.read() != body:
-                _fs.link_if_absent(grave, claim)
-        _fs.remove(grave)
-
-
-def _release_journal(claim: str, token: str | None) -> None:
-    if token is not None and _fs.identity(claim) == token:
-        try:
-            _fs.remove(claim)
-        except FileNotFoundError:
-            pass
-
-
 class _ClaimHeartbeat:
     """Keeps a HELD claim visibly alive while its protected write runs
     (ADVICE r9): a daemon thread ``os.utime``s the claim file every
@@ -690,6 +630,40 @@ class TableStore:
                 return True
         return False
 
+    @staticmethod
+    def _hidden_entry(entry) -> bool:
+        """Is the ``os.DirEntry`` one Spark's partition discovery
+        skips? Names starting with ``.``, or with ``_`` and holding no
+        ``=`` (``_SUCCESS``, ``_temporary``, ``.spark-staging-*``; a
+        ``_kb=3`` directory is data)."""
+        n = entry.name
+        return n.startswith(".") or (n.startswith("_") and "=" not in n)
+
+    def _partition_col(self, name: str) -> str | None:
+        """The column ``c`` when every data entry of the table
+        directory is a ``c=value`` directory (the ``reload_partitions``
+        layout), else None: no data yet, or part-files at the root.
+        Raises ValueError for a layout no write can extend: files at
+        the root beside partition directories, or partition
+        directories of two columns (partition discovery drops the
+        root files, or fails on the mixed names)."""
+        d = self._dir(name)
+        if not os.path.isdir(d):
+            return None
+        cols = {
+            e.name.split("=", 1)[0] if e.is_dir() and "=" in e.name else None
+            for e in os.scandir(d)
+            if not self._hidden_entry(e)
+        }
+        if len(cols) > 1:
+            raise ValueError(
+                f"{name}: mixed table layout (partition directories "
+                f"{sorted(c for c in cols if c)} beside "
+                f"{'root files' if None in cols else 'each other'}); "
+                "overwrite the table to repair it"
+            )
+        return next(iter(cols), None)
+
     def _date_partitions(self, name: str, col: str) -> dict[dt.date, list[str]] | None:
         """The committed ``col=YYYY-MM-DD`` partitions of an
         unversioned table partitioned by ``col`` alone (the
@@ -698,34 +672,29 @@ class TableStore:
         MAX(col) and a month's COUNT(*) from it (the ``stats_scalar``
         exact-or-refuse contract for the ``Daily_Weather`` layout).
 
-        Entries Spark's partition discovery skips are skipped: names
-        starting with ``.``, or with ``_`` and holding no ``=``
-        (``_SUCCESS``, ``_temporary``, ``.spark-staging-*``; a ``_kb=3``
-        directory is data). So are the NULL partition
+        Entries Spark's partition discovery skips (``_hidden_entry``)
+        are skipped. So are the NULL partition
         (``__HIVE_DEFAULT_PARTITION__``: it neither sets a MAX nor falls
         in a month) and partitions holding no parquet file. Returns
         None — the caller runs the real scan — for any layout this
-        cannot prove: a versioned table, a file at the table root,
+        cannot prove: a keyed or versioned table (its manifest, not
+        its directory, names its files), a file at the table root,
         another or a nested partition column, a value that is not a
         canonical date, or a non-parquet data file."""
         d = self._dir(name)
-        if read_meta(self.root, name).get("versioned") or not os.path.isdir(d):
+        if self._manifest_backed(read_meta(self.root, name)) or not os.path.isdir(d):
             return None
-        def hidden(entry) -> bool:
-            n = entry.name
-            return n.startswith(".") or (n.startswith("_") and "=" not in n)
-
         out: dict[dt.date, list[str]] = {}
         prefix = f"{col}="
         for e in os.scandir(d):
-            if hidden(e):
+            if self._hidden_entry(e):
                 continue
             if not (e.is_dir() and e.name.startswith(prefix)):
                 return None
             value = e.name[len(prefix):]
             files = []
             for f in os.scandir(e.path):
-                if hidden(f):
+                if self._hidden_entry(f):
                     continue
                 if not (f.is_file() and f.name.endswith(".parquet")):
                     return None
@@ -810,39 +779,13 @@ class TableStore:
         keyed-written."""
         return read_meta(self.root, name).get("incarnation")
 
-    def _meta_schema_df(self, name: str) -> DataFrame | None:
-        """Empty frame with the schema recorded in the keyed meta
-        (written by overwrite_keyed, refreshed on schema-evolving
-        upserts), or None if none was recorded OR the directory lacks a
-        committed-write marker. The read-side fallback for a keyed
-        table whose every row was deleted: the directory then holds no
-        parquet files to infer from, but the table still EXISTS and
-        must read as empty (ADVICE-r6 class, surfaced by delete_where
-        emptying an unversioned table).
-
-        The `_SUCCESS` gate is load-bearing (code-review r7): a
-        parquet-less directory is ALSO what a crashed overwrite leaves
-        behind (static truncation ran, no task committed). Every
-        legitimate emptying path ends in a committed Spark write job
-        (marker present); the crash leaves no marker — without the
-        gate, the crash would read as silently empty and the next
-        upsert would rebuild the table from just its own batch (silent
-        data loss where the pre-fallback code failed loudly)."""
-        if not os.path.isfile(os.path.join(self._dir(name), "_SUCCESS")):
-            return None
-        s = read_meta(self.root, name).get("schema")
-        if s is None:
-            return None
-        from pyspark.sql.types import StructType
-
-        return local_frame(self.spark, [], StructType.fromJson(json.loads(s)))
-
     def _widened_schema_json(self, name: str, schema) -> str:
         """The stored meta schema widened by ``schema``'s new fields
         (stored order first). Refreshes after evolving writes must only
         ever WIDEN: a batch narrower than the table (legal for appends
-        and bucket-sliced merges) must not shrink the column set the
-        emptied-table fallback serves (code-review r7)."""
+        and bucket-sliced merges) must not shrink the column set
+        constraint checks complete a narrow batch with (code-review
+        r7)."""
         from pyspark.sql.types import StructType
 
         s = read_meta(self.root, name).get("schema")
@@ -887,7 +830,7 @@ class TableStore:
         into the bucket fast path against a table with no _kb column
         (code-review r5: reproduced AnalysisException)."""
         def clear(meta):
-            if "keyed_on" not in meta and not meta.get("versioned"):
+            if not self._manifest_backed(meta):
                 return False
             for k in (
                 "keyed_on", "key_buckets", "key_types", "versioned",
@@ -963,20 +906,20 @@ class TableStore:
         writes: AQE sizes the clustering shuffle")."""
         return df.repartition(F.col("_kb"))
 
-    # -- snapshot manifests (versioned keyed tables) -----------------------
+    # -- snapshot manifests (keyed and versioned tables) -------------------
     #
-    # The one Delta property the plain-parquet keyed path lacked was
-    # read-side snapshot isolation: _upsert_keyed's dynamic partition
-    # overwrite DELETES the replaced files, so a reader that planned its
-    # scan before an upsert could collect a half-merged table (VERDICT
-    # r5 item 5). `overwrite_keyed(..., versioned=True)` fixes this with
-    # a manifest generalizing the _meta sidecar: every write appends NEW
-    # part-files (never deleting live ones) and atomically publishes a
-    # manifest listing the files of the new snapshot. Readers resolve a
-    # manifest once at plan time, so any in-flight plan keeps a
-    # consistent version; `read(name, version=N)` pins one explicitly;
-    # `vacuum` reclaims files no retained manifest references. Write
-    # order (data files → manifest rename → meta pointer) makes every
+    # A manifest generalizing the _meta sidecar is the one commit point
+    # of every keyed table: every write appends NEW part-files (never
+    # deleting live ones) and atomically publishes a manifest listing
+    # the files of the new snapshot. Readers resolve a manifest once at
+    # plan time. On a versioned table (`overwrite_keyed(...,
+    # versioned=True)`) superseded manifests and files stay until
+    # `vacuum`, so any in-flight plan keeps a consistent version (read-
+    # side snapshot isolation, VERDICT r5 item 5) and `read(name,
+    # version=N)` pins one explicitly; an unversioned table removes
+    # them right after the publish (the Delta shape: files the log no
+    # longer names are cleanup work, not a recovery problem). Write
+    # order (data files → manifest link → meta pointer) makes every
     # crash window heal: orphan data files are invisible until a
     # manifest names them, and an unpointed manifest is re-discovered by
     # max-version scan (crash-window tests in test_io).
@@ -996,6 +939,15 @@ class TableStore:
 
     def is_versioned(self, name: str) -> bool:
         return bool(read_meta(self.root, name).get("versioned"))
+
+    @staticmethod
+    def _manifest_backed(meta: dict) -> bool:
+        """Does a manifest name the table's files? True for every keyed
+        table and every versioned one: the manifest is their one commit
+        point. ``versioned`` only decides what happens to the files and
+        the manifest a commit supersedes: kept for time travel until
+        ``vacuum``, or removed by the verb that superseded them."""
+        return bool(meta.get("versioned")) or "keyed_on" in meta
 
     def versions(self, name: str) -> list[int]:
         return list_versions(self.root, name)
@@ -1274,9 +1226,9 @@ class TableStore:
             version_expect_ident=version_expect_ident,
             txn_assert=txn_assert,
         )
-        # the meta schema tracks evolution (widen-only) so the
-        # fully-emptied-table fallback serves the CURRENT column set
-        # (code-review r7); the manifest keeps the snapshot-exact one
+        # the meta schema tracks evolution (widen-only), so constraint
+        # checks see the CURRENT column set (code-review r7); the
+        # manifest keeps the snapshot-exact one
         extra = {}
         if schema_json is not None:
             from pyspark.sql.types import StructType
@@ -1284,7 +1236,7 @@ class TableStore:
             extra["schema"] = self._widened_schema_json(
                 name, StructType.fromJson(json.loads(schema_json))
             )
-        self._touch_meta(name, versioned=True, version=v, **extra)
+        self._touch_meta(name, version=v, **extra)
         return v
 
     # -- manifest-carried file statistics (data skipping) ------------------
@@ -3380,34 +3332,72 @@ class TableStore:
 
     _CONFLICT_RETRIES = 10
 
-    def _retry_base_conflicts(self, attempt):
+    def _retry_base_conflicts(self, name: str, attempt):
         """Optimistic-concurrency loop for the bucket-rewriting verbs
-        (ADVICE r9 medium): each attempt derives its rewrite from the
-        version current at attempt start and publishes with a CAS on
-        that version (``version_expect``); a concurrent commit fails
-        the CAS with BaseVersionConflict and the WHOLE derivation
-        re-runs against the new current version — closing the window
-        where a 'kept' list derived from a stale base silently dropped
-        a racing writer's just-published files. Watermark conflicts
-        (plain TxnConflict/TxnAlreadyApplied) propagate — those mean
-        the WORK is stale, which only the caller can judge."""
+        (ADVICE r9 medium): each attempt pins the version current at
+        its start (``_pin_base``), derives its rewrite from it —
+        ``attempt(version, uid)`` — and publishes with a CAS on that
+        version (``version_expect``); a concurrent commit fails the CAS
+        with BaseVersionConflict and the WHOLE derivation re-runs
+        against the new current version — closing the window where a
+        'kept' list derived from a stale base silently dropped a racing
+        writer's just-published files.
+
+        A commit on an unversioned table removes the manifest and the
+        files it superseded (``_remove_superseded``), so a racing
+        attempt can also fail inside Spark, on a base file that is
+        gone. Any failure while the pinned manifest is gone is that
+        conflict and retries; while it is still there the failure
+        propagates as it is (this attempt's own publish leaves its base
+        in place until its cleanup, which raises nothing). Watermark
+        conflicts (TxnConflict/TxnAlreadyApplied/CrossTxnConflict)
+        always propagate — those mean the WORK is stale, which only the
+        caller can judge."""
         import random
 
         last: BaseVersionConflict | None = None
         for i in range(self._CONFLICT_RETRIES):
+            pin = self._pin_base(name)
             try:
-                return attempt()
+                return attempt(*pin)
             except BaseVersionConflict as e:
                 last = e
-                # jittered backoff (code-review r10 wave 3): two
-                # sustained writers whose derivation jobs take similar
-                # wall-clock would otherwise re-collide on every
-                # attempt; a small randomized delay desynchronizes
-                # them at negligible cost. No sleep after the FINAL
-                # attempt — it precedes an unconditional raise
-                if i < self._CONFLICT_RETRIES - 1:
-                    time.sleep(min(0.05 * (2 ** i), 1.0) * random.random())
+            except (TxnAlreadyApplied, CrossTxnConflict):
+                raise
+            except Exception as e:
+                try:
+                    gone = self._manifest_doc(name, pin[0]).get("uid") != pin[1]
+                except FileNotFoundError:
+                    gone = True
+                if not gone:
+                    raise
+                last = BaseVersionConflict(
+                    f"{name}: files of base version {pin[0]} were removed "
+                    "by a concurrent commit — re-derive and retry"
+                )
+                last.__cause__ = e
+            # jittered backoff (code-review r10 wave 3): two
+            # sustained writers whose derivation jobs take similar
+            # wall-clock would otherwise re-collide on every
+            # attempt; a small randomized delay desynchronizes
+            # them at negligible cost. No sleep after the FINAL
+            # attempt — it precedes an unconditional raise
+            if i < self._CONFLICT_RETRIES - 1:
+                time.sleep(min(0.05 * (2 ** i), 1.0) * random.random())
         raise last
+
+    def _latest_doc(self, name: str) -> tuple[int | None, dict | None]:
+        """(latest published version, its manifest), or (None, None)
+        with no manifest. Lists again when an unversioned commit
+        removed the listed version before its manifest was read."""
+        while True:
+            v = self.latest_version(name)
+            if v is None:
+                return None, None
+            try:
+                return v, self._manifest_doc(name, v)
+            except FileNotFoundError:
+                continue
 
     def _pin_base(self, name: str) -> tuple[int, str | None]:
         """(current version, manifest uid) — the pin every OCC attempt
@@ -3416,8 +3406,12 @@ class TableStore:
         and inode identity is unreliable — inodes recycle; code-review
         r10 wave 3). None for pre-r10 manifests (no uid recorded):
         the CAS then degrades to the version-number check alone."""
-        v = self._ensure_latest(name)
-        return v, self._manifest_doc(name, v).get("uid")
+        while True:
+            v = self._ensure_latest(name)
+            try:
+                return v, self._manifest_doc(name, v).get("uid")
+            except FileNotFoundError:
+                continue  # an unversioned commit removed v meanwhile
 
     def _append_and_publish(
         self,
@@ -3435,13 +3429,15 @@ class TableStore:
         txn_assert: dict[str, int] | None = None,
         pre_clustered: bool = False,
     ) -> int:
-        """The shared versioned-write protocol: append ``stamped``
+        """The one commit protocol of keyed tables: append ``stamped``
         (already _kb-stamped) as NEW part-files — never deleting live
         ones — then publish a manifest of ``kept`` (the re-referenced
         prior files) + exactly the files THIS writer created.
         ``check_replay`` makes the publish raise TxnAlreadyApplied when
         ``txn`` is already covered at commit time (the appended files
-        then stay invisible orphans until vacuum).
+        then stay invisible orphans until vacuum). After the publish a
+        versioned table runs its write-path maintenance; an unversioned
+        one removes what the publish superseded (``_remove_superseded``).
 
         Attribution is by writer, not by directory diff (ADVICE r8):
         the write job lands in a writer-private staging dir, and each
@@ -3495,10 +3491,11 @@ class TableStore:
         # let BaseVersionConflict reach their derivation-level retry.
         v: int | None = None
         for i in range(self._CONFLICT_RETRIES):
+            live = list(kept) + sorted(new_files)
             try:
                 v = self._publish_version(
                     name,
-                    list(kept) + sorted(new_files),
+                    live,
                     schema_json=stamped.schema.json(),
                     txn=txn,
                     op=op,
@@ -3513,9 +3510,49 @@ class TableStore:
                 if rederive_kept is None or i == self._CONFLICT_RETRIES - 1:
                     raise
                 kept, version_expect, version_expect_ident = rederive_kept()
-        self._maybe_auto_compact(name, op)
-        self._maybe_auto_bloom(name, op)
+        if self.is_versioned(name):
+            self._maybe_auto_compact(name, op)
+            self._maybe_auto_bloom(name, op)
+        elif version_expect is not None:
+            self._remove_superseded(
+                name, version_expect, version_expect_ident, live
+            )
         return v
+
+    def _remove_superseded(
+        self, name: str, base_v: int, base_ident: str | None, live: list[str]
+    ) -> None:
+        """After an unversioned publish: remove the base manifest, then
+        exactly the files it named that the new manifest ``live`` does
+        not (with their checksum sidecars), then the bucket directories
+        that leaves empty. Never a listing: that would also take a
+        concurrent writer's staged, not yet published files. The
+        manifest goes first, so an attempt that fails on a removed file
+        finds its pinned base gone and retries
+        (``_retry_base_conflicts``). Best effort: the commit is already
+        published, so a crash or an error here leaves orphans for
+        ``vacuum``, never an error."""
+        try:
+            doc = self._manifest_doc(name, base_v)
+            if doc.get("uid") != base_ident:
+                return  # not the base this write derived from (reseeded)
+            _fs.remove(self._manifest_path(name, base_v))
+        except (OSError, ValueError):
+            return  # already removed (vacuum): its files are vacuum's
+        base = self._dir(name)
+        gone = sorted(set(doc["files"]) - set(live))
+        for rel in gone:
+            d, f = os.path.split(os.path.join(base, rel))
+            for p in (os.path.join(d, f), os.path.join(d, f".{f}.crc")):
+                try:
+                    _fs.remove(p)
+                except OSError:
+                    pass
+        for d in sorted({rel.split("/", 1)[0] for rel in gone}):
+            try:
+                _fs.remove_empty_dir(os.path.join(base, d))
+            except OSError:
+                pass  # still holds live or staged files
 
     def set_table_properties(self, name: str, **props) -> None:
         """Table properties in the meta sidecar. Supported:
@@ -3643,25 +3680,6 @@ class TableStore:
         zorder_cols: list[str] | None = None,
         zorder_bits: int = 8,
     ) -> int:
-        # derivation-level OCC retry (ADVICE r9): the rewritten slice
-        # is derived from the version current at attempt start; a
-        # concurrent commit fails the publish CAS and the compaction
-        # re-plans against the new file set
-        return self._retry_base_conflicts(
-            lambda: self._compact_once(
-                name, max_files_per_bucket, sort_cols, zorder_cols,
-                zorder_bits,
-            )
-        )
-
-    def _compact_once(
-        self,
-        name: str,
-        max_files_per_bucket: int = 1,
-        sort_cols: list[str] | None = None,
-        zorder_cols: list[str] | None = None,
-        zorder_bits: int = 8,
-    ) -> int:
         """OPTIMIZE analog for versioned keyed tables: every live
         bucket holding more than ``max_files_per_bucket`` files (the
         small-file debt upserts accumulate, since versioned writes only
@@ -3689,7 +3707,28 @@ class TableStore:
             raise ValueError("pass sort_cols or zorder_cols, not both")
         if not self.is_versioned(name):
             raise ValueError(f"{name}: compact() is for versioned keyed tables")
-        base_v, base_ident = self._pin_base(name)
+        # derivation-level OCC retry (ADVICE r9): the rewritten slice
+        # is derived from the version current at attempt start; a
+        # concurrent commit fails the publish CAS and the compaction
+        # re-plans against the new file set
+        return self._retry_base_conflicts(
+            name,
+            lambda base_v, base_ident: self._compact_once(
+                name, base_v, base_ident, max_files_per_bucket, sort_cols,
+                zorder_cols, zorder_bits,
+            ),
+        )
+
+    def _compact_once(
+        self,
+        name: str,
+        base_v: int,
+        base_ident: str | None,
+        max_files_per_bucket: int,
+        sort_cols: list[str] | None,
+        zorder_cols: list[str] | None,
+        zorder_bits: int,
+    ) -> int:
         # the rewrite is purely physical; clustering column args are
         # logical — translate through the snapshot's map
         _ren = (self._colmap_doc(name, base_v) or {}).get("renames", {})
@@ -4014,10 +4053,10 @@ class TableStore:
             if os.path.isdir(bdir)
             else []
         )
-        vs = self.versions(name) if meta.get("versioned") else []
+        vs = self.versions(name) if self._manifest_backed(meta) else []
         if not vs:
             # plain tables have no _kb layout (walk the dir); a
-            # versioned table with NO retained manifests is the
+            # keyed table with NO retained manifests is the
             # overwrite-reset/heal window — report what exists
             # instead of crashing on max([]) (code-review r12)
             out.update({"version": None, "n_versions": 0})
@@ -4110,12 +4149,16 @@ class TableStore:
         except (OSError, ValueError) as ex:
             meta_issue = f"unreadable meta file ({ex})"
         vs = self.versions(name)
-        if meta_issue is None and not (meta.get("versioned") or vs):
-            # a CLEARLY unversioned keyed table has no manifests, so
-            # EVERY live file would read as a reclaimable orphan — a
-            # dangerously wrong report (code-review r8 wave 5). A
-            # table with manifests (or an unreadable meta) still
-            # audits.
+        if (
+            meta_issue is None
+            and not meta.get("versioned")
+            and (self._manifest_backed(meta) or not vs)
+        ):
+            # a CLEARLY unversioned table keeps no history to audit
+            # (code-review r8 wave 5: a keyed one written before its
+            # manifests would report EVERY live file as a reclaimable
+            # orphan). A table with manifests but no meta marker (or
+            # an unreadable meta) still audits.
             raise ValueError(
                 f"{name}: fsck audits versioned tables "
                 "(overwrite_keyed(..., versioned=True))"
@@ -4260,7 +4303,7 @@ class TableStore:
         Reads only the kilobyte manifests."""
         millis = self._as_millis(ts)
         vs = self.versions(name)
-        if not vs:
+        if not vs or not self.is_versioned(name):
             raise ValueError(
                 f"{name}: no manifest history — timestamp time travel "
                 "needs a versioned table (overwrite_keyed(..., "
@@ -4791,7 +4834,12 @@ class TableStore:
         ``TIMESTAMP AS OF`` — see version_as_of); either way the plan
         keeps reading those exact files even if upserts publish newer
         versions mid-query (snapshot isolation; vacuumed versions fail
-        loudly).
+        loudly). An unversioned keyed table resolves its latest manifest
+        the same way — no footer job at plan time — but the verb that
+        supersedes it removes its files, so a plan racing a write can
+        fail on a vanished file (no snapshot isolation), and
+        ``version=``/``as_of_ts=`` refuse. Other tables read their
+        directory.
 
         ``where={col: scalar | [v, ...] | slice(lo, hi)}`` (VERDICT
         r12 item 3) plans the scan through EVERY applicable
@@ -4814,12 +4862,17 @@ class TableStore:
                 "(overwrite_keyed(..., versioned=True)); filter an "
                 "ordinary read instead"
             )
-        if meta.get("versioned"):
-            v = self.latest_version(name) if version is None else version
+        if version is not None and not meta.get("versioned"):
+            raise ValueError(
+                f"{name} is not versioned (overwrite_keyed(..., versioned=True))"
+            )
+        if self._manifest_backed(meta):
+            if version is None:
+                v, doc = self._latest_doc(name)
+            else:
+                v, doc = version, self._manifest_doc(name, version)
             if v is not None and where is not None:
-                return self._read_planned(
-                    name, where, v, self._manifest_doc(name, v), meta
-                )
+                return self._read_planned(name, where, v, doc, meta)
             if v is None and where is not None:
                 raise ValueError(
                     f"{name}: where= planning needs a published "
@@ -4838,26 +4891,12 @@ class TableStore:
                     .parquet(self._dir(name))
                     .drop("_kb")
                 )
-            doc = self._manifest_doc(name, v)
             return self._to_logical(
                 self._read_manifest_df(name, v, doc=doc), doc.get("colmap")
             ).drop("_kb")
-        if version is not None:
-            raise ValueError(
-                f"{name} is not versioned (overwrite_keyed(..., versioned=True))"
-            )
-        self._heal_swaps(name)  # finish any interrupted bucket swap (r15)
-        keyed = "keyed_on" in meta
-        if keyed and not self._dir_has_parquet(name):
-            fallback = self._meta_schema_df(name)
-            if fallback is not None:
-                return fallback.drop("_kb")  # fully-emptied keyed table
-        df = self.spark.read.option("mergeSchema", "true").parquet(
+        return self.spark.read.option("mergeSchema", "true").parquet(
             self._dir(name)
         )
-        if keyed:
-            df = df.drop("_kb")  # internal bucket column stays internal
-        return df
 
     def max_value(self, name: str, col: str):
         """A1+S11 watermark: MAX(col) fetched as a scalar
@@ -4895,44 +4934,37 @@ class TableStore:
     # -- writes ------------------------------------------------------------
     def append(self, df: DataFrame, name: str) -> None:
         """S8: WRITE_APPEND + ALLOW_FIELD_ADDITION → parquet append; new
-        columns surface on read via mergeSchema=true."""
+        columns surface on read via mergeSchema=true. A keyed table
+        stamps the rows into their buckets and commits them with a
+        manifest like every keyed write; a table ``reload_partitions``
+        wrote appends in its ``col=value`` layout (ValueError for a
+        layout mixing root files and partition directories)."""
         df = self._enforce_constraints(name, df)
         spec = self.keyed_spec(name)
         if spec is not None:
-            # stamp appended rows into their buckets — an unstamped
-            # root write is invisible to the partition-discovery
-            # read (code-review r5: reproduced silent data loss)
             keys, n = spec
             df = self._to_physical(df, self._colmap_doc(name))
             df = df.withColumn("_kb", self._kb_expr(name, keys, n))
-            if self.is_versioned(name):
-                base_v, base_ident = self._pin_base(name)
 
-                def _rederive():
-                    # appends never remove files: against whatever
-                    # version a concurrent writer just published,
-                    # 'kept' is simply ALL of its files — no
-                    # re-merge, the staged rows are base-independent
-                    nv, nident = self._pin_base(name)
-                    return self._manifest_files(name, nv), nv, nident
+            def _rederive():
+                # appends never remove files: against whatever
+                # version a concurrent writer just published,
+                # 'kept' is simply ALL of its files — no
+                # re-merge, the staged rows are base-independent
+                nv, nident = self._pin_base(name)
+                return self._manifest_files(name, nv), nv, nident
 
-                self._append_and_publish(
-                    df, name, None, self._manifest_files(name, base_v),
-                    op="append", version_expect=base_v,
-                    version_expect_ident=base_ident,
-                    rederive_kept=_rederive,
-                )
-                return
-            self._cluster_kb(df).write.mode("append").partitionBy(
-                "_kb"
-            ).parquet(self._dir(name))
-            # evolving appends widen the stored schema the
-            # emptied-table fallback serves (code-review r7)
-            self._touch_meta(
-                name, schema=self._widened_schema_json(name, df.schema)
+            kept, base_v, base_ident = _rederive()
+            self._append_and_publish(
+                df, name, None, kept, op="append", version_expect=base_v,
+                version_expect_ident=base_ident, rederive_kept=_rederive,
             )
             return
-        df.write.mode("append").parquet(self._dir(name))
+        # a reload_partitions table: root files would be invisible to
+        # partition discovery, so land in its layout
+        part_col = self._partition_col(name)
+        w = df.write.mode("append")
+        (w.partitionBy(part_col) if part_col else w).parquet(self._dir(name))
         self._touch_meta(name)
 
     def overwrite(self, df: DataFrame, name: str) -> None:
@@ -4992,9 +5024,8 @@ class TableStore:
         - A keyed table (``overwrite_keyed``) merged on its own key:
           only the buckets the batch's keys hash to are rewritten,
           through ``overwrite_buckets`` like every other keyed write
-          verb — appended and published by snapshot manifest on a
-          versioned table, staged and swapped in under a journal on
-          an unversioned one.
+          verb — appended and published by snapshot manifest; an
+          unversioned table then removes the files it superseded.
         - Any other table: anti-join + union + overwrite, which
           rewrites the whole table (fine for dimension-sized tables;
           key the table to avoid it at scale).
@@ -5036,18 +5067,21 @@ class TableStore:
         """Write a table hash-bucket-partitioned by its merge key: rows
         land in parquet partitions _kb=pmod(xxhash64(key), n_buckets).
         Subsequent ``upsert`` calls on the same key then rewrite ONLY
-        the buckets containing matched keys (partition pruning + the
-        journaled bucket swap, r15) — the Delta/Iceberg MERGE cost
-        profile on plain parquet, instead of the whole-table rewrite
-        the unkeyed fallback pays. Size n_buckets so one bucket ≈ a few
-        files at the table's target size (the same knob as lakehouse
-        file sizing); the bucket column never surfaces on read.
+        the buckets containing matched keys — the Delta/Iceberg MERGE
+        cost profile on plain parquet, instead of the whole-table
+        rewrite the unkeyed fallback pays. Size n_buckets so one bucket
+        ≈ a few files at the table's target size (the same knob as
+        lakehouse file sizing); the bucket column never surfaces on
+        read.
 
-        ``versioned=True`` additionally publishes a snapshot manifest
-        per write (see the manifest section above): subsequent upserts
-        append files instead of deleting, readers get snapshot
-        isolation and ``read(name, version=N)`` time travel, and
-        ``vacuum`` reclaims unreferenced files."""
+        Every keyed table commits through a snapshot manifest (see the
+        manifest section above), published here as v1: each write
+        appends new files and publishes the next manifest with a CAS on
+        the version it derived from. ``versioned=True`` keeps the
+        superseded snapshots: readers get snapshot isolation and
+        ``read(name, version=N)`` time travel, and ``vacuum`` reclaims
+        unreferenced files. ``versioned=False`` (no time travel) makes
+        each write remove the files and the manifest it superseded."""
         keys = [key] if isinstance(key, str) else list(key)
         if int(n_buckets) < 1:
             # pmod(x, 0) is NULL: every row would land in the Hive
@@ -5069,7 +5103,7 @@ class TableStore:
         # below); (2) write the data; (3) publish the v1 manifest file;
         # (4) stamp the full meta LAST — a crash before it leaves no
         # phantom keyed/versioned marker, and a retry completes the
-        # table. A crash between (1) and (3) on a previously versioned
+        # table. A crash between (1) and (3) on a previously keyed
         # table is healed by the read fallback + _ensure_latest.
         #
         # The retiring history's txn watermark map carries FORWARD into
@@ -5077,8 +5111,8 @@ class TableStore:
         # not let an already-applied streaming batch (same app_id, old
         # txn_version) silently re-apply — the same reasoning restore()
         # documents, and Delta's behavior (txnAppId watermarks survive
-        # overwrites). Only meaningful when the NEW table is versioned;
-        # an unversioned reseed has no manifest to carry anything.
+        # overwrites). Only when the NEW table is versioned: the
+        # watermark verbs refuse unversioned tables.
         carried_txn: dict = {}
         if versioned:
             prev_v = self.latest_version(name)
@@ -5110,17 +5144,13 @@ class TableStore:
             .option("partitionOverwriteMode", "static")
             .parquet(self._dir(name))
         )
-        v = (
-            self._write_manifest_file(
-                name,
-                self._data_files(name),
-                schema_json=stamped.schema.json(),
-                txn=txn,
-                op="overwrite",
-                seed_txn=carried_txn,
-            )
-            if versioned
-            else 0
+        v = self._write_manifest_file(
+            name,
+            self._data_files(name),
+            schema_json=stamped.schema.json(),
+            txn=txn if versioned else None,
+            op="overwrite",
+            seed_txn=carried_txn,
         )
         import uuid
 
@@ -5137,159 +5167,8 @@ class TableStore:
             # detected as a NEW table, not a stale/garbage feed source
             # (code-review r8 wave 3)
             incarnation=uuid.uuid4().hex,
-            # read-side fallback for a later fully-emptied table (see
-            # _meta_schema_df); stamped WITH _kb so bucket-path readers
-            # degrade the same way
             schema=stamped.schema.json(),
         )
-
-    # -- unversioned stage-and-swap commit (r15) ---------------------------
-    #
-    # The unversioned keyed rewrite protocol: the merged bucket
-    # contents land in a private staging dir, then a JOURNAL file
-    # (._swap-<token>.json in the table dir, invisible to Spark's file
-    # index) records every (staged file → final name) move and every
-    # old file to delete BEFORE any mutation happens. Adds run before
-    # deletes, so the only mid-crash states are (a) journal + staged
-    # files → roll forward, (b) journal + fully-moved adds → finish
-    # deletes, (c) journal with neither staged nor moved adds (the
-    # writer's cleanup ran after a failed move) → roll back the moved
-    # adds and keep the old files. _heal_swaps runs at the head of the
-    # unversioned read/write verbs; an interrupted swap therefore
-    # never loses a bucket — unlike the dynamic-overwrite committer
-    # this replaces, whose commit deletes a partition dir before
-    # renaming the staged one in.
-
-    def _commit_swap(
-        self, name: str, stage: str, replace_buckets: list[int]
-    ) -> None:
-        """``replace_buckets``: bucket ids whose old files must go even
-        when the staged write produced NO rows for them (a bucket fully
-        emptied by deletes is pruned from disk); the staged buckets are
-        always replaced."""
-        import uuid
-
-        base = self._dir(name)
-        token = uuid.uuid4().hex[:12]
-        moves: list[list[str]] = []
-        for d in sorted(os.listdir(stage)):
-            if not d.startswith("_kb="):
-                continue
-            for f in sorted(os.listdir(os.path.join(stage, d))):
-                if f.endswith(".parquet"):
-                    moves.append([f"{d}/{f}", f"{d}/{token}-{f}"])
-        replaced = {m[1].split("/", 1)[0] for m in moves} | {
-            f"_kb={b}" for b in replace_buckets
-        }
-        dels: list[str] = []
-        for d in sorted(replaced):
-            p = os.path.join(base, d)
-            if os.path.isdir(p):
-                dels += [
-                    f"{d}/{f}"
-                    for f in sorted(os.listdir(p))
-                    if f.endswith(".parquet")
-                ]
-        os.makedirs(base, exist_ok=True)
-        jpath = os.path.join(base, f"._swap-{token}.json")
-        tmp = jpath + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"stage": stage, "moves": moves, "dels": dels}, fh)
-        os.replace(tmp, jpath)
-        self._replay_swap(name, jpath)
-
-    def _replay_swap(self, name: str, jpath: str) -> None:
-        """Finish or roll back one swap, serialized per journal with the
-        writer and every other healer by ``<journal>.claim``. Without
-        it a healer that loaded the journal could stall, wake after a
-        later swap of the same bucket deleted this journal's adds, read
-        them as never moved and roll back the rest."""
-        claim = jpath + ".claim"
-        token = _claim_journal(claim)
-        try:
-            self._replay_journal(name, jpath)
-        finally:
-            _release_journal(claim, token)
-
-    def _replay_journal(self, name: str, jpath: str) -> None:
-        base = self._dir(name)
-        try:
-            with open(jpath) as fh:
-                j = json.load(fh)
-        except (OSError, ValueError):
-            # read under the claim: a vanished journal means a racer
-            # finished it (a crash before the atomic replace never
-            # leaves a half-written one)
-            return
-        stage = j["stage"]
-        # roll forward only if every add is still completable —
-        # otherwise the staging dir was cleaned up after a failed
-        # write/move and finishing the deletes would lose buckets.
-        # A reader heals the same journal its writer is replaying, and
-        # files only move stage -> table: probing the stage FIRST means
-        # a move landing between the two probes still reads as present
-        # (table-first would miss it in both places and roll back the
-        # writer's moved adds while the writer deletes the old files).
-        forward = all(
-            os.path.isfile(os.path.join(stage, src))
-            or os.path.isfile(os.path.join(base, dst))
-            for src, dst in j["moves"]
-        )
-        # a FileNotFoundError below means a concurrent healer (or the
-        # writer) already did that step
-        def _rm_with_crc(p: str) -> None:
-            d_, f_ = os.path.split(p)
-            # the .crc is Hadoop LocalFS's checksum sidecar
-            for q in (p, os.path.join(d_, f".{f_}.crc")):
-                try:
-                    os.remove(q)
-                except FileNotFoundError:
-                    pass
-
-        if forward:
-            for src, dst in j["moves"]:
-                d = os.path.join(base, dst)
-                if not os.path.isfile(d):
-                    os.makedirs(os.path.dirname(d), exist_ok=True)
-                    try:
-                        _fs.replace(os.path.join(stage, src), d)
-                    except FileNotFoundError:
-                        pass
-            for rel in j["dels"]:
-                _rm_with_crc(os.path.join(base, rel))
-        else:
-            for _src, dst in j["moves"]:
-                _rm_with_crc(os.path.join(base, dst))
-        # parity with the dynamic-overwrite era: a bucket dir fully
-        # emptied by the swap is removed (idempotent, unjournaled — an
-        # empty dir is harmless to every reader either way); leftover
-        # checksum sidecars of files deleted long ago count as empty
-        for d in sorted({rel.split("/", 1)[0] for rel in j["dels"]}):
-            p = os.path.join(base, d)
-            try:
-                if os.path.isdir(p):
-                    entries = os.listdir(p)
-                    if all(
-                        e.startswith(".") and e.endswith(".crc")
-                        for e in entries
-                    ):
-                        for e in entries:
-                            os.remove(os.path.join(p, e))
-                        os.rmdir(p)
-            except OSError:
-                pass
-        try:
-            os.remove(jpath)
-        except FileNotFoundError:
-            pass
-
-    def _heal_swaps(self, name: str) -> None:
-        base = self._dir(name)
-        if not os.path.isdir(base):
-            return
-        for e in sorted(os.listdir(base)):
-            if e.startswith("._swap-") and e.endswith(".json"):
-                self._replay_swap(name, os.path.join(base, e))
 
     def _upsert_keyed(
         self,
@@ -5302,9 +5181,9 @@ class TableStore:
         """Bucket-partitioned MERGE: read ONLY the buckets the incoming
         keys hash to, anti-join the survivors against the batch, union
         the batch in and rewrite exactly those buckets through
-        ``overwrite_buckets`` (versioned: append + publish a manifest;
-        unversioned: journaled bucket swap). Untouched buckets' files
-        are never read or rewritten."""
+        ``overwrite_buckets`` (append + publish a manifest; an
+        unversioned table then removes the files it superseded).
+        Untouched buckets' files are never read or rewritten."""
         # pin the batch lineage ONCE: the bucket probe materializes the
         # lazy checkpoint, and the merge's two references (anti-join
         # key side + union side) read the cache instead of re-running
@@ -5318,12 +5197,7 @@ class TableStore:
         incoming = incoming.localCheckpoint(eager=False)
         affected = self.keyed_buckets(name, incoming)
 
-        def _attempt() -> None:
-            v0, v0_ident = (
-                self._pin_base(name)
-                if self.is_versioned(name)
-                else (None, None)
-            )
+        def _attempt(v0: int, v0_ident: str | None) -> None:
             inc_keys, cond = _key_match(keys, incoming, "_ik_")
             survivors = self.read_buckets(name, affected).join(
                 inc_keys, cond, how="left_anti"
@@ -5336,7 +5210,7 @@ class TableStore:
                 rows_within_buckets=True,
             )
 
-        self._retry_base_conflicts(_attempt)
+        self._retry_base_conflicts(name, _attempt)
 
     @staticmethod
     def _route_buckets(rows, types, n_buckets: int) -> list[int] | None:
@@ -5379,27 +5253,20 @@ class TableStore:
 
     def read_buckets(self, name: str, buckets: list[int]) -> DataFrame:
         """Partition-pruned read of just the listed buckets (without
-        the internal _kb column)."""
-        v = self.latest_version(name) if self.is_versioned(name) else None
-        doc = None
-        if v is not None:
-            doc = self._manifest_doc(name, v)
-            raw = self._read_manifest_df(name, v, doc=doc)
-        else:
-            # unversioned, or versioned with missing history (crash
-            # inside overwrite_keyed's reset window — the directory is
-            # the consistent snapshot iff the write committed; see read())
-            if self.is_versioned(name):
-                self._assert_committed_dir(name)
-            else:
-                self._heal_swaps(name)  # finish interrupted swaps (r15)
-            if not self._dir_has_parquet(name):
-                fallback = self._meta_schema_df(name)
-                if fallback is not None:
-                    return fallback.drop("_kb")  # fully-emptied table
+        the internal _kb column), resolved through the keyed table's
+        latest manifest."""
+        v, doc = self._latest_doc(name)
+        if v is None:
+            # manifest history missing (a crash inside overwrite_keyed's
+            # reset window, or a keyed table written before every keyed
+            # table had a manifest): the directory is the consistent
+            # snapshot iff the write committed; see read()
+            self._assert_committed_dir(name)
             raw = self.spark.read.option("mergeSchema", "true").parquet(
                 self._dir(name)
             )
+        else:
+            raw = self._read_manifest_df(name, v, doc=doc)
         out = raw.filter(F.col("_kb").isin(list(buckets))).drop("_kb")
         return self._to_logical(out, (doc or {}).get("colmap"))
 
@@ -5466,24 +5333,29 @@ class TableStore:
     ) -> None:
         """Replace exactly the listed buckets with ``df``'s rows
         (stamped by the table's key spec). Buckets in ``buckets`` that
-        end up with NO rows are pruned from disk. Lazy frames are fine
-        on BOTH paths (r15): versioned tables append + publish,
-        unversioned tables stage to a private dir and swap files under
-        a roll-forward journal — neither overwrites the files ``df``
-        reads, so callers no longer materialize survivor frames.
+        end up with NO rows are emptied. Lazy frames are fine: the new
+        bucket contents append as new part-files and the published
+        manifest stops referencing the replaced (or emptied) buckets'
+        old files, so the write never overwrites the files ``df``
+        reads, and callers do not materialize survivor frames. On a
+        versioned table deletes are logical until vacuum; an
+        unversioned one removes the superseded files after the publish
+        (``_remove_superseded``).
 
-        On a versioned table nothing is deleted: the new bucket
-        contents append as new part-files and the published manifest
-        simply stops referencing the replaced (or emptied) buckets'
-        old files — deletes are logical until vacuum.
+        ``version_expect``: the version the CALLER's frame was derived
+        from (delete_where/merge_when survivors) — the publish CASes on
+        it so a concurrent commit surfaces as BaseVersionConflict for
+        the caller's retry instead of a lost update (ADVICE r9).
+        Default: pinned here, which still guards the kept-list
+        derivation below.
 
         ``rows_within_buckets=True`` (internal verbs) asserts the
         caller PROVED every row of ``df`` hashes into ``buckets``
         (delete/update survivors keep their keys; merge_when derived
         ``buckets`` from every source row including inserts) — the
-        versioned widening collect below is then skipped, saving a
-        full evaluation of ``df``'s lineage (r14). Public callers
-        leave it False and keep the safety net.
+        widening collect below is then skipped, saving a full
+        evaluation of ``df``'s lineage (r14). Public callers leave it
+        False and keep the safety net.
 
         This is the low-level maintenance primitive (delete_where and
         CDC feed SURVIVOR frames through it), so CHECK constraints are
@@ -5492,74 +5364,34 @@ class TableStore:
         keys, n = self.keyed_spec(name)
         df = self._to_physical(df, self._colmap_doc(name))
         stamped = df.withColumn("_kb", self._kb_expr(name, keys, n))
-        if self.is_versioned(name):
-            # ``version_expect``: the version the CALLER's frame was
-            # derived from (delete_where/merge_when survivors) — the
-            # publish CASes on it so a concurrent commit surfaces as
-            # BaseVersionConflict for the caller's retry instead of a
-            # lost update (ADVICE r9). Default: pinned here, which
-            # still guards the kept-list derivation below.
-            if version_expect is None:
-                base_v, base_ident = self._pin_base(name)
-            else:
-                base_v, base_ident = int(version_expect), version_expect_ident
-            # rows hashing OUTSIDE the listed buckets must still land
-            # in the manifest — without widening, their files would be
-            # appended but unreferenced (an invisible write) while the
-            # stale old rows of their buckets stayed live
-            # (code-review r6). Widening mirrors the unversioned path,
-            # where dynamic overwrite replaces every bucket that
-            # receives data. Callers that PROVED containment skip the
-            # widening evaluation (rows_within_buckets above).
-            if rows_within_buckets:
-                eff = sorted(set(buckets))
-            else:
-                nonempty = {
-                    r[0]
-                    for r in stamped.select("_kb").distinct().collect()
-                }
-                eff = sorted(set(buckets) | nonempty)
-            eff_set = set(eff)
-            kept = [
-                f
-                for f in self._manifest_files(name, base_v)
-                if self._bucket_of(f) not in eff_set
-            ]
-            self._append_and_publish(
-                stamped, name, eff, kept, op=op, txn=txn,
-                check_replay=check_replay, txn_expect=txn_expect,
-                version_expect=base_v, version_expect_ident=base_ident,
-                txn_assert=txn_assert,
-            )
-            return
-        # r15: journaled stage-and-swap (see _commit_swap) instead of
-        # dynamic partition overwrite + a SECOND evaluation of the
-        # frame (the nonempty probe that pruned fully-emptied buckets).
-        # The swap's delete set is the staged buckets ∪ the LISTED
-        # buckets, so rows hashing outside ``buckets`` still replace
-        # their bucket (the widening dynamic overwrite provided) and a
-        # listed bucket that received no rows is emptied from disk —
-        # both without re-running the frame's lineage; callers no
-        # longer need to materialize frames derived from this table's
-        # own files (the staging write never overwrites what it reads).
-        import uuid
-
-        self._heal_swaps(name)
-        stage = os.path.join(
-            self.root, f".stagein-{name}-{uuid.uuid4().hex[:12]}"
-        )
-        try:
-            (
-                self._cluster_kb(stamped)
-                .write.mode("append")
-                .partitionBy("_kb")
-                .parquet(stage)
-            )
-            self._commit_swap(name, stage, replace_buckets=buckets)
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
-        self._touch_meta(
-            name, schema=self._widened_schema_json(name, stamped.schema)
+        if version_expect is None:
+            base_v, base_ident = self._pin_base(name)
+        else:
+            base_v, base_ident = int(version_expect), version_expect_ident
+        # rows hashing OUTSIDE the listed buckets must still land in
+        # the manifest — without widening, their files would be
+        # appended but unreferenced (an invisible write) while the
+        # stale old rows of their buckets stayed live (code-review r6).
+        # Callers that PROVED containment skip the widening evaluation
+        # (rows_within_buckets above).
+        if rows_within_buckets:
+            eff = sorted(set(buckets))
+        else:
+            nonempty = {
+                r[0] for r in stamped.select("_kb").distinct().collect()
+            }
+            eff = sorted(set(buckets) | nonempty)
+        eff_set = set(eff)
+        kept = [
+            f
+            for f in self._manifest_files(name, base_v)
+            if self._bucket_of(f) not in eff_set
+        ]
+        self._append_and_publish(
+            stamped, name, eff, kept, op=op, txn=txn,
+            check_replay=check_replay, txn_expect=txn_expect,
+            version_expect=base_v, version_expect_ident=base_ident,
+            txn_assert=txn_assert,
         )
 
     def _table_initialized(self, name: str) -> bool:
@@ -6044,8 +5876,8 @@ class TableStore:
                 f"{name}: merge_when needs a keyed table (overwrite_keyed)"
             )
         if txn is not None and not self.is_versioned(name):
-            # the unversioned write path has no manifest to carry the
-            # watermark: silently applying would hand the caller a txn
+            # unversioned tables keep no txn watermarks: silently
+            # applying would hand the caller a txn
             # guarantee that does not exist (code-review r8 wave 3) —
             # refuse loudly, like upsert_txn
             raise ValueError(
@@ -6059,8 +5891,9 @@ class TableStore:
             )
         source = source.dropDuplicates(keys).localCheckpoint(eager=True)
 
-        def _attempt() -> list[int]:
+        def _attempt(v0: int, v0_ident: str | None) -> list[int]:
             return self._merge_when_once(
+                v0, v0_ident,
                 source, name, keys, when_matched_update, matched_condition,
                 when_matched_delete, when_not_matched_insert, txn,
                 check_replay, txn_expect, source_meta_cols or [],
@@ -6071,10 +5904,12 @@ class TableStore:
         # derived from the version current at attempt start; a
         # concurrent commit fails the publish CAS and the whole merge
         # re-runs against the new version
-        return self._retry_base_conflicts(_attempt)
+        return self._retry_base_conflicts(name, _attempt)
 
     def _merge_when_once(
         self,
+        v0: int,
+        v0_ident: str | None,
         source: DataFrame,
         name: str,
         keys: list[str],
@@ -6088,9 +5923,6 @@ class TableStore:
         source_meta_cols,
         txn_assert=None,
     ) -> list[int]:
-        v0, v0_ident = (
-            self._pin_base(name) if self.is_versioned(name) else (None, None)
-        )
         buckets = self.keyed_buckets(name, source)
         target = self.read_buckets(name, buckets)
         # ``source_meta_cols`` are per-row MERGE DIRECTIVES (e.g. an
@@ -6234,11 +6066,10 @@ class TableStore:
             # lazy checkpoint; the staging write reads the cache)
             proj = proj.localCheckpoint(eager=False)
         merged = proj.drop("_act")
-        # r15: no defensive materialization on either path — versioned
-        # appends + publishes; unversioned stages + swaps (neither
-        # overwrites the files the join reads); the lazy checkpoint
-        # above exists purely so the landed check and the write share
-        # one evaluation of the join
+        # no defensive materialization: the write appends + publishes
+        # and never overwrites the files the join reads; the lazy
+        # checkpoint above exists purely so the landed check and the
+        # write share one evaluation of the join
         if check_needed:
             # constraints judge exactly what this merge WRITES anew —
             # updated and inserted rows; surviving history is not
@@ -6386,13 +6217,8 @@ class TableStore:
             # not apply (deletes on legacy-violating tables must work)
             self._overwrite_raw(survivors, name)
             return [-1]
-        def _attempt() -> list[int]:
+        def _attempt(v0: int, v0_ident: str | None) -> list[int]:
             meta = read_meta(self.root, name)
-            v0, v0_ident = (
-                self._pin_base(name)
-                if meta.get("versioned")
-                else (None, None)
-            )
             if where is not None:
                 # pruned find phase: _read_planned applies the exact
                 # predicate on the skipped scan, pinned at v0 so the
@@ -6406,9 +6232,8 @@ class TableStore:
             if not affected:
                 return []
             survivors = self.read_buckets(name, affected).filter(keep)
-            # r15: no materialization on either path — versioned
-            # appends + publishes (r14); unversioned stages + swaps,
-            # neither overwrites the files the survivors frame reads
+            # no materialization: the write appends + publishes and
+            # never overwrites the files the survivors frame reads
             self.overwrite_buckets(
                 survivors, name, affected, op="delete",
                 version_expect=v0, version_expect_ident=v0_ident,
@@ -6416,7 +6241,7 @@ class TableStore:
             )
             return sorted(affected)
 
-        return self._retry_base_conflicts(_attempt)
+        return self._retry_base_conflicts(name, _attempt)
 
     def update_where(
         self, name: str, set: dict, condition=None, where=None
@@ -6509,13 +6334,8 @@ class TableStore:
             self._overwrite_raw(_apply(df).localCheckpoint(), name)
             return [-1]
 
-        def _attempt() -> list[int]:
+        def _attempt(v0: int, v0_ident: str | None) -> list[int]:
             meta = read_meta(self.root, name)
-            v0, v0_ident = (
-                self._pin_base(name)
-                if meta.get("versioned")
-                else (None, None)
-            )
             if where is not None:
                 matches = self._read_planned(
                     name, where, v0, self._manifest_doc(name, v0), meta
@@ -6530,8 +6350,7 @@ class TableStore:
                 name, _apply(bucket_rows.filter(condition), always=True)
             )
             updated = _apply(bucket_rows)
-            # r15: no materialization on either path — versioned
-            # appends + publishes (r14); unversioned stages + swaps
+            # no materialization: the write appends + publishes
             self.overwrite_buckets(
                 updated, name, affected, op="update",
                 version_expect=v0, version_expect_ident=v0_ident,
@@ -6539,7 +6358,7 @@ class TableStore:
             )
             return sorted(affected)
 
-        return self._retry_base_conflicts(_attempt)
+        return self._retry_base_conflicts(name, _attempt)
 
     def drop(self, name: str) -> None:
         shutil.rmtree(self._dir(name), ignore_errors=True)

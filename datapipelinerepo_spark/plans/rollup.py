@@ -160,7 +160,7 @@ def seed_rollup(
     if txn is not None and not versioned:
         raise ValueError(
             "seed_rollup: txn= needs versioned=True — an unversioned "
-            "rollup has no manifest to record the watermark, and "
+            "rollup keeps no txn watermark, and "
             "silently dropping it would void the caller's replay "
             "protection (code-review r8 wave 3)"
         )

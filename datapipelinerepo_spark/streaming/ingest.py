@@ -547,8 +547,8 @@ def cdc_apply_txn(
             raise ValueError(
                 f"{base_table}: exactly-once CDC needs a VERSIONED "
                 "keyed table (overwrite_keyed(..., versioned=True)) — "
-                "unversioned tables have no manifest to carry the "
-                "(app, batch) watermark"
+                "unversioned tables do not carry the (app, batch) "
+                "watermark"
             )
         last = store.last_txn(base_table, app_id)
         if last is not None and last >= int(batch_id):
@@ -559,19 +559,13 @@ def cdc_apply_txn(
     # into buckets outside the pruned set (code-review r7 wave 3)
     batch = batch.localCheckpoint(eager=True)
 
-    def _attempt() -> None:
-        # base-version OCC (code-review r10 wave 1): pin the version
-        # BEFORE reading the buckets; the publish CASes on it, so a
-        # concurrent writer committing inside the read→publish window
-        # re-runs this whole derivation instead of having its rows
-        # silently replaced by a merge over the prior snapshot —
-        # cdc_apply was the one bucket-rewriting verb the r10 OCC
-        # scheme initially missed
-        v0, v0_ident = (
-            store._pin_base(base_table)
-            if store.is_versioned(base_table)
-            else (None, None)
-        )
+    def _attempt(v0: int, v0_ident: str | None) -> None:
+        # base-version OCC (code-review r10 wave 1): the retry loop
+        # pins the version BEFORE the buckets are read; the publish
+        # CASes on it, so a concurrent writer committing inside the
+        # read→publish window re-runs this whole derivation instead of
+        # having its rows silently replaced by a merge over the prior
+        # snapshot
         # bucket-partitioned maintenance: merge the batch into ONLY
         # the buckets its keys hash to — the per-batch cost is
         # |batch's buckets|, not the table (the keyed-upsert fast path
@@ -612,7 +606,7 @@ def cdc_apply_txn(
         # BaseVersionConflict deliberately escapes this handler (it is
         # NOT a TxnAlreadyApplied): "not applied — retry" must fail the
         # batch and be replayed, never reported as a skipped replay
-        store._retry_base_conflicts(_attempt)
+        store._retry_base_conflicts(base_table, _attempt)
     except TxnAlreadyApplied:
         return False
     return True

@@ -56,6 +56,31 @@ def test_partition_reload_idempotent(spark, tmp_path):
     assert _rows(store, "w") == after
 
 
+def test_append_onto_reloaded_table_keeps_its_layout(spark, tmp_path):
+    """An append onto a table reload_partitions wrote lands in its
+    date= layout: part-files at the root are dropped by partition
+    discovery, which lost the appended rows silently. A layout mixing
+    root files and partition directories refuses."""
+    store = TableStore(spark, str(tmp_path))
+    d1, d2, d3 = dt.date(2026, 8, 1), dt.date(2026, 8, 2), dt.date(2026, 8, 3)
+    schema = "zip string, date date, v double"
+    rows = [("z1", d1, 1.0), ("z1", d2, 2.0)]
+    store.reload_partitions(spark.createDataFrame(rows, schema), "w", "date")
+    store.append(spark.createDataFrame([("z2", d3, 3.0)], schema), "w")
+    got = store.read("w")
+    assert got.count() == 3
+    assert got.agg(F.max("date")).first()[0] == d3
+    assert {(r["zip"], r["date"], r["v"]) for r in got.collect()} == set(
+        rows + [("z2", d3, 3.0)]
+    )
+    # a root part-file beside the partitions: no append can extend it
+    spark.createDataFrame([("z3", d3, 4.0)], schema).write.mode(
+        "append"
+    ).parquet(store._dir("w"))
+    with pytest.raises(ValueError, match="mixed table layout"):
+        store.append(spark.createDataFrame([("z4", d3, 5.0)], schema), "w")
+
+
 def test_catalog_probes(spark, tmp_path):
     store = TableStore(spark, str(tmp_path))
     assert not store.exists("t")
@@ -456,10 +481,11 @@ def test_versioned_publish_crash_window_heals(spark, tmp_path, monkeypatch):
 
 
 def test_unversioned_upsert_crash_before_meta_heals(spark, tmp_path, monkeypatch):
-    """VERDICT r5 item 6: kill the write between overwrite_buckets'
-    bucket swap and _touch_meta. The data is already merged on disk, the
-    keyed marker is stale-but-valid, and re-running the upsert is
-    idempotent — the table heals on the next operation."""
+    """VERDICT r5 item 6: kill the write between the manifest publish
+    and the meta pointer bump (_touch_meta). The published manifest is
+    the commit point, so the merge is visible, the keyed marker is
+    stale-but-valid, and re-running the upsert is idempotent — the
+    table heals on the next operation."""
     store = TableStore(spark, str(tmp_path))
     base = spark.createDataFrame(
         [(i, float(i)) for i in range(100)], ["id", "price"]
@@ -4339,288 +4365,204 @@ def test_null_stats_inert_counter_distinct_key(spark, tmp_path):
     assert ("t", "ts") not in store.prune_stat_misses or nulls_only
 
 
-def test_unversioned_swap_crash_recovery(spark, tmp_path):
-    """r15: the unversioned keyed upsert commits via stage-and-swap
-    under a roll-forward journal. Every crash window must heal to a
-    consistent table: (a) journal + staged adds -> roll forward to the
-    merged state; (b) journal + adds moved but deletes pending ->
-    finish deletes (no duplicate keys); (c) journal with the staging
-    dir gone and adds unmoved -> roll back to the pre-upsert state."""
-    import json
-    import os
+def _mk_unversioned(spark, tmp_path, n=40, buckets=4):
+    store = TableStore(spark, str(tmp_path))
+    base = spark.range(n).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+    )
+    store.overwrite_keyed(base, "t", "k", n_buckets=buckets)
+    return store
+
+
+def _kv(store) -> dict:
+    rows = store.read("t").collect()
+    got = {r["k"]: r["v"] for r in rows}
+    assert len(got) == len(rows), "duplicate keys"
+    return got
+
+
+def _kv_batch(spark, keys, v):
+    return spark.createDataFrame([(k, v) for k in keys], "k long, v long")
+
+
+def test_unversioned_crash_before_publish_keeps_old_rows(
+    spark, tmp_path, monkeypatch
+):
+    """A crash after an unversioned upsert staged its files into the
+    table and before it published their manifest: reads still return
+    the old rows, the next verb succeeds and removes only what it
+    superseded, and the crashed write's files wait for vacuum."""
+    store = _mk_unversioned(spark, tmp_path)
+    before = _kv(store)
+    v1 = store.latest_version("t")
+
+    def crash(*a, **k):
+        raise OSError("injected: died before the publish")
+
+    monkeypatch.setattr(store, "_publish_version", crash)
+    inc = _kv_batch(spark, range(10, 20), -1)
+    with pytest.raises(OSError, match="before the publish"):
+        store.upsert(inc, "t", "k")
+    monkeypatch.undo()
+    staged = set(store._data_files("t")) - set(store._manifest_files("t", v1))
+    assert staged
+    assert store.latest_version("t") == v1 and _kv(store) == before
+
+    store.upsert(inc, "t", "k")
+    want = {**before, **{k: -1 for k in range(10, 20)}}
+    assert _kv(store) == want
+    assert staged <= set(store._data_files("t"))
+
+    store.vacuum("t", grace_s=0.0)
+    v = store.latest_version("t")
+    assert set(store._data_files("t")) == set(store._manifest_files("t", v))
+    assert _kv(store) == want
+
+
+def test_unversioned_crash_after_publish_leaves_orphans_for_vacuum(
+    spark, tmp_path, monkeypatch
+):
+    """A crash after the manifest publish and before the superseded
+    files are removed: reads return exactly the new rows (the manifest
+    is the commit point, the directory is not), a later verb removes
+    only the files it superseded itself, and vacuum reclaims the
+    leftovers and the old manifest."""
+    store = _mk_unversioned(spark, tmp_path)
+    before = _kv(store)
+    v1 = store.latest_version("t")
+
+    def crash(*a, **k):
+        raise OSError("injected: died before the cleanup")
+
+    monkeypatch.setattr(store, "_remove_superseded", crash)
+    with pytest.raises(OSError, match="before the cleanup"):
+        store.upsert(_kv_batch(spark, range(10, 20), -1), "t", "k")
+    monkeypatch.undo()
+    v2 = store.latest_version("t")
+    assert v2 == v1 + 1
+    want = {**before, **{k: -1 for k in range(10, 20)}}
+    assert _kv(store) == want
+    leftovers = set(store._manifest_files("t", v1)) - set(
+        store._manifest_files("t", v2)
+    )
+    assert leftovers and leftovers <= set(store._data_files("t"))
+
+    store.upsert(_kv_batch(spark, range(10, 20), -2), "t", "k")
+    want.update({k: -2 for k in range(10, 20)})
+    assert _kv(store) == want
+    assert leftovers <= set(store._data_files("t"))
+    v3 = store.latest_version("t")
+    assert store.versions("t") == [v1, v3]
+
+    store.vacuum("t", grace_s=0.0)
+    assert store.versions("t") == [v3]
+    assert set(store._data_files("t")) == set(store._manifest_files("t", v3))
+    assert _kv(store) == want
+
+
+def test_unversioned_table_without_manifest_heals_on_first_write(
+    spark, tmp_path
+):
+    """A keyed table written before unversioned tables had manifests
+    reads its committed directory, and its first write publishes that
+    directory as the base manifest before committing on top of it."""
     import shutil
 
-    from pyspark.sql import functions as F
+    store = _mk_unversioned(spark, tmp_path)
+    before = _kv(store)
+    shutil.rmtree(store._manifest_dir("t"))
+    store._update_meta("t", lambda meta: meta.pop("version"))
+    assert store.versions("t") == [] and _kv(store) == before
 
-    def mk(tag):
-        store = TableStore(spark, str(tmp_path / tag))
-        base = spark.range(40).select(
-            F.col("id").alias("k"), (F.col("id") * 10).alias("v")
-        )
-        store.overwrite_keyed(base, "t", "k", n_buckets=4)
-        inc = spark.range(10, 20).select(
-            F.col("id").alias("k"), F.lit(-1).alias("v")
-        )
-        return store, inc
-
-    def interrupted_swap(store, inc, stop_after):
-        """Run the upsert but interrupt _replay_swap at a chosen point
-        by capturing the journal before replay and re-creating it."""
-        tdir = store._dir("t")
-        stamped = store._to_physical(inc, store._colmap_doc("t")).withColumn(
-            "_kb", store._kb_expr("t", ["k"], 4)
-        )
-        stage = str(tmp_path / "crash_stage")
-        shutil.rmtree(stage, ignore_errors=True)
-        raw = spark.read.option("mergeSchema", "true").parquet(tdir)
-        from datapipelinerepo_spark.io import _key_match
-
-        affected = [r[0] for r in stamped.select("_kb").distinct().collect()]
-        inc_keys, cond = _key_match(["k"], stamped, "_ik_")
-        merged = (
-            raw.filter(F.col("_kb").isin(affected))
-            .join(inc_keys, cond, how="left_anti")
-            .unionByName(stamped)
-            .localCheckpoint()
-        )
-        store._cluster_kb(merged).write.mode("append").partitionBy(
-            "_kb"
-        ).parquet(stage)
-        # build the journal exactly as _commit_swap would, then stop
-        # at the requested point instead of replaying
-        token = "crashtok12345"
-        moves = []
-        for d in sorted(os.listdir(stage)):
-            if d.startswith("_kb="):
-                for f in sorted(os.listdir(os.path.join(stage, d))):
-                    if f.endswith(".parquet"):
-                        moves.append([f"{d}/{f}", f"{d}/{token}-{f}"])
-        dels = []
-        for d in sorted({m[1].split("/", 1)[0] for m in moves}):
-            p = os.path.join(tdir, d)
-            if os.path.isdir(p):
-                dels += [
-                    f"{d}/{f}"
-                    for f in sorted(os.listdir(p))
-                    if f.endswith(".parquet")
-                ]
-        jpath = os.path.join(tdir, f"._swap-{token}.json")
-        with open(jpath, "w") as fh:
-            json.dump({"stage": stage, "moves": moves, "dels": dels}, fh)
-        if stop_after == "journal":
-            return stage
-        for src, dst in moves:  # adds fully moved, deletes pending
-            d = os.path.join(tdir, dst)
-            os.makedirs(os.path.dirname(d), exist_ok=True)
-            os.replace(os.path.join(stage, src), d)
-        if stop_after == "adds":
-            return stage
-        raise AssertionError(stop_after)
-
-    merged_expect = sorted(
-        [(k, -1 if 10 <= k < 20 else k * 10) for k in range(40)]
-    )
-    pre_expect = sorted([(k, k * 10) for k in range(40)])
-
-    # (a) crash right after the journal landed: heal rolls forward
-    store, inc = mk("a")
-    stage = interrupted_swap(store, inc, "journal")
-    got = sorted((r["k"], r["v"]) for r in store.read("t").collect())
-    assert got == merged_expect
-    assert not [
-        e for e in os.listdir(store._dir("t")) if e.startswith("._swap-")
-    ]
-    shutil.rmtree(stage, ignore_errors=True)
-
-    # (b) crash after the adds moved: heal finishes the deletes —
-    # no duplicate keys survive
-    store, inc = mk("b")
-    stage = interrupted_swap(store, inc, "adds")
-    got = sorted((r["k"], r["v"]) for r in store.read("t").collect())
-    assert got == merged_expect
-    shutil.rmtree(stage, ignore_errors=True)
-
-    # (c) journal present but the staging dir is gone and no add
-    # moved (writer cleanup after a failed staging write): heal rolls
-    # back to the pre-upsert table
-    store, inc = mk("c")
-    stage = interrupted_swap(store, inc, "journal")
-    # undo nothing in the table, but delete the stage as the writer's
-    # finally-cleanup would
-    shutil.rmtree(stage)
-    got = sorted((r["k"], r["v"]) for r in store.read("t").collect())
-    assert got == pre_expect
-
-    # and the normal (uninterrupted) path still merges correctly
-    store, inc = mk("d")
-    store.upsert(inc, "t", "k")
-    got = sorted((r["k"], r["v"]) for r in store.read("t").collect())
-    assert got == merged_expect
+    store.upsert(_kv_batch(spark, range(10, 20), -1), "t", "k")
+    assert [h["op"] for h in store.history("t")] == ["upsert"]
+    assert _kv(store) == {**before, **{k: -1 for k in range(10, 20)}}
+    v = store.latest_version("t")
+    assert set(store._data_files("t")) == set(store._manifest_files("t", v))
 
 
-def test_unversioned_swap_concurrent_healers(spark, tmp_path, monkeypatch):
-    """A reader heals pending swap journals at the head of read(), so
-    it can replay the same journal its writer is still replaying. Force
-    the worst interleaving: the writer's first staged-file move lands
-    between the reader's two existence probes for that move. Neither
-    healer may roll back the other's work, and the table must hold
-    exactly the merged rows afterwards."""
-    import os
-
-    from datapipelinerepo_spark import _fs
-
-    store = TableStore(spark, str(tmp_path))
-    base = spark.range(40).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
-    )
-    store.overwrite_keyed(base, "t", "k", n_buckets=4)
-    inc = spark.range(10, 20).select(
-        F.col("id").alias("k"), F.lit(-1).alias("v")
-    )
-
-    real_replace, real_isfile = _fs.replace, os.path.isfile
-    pending: list[tuple[str, str]] = []
-    fired = []
-
-    def racing_isfile(path):
-        hit = real_isfile(path)
-        if pending and not fired and path in pending[0]:
-            # the writer's move lands right after this probe
-            fired.append(path)
-            real_replace(*pending[0])
-        return hit
-
-    def writer_replace(src, dst):
-        if pending or ".stagein-" not in src:
-            return real_replace(src, dst)
-        # the writer is about to move its first staged file: a reader
-        # heals the journal now (what read() runs at its head)
-        pending.append((src, dst))
-        monkeypatch.setattr(os.path, "isfile", racing_isfile)
-        try:
-            store._heal_swaps("t")
-        finally:
-            monkeypatch.setattr(os.path, "isfile", real_isfile)
-        if not fired:
-            real_replace(src, dst)
-
-    monkeypatch.setattr(_fs, "replace", writer_replace)
-    store.upsert(inc, "t", "k")
-    monkeypatch.setattr(_fs, "replace", real_replace)
-
-    assert fired, "the reader never probed the writer's first move"
-    got = sorted((r["k"], r["v"]) for r in store.read("t").collect())
-    assert got == sorted(
-        [(k, -1 if 10 <= k < 20 else k * 10) for k in range(40)]
-    )
-    assert not [
-        e for e in os.listdir(store._dir("t")) if e.startswith("._swap-")
-    ]
-
-
-# A healer in another process: lists the table's swap journals, replays
-# them, and parks at its first probe of a journal's adds (after loading
-# the journal) until the release file appears.
-PARKED_HEALER = """
-import os, sys, time
-from datapipelinerepo_spark.io import TableStore
-
-base, parked, release = sys.argv[1:]
-store = object.__new__(TableStore)
-store._dir = lambda name: base
-real_isfile = os.path.isfile
-
-def parked_isfile(path):
-    os.path.isfile = real_isfile
-    open(parked, "w").close()
-    while not os.path.exists(release):
-        time.sleep(0.01)
-    return real_isfile(path)
-
-os.path.isfile = parked_isfile
-store._heal_swaps("t")
-"""
-
-
-def test_unversioned_swap_stale_journal_healer(spark, tmp_path, monkeypatch):
-    """A healer in another process loads a swap journal and stalls
-    before probing its adds. Meanwhile the writer could finish that
-    swap, and a later swap of one of its buckets delete those adds;
-    woken, the healer would read them as never moved and roll back the
-    adds of the journal's other buckets. The per-journal claim makes
-    the writer wait for the healer instead, and the healer that takes
-    a claim after its journal is gone does nothing."""
-    import os
-    import subprocess
-    import sys
+def test_unversioned_concurrent_writers_replay_serially(spark, tmp_path):
+    """Two writers (two stores on one root) upsert one unversioned
+    keyed table. (1) Both derive from the same base and publish
+    together: the CAS on the base version fails the later publish,
+    which re-derives. (2) One writer stages its files on the version
+    the other just published while that one removes what it
+    superseded: the removal takes exactly the superseded files, never
+    the other writer's staged ones. Either way the table ends equal to
+    a serial replay of both batches."""
     import threading
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    store = TableStore(spark, str(tmp_path / "store"))
-    base_rows = spark.range(40).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
-    )
-    store.overwrite_keyed(base_rows, "t", "k", n_buckets=4)
-    base = store._dir("t")
-    kb = {
-        r["k"]: r["_kb"]
-        for r in spark.read.parquet(base).select("k", "_kb").collect()
-    }
-    first = list(range(10, 20))
-    assert len({kb[k] for k in first}) >= 2
-    # a later swap of one of the first swap's buckets, and no other
-    later = next(k for k in range(40) if k not in first and kb[k] == kb[first[0]])
+    a = _mk_unversioned(spark, tmp_path)
+    b = TableStore(spark, str(tmp_path))
+    want = _kv(a)
+    evens, odds = range(0, 40, 2), range(1, 40, 2)  # every bucket
+    errors: list[BaseException] = []
 
-    def rows(keys, v):
-        return spark.createDataFrame([(k, v) for k in keys], "k long, v long")
-
-    inc_first, inc_later = rows(first, -1), rows([later], -2)
-    real_replay = store._replay_swap
-    written, go = threading.Event(), threading.Event()
-
-    def paused_replay(name, jpath):
-        # the first swap's journal is on disk; its writer waits here
-        if not written.is_set():
-            written.set()
-            go.wait(120)
-        real_replay(name, jpath)
-
-    monkeypatch.setattr(store, "_replay_swap", paused_replay)
-    errors = []
-
-    def writes():
+    def run(fn):
         try:
-            store.upsert(inc_first, "t", "k")
-            store.upsert(inc_later, "t", "k")
+            fn()
         except BaseException as e:  # re-raised in the test thread
             errors.append(e)
 
-    writer = threading.Thread(target=writes)
-    writer.start()
-    assert written.wait(120)
-    parked, release = tmp_path / "parked", tmp_path / "release"
-    env = dict(os.environ, PYTHONPATH=os.pathsep.join([root, os.environ.get("PYTHONPATH", "")]))
-    healer = subprocess.Popen(
-        [sys.executable, "-c", PARKED_HEALER, base, str(parked), str(release)],
-        cwd=str(tmp_path), env=env,
-    )
-    try:
-        while not parked.exists():
-            assert healer.poll() is None, "the healer exited before loading the journal"
-            threading.Event().wait(0.05)
-        go.set()
-        # without the claim both swaps finish here, under the parked healer
-        writer.join(timeout=10)
-    finally:
-        release.touch()
-        assert healer.wait(60) == 0
-    writer.join(120)
-    assert not writer.is_alive() and not errors, errors
+    # (1) each writer's first publish waits for the other's
+    barrier = threading.Barrier(2, timeout=120)
 
-    got = sorted((r["k"], r["v"]) for r in store.read("t").collect())
-    want = {k: k * 10 for k in range(40)} | {k: -1 for k in first} | {later: -2}
-    assert got == sorted(want.items())
-    assert not [e for e in os.listdir(base) if e.startswith("._swap-")]
+    def wait_once(store):
+        real, first = store._publish_version, [True]
+
+        def publish(*args, **kw):
+            if first[0]:
+                first[0] = False
+                barrier.wait()
+            return real(*args, **kw)
+
+        store._publish_version = publish
+
+    wait_once(a)
+    wait_once(b)
+    threads = [
+        threading.Thread(
+            target=run, args=(lambda: a.upsert(_kv_batch(spark, evens, -1), "t", "k"),)
+        ),
+        threading.Thread(
+            target=run, args=(lambda: b.upsert(_kv_batch(spark, odds, -2), "t", "k"),)
+        ),
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(300)
+    del a._publish_version, b._publish_version
+    assert not any(t.is_alive() for t in threads) and not errors, errors
+    want.update({k: -1 for k in evens} | {k: -2 for k in odds})
+    assert _kv(a) == want
+
+    # (2) b pins a's new version and stages while a cleans up
+    staged, go = threading.Event(), threading.Event()
+    real_publish, real_remove = b._publish_version, a._remove_superseded
+    writer_b = threading.Thread(
+        target=run, args=(lambda: b.upsert(_kv_batch(spark, odds, -4), "t", "k"),)
+    )
+
+    def b_publish(*args, **kw):
+        staged.set()
+        assert go.wait(120)
+        return real_publish(*args, **kw)
+
+    def a_remove(*args, **kw):
+        writer_b.start()
+        assert staged.wait(120)
+        try:
+            real_remove(*args, **kw)
+        finally:
+            go.set()
+
+    b._publish_version, a._remove_superseded = b_publish, a_remove
+    a.upsert(_kv_batch(spark, evens, -3), "t", "k")
+    writer_b.join(300)
+    assert not writer_b.is_alive() and not errors, errors
+    want.update({k: -3 for k in evens} | {k: -4 for k in odds})
+    assert _kv(a) == want
 
 
 def test_meta_reads_never_see_a_partial_write(spark, tmp_path):

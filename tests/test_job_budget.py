@@ -1,6 +1,7 @@
 """Spark-job budgets of the store verbs: the exact number of Spark jobs
 each verb launches on a small versioned keyed table with a bloom index,
-and on a small unversioned keyed table; the tasks of an upsert's write
+and on a small unversioned keyed table (the same manifest commit, so
+never more jobs than versioned); the tasks of an upsert's write
 stage; and the jobs of the pipeline's gates and load on a
 date-partitioned table.
 
@@ -36,14 +37,17 @@ BUDGETS = {
     "count_where": 2,
     "update_bloom_index": 4,
     "update_where": 4,
+    "lookup": 3,
 }
 
-# the unversioned keyed route: journaled bucket swaps, no manifest
+# unversioned keyed tables commit through the same manifest protocol;
+# they only remove what each commit supersedes
 UNVERSIONED_BUDGETS = {
-    "upsert": 6,
-    "merge_when": 8,
-    "delete_where": 6,
-    "update_where": 6,
+    "upsert": 5,
+    "merge_when": 7,
+    "delete_where": 4,
+    "update_where": 4,
+    "lookup": 3,
 }
 
 
@@ -118,6 +122,7 @@ def verb_jobs(spark, store):
         "read_where": lambda: store.read("t", where={"k": 57}).collect(),
         "read_point": lambda: store.read_point("t", "cust", 13).collect(),
         "count_where": lambda: store.count_where("t", {"cust": 13}),
+        "lookup": lambda: store.lookup("t", [57, 300]).collect(),
     }
     jobs = {name: _jobs(spark, fn) for name, fn in verbs.items()}
     # bloom maintenance after a new write scans the files it left
@@ -130,10 +135,16 @@ def verb_jobs(spark, store):
 
 
 @pytest.fixture(scope="module")
-def unversioned_jobs(spark, tmp_path_factory):
-    """The keyed verbs, in order, on one unversioned keyed table."""
+def unversioned_store(spark, tmp_path_factory):
     store = TableStore(spark, str(tmp_path_factory.mktemp("budget_unv")))
     store.overwrite_keyed(_rows(spark, 0, 400), "t", "k", n_buckets=8)
+    return store
+
+
+@pytest.fixture(scope="module")
+def unversioned_jobs(spark, unversioned_store):
+    """The keyed verbs, in order, on one unversioned keyed table."""
+    store = unversioned_store
     verbs = {
         "upsert": lambda: store.upsert(_rows(spark, 390, 410, 1.0), "t", "k"),
         "merge_when": lambda: _merge_when(store, spark),
@@ -141,6 +152,7 @@ def unversioned_jobs(spark, tmp_path_factory):
             "t", condition="k >= 200 AND k < 210"
         ),
         "update_where": lambda: _update_where(store),
+        "lookup": lambda: store.lookup("t", [57, 300]).collect(),
     }
     return {name: _jobs(spark, fn) for name, fn in verbs.items()}
 
@@ -155,11 +167,20 @@ def test_unversioned_verb_job_budget(unversioned_jobs, verb):
     assert unversioned_jobs[verb] == UNVERSIONED_BUDGETS[verb]
 
 
-def test_pruned_reads_plan_without_a_job(spark, store):
-    """Planning a pruned read takes its schema from the manifest, so no
-    footer job runs before the caller asks for rows."""
+@pytest.mark.parametrize("verb", sorted(UNVERSIONED_BUDGETS))
+def test_unversioned_never_costs_more_jobs(verb_jobs, unversioned_jobs, verb):
+    """One commit protocol: dropping time travel never costs a job."""
+    assert UNVERSIONED_BUDGETS[verb] <= BUDGETS[verb]
+    assert unversioned_jobs[verb] <= verb_jobs[verb]
+
+
+def test_pruned_reads_plan_without_a_job(spark, store, unversioned_store):
+    """Planning a pruned read, or any read of a keyed table, takes its
+    schema from the manifest, so no footer job runs before the caller
+    asks for rows."""
     assert _jobs(spark, lambda: store.read("t", where={"k": 57}).schema) == 0
     assert _jobs(spark, lambda: store.read_point("t", "cust", 13).schema) == 0
+    assert _jobs(spark, lambda: unversioned_store.read("t").schema) == 0
 
 
 def test_upsert_write_stage_tasks(spark, store, verb_jobs):

@@ -154,9 +154,18 @@ def test_library_builds_no_frame_from_a_python_list():
 def test_one_claim_loop_in_the_package():
     """The claim acquire/identity-check/heartbeat/release loop exists
     once, in ``io.run_claim_serialized``: ``_acquire_claim`` and
-    ``_ClaimHeartbeat`` are called nowhere else in the library, so a
-    fix to the loop cannot miss a hand-copied twin."""
-    offenders = []
+    ``_ClaimHeartbeat`` are called nowhere else in the library, and
+    the create-exclusive primitive under every claim,
+    ``_fs.put_if_absent``, is called only by ``_acquire_claim`` — a
+    loop built on it directly is a second claim loop with its own
+    steal, which the first check cannot see. So a fix to the loop
+    cannot miss a hand-copied twin."""
+    home = {
+        "_acquire_claim": "run_claim_serialized",
+        "_ClaimHeartbeat": "run_claim_serialized",
+        "put_if_absent": "_acquire_claim",
+    }
+    calls = []
     for d, _, fs in os.walk(_PKG):
         for f in fs:
             if not f.endswith(".py"):
@@ -168,18 +177,41 @@ def test_one_claim_loop_in_the_package():
                 if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
                     continue
                 for node in ast.walk(fn):
-                    if isinstance(node, ast.Call) and getattr(
+                    callee = isinstance(node, ast.Call) and getattr(
                         node.func, "id", getattr(node.func, "attr", None)
-                    ) in ("_acquire_claim", "_ClaimHeartbeat"):
-                        offenders.append(
-                            f"{os.path.relpath(path, _PKG)}:{node.lineno}"
-                            f" in {fn.name}"
+                    )
+                    if callee in home:
+                        calls.append(
+                            (os.path.relpath(path, _PKG), node.lineno,
+                             fn.name, callee)
                         )
-    allowed = {
-        o for o in offenders if o.startswith("io.py:")
-        and o.endswith(" in run_claim_serialized")
+    offenders = [
+        c for c in calls if c[0] != "io.py" or c[2] != home[c[3]]
+    ]
+    assert calls and not offenders, offenders
+
+
+def test_direct_fs_mutations_in_io_only_fall():
+    """Porting the store means implementing ``_fs``; every direct
+    ``os.replace``/``os.rename``/``os.remove``/``os.rmdir``/
+    ``shutil.rmtree`` left in io.py is a mutation that port would miss.
+    Their count may only fall (27 once the unversioned keyed tables
+    committed through the manifest; 33 before)."""
+    with open(os.path.join(_PKG, "io.py")) as fh:
+        tree = ast.parse(fh.read())
+    mutations = {
+        ("os", "replace"), ("os", "rename"), ("os", "remove"),
+        ("os", "rmdir"), ("shutil", "rmtree"),
     }
-    assert allowed and set(offenders) == allowed, offenders
+    direct = [
+        n.lineno
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and isinstance(n.func.value, ast.Name)
+        and (n.func.value.id, n.func.attr) in mutations
+    ]
+    assert len(direct) <= 27, direct
 
 
 def _meta_path_opens(fn) -> list[int]:
