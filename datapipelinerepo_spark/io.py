@@ -23,6 +23,7 @@ import json
 import os
 import shutil
 import time
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -163,7 +164,7 @@ class CrossTxnConflict(RuntimeError):
 
 
 class BaseVersionConflict(RuntimeError):
-    """Raised by the BASE-VERSION compare-and-swap (``version_expect``):
+    """Raised by the BASE-VERSION compare-and-swap on a write's base snapshot:
     the table's latest version moved while this writer derived its
     manifest content (the ``kept`` file list / column map), so
     publishing would silently drop the concurrent commit's files from
@@ -375,6 +376,57 @@ def logical_fields(doc: dict):
             StructField(phys_to_log.get(f.name, f.name), f.dataType, True)
         )
     return out
+
+
+def _widened_schema_json(stored: str | None, staged: str) -> str:
+    """``stored`` widened by ``staged`` (both StructType JSON): stored
+    order first, each field taking the staged type when the staged
+    schema carries it, then the staged-only fields. Widen-only: a batch
+    narrower than the table (legal for appends and bucket-sliced
+    merges) must not shrink the column set — neither the manifest's,
+    which reads would then lose the missing columns with, nor the
+    meta's, which constraint checks complete a narrow batch with
+    (code-review r7)."""
+    from pyspark.sql.types import StructType
+
+    if not stored:
+        return staged
+    new = StructType.fromJson(json.loads(staged))
+    by_name = {f.name: f for f in new.fields}
+    old = StructType.fromJson(json.loads(stored)).fields
+    have = {f.name for f in old}
+    return StructType(
+        [by_name.get(f.name, f) for f in old]
+        + [f for f in new.fields if f.name not in have]
+    ).json()
+
+
+@dataclass(frozen=True)
+class _Snapshot:
+    """One verb attempt's view of a table: its meta and, when a
+    manifest describes the table, the base version and that manifest.
+    Read once (``TableStore._snapshot`` / ``_pin_base``) and handed to
+    every helper, so two helpers cannot see two states of the table
+    when the meta changes in the middle of a verb. It is never the
+    safety check: the publish re-reads the base manifest on disk and
+    compares it (``_write_manifest_file``), so a stale snapshot
+    surfaces as BaseVersionConflict and the retry takes a new one.
+    ``version`` is None when no manifest was found."""
+
+    name: str
+    meta: dict
+    version: int | None = None
+    doc: dict | None = None
+
+    # derived views: the manifest's uid, files, schema JSON and column
+    # map; the meta's key spec, key types and versioned flag
+    uid = property(lambda self: (self.doc or {}).get("uid"))
+    files = property(lambda self: self.doc["files"])
+    schema_json = property(lambda self: (self.doc or {}).get("schema"))
+    colmap = property(lambda self: (self.doc or {}).get("colmap"))
+    spec = property(lambda self: TableStore._keyed_spec_of(self.meta))
+    key_types = property(lambda self: self.meta.get("key_types"))
+    versioned = property(lambda self: bool(self.meta.get("versioned")))
 
 
 def _acquire_claim(path: str, stale_s: float) -> str | None:
@@ -712,8 +764,13 @@ class TableStore:
         return out
 
     def _touch_meta(self, name: str, **extra) -> None:
+        """Set ``extra``'s keys and the modification time in the meta,
+        under its claim. A callable value maps the key's value in the
+        meta read under the claim to its new one."""
+
         def touch(meta):
-            meta.update(extra)
+            for k, v in extra.items():
+                meta[k] = v(meta.get(k)) if callable(v) else v
             meta["last_modified_millis"] = int(time.time() * 1000)
 
         self._update_meta(name, touch)
@@ -778,26 +835,6 @@ class TableStore:
         the new one). None for tables predating the marker or never
         keyed-written."""
         return read_meta(self.root, name).get("incarnation")
-
-    def _widened_schema_json(self, name: str, schema) -> str:
-        """The stored meta schema widened by ``schema``'s new fields
-        (stored order first). Refreshes after evolving writes must only
-        ever WIDEN: a batch narrower than the table (legal for appends
-        and bucket-sliced merges) must not shrink the column set
-        constraint checks complete a narrow batch with (code-review
-        r7)."""
-        from pyspark.sql.types import StructType
-
-        s = read_meta(self.root, name).get("schema")
-        if not s:
-            return schema.json()
-        stored = StructType.fromJson(json.loads(s))
-        have = {f.name for f in stored.fields}
-        merged = StructType(
-            list(stored.fields)
-            + [f for f in schema.fields if f.name not in have]
-        )
-        return merged.json()
 
     def _retire_bloom_indexes(self, name: str) -> None:
         """Drop every bloom sidecar (and maintenance-claim files /
@@ -865,17 +902,16 @@ class TableStore:
         shutil.rmtree(self._manifest_dir(name), ignore_errors=True)
         self._retire_bloom_indexes(name)
 
-    def _kb_expr(
-        self, name: str, keys: list[str], n_buckets: int, types: list[str] | None = None
-    ):
+    @staticmethod
+    def _kb_expr(keys: list[str], n_buckets: int, types: list[str] | None):
         # xxhash64 of the key tuple -> stable bucket; NULL keys hash to
         # the seed value, so they land in one deterministic bucket.
         # Keys are CAST to the STORED key types first: xxhash64 is
         # type-sensitive (int 3 and long 3 hash differently), so an
         # uncast incoming batch would route rows to the wrong bucket
         # (code-review r5: reproduced duplicate keys, and in the CDC
-        # path a bucket wipe).
-        types = types or read_meta(self.root, name).get("key_types")
+        # path a bucket wipe). Tables predating recorded key types
+        # hash uncast.
         cols = [
             F.col(k).cast(t) if types else F.col(k)
             for k, t in zip(keys, types or keys)
@@ -1009,8 +1045,7 @@ class TableStore:
         seed_stats: dict | None = None,
         txn_expect: int | None = None,
         colmap: dict | None = _CARRY,
-        version_expect: int | None = None,
-        version_expect_ident: str | None = None,
+        base: _Snapshot | None = None,
         txn_assert: dict[str, int] | None = None,
     ) -> int:
         """Commit the next manifest version PUT-IF-ABSENT: the document
@@ -1057,7 +1092,12 @@ class TableStore:
         pins one feed's state while committing under another's app id
         (ADVICE r10 medium). Raises CrossTxnConflict (NOT a
         TxnAlreadyApplied subclass — the write must be re-derived, not
-        skipped) when any asserted watermark moved."""
+        skipped) when any asserted watermark moved.
+
+        ``base``: the snapshot this publish's content was derived from.
+        The publish compare-and-swaps on it against the manifest ON
+        DISK, never against the snapshot itself, and raises
+        BaseVersionConflict when the table moved."""
         import uuid
 
         os.makedirs(self._manifest_dir(name), exist_ok=True)
@@ -1068,8 +1108,14 @@ class TableStore:
         doc: dict = {"files": sorted(files), "uid": uuid.uuid4().hex}
         # per-file [min,max] column stats ride every manifest (data
         # skipping, read_where): carried forward for already-covered
-        # files (immutable), footer-read once for new ones
-        doc["stats"] = self._collect_stats(name, doc["files"], seed=seed_stats)
+        # files (immutable), footer-read only for new ones
+        prev_stats = dict(seed_stats or {})
+        if base is not None:
+            prev_stats.update(base.doc.get("stats", {}))
+        else:
+            _v, latest = self._latest_doc(name)
+            prev_stats.update((latest or {}).get("stats", {}))
+        doc["stats"] = self._collect_stats(name, doc["files"], prev_stats)
         if schema_json is not None:
             doc["schema"] = schema_json
         if op is not None:
@@ -1080,17 +1126,27 @@ class TableStore:
         try:
             for _ in range(1000):
                 vs = self.versions(name)
-                if version_expect is not None:
+                if base is not None and max(vs, default=0) != base.version:
                     # compare-and-swap on the BASE VERSION: this
                     # publish's content (file list, colmap) was derived
-                    # from version_expect — a concurrent commit means
+                    # from the base — a concurrent commit means
                     # publishing would silently drop its files/map
                     # (code-review r9 wave 2). Caller re-derives.
-                    if max(vs, default=0) != int(version_expect):
-                        raise BaseVersionConflict(
-                            f"{name}: base version moved past "
-                            f"{version_expect} — re-derive and retry"
-                        )
+                    raise BaseVersionConflict(
+                        f"{name}: base version moved past "
+                        f"{base.version} — re-derive and retry"
+                    )
+                v = (max(vs, default=0)) + 1
+                txn_map: dict = dict(seed_txn or {})
+                prev_doc: dict = {}
+                if vs:
+                    try:
+                        prev_doc = self._manifest_doc(name, max(vs))
+                    except FileNotFoundError:
+                        prev_doc = {}
+                if base is not None and base.uid is not None and (
+                    prev_doc.get("uid") != base.uid
+                ):
                     # ...and on the version's IDENTITY (code-review r10
                     # wave 3): a reseed (overwrite_keyed/_retire_
                     # versioned) wipes the manifest history and
@@ -1101,31 +1157,16 @@ class TableStore:
                     # with its own. The manifest's uid (minted per
                     # publish) names the exact object the derivation
                     # read — version numbers repeat across reseeds and
-                    # inodes are recycled, so neither suffices.
-                    if version_expect_ident is not None:
-                        try:
-                            cur_uid = self._manifest_doc(
-                                name, int(version_expect)
-                            ).get("uid")
-                        except FileNotFoundError:
-                            cur_uid = None  # mid-reseed wipe window
-                        if cur_uid != version_expect_ident:
-                            raise BaseVersionConflict(
-                                f"{name}: version {version_expect}'s "
-                                "manifest is not the object this write "
-                                "was derived from (table reseeded "
-                                "mid-write) — re-derive and retry"
-                            )
-                v = (max(vs, default=0)) + 1
-                txn_map: dict = dict(seed_txn or {})
-                prev_doc: dict = {}
-                if vs:
-                    try:
-                        prev_doc = self._manifest_doc(name, max(vs))
-                    except FileNotFoundError:
-                        prev_doc = {}
-                    for a, t in prev_doc.get("txn", {}).items():
-                        txn_map[a] = max(int(t), int(txn_map.get(a, -1)))
+                    # inodes are recycled, so neither suffices. Pre-r10
+                    # manifests carry no uid: the number check alone.
+                    raise BaseVersionConflict(
+                        f"{name}: version {base.version}'s "
+                        "manifest is not the object this write "
+                        "was derived from (table reseeded "
+                        "mid-write) — re-derive and retry"
+                    )
+                for a, t in prev_doc.get("txn", {}).items():
+                    txn_map[a] = max(int(t), int(txn_map.get(a, -1)))
                 # column mapping rides every manifest like the txn map:
                 # carried forward verbatim unless this publish is a
                 # rename/drop (which passes an explicit replacement)
@@ -1208,8 +1249,7 @@ class TableStore:
         seed_stats: dict | None = None,
         txn_expect: int | None = None,
         colmap: dict | None = _CARRY,
-        version_expect: int | None = None,
-        version_expect_ident: str | None = None,
+        base: _Snapshot | None = None,
         txn_assert: dict[str, int] | None = None,
     ) -> int:
         v = self._write_manifest_file(
@@ -1222,20 +1262,16 @@ class TableStore:
             seed_stats=seed_stats,
             txn_expect=txn_expect,
             colmap=colmap,
-            version_expect=version_expect,
-            version_expect_ident=version_expect_ident,
+            base=base,
             txn_assert=txn_assert,
         )
         # the meta schema tracks evolution (widen-only), so constraint
-        # checks see the CURRENT column set (code-review r7); the
-        # manifest keeps the snapshot-exact one
+        # checks see the CURRENT column set (code-review r7); widened
+        # from the meta read under the claim, so two publishes widening
+        # different columns keep both
         extra = {}
         if schema_json is not None:
-            from pyspark.sql.types import StructType
-
-            extra["schema"] = self._widened_schema_json(
-                name, StructType.fromJson(json.loads(schema_json))
-            )
+            extra["schema"] = lambda cur: _widened_schema_json(cur, schema_json)
         self._touch_meta(name, version=v, **extra)
         return v
 
@@ -1350,25 +1386,16 @@ class TableStore:
                 out[cname] = [None, None, nc, n_rows]
         return out
 
-    def _collect_stats(
-        self, name: str, files: list[str], seed: dict | None = None
-    ) -> dict:
+    def _collect_stats(self, name: str, files: list[str], prev: dict) -> dict:
         """Stats map {rel_file: {col: [min, max]}} for a manifest about
-        to publish: carried FORWARD from the latest manifest (and the
-        optional ``seed`` map — restore passes its target version's
-        stats so rolling back stays metadata-only, code-review r8
+        to publish: carried FORWARD from ``prev`` (the base manifest's
+        map, plus the seed a restore passes — its target version's
+        stats, so rolling back stays metadata-only, code-review r8
         wave 2) for files already covered (part-files are immutable,
         so stats never go stale), footer-read only for genuinely new
         files — at 100 TB the per-publish cost is the churned buckets'
         new files, each a single footer read by the writer that just
         produced it."""
-        prev: dict = dict(seed or {})
-        v = self.latest_version(name)
-        if v is not None:
-            try:
-                prev.update(self._manifest_doc(name, v).get("stats", {}))
-            except FileNotFoundError:
-                pass
         return {
             f: (prev[f] if f in prev else self._file_stats(name, f))
             for f in files
@@ -3332,16 +3359,17 @@ class TableStore:
 
     _CONFLICT_RETRIES = 10
 
-    def _retry_base_conflicts(self, name: str, attempt):
-        """Optimistic-concurrency loop for the bucket-rewriting verbs
-        (ADVICE r9 medium): each attempt pins the version current at
-        its start (``_pin_base``), derives its rewrite from it —
-        ``attempt(version, uid)`` — and publishes with a CAS on that
-        version (``version_expect``); a concurrent commit fails the CAS
-        with BaseVersionConflict and the WHOLE derivation re-runs
-        against the new current version — closing the window where a
-        'kept' list derived from a stale base silently dropped a racing
-        writer's just-published files.
+    def _retry_base_conflicts(self, snap: _Snapshot, attempt):
+        """Optimistic-concurrency loop for the keyed write verbs
+        (ADVICE r9 medium), the package's one: each attempt derives
+        its rewrite from one snapshot — ``attempt(base)`` — and
+        publishes with a CAS on the base version and its uid; a
+        concurrent commit fails the CAS with BaseVersionConflict and
+        the WHOLE derivation re-runs against a new snapshot
+        (``_pin_base``) — closing the window where a 'kept' list
+        derived from a stale base silently dropped a racing writer's
+        just-published files. The first attempt uses ``snap``, the pin
+        the verb already took to validate its arguments.
 
         A commit on an unversioned table removes the manifest and the
         files it superseded (``_remove_superseded``), so a racing
@@ -3357,23 +3385,30 @@ class TableStore:
 
         last: BaseVersionConflict | None = None
         for i in range(self._CONFLICT_RETRIES):
-            pin = self._pin_base(name)
+            if i:
+                snap = self._pin_base(snap.name)
             try:
-                return attempt(*pin)
+                return attempt(snap)
             except BaseVersionConflict as e:
                 last = e
             except (TxnAlreadyApplied, CrossTxnConflict):
                 raise
             except Exception as e:
+                if snap.version is None:
+                    raise  # no manifest describes the table: no conflict
                 try:
-                    gone = self._manifest_doc(name, pin[0]).get("uid") != pin[1]
+                    gone = (
+                        self._manifest_doc(snap.name, snap.version).get("uid")
+                        != snap.uid
+                    )
                 except FileNotFoundError:
                     gone = True
                 if not gone:
                     raise
                 last = BaseVersionConflict(
-                    f"{name}: files of base version {pin[0]} were removed "
-                    "by a concurrent commit — re-derive and retry"
+                    f"{snap.name}: files of base version {snap.version} "
+                    "were removed by a concurrent commit — re-derive and "
+                    "retry"
                 )
                 last.__cause__ = e
             # jittered backoff (code-review r10 wave 3): two
@@ -3399,45 +3434,65 @@ class TableStore:
             except FileNotFoundError:
                 continue
 
-    def _pin_base(self, name: str) -> tuple[int, str | None]:
-        """(current version, manifest uid) — the pin every OCC attempt
-        derives from and CASes its publish on. The uid detects a
-        reseed restarting version numbering (the number alone cannot,
-        and inode identity is unreliable — inodes recycle; code-review
-        r10 wave 3). None for pre-r10 manifests (no uid recorded):
-        the CAS then degrades to the version-number check alone."""
+    def _snapshot(self, name: str) -> _Snapshot:
+        """The table as one read verb sees it: the meta and, when a
+        manifest describes the table, the latest published version and
+        its manifest — one read of each. Version None when the manifest
+        history is missing (reads then serve the committed directory;
+        a write pins with ``_pin_base``, which heals it)."""
+        meta = read_meta(self.root, name)
+        if not self._manifest_backed(meta):
+            return _Snapshot(name, meta)
+        return _Snapshot(name, meta, *self._latest_doc(name))
+
+    def _pin_base(self, name: str) -> _Snapshot:
+        """The snapshot a write verb validates its arguments with and an
+        OCC attempt derives from and CASes its publish on: the meta
+        and, for a keyed or versioned table, the current version
+        (``_ensure_latest``, which heals a missing manifest history)
+        with its manifest. The base uid detects a reseed restarting
+        version numbering (the number alone cannot, and inode identity
+        is unreliable — inodes recycle; code-review r10 wave 3);
+        pre-r10 manifests carry none, and the CAS then degrades to the
+        version-number check alone."""
         while True:
+            meta = read_meta(self.root, name)
+            if not self._manifest_backed(meta):
+                return _Snapshot(name, meta)
             v = self._ensure_latest(name)
             try:
-                return v, self._manifest_doc(name, v).get("uid")
+                return _Snapshot(name, meta, v, self._manifest_doc(name, v))
             except FileNotFoundError:
                 continue  # an unversioned commit removed v meanwhile
 
     def _append_and_publish(
         self,
         stamped: DataFrame,
-        name: str,
-        buckets: list[int] | None,
-        kept: list[str],
+        base: _Snapshot,
+        kept: list[str] | None,
         txn: tuple[str, int] | None = None,
         op: str | None = None,
         check_replay: bool = False,
         txn_expect: int | None = None,
-        version_expect: int | None = None,
-        version_expect_ident: str | None = None,
-        rederive_kept=None,
         txn_assert: dict[str, int] | None = None,
         pre_clustered: bool = False,
     ) -> int:
         """The one commit protocol of keyed tables: append ``stamped``
         (already _kb-stamped) as NEW part-files — never deleting live
         ones — then publish a manifest of ``kept`` (the re-referenced
-        prior files) + exactly the files THIS writer created.
-        ``check_replay`` makes the publish raise TxnAlreadyApplied when
-        ``txn`` is already covered at commit time (the appended files
-        then stay invisible orphans until vacuum). After the publish a
-        versioned table runs its write-path maintenance; an unversioned
-        one removes what the publish superseded (``_remove_superseded``).
+        files of the ``base`` snapshot) + exactly the files THIS
+        writer created, with a CAS on ``base``; a conflict reaches the
+        caller's derivation-level retry. ``kept=None`` (appends, whose
+        staged files are base-independent) keeps every file of the
+        base, and a conflict retries JUST the publish on a new base
+        (``_retry_base_conflicts``). The manifest schema is the base
+        manifest's widened by ``stamped``'s, so a batch narrower than
+        the table hides no column from later reads. ``check_replay``
+        makes the publish raise TxnAlreadyApplied when ``txn`` is
+        already covered at commit time (the appended files then stay
+        invisible orphans until vacuum). After the publish a versioned
+        table runs its write-path maintenance; an unversioned one
+        removes what the publish superseded (``_remove_superseded``).
 
         Attribution is by writer, not by directory diff (ADVICE r8):
         the write job lands in a writer-private staging dir, and each
@@ -3447,15 +3502,13 @@ class TableStore:
         before/after listing diff could publish a racing loser's rows
         as the winner's). Private staging also gives each job its own
         ``_temporary`` dir, closing the local FileOutputCommitter
-        corruption two same-path append jobs otherwise race on.
-        ``buckets`` documents the touched slice for callers; all
-        staged files are attributed regardless."""
+        corruption two same-path append jobs otherwise race on."""
         import uuid
 
+        name = base.name
         token = uuid.uuid4().hex[:12]
         stage = os.path.join(self.root, f".stage-{name}-{token}")
-        spec = self.keyed_spec(name)
-        if spec is not None and not pre_clustered:
+        if base.spec is not None and not pre_clustered:
             # one part-file per bucket per write (see _cluster_kb) —
             # centralizing here covers every versioned write verb
             # (upsert/delete/update/merge/append staging); compact
@@ -3465,63 +3518,53 @@ class TableStore:
             stamped = self._cluster_kb(stamped)
         try:
             stamped.write.mode("append").partitionBy("_kb").parquet(stage)
-            base = self._dir(name)
+            table_dir = self._dir(name)
             new_files: list[str] = []
             for d in sorted(os.listdir(stage)):
                 if not d.startswith("_kb="):
                     continue
-                os.makedirs(os.path.join(base, d), exist_ok=True)
+                os.makedirs(os.path.join(table_dir, d), exist_ok=True)
                 for f in sorted(os.listdir(os.path.join(stage, d))):
                     if not f.endswith(".parquet"):
                         continue
                     dst = f"{token}-{f}"
                     _fs.replace(
                         os.path.join(stage, d, f),
-                        os.path.join(base, d, dst),
+                        os.path.join(table_dir, d, dst),
                     )
                     new_files.append(f"{d}/{dst}")
         finally:
             shutil.rmtree(stage, ignore_errors=True)
-        # ``version_expect`` CAS-guards the publish against a
-        # concurrent commit invalidating ``kept`` (ADVICE r9).
-        # ``rederive_kept`` (append-style writes, whose new files are
-        # base-independent) re-derives (kept, version_expect) against
-        # the new current version and retries JUST the publish; verbs
-        # whose staged CONTENT depends on the base leave it None and
-        # let BaseVersionConflict reach their derivation-level retry.
-        v: int | None = None
-        for i in range(self._CONFLICT_RETRIES):
-            live = list(kept) + sorted(new_files)
-            try:
-                v = self._publish_version(
-                    name,
-                    live,
-                    schema_json=stamped.schema.json(),
-                    txn=txn,
-                    op=op,
-                    check_replay=check_replay,
-                    txn_expect=txn_expect,
-                    version_expect=version_expect,
-                    version_expect_ident=version_expect_ident,
-                    txn_assert=txn_assert,
-                )
-                break
-            except BaseVersionConflict:
-                if rederive_kept is None or i == self._CONFLICT_RETRIES - 1:
-                    raise
-                kept, version_expect, version_expect_ident = rederive_kept()
-        if self.is_versioned(name):
-            self._maybe_auto_compact(name, op)
-            self._maybe_auto_bloom(name, op)
-        elif version_expect is not None:
-            self._remove_superseded(
-                name, version_expect, version_expect_ident, live
-            )
-        return v
+        staged_schema = stamped.schema.json()
 
-    def _remove_superseded(
-        self, name: str, base_v: int, base_ident: str | None, live: list[str]
-    ) -> None:
+        def publish(base: _Snapshot) -> int:
+            live = (base.files if kept is None else list(kept)) + sorted(
+                new_files
+            )
+            schema_json = _widened_schema_json(base.schema_json, staged_schema)
+            v = self._publish_version(
+                name,
+                live,
+                schema_json=schema_json,
+                txn=txn,
+                op=op,
+                check_replay=check_replay,
+                txn_expect=txn_expect,
+                base=base,
+                txn_assert=txn_assert,
+            )
+            if base.versioned:
+                self._maybe_auto_compact(base, op)
+                self._maybe_auto_bloom(base, op, schema_json)
+            else:
+                self._remove_superseded(base, live)
+            return v
+
+        if kept is None:
+            return self._retry_base_conflicts(base, publish)
+        return publish(base)
+
+    def _remove_superseded(self, base: _Snapshot, live: list[str]) -> None:
         """After an unversioned publish: remove the base manifest, then
         exactly the files it named that the new manifest ``live`` does
         not (with their checksum sidecars), then the bucket directories
@@ -3529,20 +3572,23 @@ class TableStore:
         concurrent writer's staged, not yet published files. The
         manifest goes first, so an attempt that fails on a removed file
         finds its pinned base gone and retries
-        (``_retry_base_conflicts``). Best effort: the commit is already
-        published, so a crash or an error here leaves orphans for
-        ``vacuum``, never an error."""
+        (``_retry_base_conflicts``). The base manifest on disk is read
+        once more and must still be the snapshot's (same uid) before
+        anything goes. Best effort: the commit is already published, so
+        a crash or an error here leaves orphans for ``vacuum``, never
+        an error."""
+        name = base.name
         try:
-            doc = self._manifest_doc(name, base_v)
-            if doc.get("uid") != base_ident:
+            doc = self._manifest_doc(name, base.version)
+            if doc.get("uid") != base.uid:
                 return  # not the base this write derived from (reseeded)
-            _fs.remove(self._manifest_path(name, base_v))
+            _fs.remove(self._manifest_path(name, base.version))
         except (OSError, ValueError):
             return  # already removed (vacuum): its files are vacuum's
-        base = self._dir(name)
+        table_dir = self._dir(name)
         gone = sorted(set(doc["files"]) - set(live))
         for rel in gone:
-            d, f = os.path.split(os.path.join(base, rel))
+            d, f = os.path.split(os.path.join(table_dir, rel))
             for p in (os.path.join(d, f), os.path.join(d, f".{f}.crc")):
                 try:
                     _fs.remove(p)
@@ -3550,7 +3596,7 @@ class TableStore:
                     pass
         for d in sorted({rel.split("/", 1)[0] for rel in gone}):
             try:
-                _fs.remove_empty_dir(os.path.join(base, d))
+                _fs.remove_empty_dir(os.path.join(table_dir, d))
             except OSError:
                 pass  # still holds live or staged files
 
@@ -3589,7 +3635,7 @@ class TableStore:
     def table_property(self, name: str, key: str):
         return read_meta(self.root, name).get(key)
 
-    def _maybe_auto_compact(self, name: str, op: str | None) -> None:
+    def _maybe_auto_compact(self, base: _Snapshot, op: str | None) -> None:
         """Write-path auto-compaction: runs after an INCREMENTAL write
         published (never after compaction itself — that would recurse —
         and never on unversioned tables). The decision reads only the
@@ -3600,11 +3646,11 @@ class TableStore:
         durable whatever happens here."""
         if op in (None, "compact"):
             return
-        n = self.table_property(name, "auto_compact_files_per_bucket")
+        n = base.meta.get("auto_compact_files_per_bucket")
         if n is None:
             return
         try:
-            self.compact(name, max_files_per_bucket=int(n))
+            self.compact(base.name, max_files_per_bucket=int(n))
         except Exception as e:  # noqa: BLE001 — best-effort maintenance
             # the triggering write's manifest is already durably
             # published; failing the caller here would make a
@@ -3615,13 +3661,15 @@ class TableStore:
             import warnings
 
             warnings.warn(
-                f"{name}: auto-compaction after {op} failed and was "
+                f"{base.name}: auto-compaction after {op} failed and was "
                 f"skipped (the write itself is committed): {e}",
                 RuntimeWarning,
                 stacklevel=2,
             )
 
-    def _maybe_auto_bloom(self, name: str, op: str | None) -> None:
+    def _maybe_auto_bloom(
+        self, base: _Snapshot, op: str | None, schema_json: str
+    ) -> None:
         """Write-path bloom index maintenance (the bloom_index_cols
         table property): after an incremental versioned write — or an
         auto-/explicit compaction, whose rewritten files are just as
@@ -3633,14 +3681,16 @@ class TableStore:
         index BUILT here at default sizing (r13: the property is fully
         declarative — list the column, the write path takes care of
         the rest; size-sensitive deployments still call
-        build_bloom_index explicitly for custom m_bits/k)."""
+        build_bloom_index explicitly for custom m_bits/k), its element
+        mode inferred from ``schema_json``, the schema just published."""
         if op is None:
             return
-        cols = self.table_property(name, "bloom_index_cols")
+        cols = base.meta.get("bloom_index_cols")
         if not cols:
             return
         import warnings
 
+        name = base.name
         for col in cols:
             try:
                 try:
@@ -3651,13 +3701,10 @@ class TableStore:
                     # declarative first build: element mode is
                     # inferred from the live column type (array →
                     # element index serving Has probes)
-                    v = self.latest_version(name)
-                    live = None
-                    if v is not None:
-                        vdoc = self._manifest_doc(name, v)
-                        live = self._live_dtype(
-                            vdoc, self._bloom_resolve(name, col, vdoc)
-                        )
+                    live = self._live_dtype(
+                        {"schema": schema_json},
+                        self._bloom_resolve(name, col, base.doc),
+                    )
                     self.build_bloom_index(
                         name, col,
                         elements=bool(live and live.startswith("array<")),
@@ -3705,25 +3752,24 @@ class TableStore:
         exclusive with ``sort_cols``."""
         if sort_cols and zorder_cols:
             raise ValueError("pass sort_cols or zorder_cols, not both")
-        if not self.is_versioned(name):
+        snap = self._pin_base(name)
+        if not snap.versioned:
             raise ValueError(f"{name}: compact() is for versioned keyed tables")
         # derivation-level OCC retry (ADVICE r9): the rewritten slice
         # is derived from the version current at attempt start; a
         # concurrent commit fails the publish CAS and the compaction
         # re-plans against the new file set
         return self._retry_base_conflicts(
-            name,
-            lambda base_v, base_ident: self._compact_once(
-                name, base_v, base_ident, max_files_per_bucket, sort_cols,
-                zorder_cols, zorder_bits,
+            snap,
+            lambda base: self._compact_once(
+                base, max_files_per_bucket, sort_cols, zorder_cols,
+                zorder_bits,
             ),
         )
 
     def _compact_once(
         self,
-        name: str,
-        base_v: int,
-        base_ident: str | None,
+        base: _Snapshot,
         max_files_per_bucket: int,
         sort_cols: list[str] | None,
         zorder_cols: list[str] | None,
@@ -3731,36 +3777,24 @@ class TableStore:
     ) -> int:
         # the rewrite is purely physical; clustering column args are
         # logical — translate through the snapshot's map
-        _ren = (self._colmap_doc(name, base_v) or {}).get("renames", {})
+        _ren = (base.colmap or {}).get("renames", {})
         sort_cols = [_ren.get(c, c) for c in sort_cols] if sort_cols else sort_cols
         zorder_cols = (
             [_ren.get(c, c) for c in zorder_cols] if zorder_cols else zorder_cols
         )
-        files = self._manifest_files(name, base_v)
         by_bucket: dict[int, list[str]] = {}
-        for f in files:
+        for f in base.files:
             by_bucket.setdefault(self._bucket_of(f), []).append(f)
         fat = sorted(
             b for b, fs in by_bucket.items() if len(fs) > max_files_per_bucket
         )
         if not fat:
-            return base_v
-        base = self._dir(name)
-        _doc_schema = self._manifest_doc(name, base_v).get("schema")
-        if _doc_schema is not None:
-            # recorded snapshot schema — no mergeSchema footer job (r14)
-            from pyspark.sql.types import StructType
-
-            _rdr = self.spark.read.schema(
-                StructType.fromJson(json.loads(_doc_schema))
-            )
-        else:
-            _rdr = self.spark.read.option("mergeSchema", "true")
-        slice_ = (
-            _rdr.option("basePath", base)
-            .parquet(
-                *[os.path.join(base, f) for b in fat for f in by_bucket[b]]
-            )
+            return base.version
+        # under the recorded snapshot schema — no mergeSchema footer
+        # job (r14)
+        slice_ = self._read_manifest_df(
+            base.name, base.version,
+            doc={**base.doc, "files": [f for b in fat for f in by_bucket[b]]},
         )
         fat_set = set(fat)
         kept = [f for b, fs in by_bucket.items() if b not in fat_set for f in fs]
@@ -3785,8 +3819,7 @@ class TableStore:
                 .drop("_z")
             )
         return self._append_and_publish(
-            out, name, fat, kept, op="compact", version_expect=base_v,
-            version_expect_ident=base_ident, pre_clustered=True,
+            out, base, kept, op="compact", pre_clustered=True
         )
 
     def _dependent_watermark_floor(self, name: str) -> int | None:
@@ -4324,14 +4357,6 @@ class TableStore:
             )
         return best
 
-    def restore_to_ts(self, name: str, ts) -> int:
-        """RESTORE TABLE ... TO TIMESTAMP parity: roll the table back
-        to the version current at ``ts`` (see version_as_of) by
-        publishing a new version referencing exactly its files —
-        metadata-only, revertible, watermark-preserving, same as
-        restore()."""
-        return self.restore(name, self.version_as_of(name, ts))
-
     def restore(self, name: str, version: int) -> int:
         """RESTORE TABLE ... TO VERSION parity: make snapshot
         ``version`` the CURRENT table again by publishing a NEW version
@@ -4436,7 +4461,7 @@ class TableStore:
                 .drop("_kb")
             )
 
-        cm_end = self._colmap_doc(name, to_version)
+        cm_end = self._manifest_doc(name, to_version).get("colmap")
         old = self._to_logical(_read(old_files - new_files, from_version), cm_end)
         new = self._to_logical(_read(new_files - old_files, to_version), cm_end)
         # widen both sides to the union of columns (schema evolution:
@@ -4523,17 +4548,6 @@ class TableStore:
     # this with field ids, we avoid it loudly). A reseed
     # overwrite_keyed or rebucket bakes the logical schema in and
     # resets the map (full rewrites by definition).
-    def _colmap_doc(self, name: str, version: int | None = None) -> dict | None:
-        if not self.is_versioned(name):
-            return None
-        v = self.latest_version(name) if version is None else version
-        if v is None:
-            return None
-        try:
-            return self._manifest_doc(name, v).get("colmap")
-        except FileNotFoundError:
-            return None
-
     @staticmethod
     def _to_logical(df: DataFrame, colmap: dict | None) -> DataFrame:
         """Physical frame → the logical view ``colmap`` describes."""
@@ -4583,21 +4597,19 @@ class TableStore:
             *[F.col(c).alias(renames.get(c, c)) for c in df.columns]
         )
 
-    def _logical_columns(self, name: str, version: int) -> list[str]:
-        """Current logical column set (plan-only: manifest schema or
-        footers, no data read)."""
-        doc = self._manifest_doc(name, version)
-        schema_json = doc.get("schema")
-        if schema_json is not None:
+    def _logical_columns(self, snap: _Snapshot) -> list[str]:
+        """The snapshot's logical column set (plan-only: manifest schema
+        or footers, no data read)."""
+        if snap.schema_json is not None:
             from pyspark.sql.types import StructType
 
-            phys = [
-                f.name
-                for f in StructType.fromJson(json.loads(schema_json)).fields
-            ]
+            schema = StructType.fromJson(json.loads(snap.schema_json))
+            phys = [f.name for f in schema.fields]
         else:
-            phys = self._read_manifest_df(name, version).columns
-        cm = doc.get("colmap") or {}
+            phys = self._read_manifest_df(
+                snap.name, snap.version, doc=snap.doc
+            ).columns
+        cm = snap.colmap or {}
         phys_to_log = {p: l for l, p in cm.get("renames", {}).items()}
         dropped = set(cm.get("dropped", []))
         return [
@@ -4610,24 +4622,22 @@ class TableStore:
         {"_kb", "_change_type", "_t_present", "_s_present"}
     )
 
-    def _colmap_op_guard(self, name: str, col: str) -> tuple[int, dict]:
-        if not self.is_versioned(name) or self.keyed_spec(name) is None:
+    def _colmap_op_guard(self, snap: _Snapshot, col: str) -> None:
+        name = snap.name
+        if not snap.versioned or snap.spec is None:
             raise ValueError(
                 f"{name}: rename/drop_column need a versioned keyed "
                 "table (the map lives in the snapshot manifests)"
             )
-        keys, _ = self.keyed_spec(name)
-        if col in keys:
+        if col in snap.spec[0]:
             raise ValueError(
                 f"{name}: {col!r} is a merge-key column — keys route "
                 "buckets and cannot be renamed or dropped; model a key "
                 "change as a full rewrite (overwrite_keyed)"
             )
-        self._refuse_constrained_column(name, col)
-        v = self._ensure_latest(name)
-        return v, dict(self._manifest_doc(name, v).get("colmap") or {})
+        self._refuse_constrained_column(snap, col)
 
-    def _refuse_constrained_column(self, name: str, col: str) -> None:
+    def _refuse_constrained_column(self, snap: _Snapshot, col: str) -> None:
         """A declared CHECK constraint referencing the column would
         wedge every future write after a rename/drop (the enforcement
         probe widens the vanished name to NULL, and strict-NULL
@@ -4636,54 +4646,48 @@ class TableStore:
         must still resolve against the logical schema WITHOUT the
         column, else the op is refused until the constraint is
         remapped or dropped."""
-        cons = self.constraints(name)
+        cons = snap.meta.get("constraints", {})
         if not cons:
             return
-        v = self._ensure_latest(name)
-        others = [c for c in self._logical_columns(name, v) if c != col]
-        probe = self.read(name, version=v).select(*others).limit(0)
+        others = [c for c in self._logical_columns(snap) if c != col]
+        probe = self._scan_files(
+            snap.name, snap.version, snap.doc, snap.files
+        ).select(*others).limit(0)
         for cname, expr in cons.items():
             try:
                 probe.select(F.expr(expr)).schema  # resolve, no job
             except Exception:
                 raise ValueError(
-                    f"{name}: CHECK constraint {cname!r} ({expr!r}) "
+                    f"{snap.name}: CHECK constraint {cname!r} ({expr!r}) "
                     f"references column {col!r} — drop or remap the "
                     "constraint before renaming/dropping the column"
                 ) from None
 
-    def _publish_colmap(self, name: str, op: str, mutate) -> int:
-        """Shared publish loop for the metadata-only mapping verbs:
-        derives (files, schema, stats, colmap) from the CURRENT
-        version and commits with a version CAS, retrying from the new
-        latest if a concurrent write landed first — without the CAS, a
-        racing upsert's files would silently vanish from the published
-        manifest, and two concurrent mapping ops would clobber each
-        other's map (code-review r9 wave 2). Carrying the snapshot's
-        schema and stats keeps it metadata-only AND keeps empty-table
-        readability and read_where's schema-widen guard working at the
-        new version (same wave)."""
-        for _ in range(16):
-            v, cm = mutate.guard()
-            colmap = mutate.build(v, cm)
-            doc = self._manifest_doc(name, v)
-            ident = doc.get("uid")
-            try:
-                return self._publish_version(
-                    name,
-                    doc["files"],
-                    schema_json=doc.get("schema"),
-                    seed_stats=doc.get("stats"),
-                    op=op,
-                    colmap=colmap,
-                    version_expect=v,
-                    version_expect_ident=ident,
-                )
-            except BaseVersionConflict:
-                continue  # concurrent commit: re-derive from new latest
-        raise BaseVersionConflict(
-            f"{name}: {op} lost the publish race 16 times — retry"
-        )
+    def _publish_colmap(self, name: str, op: str, col: str, build) -> int:
+        """Publish loop for the metadata-only mapping verbs, through
+        the one OCC loop (``_retry_base_conflicts``): each attempt
+        checks ``col`` against its snapshot, derives (files, schema,
+        stats) from it and ``build(base)``'s new colmap, and commits
+        with the base CAS — without the CAS, a racing upsert's files
+        would silently vanish from the published manifest, and two
+        concurrent mapping ops would clobber each other's map
+        (code-review r9 wave 2). Carrying the snapshot's schema and
+        stats keeps it metadata-only AND keeps empty-table readability
+        and read_where's schema-widen guard working at the new version
+        (same wave)."""
+
+        def attempt(base: _Snapshot) -> int:
+            self._colmap_op_guard(base, col)
+            return self._publish_version(
+                name,
+                base.files,
+                schema_json=base.schema_json,
+                op=op,
+                colmap=build(base),
+                base=base,
+            )
+
+        return self._retry_base_conflicts(self._pin_base(name), attempt)
 
     def rename_column(self, name: str, old: str, new: str) -> int:
         """Metadata-only column RENAME (Delta column-mapping parity):
@@ -4697,39 +4701,32 @@ class TableStore:
                 f"{name}: {new!r} is a reserved internal column name"
             )
 
-        class _M:
-            guard = lambda _s=self: _s._colmap_op_guard(name, old)  # noqa: E731
+        def build(base: _Snapshot) -> dict:
+            logical = self._logical_columns(base)
+            if old not in logical:
+                raise ValueError(f"{name}: no column {old!r} (have {logical})")
+            if new in logical:
+                raise ValueError(f"{name}: column {new!r} already exists")
+            cm = base.colmap or {}
+            renames = dict(cm.get("renames", {}))
+            dropped = list(cm.get("dropped", []))
+            dropped_logical = list(cm.get("dropped_logical", []))
+            if new in dropped_logical or (
+                new in dropped and new not in renames.values()
+            ):
+                raise ValueError(
+                    f"{name}: {new!r} names a previously dropped "
+                    "column; pick another name"
+                )
+            phys = renames.pop(old, old)
+            renames[new] = phys
+            return {
+                "renames": renames,
+                "dropped": dropped,
+                "dropped_logical": dropped_logical,
+            }
 
-            @staticmethod
-            def build(v, cm):
-                logical = self._logical_columns(name, v)
-                if old not in logical:
-                    raise ValueError(
-                        f"{name}: no column {old!r} (have {logical})"
-                    )
-                if new in logical:
-                    raise ValueError(
-                        f"{name}: column {new!r} already exists"
-                    )
-                renames = dict(cm.get("renames", {}))
-                dropped = list(cm.get("dropped", []))
-                dropped_logical = list(cm.get("dropped_logical", []))
-                if new in dropped_logical or (
-                    new in dropped and new not in renames.values()
-                ):
-                    raise ValueError(
-                        f"{name}: {new!r} names a previously dropped "
-                        "column; pick another name"
-                    )
-                phys = renames.pop(old, old)
-                renames[new] = phys
-                return {
-                    "renames": renames,
-                    "dropped": dropped,
-                    "dropped_logical": dropped_logical,
-                }
-
-        return self._publish_colmap(name, "rename_column", _M)
+        return self._publish_colmap(name, "rename_column", old, build)
 
     def drop_column(self, name: str, col: str) -> int:
         """Metadata-only column DROP: the physical data stays in the
@@ -4741,29 +4738,24 @@ class TableStore:
         a name that once held values). Concurrency-safe via a
         base-version CAS. Returns the published version."""
 
-        class _M:
-            guard = lambda _s=self: _s._colmap_op_guard(name, col)  # noqa: E731
+        def build(base: _Snapshot) -> dict:
+            logical = self._logical_columns(base)
+            if col not in logical:
+                raise ValueError(f"{name}: no column {col!r} (have {logical})")
+            cm = base.colmap or {}
+            renames = dict(cm.get("renames", {}))
+            dropped = list(cm.get("dropped", []))
+            dropped_logical = list(cm.get("dropped_logical", []))
+            phys = renames.pop(col, col)
+            dropped.append(phys)
+            dropped_logical.append(col)
+            return {
+                "renames": renames,
+                "dropped": dropped,
+                "dropped_logical": dropped_logical,
+            }
 
-            @staticmethod
-            def build(v, cm):
-                logical = self._logical_columns(name, v)
-                if col not in logical:
-                    raise ValueError(
-                        f"{name}: no column {col!r} (have {logical})"
-                    )
-                renames = dict(cm.get("renames", {}))
-                dropped = list(cm.get("dropped", []))
-                dropped_logical = list(cm.get("dropped_logical", []))
-                phys = renames.pop(col, col)
-                dropped.append(phys)
-                dropped_logical.append(col)
-                return {
-                    "renames": renames,
-                    "dropped": dropped,
-                    "dropped_logical": dropped_logical,
-                }
-
-        return self._publish_colmap(name, "drop_column", _M)
+        return self._publish_colmap(name, "drop_column", col, build)
 
     def _read_manifest_df(
         self, name: str, version: int, doc: dict | None = None
@@ -4939,26 +4931,16 @@ class TableStore:
         manifest like every keyed write; a table ``reload_partitions``
         wrote appends in its ``col=value`` layout (ValueError for a
         layout mixing root files and partition directories)."""
-        df = self._enforce_constraints(name, df)
-        spec = self.keyed_spec(name)
-        if spec is not None:
-            keys, n = spec
-            df = self._to_physical(df, self._colmap_doc(name))
-            df = df.withColumn("_kb", self._kb_expr(name, keys, n))
-
-            def _rederive():
-                # appends never remove files: against whatever
-                # version a concurrent writer just published,
-                # 'kept' is simply ALL of its files — no
-                # re-merge, the staged rows are base-independent
-                nv, nident = self._pin_base(name)
-                return self._manifest_files(name, nv), nv, nident
-
-            kept, base_v, base_ident = _rederive()
-            self._append_and_publish(
-                df, name, None, kept, op="append", version_expect=base_v,
-                version_expect_ident=base_ident, rederive_kept=_rederive,
-            )
+        snap = self._pin_base(name)
+        df = self._enforce_constraints(name, df, snap.meta)
+        if snap.spec is not None:
+            df = self._to_physical(df, snap.colmap)
+            df = df.withColumn("_kb", self._kb_expr(*snap.spec, snap.key_types))
+            # appends never remove files: against whatever version a
+            # concurrent writer just published, 'kept' is simply ALL of
+            # its files — no re-merge, the staged rows are
+            # base-independent
+            self._append_and_publish(df, snap, None, op="append")
             return
         # a reload_partitions table: root files would be invisible to
         # partition discovery, so land in its layout
@@ -4974,7 +4956,10 @@ class TableStore:
         ordering: the overwrite is about to delete the files the
         manifests reference, and manifests pointing at deleted files
         would wedge every read until another overwrite (ADVICE r6)."""
-        self._overwrite_raw(self._enforce_constraints(name, df), name)
+        self._overwrite_raw(
+            self._enforce_constraints(name, df, read_meta(self.root, name)),
+            name,
+        )
 
     def _overwrite_raw(self, df: DataFrame, name: str) -> None:
         """overwrite() minus constraint enforcement — the internal
@@ -4994,7 +4979,7 @@ class TableStore:
         partition overwrite replaces exactly the partitions present in
         ``df`` and leaves all others intact — exactly-once under re-run.
         """
-        df = self._enforce_constraints(name, df)
+        df = self._enforce_constraints(name, df, read_meta(self.root, name))
         (
             df.write.mode("overwrite")
             .partitionBy(part_col)
@@ -5034,10 +5019,11 @@ class TableStore:
         within a batch is not defined — dropDuplicates keeps one)
         before merging, on every route."""
         keys = [key] if isinstance(key, str) else list(key)
-        incoming = self._enforce_constraints(name, df).dropDuplicates(keys)
-        spec = self.keyed_spec(name) if self.exists(name) else None
-        if spec is not None and list(spec[0]) == keys:
-            self._upsert_keyed(incoming, name, keys)
+        snap = self._pin_base(name)
+        incoming = self._enforce_constraints(name, df, snap.meta)
+        incoming = incoming.dropDuplicates(keys)
+        if snap.spec is not None and list(snap.spec[0]) == keys:
+            self._upsert_keyed(incoming, snap, keys)
             return
         if self._table_initialized(name):
             existing = self.read(name)
@@ -5090,10 +5076,10 @@ class TableStore:
             raise ValueError(
                 f"{name}: n_buckets must be >= 1, got {n_buckets}"
             )
-        df = self._enforce_constraints(name, df)
+        df = self._enforce_constraints(name, df, read_meta(self.root, name))
         key_types = [df.schema[k].dataType.simpleString() for k in keys]
         stamped = df.withColumn(
-            "_kb", self._kb_expr(name, keys, n_buckets, types=key_types)
+            "_kb", self._kb_expr(keys, n_buckets, key_types)
         )
         # Crash-window ordering (code-review r5 + r6): (1) retire the
         # old manifest history FIRST — the overwrite is about to delete
@@ -5173,7 +5159,7 @@ class TableStore:
     def _upsert_keyed(
         self,
         incoming: DataFrame,
-        name: str,
+        snap: _Snapshot,
         keys: list[str],
         txn: tuple[str, int] | None = None,
         check_replay: bool = False,
@@ -5183,7 +5169,9 @@ class TableStore:
         the batch in and rewrite exactly those buckets through
         ``overwrite_buckets`` (append + publish a manifest; an
         unversioned table then removes the files it superseded).
-        Untouched buckets' files are never read or rewritten."""
+        Untouched buckets' files are never read or rewritten. Each
+        attempt routes the batch, reads and publishes against one
+        snapshot: ``snap`` first, then a new one per retry."""
         # pin the batch lineage ONCE: the bucket probe materializes the
         # lazy checkpoint, and the merge's two references (anti-join
         # key side + union side) read the cache instead of re-running
@@ -5195,22 +5183,21 @@ class TableStore:
         # more than the saved evaluations); the checkpoint gets the
         # same single-evaluation property with no extra job.
         incoming = incoming.localCheckpoint(eager=False)
-        affected = self.keyed_buckets(name, incoming)
 
-        def _attempt(v0: int, v0_ident: str | None) -> None:
+        def _attempt(base: _Snapshot) -> None:
+            affected = self.keyed_buckets(base, incoming)
             inc_keys, cond = _key_match(keys, incoming, "_ik_")
-            survivors = self.read_buckets(name, affected).join(
+            survivors = self.read_buckets(base, affected).join(
                 inc_keys, cond, how="left_anti"
             )
             self.overwrite_buckets(
                 survivors.unionByName(incoming, allowMissingColumns=True),
-                name, affected, op="upsert", txn=txn,
-                check_replay=check_replay,
-                version_expect=v0, version_expect_ident=v0_ident,
+                base.name, affected, op="upsert", txn=txn,
+                check_replay=check_replay, base=base,
                 rows_within_buckets=True,
             )
 
-        self._retry_base_conflicts(name, _attempt)
+        self._retry_base_conflicts(snap, _attempt)
 
     @staticmethod
     def _route_buckets(rows, types, n_buckets: int) -> list[int] | None:
@@ -5239,24 +5226,31 @@ class TableStore:
             return None
         return sorted(out)
 
-    def keyed_buckets(self, name: str, df: DataFrame) -> list[int]:
+    def keyed_buckets(self, table: str | _Snapshot, df: DataFrame) -> list[int]:
         """Bucket ids the rows of ``df`` hash to under the table's key
         spec — a bounded (≤ n_buckets) collect that drives
-        partition-pruned maintenance."""
-        keys, n = self.keyed_spec(name)
+        partition-pruned maintenance. ``table`` is a table name or a
+        snapshot of it."""
+        snap = self._snapshot(table) if isinstance(table, str) else table
         return [
             r[0]
-            for r in df.select(self._kb_expr(name, keys, n).alias("_kb"))
+            for r in df.select(
+                self._kb_expr(*snap.spec, snap.key_types).alias("_kb")
+            )
             .distinct()
             .collect()
         ]
 
-    def read_buckets(self, name: str, buckets: list[int]) -> DataFrame:
+    def read_buckets(
+        self, table: str | _Snapshot, buckets: list[int]
+    ) -> DataFrame:
         """Partition-pruned read of just the listed buckets (without
-        the internal _kb column), resolved through the keyed table's
-        latest manifest."""
-        v, doc = self._latest_doc(name)
-        if v is None:
+        the internal _kb column), resolved through the manifest of a
+        snapshot of the keyed table: ``table`` itself, or the latest
+        when it is a table name."""
+        snap = self._snapshot(table) if isinstance(table, str) else table
+        name = snap.name
+        if snap.version is None:
             # manifest history missing (a crash inside overwrite_keyed's
             # reset window, or a keyed table written before every keyed
             # table had a manifest): the directory is the consistent
@@ -5266,9 +5260,9 @@ class TableStore:
                 self._dir(name)
             )
         else:
-            raw = self._read_manifest_df(name, v, doc=doc)
+            raw = self._read_manifest_df(name, snap.version, doc=snap.doc)
         out = raw.filter(F.col("_kb").isin(list(buckets))).drop("_kb")
-        return self._to_logical(out, (doc or {}).get("colmap"))
+        return self._to_logical(out, snap.colmap)
 
     def lookup(self, name: str, values) -> DataFrame:
         """Bucket-pruned POINT LOOKUP: fetch the rows whose key equals
@@ -5284,8 +5278,8 @@ class TableStore:
         At 100 TB with n_buckets sized to a few files per bucket, a
         k-key lookup touches ≤ k bucket directories' footers — the
         poor man's primary-key index that bucketing already paid for."""
-        meta = read_meta(self.root, name)
-        spec = self._keyed_spec_of(meta)
+        snap = self._snapshot(name)
+        spec = snap.spec
         if spec is None:
             raise ValueError(
                 f"{name}: lookup() needs a keyed table "
@@ -5299,7 +5293,7 @@ class TableStore:
         ]
         if not rows:
             return self.read(name).limit(0)
-        types = meta.get("key_types")
+        types = snap.key_types
         # EXPLICIT schema from the stored key types (code-review r7
         # wave 3): inference dies on an all-None probe, and a lazy cast
         # of an uncastable value would become NULL and eqNullSafe-match
@@ -5312,8 +5306,8 @@ class TableStore:
         probe = local_frame(self.spark, rows, schema).dropDuplicates(keys)
         buckets = self._route_buckets(rows, types, _n)
         if buckets is None:
-            buckets = self.keyed_buckets(name, probe)
-        slice_ = self.read_buckets(name, buckets)
+            buckets = self.keyed_buckets(snap, probe)
+        slice_ = self.read_buckets(snap, buckets)
         lk, cond = _key_match(keys, probe, "_lk_")
         return slice_.join(F.broadcast(lk), cond, "left_semi")
 
@@ -5326,8 +5320,7 @@ class TableStore:
         txn: tuple[str, int] | None = None,
         check_replay: bool = False,
         txn_expect: int | None = None,
-        version_expect: int | None = None,
-        version_expect_ident: str | None = None,
+        base: _Snapshot | None = None,
         txn_assert: dict[str, int] | None = None,
         rows_within_buckets: bool = False,
     ) -> None:
@@ -5342,12 +5335,13 @@ class TableStore:
         unversioned one removes the superseded files after the publish
         (``_remove_superseded``).
 
-        ``version_expect``: the version the CALLER's frame was derived
-        from (delete_where/merge_when survivors) — the publish CASes on
-        it so a concurrent commit surfaces as BaseVersionConflict for
-        the caller's retry instead of a lost update (ADVICE r9).
-        Default: pinned here, which still guards the kept-list
-        derivation below.
+        ``base``: the snapshot the CALLER's frame was derived from
+        (delete_where/merge_when survivors). Its key spec, key types
+        and column map stamp the rows, its files are the ones kept, and
+        the publish CASes on it, so a concurrent commit surfaces as
+        BaseVersionConflict for the caller's retry instead of a lost
+        update (ADVICE r9). Default: pinned here, which still guards
+        the kept-list derivation below.
 
         ``rows_within_buckets=True`` (internal verbs) asserts the
         caller PROVED every row of ``df`` hashes into ``buckets``
@@ -5361,36 +5355,25 @@ class TableStore:
         CDC feed SURVIVOR frames through it), so CHECK constraints are
         deliberately NOT enforced here — the caller owns validation of
         any genuinely new rows."""
-        keys, n = self.keyed_spec(name)
-        df = self._to_physical(df, self._colmap_doc(name))
-        stamped = df.withColumn("_kb", self._kb_expr(name, keys, n))
-        if version_expect is None:
-            base_v, base_ident = self._pin_base(name)
-        else:
-            base_v, base_ident = int(version_expect), version_expect_ident
+        if base is None:
+            base = self._pin_base(name)
+        df = self._to_physical(df, base.colmap)
+        stamped = df.withColumn(
+            "_kb", self._kb_expr(*base.spec, base.key_types)
+        )
         # rows hashing OUTSIDE the listed buckets must still land in
         # the manifest — without widening, their files would be
         # appended but unreferenced (an invisible write) while the
         # stale old rows of their buckets stayed live (code-review r6).
         # Callers that PROVED containment skip the widening evaluation
         # (rows_within_buckets above).
-        if rows_within_buckets:
-            eff = sorted(set(buckets))
-        else:
-            nonempty = {
-                r[0] for r in stamped.select("_kb").distinct().collect()
-            }
-            eff = sorted(set(buckets) | nonempty)
-        eff_set = set(eff)
-        kept = [
-            f
-            for f in self._manifest_files(name, base_v)
-            if self._bucket_of(f) not in eff_set
-        ]
+        eff = set(buckets)
+        if not rows_within_buckets:
+            eff |= {r[0] for r in stamped.select("_kb").distinct().collect()}
+        kept = [f for f in base.files if self._bucket_of(f) not in eff]
         self._append_and_publish(
-            stamped, name, eff, kept, op=op, txn=txn,
+            stamped, base, kept, op=op, txn=txn,
             check_replay=check_replay, txn_expect=txn_expect,
-            version_expect=base_v, version_expect_ident=base_ident,
             txn_assert=txn_assert,
         )
 
@@ -5485,12 +5468,13 @@ class TableStore:
             ) from ex
         return {c: int(counts[c] or 0) for c in cons}
 
-    def _check_constraints(self, name: str, df: DataFrame) -> None:
+    def _check_constraints(self, name: str, df: DataFrame, meta: dict) -> None:
         """Raise-only constraint gate for frames that are ALREADY
         pinned and schema-complete (the CDC paths validate the
         post-merge rows a batch lands — full table schema, already
-        checkpointed): no extra localCheckpoint, no NULL-widening."""
-        cons = self.constraints(name)
+        checkpointed): no extra localCheckpoint, no NULL-widening.
+        ``meta`` is the table meta the caller's verb read."""
+        cons = meta.get("constraints", {})
         if not cons:
             return
         bad = {
@@ -5502,9 +5486,12 @@ class TableStore:
                 f"(constraints: { {c: cons[c] for c in bad} })"
             )
 
-    def _enforce_constraints(self, name: str, df: DataFrame) -> DataFrame:
+    def _enforce_constraints(
+        self, name: str, df: DataFrame, meta: dict
+    ) -> DataFrame:
         """Raise if any row of the INCOMING batch violates a declared
-        constraint; returns the (checkpointed) batch otherwise.
+        constraint of ``meta`` (the table meta the caller's verb read);
+        returns the (checkpointed) batch otherwise.
 
         Design points, all surfaced by code-review r7 wave 2:
         - called once per PUBLIC verb on the incoming batch only —
@@ -5525,7 +5512,6 @@ class TableStore:
           CHECK (which lets UNKNOWN pass) BY DESIGN — in a training
           pipeline a null sneaking past a gate is almost always a bug;
           write "x IS NULL OR <pred>" to opt into SQL's laxness."""
-        meta = read_meta(self.root, name)  # serves constraints AND schema
         cons = meta.get("constraints", {})
         if not cons:
             return df
@@ -5602,9 +5588,9 @@ class TableStore:
         duration — a first write may run longer than
         ``CLAIM_STALE_S`` safely."""
         keys = [key] if isinstance(key, str) else list(key)
-        spec = self.keyed_spec(name)
+        snap = self._pin_base(name)
         if not self._table_initialized(name) or (
-            spec is None and self._creation_crashed(name)
+            snap.spec is None and self._creation_crashed(name)
         ):
             # creation path (or its retry after a crash between the
             # bucket-partitioned data write and the meta stamp — the
@@ -5623,8 +5609,8 @@ class TableStore:
             )
             if created:
                 return True
-            spec = self.keyed_spec(name)  # converged on a racer's table
-        if spec is None and self._meta_lost_one_commit(name):
+            snap = self._pin_base(name)  # converged on a racer's table
+        if snap.spec is None and self._meta_lost_one_commit(name):
             # meta-only damage on a readable one-commit snapshot
             # (ADVICE r8): recover losslessly instead of truncating —
             # the rebuild PROVES the caller's spec against the data
@@ -5632,8 +5618,9 @@ class TableStore:
             # then skips below as an already-applied txn (the v1
             # manifest carries the creation's watermark).
             self._rebuild_meta_from_manifest(name, keys, int(n_buckets))
-            spec = self.keyed_spec(name)
-        if spec is None or not self.is_versioned(name):
+            snap = self._pin_base(name)
+        spec = snap.spec
+        if spec is None or not snap.versioned:
             raise ValueError(
                 f"{name}: upsert_txn needs a versioned keyed table "
                 "(overwrite_keyed(..., versioned=True))"
@@ -5651,11 +5638,11 @@ class TableStore:
             # restarted stream into a crash-replay loop, and even a
             # conformant replay should not pay an aggregate job.
             return False
-        df = self._enforce_constraints(name, df)
+        df = self._enforce_constraints(name, df, snap.meta)
         try:
             self._upsert_keyed(
                 df.dropDuplicates(keys),
-                name,
+                snap,
                 keys,
                 txn=(app_id, int(txn_version)),
                 check_replay=True,
@@ -5791,7 +5778,7 @@ class TableStore:
                 f"{missing} not in the v1 snapshot schema"
             )
         key_types = [df.schema[k].dataType.simpleString() for k in keys]
-        expr = self._kb_expr(name, keys, int(n_buckets), types=key_types)
+        expr = self._kb_expr(keys, int(n_buckets), key_types)
         bad = df.filter(~expr.eqNullSafe(F.col("_kb"))).limit(1).count()
         if bad:
             raise ValueError(
@@ -5870,12 +5857,13 @@ class TableStore:
         watermark already covers it — sync_rollup rides this for
         exactly-once incremental view maintenance."""
         keys = [key] if isinstance(key, str) else list(key)
-        spec = self.keyed_spec(name)
+        snap = self._pin_base(name)
+        spec = snap.spec
         if spec is None:
             raise ValueError(
                 f"{name}: merge_when needs a keyed table (overwrite_keyed)"
             )
-        if txn is not None and not self.is_versioned(name):
+        if txn is not None and not snap.versioned:
             # unversioned tables keep no txn watermarks: silently
             # applying would hand the caller a txn
             # guarantee that does not exist (code-review r8 wave 3) —
@@ -5889,12 +5877,14 @@ class TableStore:
             raise ValueError(
                 f"{name}: merge key {keys} != table key {list(spec[0])}"
             )
-        source = source.dropDuplicates(keys).localCheckpoint(eager=True)
+        # pinned lazily, like _upsert_keyed's batch: the attempt's
+        # bucket probe is its first job and materializes it, and every
+        # later use reads the pin
+        source = source.dropDuplicates(keys).localCheckpoint(eager=False)
 
-        def _attempt(v0: int, v0_ident: str | None) -> list[int]:
+        def _attempt(base: _Snapshot) -> list[int]:
             return self._merge_when_once(
-                v0, v0_ident,
-                source, name, keys, when_matched_update, matched_condition,
+                base, source, keys, when_matched_update, matched_condition,
                 when_matched_delete, when_not_matched_insert, txn,
                 check_replay, txn_expect, source_meta_cols or [],
                 txn_assert,
@@ -5904,14 +5894,12 @@ class TableStore:
         # derived from the version current at attempt start; a
         # concurrent commit fails the publish CAS and the whole merge
         # re-runs against the new version
-        return self._retry_base_conflicts(name, _attempt)
+        return self._retry_base_conflicts(snap, _attempt)
 
     def _merge_when_once(
         self,
-        v0: int,
-        v0_ident: str | None,
+        base: _Snapshot,
         source: DataFrame,
-        name: str,
         keys: list[str],
         when_matched_update,
         matched_condition,
@@ -5923,8 +5911,9 @@ class TableStore:
         source_meta_cols,
         txn_assert=None,
     ) -> list[int]:
-        buckets = self.keyed_buckets(name, source)
-        target = self.read_buckets(name, buckets)
+        name = base.name
+        buckets = self.keyed_buckets(base, source)
+        target = self.read_buckets(base, buckets)
         # ``source_meta_cols`` are per-row MERGE DIRECTIVES (e.g. an
         # op marker the delete/update/insert predicates dispatch on) —
         # referenceable as ``s.<col>`` in every clause, but excluded
@@ -6058,7 +6047,7 @@ class TableStore:
                 *[_out_col(i, c) for i, c in enumerate(out_cols)], "_act"
             )
         )
-        check_needed = has_landed and bool(self.constraints(name))
+        check_needed = has_landed and bool(base.meta.get("constraints"))
         if check_needed:
             # the landed check is an aggregate over the same projection
             # the write lands — pin it so check + write evaluate the
@@ -6075,12 +6064,11 @@ class TableStore:
             # updated and inserted rows; surviving history is not
             # re-judged (the delete_where/upsert contract)
             self._check_constraints(
-                name, proj.filter(F.col("_act") != "K").drop("_act")
+                name, proj.filter(F.col("_act") != "K").drop("_act"), base.meta
             )
         self.overwrite_buckets(
             merged, name, buckets, op="merge", txn=txn,
-            check_replay=check_replay, txn_expect=txn_expect,
-            version_expect=v0, version_expect_ident=v0_ident,
+            check_replay=check_replay, txn_expect=txn_expect, base=base,
             txn_assert=txn_assert,
             rows_within_buckets=True,
         )
@@ -6132,7 +6120,7 @@ class TableStore:
         )
         shutil.rmtree(stage, ignore_errors=True)
 
-    def _where_to_condition(self, name: str, verb: str, condition, where):
+    def _where_to_condition(self, snap: _Snapshot, verb: str, condition, where):
         """Shared condition=/where= normalization for the mutating
         verbs (delete_where / update_where): exactly one of the two,
         where= only on versioned keyed tables (it drives the planner's
@@ -6144,9 +6132,9 @@ class TableStore:
         if (condition is None) == (where is None):
             raise ValueError("pass condition= OR where=, exactly one")
         if where is not None:
-            if self.keyed_spec(name) is None or not self.is_versioned(name):
+            if snap.spec is None or not snap.versioned:
                 raise ValueError(
-                    f"{name}: where= {verb} planning needs a versioned "
+                    f"{snap.name}: where= {verb} planning needs a versioned "
                     "keyed table; pass condition= instead"
                 )
             if isinstance(where, (list, tuple)):
@@ -6172,6 +6160,21 @@ class TableStore:
         if isinstance(condition, str):
             condition = F.expr(condition)
         return condition
+
+    def _find(self, base: _Snapshot, condition, where) -> DataFrame:
+        """The find phase of delete_where/update_where: the rows of
+        the ``base`` snapshot the predicate matches. ``where=`` prunes
+        the scan through the file-skipping structures and applies the
+        exact predicate on it (``_read_planned``); ``condition``
+        filters the whole snapshot. Pinned at the base, so the OCC
+        retry re-plans against the new snapshot."""
+        if where is not None:
+            return self._read_planned(
+                base.name, where, base.version, base.doc, base.meta
+            )
+        return self._scan_files(
+            base.name, base.version, base.doc, base.files
+        ).filter(condition)
 
     def delete_where(
         self, name: str, condition=None, where=None
@@ -6204,11 +6207,10 @@ class TableStore:
         rewrite phase is unchanged (affected buckets rewrite whole —
         that is the merge-on-read-free contract), and the exact
         predicate still owns which rows go."""
-        condition = self._where_to_condition(
-            name, "delete", condition, where
-        )
+        snap = self._pin_base(name)
+        condition = self._where_to_condition(snap, "delete", condition, where)
         keep = F.coalesce(~condition, F.lit(True))
-        if self.keyed_spec(name) is None:
+        if snap.spec is None:
             df = self.read(name)
             if df.filter(condition).isEmpty():
                 return []
@@ -6217,31 +6219,21 @@ class TableStore:
             # not apply (deletes on legacy-violating tables must work)
             self._overwrite_raw(survivors, name)
             return [-1]
-        def _attempt(v0: int, v0_ident: str | None) -> list[int]:
-            meta = read_meta(self.root, name)
-            if where is not None:
-                # pruned find phase: _read_planned applies the exact
-                # predicate on the skipped scan, pinned at v0 so the
-                # OCC retry re-plans against a fresh snapshot
-                matches = self._read_planned(
-                    name, where, v0, self._manifest_doc(name, v0), meta
-                )
-            else:
-                matches = self.read(name).filter(condition)
-            affected = self.keyed_buckets(name, matches)
+        def _attempt(base: _Snapshot) -> list[int]:
+            matches = self._find(base, condition, where)
+            affected = self.keyed_buckets(base, matches)
             if not affected:
                 return []
-            survivors = self.read_buckets(name, affected).filter(keep)
+            survivors = self.read_buckets(base, affected).filter(keep)
             # no materialization: the write appends + publishes and
             # never overwrites the files the survivors frame reads
             self.overwrite_buckets(
-                survivors, name, affected, op="delete",
-                version_expect=v0, version_expect_ident=v0_ident,
+                survivors, name, affected, op="delete", base=base,
                 rows_within_buckets=True,
             )
             return sorted(affected)
 
-        return self._retry_base_conflicts(name, _attempt)
+        return self._retry_base_conflicts(snap, _attempt)
 
     def update_where(
         self, name: str, set: dict, condition=None, where=None
@@ -6276,10 +6268,9 @@ class TableStore:
             raise ValueError(
                 "set must map >= 1 existing column to its new value"
             )
-        condition = self._where_to_condition(
-            name, "update", condition, where
-        )
-        kspec = self.keyed_spec(name)
+        snap = self._pin_base(name)
+        condition = self._where_to_condition(snap, "update", condition, where)
+        kspec = snap.spec
         if kspec is not None:
             bad = [c for c in set if c in kspec[0]]
             if bad:
@@ -6330,35 +6321,31 @@ class TableStore:
             matched = df.filter(condition)
             if matched.isEmpty():
                 return []
-            self._enforce_constraints(name, _apply(matched, always=True))
+            self._enforce_constraints(
+                name, _apply(matched, always=True), snap.meta
+            )
             self._overwrite_raw(_apply(df).localCheckpoint(), name)
             return [-1]
 
-        def _attempt(v0: int, v0_ident: str | None) -> list[int]:
-            meta = read_meta(self.root, name)
-            if where is not None:
-                matches = self._read_planned(
-                    name, where, v0, self._manifest_doc(name, v0), meta
-                )
-            else:
-                matches = self.read(name).filter(condition)
-            affected = self.keyed_buckets(name, matches)
+        def _attempt(base: _Snapshot) -> list[int]:
+            matches = self._find(base, condition, where)
+            affected = self.keyed_buckets(base, matches)
             if not affected:
                 return []
-            bucket_rows = self.read_buckets(name, affected)
+            bucket_rows = self.read_buckets(base, affected)
             self._enforce_constraints(
-                name, _apply(bucket_rows.filter(condition), always=True)
+                name, _apply(bucket_rows.filter(condition), always=True),
+                base.meta,
             )
             updated = _apply(bucket_rows)
             # no materialization: the write appends + publishes
             self.overwrite_buckets(
-                updated, name, affected, op="update",
-                version_expect=v0, version_expect_ident=v0_ident,
+                updated, name, affected, op="update", base=base,
                 rows_within_buckets=True,
             )
             return sorted(affected)
 
-        return self._retry_base_conflicts(name, _attempt)
+        return self._retry_base_conflicts(snap, _attempt)
 
     def drop(self, name: str) -> None:
         shutil.rmtree(self._dir(name), ignore_errors=True)

@@ -467,6 +467,7 @@ def cdc_ingest_stream(
     deletes is pruned from disk), so per-batch cost tracks the batch,
     not the table — the lakehouse MERGE cost profile for a streaming
     dimension at 100 TB."""
+    from ..io import read_meta
     from ..operators.relational import cdc_apply
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
@@ -502,7 +503,10 @@ def cdc_ingest_stream(
             base, batch, key=key, seq_col=seq_col, op_col=op_col
         ).localCheckpoint(eager=True)
         # judge the POST-MERGE rows the batch lands (see cdc_apply_txn)
-        _check_landed_rows(store, base_table, merged, batch, key)
+        _check_landed_rows(
+            store, base_table, merged, batch, key,
+            read_meta(store.root, base_table),
+        )
         store._overwrite_raw(merged, base_table)
 
     return _start_foreach_batch(
@@ -510,13 +514,15 @@ def cdc_ingest_stream(
     )
 
 
-def _check_landed_rows(store, base_table, merged, batch, key) -> None:
+def _check_landed_rows(store, base_table, merged, batch, key, meta) -> None:
     """Constraint-gate the rows a CDC batch LANDS: the post-merge rows
     whose key appears in the batch (deleted keys are absent; untouched
-    historical rows are excluded — they are not being written)."""
+    historical rows are excluded — they are not being written), against
+    the constraints of ``meta``, the table meta the caller read."""
     store._check_constraints(
         base_table,
         merged.join(batch.select(key).distinct(), key, "left_semi"),
+        meta,
     )
 
 
@@ -536,11 +542,13 @@ def cdc_apply_txn(
     semantics are directly testable. Returns False iff the batch was
     skipped as an already-applied transaction (``app_id`` set, table
     versioned, watermark >= batch_id); True when applied."""
+    from ..io import TxnAlreadyApplied, _Snapshot
     from ..operators.relational import cdc_apply
 
+    snap = store._pin_base(base_table)
     txn = None
     if app_id is not None:
-        if not store.is_versioned(base_table):
+        if not snap.versioned:
             # silent degradation to at-least-once convergence is worse
             # than a loud contract failure (code-review r7 wave 3: the
             # caller believes they bought transactional exactly-once)
@@ -550,16 +558,18 @@ def cdc_apply_txn(
                 "unversioned tables do not carry the (app, batch) "
                 "watermark"
             )
-        last = store.last_txn(base_table, app_id)
-        if last is not None and last >= int(batch_id):
+        last = (snap.doc or {}).get("txn", {}).get(app_id)
+        if last is not None and int(last) >= int(batch_id):
             return False  # replayed batch: skip before reading anything
         txn = (app_id, int(batch_id))
     # pin the batch ONCE: keyed_buckets and cdc_apply both evaluate it,
     # and a non-deterministic lineage evaluated twice could hash rows
-    # into buckets outside the pruned set (code-review r7 wave 3)
-    batch = batch.localCheckpoint(eager=True)
+    # into buckets outside the pruned set (code-review r7 wave 3).
+    # Lazily: the attempt's bucket probe is its first job and
+    # materializes the pin
+    batch = batch.localCheckpoint(eager=False)
 
-    def _attempt(v0: int, v0_ident: str | None) -> None:
+    def _attempt(base: _Snapshot) -> None:
         # base-version OCC (code-review r10 wave 1): the retry loop
         # pins the version BEFORE the buckets are read; the publish
         # CASes on it, so a concurrent writer committing inside the
@@ -571,10 +581,10 @@ def cdc_apply_txn(
         # |batch's buckets|, not the table (the keyed-upsert fast path
         # generalized to CDC: deletes prune, and a bucket emptied
         # entirely is removed from disk)
-        buckets = store.keyed_buckets(base_table, batch)
-        base = store.read_buckets(base_table, buckets)
+        buckets = store.keyed_buckets(base, batch)
+        rows = store.read_buckets(base, buckets)
         merged = cdc_apply(
-            base, batch, key=key, seq_col=seq_col, op_col=op_col
+            rows, batch, key=key, seq_col=seq_col, op_col=op_col
         ).localCheckpoint(eager=True)
         # CHECK constraints judge the POST-MERGE rows the batch
         # actually LANDS — merged rows whose key the batch touched
@@ -587,26 +597,23 @@ def cdc_apply_txn(
         # historically-invalid row without fixing it is refused — the
         # batch is publishing that row anew, which is exactly what the
         # contract gates.
-        _check_landed_rows(store, base_table, merged, batch, key)
+        _check_landed_rows(store, base_table, merged, batch, key, base.meta)
         # check_replay re-verifies the watermark INSIDE the manifest
-        # claim loop: the last_txn read above is only the cheap fast
+        # claim loop: the watermark read above is only the cheap fast
         # check, so a zombie driver racing its replacement on the same
         # app_id serializes at the commit and exactly one batch applies
         # (VERDICT r7 item 1; the loser's appended files stay invisible
         # orphans until vacuum)
         store.overwrite_buckets(
             merged, base_table, buckets, op="cdc", txn=txn,
-            check_replay=txn is not None, version_expect=v0,
-            version_expect_ident=v0_ident,
+            check_replay=txn is not None, base=base,
         )
-
-    from ..io import TxnAlreadyApplied
 
     try:
         # BaseVersionConflict deliberately escapes this handler (it is
         # NOT a TxnAlreadyApplied): "not applied — retry" must fail the
         # batch and be replayed, never reported as a skipped replay
-        store._retry_base_conflicts(base_table, _attempt)
+        store._retry_base_conflicts(snap, _attempt)
     except TxnAlreadyApplied:
         return False
     return True

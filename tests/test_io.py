@@ -1793,7 +1793,8 @@ def test_timestamp_time_travel_and_restore_to_ts(spark, tmp_path):
     """VERDICT r7 item 2: TIMESTAMP AS OF parity. Boundary semantics:
     the exact commit ts resolves that commit, an inter-version ts
     resolves the earlier version, before-first raises, after-last is
-    the latest; restore_to_ts rolls back through the same resolution."""
+    the latest; restore(version_as_of(ts)) rolls back through the same
+    resolution."""
     import datetime as _dt
     import time as _time
 
@@ -1838,8 +1839,9 @@ def test_timestamp_time_travel_and_restore_to_ts(spark, tmp_path):
     store.overwrite(spark.createDataFrame([(1, 1.0)], "id long, p double"), "u")
     with _pytest.raises(ValueError, match="versioned"):
         store.read("u", as_of_ts=ts[2])
-    # restore_to_ts: metadata-only rollback to the resolved version
-    v = store.restore_to_ts("t", (ts[2] + ts[3]) // 2)
+    # restore to a timestamp: metadata-only rollback to the resolved
+    # version
+    v = store.restore("t", store.version_as_of("t", (ts[2] + ts[3]) // 2))
     assert v == 4 and store.history("t")[0]["op"] == "restore(v2)"
     got = {r["id"]: r["price"] for r in store.read("t").collect()}
     assert got[3] == 333.0 and len(got) == 20
@@ -3198,15 +3200,23 @@ def test_column_mapping_wave2_hardening(spark, tmp_path):
     # is deliberately NOT a TxnConflict/TxnAlreadyApplied (code-review
     # r10 wave 1): "not applied — re-derive" must never be absorbed by
     # the exactly-once handlers that mean "already applied — skip"
-    from datapipelinerepo_spark.io import BaseVersionConflict
+    from datapipelinerepo_spark.io import (
+        BaseVersionConflict,
+        _Snapshot,
+        read_meta,
+    )
 
     v_now = store.latest_version("t")
+    stale = _Snapshot(
+        "t", read_meta(store.root, "t"), v_now - 1,
+        store._manifest_doc("t", v_now - 1),
+    )
     with _pytest.raises(BaseVersionConflict, match="base version moved"):
         store._publish_version(
             "t",
             store._manifest_files("t", v_now),
             op="noop",
-            version_expect=v_now - 1,
+            base=stale,
         )
     assert v_r >= 2
 
@@ -3560,8 +3570,8 @@ def test_cas_detects_reseed_with_same_version_number(spark, tmp_path):
         [(i, float(i)) for i in range(8)], "id long, v double"
     )
     store.overwrite_keyed(a, "t", "id", n_buckets=2, versioned=True)
-    v0, ident = store._pin_base("t")  # writer A pins old-incarnation v1
-    assert v0 == 1 and ident is not None
+    base0 = store._pin_base("t")  # writer A pins old-incarnation v1
+    assert base0.version == 1 and base0.uid is not None
     b = spark.createDataFrame(
         [(i, 100.0) for i in range(100, 108)], "id long, v double"
     )
@@ -3572,18 +3582,16 @@ def test_cas_detects_reseed_with_same_version_number(spark, tmp_path):
             "t",
             store._manifest_files("t", 1),
             op="noop",
-            version_expect=v0,
-            version_expect_ident=ident,
+            base=base0,
         )
     # same pin against the same incarnation still publishes fine
-    v1, ident1 = store._pin_base("t")
+    base1 = store._pin_base("t")
     assert (
         store._publish_version(
             "t",
             store._manifest_files("t", 1),
             op="noop",
-            version_expect=v1,
-            version_expect_ident=ident1,
+            base=base1,
         )
         == 2
     )
@@ -4699,6 +4707,158 @@ def test_planned_reads_open_the_meta_once(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(builtins, "open", real_open)
     assert counts == {"range": 1, "eq": 1, "read_point": 1}
     assert store.read("t", where={"k": 57}).count() == 1
+
+
+@pytest.mark.parametrize("versioned", [True, False])
+def test_keyed_writes_read_the_table_once_per_attempt(
+    spark, tmp_path, monkeypatch, versioned
+):
+    """A warm keyed write verb reads the table meta once (outside the
+    meta update's own read under its claim) and the base manifest
+    once, plus the publish's compare-and-swap re-read; on an
+    unversioned table the cleanup reads it once more, to check its
+    identity before it removes the files."""
+    import builtins
+    import os
+
+    import datapipelinerepo_spark.io as io_mod
+
+    store = TableStore(spark, str(tmp_path))
+    store.overwrite_keyed(
+        spark.range(0, 200).select(
+            F.col("id").alias("k"), (F.col("id") * 1.5).alias("amt")
+        ),
+        "t", "k", n_buckets=4, versioned=versioned,
+    )
+
+    def rows(lo):
+        return spark.range(lo, lo + 10).select(
+            F.col("id").alias("k"), (F.col("id") * 2.5).alias("amt")
+        )
+
+    verbs = {
+        "upsert": lambda i: store.upsert(rows(300 + 20 * i), "t", "k"),
+        "merge_when": lambda i: store.merge_when(rows(100 + 20 * i), "t", "k"),
+        "delete_where": lambda i: store.delete_where("t", condition=f"k = {i}"),
+        "update_where": lambda i: store.update_where(
+            "t", {"amt": "amt + 1"}, condition=f"k = {10 + i}"
+        ),
+    }
+    meta_reads, in_update = [0], [0]
+    real_read_meta, real_update = io_mod.read_meta, store._update_meta
+
+    def counting_read_meta(root, name):
+        if not in_update[0]:
+            meta_reads[0] += 1
+        return real_read_meta(root, name)
+
+    def update(name, fn):
+        in_update[0] += 1
+        try:
+            return real_update(name, fn)
+        finally:
+            in_update[0] -= 1
+
+    base_path, base_opens = [None], [0]
+    real_open = builtins.open
+
+    def counting_open(f, *a, **kw):
+        if isinstance(f, (str, os.PathLike)) and os.fspath(f) == base_path[0]:
+            base_opens[0] += 1
+        return real_open(f, *a, **kw)
+
+    monkeypatch.setattr(store, "_update_meta", update)
+    counts = {}
+    for verb, call in verbs.items():
+        call(0)  # warm
+        base_path[0] = store._manifest_path("t", store.latest_version("t"))
+        meta_reads[0] = base_opens[0] = 0
+        monkeypatch.setattr(io_mod, "read_meta", counting_read_meta)
+        monkeypatch.setattr(builtins, "open", counting_open)
+        try:
+            call(1)
+        finally:
+            monkeypatch.setattr(builtins, "open", real_open)
+            monkeypatch.setattr(io_mod, "read_meta", real_read_meta)
+        counts[verb] = (meta_reads[0], base_opens[0])
+    want = (1, 2 if versioned else 3)
+    assert counts == {verb: want for verb in verbs}
+    got = {r["k"]: r["amt"] for r in store.read("t").collect()}
+    assert 0 not in got and 1 not in got and got[11] == 11 * 1.5 + 1
+    assert got[320] == 320 * 2.5 and got[120] == 120 * 2.5
+
+
+@pytest.mark.parametrize("versioned", [True, False])
+def test_narrow_keyed_append_keeps_every_column(spark, tmp_path, versioned):
+    """An append narrower than the table publishes the table's columns,
+    not only its own: later reads keep the wider columns, and a later
+    upsert rewrites their values instead of dropping them."""
+    store = TableStore(spark, str(tmp_path))
+    store.overwrite_keyed(
+        spark.createDataFrame([(1, 10), (2, 20)], "k long, v long"),
+        "t", "k", n_buckets=1, versioned=versioned,
+    )
+    store.append(
+        spark.createDataFrame(
+            [(3, 30, 7), (4, 40, 8)], "k long, v long, x long"
+        ),
+        "t",
+    )
+    store.append(spark.createDataFrame([(5, 50)], "k long, v long"), "t")
+    assert store.read("t").columns == ["k", "v", "x"]
+    store.upsert(spark.createDataFrame([(1, 11)], "k long, v long"), "t", "k")
+    got = {r["k"]: (r["v"], r["x"]) for r in store.read("t").collect()}
+    assert got == {
+        1: (11, None), 2: (20, None), 3: (30, 7), 4: (40, 8), 5: (50, None)
+    }
+
+
+def test_concurrent_publishes_keep_every_widened_column(spark, tmp_path):
+    """Two writers whose publishes widen the meta schema by different
+    columns keep both: the widening is computed from the meta read
+    under the meta file's claim, not from a read taken before it."""
+    import json
+    import sys
+    import threading
+
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from datapipelinerepo_spark.io import read_meta
+
+    store = TableStore(spark, str(tmp_path))
+    n = 150
+    errors: list[BaseException] = []
+
+    def publish(prefix):
+        try:
+            for i in range(n):
+                schema = StructType([StructField(f"{prefix}{i}", LongType())])
+                store._publish_version("t", [], schema_json=schema.json())
+        except BaseException as e:  # re-raised in the test thread
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    threads = [
+        threading.Thread(target=publish, args=(p,)) for p in ("a", "b")
+    ]
+    try:
+        for t in threads:
+            t.start()
+    finally:
+        for t in threads:
+            t.join(120)
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads) and not errors, errors[:3]
+    cols = {
+        f.name
+        for f in StructType.fromJson(
+            json.loads(read_meta(store.root, "t")["schema"])
+        ).fields
+    }
+    lost = sorted({f"{p}{i}" for p in "ab" for i in range(n)} - cols)
+    assert lost == [], (len(lost), lost[:5])
+    assert store.latest_version("t") == 2 * n
 
 
 def _part_files(store, name) -> set[str]:

@@ -26,11 +26,12 @@ from datapipelinerepo_spark.plans.pipeline import (
     monthly_quota_gate,
     watermark_gate,
 )
+from datapipelinerepo_spark.streaming.ingest import cdc_apply_txn
 
 # reads collect their frame, so each count includes the scan itself
 BUDGETS = {
     "upsert": 5,
-    "merge_when": 7,
+    "merge_when": 6,
     "delete_where": 4,
     "read_where": 1,
     "read_point": 1,
@@ -38,16 +39,18 @@ BUDGETS = {
     "update_bloom_index": 4,
     "update_where": 4,
     "lookup": 3,
+    "cdc_apply_txn": 9,
 }
 
 # unversioned keyed tables commit through the same manifest protocol;
 # they only remove what each commit supersedes
 UNVERSIONED_BUDGETS = {
     "upsert": 5,
-    "merge_when": 7,
+    "merge_when": 6,
     "delete_where": 4,
     "update_where": 4,
     "lookup": 3,
+    "cdc_apply_txn": 9,
 }
 
 
@@ -104,6 +107,17 @@ def _update_where(store):
     )
 
 
+def _cdc_apply_txn(store, spark):
+    """One change-feed batch through the streaming sink's keyed apply:
+    updates, inserts and deletes over a few buckets."""
+    batch = _rows(spark, 340, 360, 4.0).select(
+        "*",
+        F.col("k").alias("seq"),
+        F.when(F.col("k") % 5 == 0, "D").otherwise("U").alias("op"),
+    )
+    cdc_apply_txn(store, batch, 1, key="k", seq_col="seq", base_table="t")
+
+
 @pytest.fixture(scope="module")
 def store(spark, tmp_path_factory):
     store = TableStore(spark, str(tmp_path_factory.mktemp("budget")))
@@ -131,6 +145,7 @@ def verb_jobs(spark, store):
         spark, lambda: store.update_bloom_index("t", "cust")
     )
     jobs["update_where"] = _jobs(spark, lambda: _update_where(store))
+    jobs["cdc_apply_txn"] = _jobs(spark, lambda: _cdc_apply_txn(store, spark))
     return jobs
 
 
@@ -153,6 +168,7 @@ def unversioned_jobs(spark, unversioned_store):
         ),
         "update_where": lambda: _update_where(store),
         "lookup": lambda: store.lookup("t", [57, 300]).collect(),
+        "cdc_apply_txn": lambda: _cdc_apply_txn(store, spark),
     }
     return {name: _jobs(spark, fn) for name, fn in verbs.items()}
 

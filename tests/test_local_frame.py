@@ -311,3 +311,79 @@ def test_one_meta_reader_and_writer_in_the_package():
     }, offenders
     assert set(offenders) == allowed, offenders
     assert writers == ["io.py in _update_meta"], writers
+
+
+# the compare-and-swap and its two companions re-read the base manifest
+# on disk on purpose: a safety check must never trust the snapshot
+_ON_DISK_CHECKS = {
+    "_write_manifest_file", "_remove_superseded", "_retry_base_conflicts",
+}
+
+
+def test_snapshot_helpers_never_reread_the_table():
+    """A helper that takes a ``_Snapshot`` reads the table through it:
+    it never calls ``read_meta``, ``keyed_spec``, ``is_versioned`` or
+    ``_manifest_doc`` itself, so no two helpers of one verb attempt
+    can see two states of the table. The publish's compare-and-swap,
+    the unversioned cleanup and the retry loop's removed-base check
+    re-read the base manifest on disk, which is their job."""
+    banned = {"read_meta", "keyed_spec", "is_versioned", "_manifest_doc"}
+    takers, offenders = [], []
+    for d, _, fs in os.walk(_PKG):
+        for f in fs:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(d, f)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for fn in ast.walk(tree):
+                if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                args = fn.args.posonlyargs + fn.args.args + fn.args.kwonlyargs
+                if not any(
+                    a.annotation is not None
+                    and "_Snapshot" in ast.unparse(a.annotation)
+                    for a in args
+                ):
+                    continue
+                takers.append(fn.name)
+                allowed = (
+                    {"_manifest_doc"} if fn.name in _ON_DISK_CHECKS else set()
+                )
+                offenders += [
+                    f"{os.path.relpath(path, _PKG)}:{n.lineno} in {fn.name}"
+                    for n in ast.walk(fn)
+                    if isinstance(n, ast.Call)
+                    and getattr(n.func, "id", getattr(n.func, "attr", None))
+                    in banned - allowed
+                ]
+    assert {"keyed_buckets", "read_buckets", "overwrite_buckets",
+            "_append_and_publish", "_merge_when_once", "_compact_once",
+            "_maybe_auto_compact", "_maybe_auto_bloom"} <= set(takers), takers
+    assert _ON_DISK_CHECKS <= set(takers), takers
+    assert offenders == [], offenders
+
+
+def test_one_optimistic_concurrency_loop_in_the_package():
+    """Only ``TableStore._retry_base_conflicts`` catches
+    ``BaseVersionConflict``: every keyed write, the column-mapping
+    verbs and an append's publish retry re-derive through it."""
+    catchers = []
+    for d, _, fs in os.walk(_PKG):
+        for f in fs:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(d, f)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for fn in ast.walk(tree):
+                if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                catchers += [
+                    f"{os.path.relpath(path, _PKG)} in {fn.name}"
+                    for h in ast.walk(fn)
+                    if isinstance(h, ast.ExceptHandler)
+                    and h.type is not None
+                    and "BaseVersionConflict" in ast.unparse(h.type)
+                ]
+    assert catchers == ["io.py in _retry_base_conflicts"], catchers

@@ -261,7 +261,8 @@ def test_python_xxhash64_matches_spark(spark):
     kb = {
         (r["id"], r["name"]): r["_kb"]
         for r in base.withColumn(
-            "_kb", store._kb_expr("t", ["id", "name"], 7)
+            "_kb",
+            store._kb_expr(["id", "name"], 7, store._snapshot("t").key_types),
         ).collect()
     }
     for (i, nm), b in kb.items():
