@@ -24,6 +24,7 @@ import os
 import shutil
 import time
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -378,36 +379,91 @@ def logical_fields(doc: dict):
     return out
 
 
+def _parse_schema(schema_json: str | None):
+    """A recorded StructType JSON parsed, or None when there is none or
+    it does not parse."""
+    from pyspark.sql.types import StructType
+
+    if schema_json is None:
+        return None
+    try:
+        return StructType.fromJson(json.loads(schema_json))
+    except (ValueError, TypeError, KeyError):
+        return None
+
+
+_INTEGRAL = ("tinyint", "smallint", "int", "bigint")
+
+
+def _holds(wide, narrow) -> bool:
+    """Does type ``wide`` hold every value of type ``narrow`` (the
+    widenings a parquet read of old files also performs)?"""
+    from pyspark.sql.types import DecimalType
+
+    w, n = wide.simpleString(), narrow.simpleString()
+    if w == n:
+        return True
+    if w in _INTEGRAL and n in _INTEGRAL:
+        return _INTEGRAL.index(n) < _INTEGRAL.index(w)
+    if w == "double":
+        return n in ("float", "tinyint", "smallint", "int")
+    if isinstance(wide, DecimalType) and isinstance(narrow, DecimalType):
+        return (
+            wide.scale >= narrow.scale
+            and wide.precision - wide.scale >= narrow.precision - narrow.scale
+        )
+    return False
+
+
 def _widened_schema_json(stored: str | None, staged: str) -> str:
     """``stored`` widened by ``staged`` (both StructType JSON): stored
-    order first, each field taking the staged type when the staged
-    schema carries it, then the staged-only fields. Widen-only: a batch
-    narrower than the table (legal for appends and bucket-sliced
-    merges) must not shrink the column set — neither the manifest's,
-    which reads would then lose the missing columns with, nor the
-    meta's, which constraint checks complete a narrow batch with
-    (code-review r7)."""
-    from pyspark.sql.types import StructType
+    order first, then the staged-only fields. A column both carry
+    takes the wider of its two types, so a batch narrower than the
+    table neither narrows a column (reads of the table's older files
+    under the narrow type fail) nor shrinks the column set — neither
+    the manifest's, which reads would then lose the missing columns
+    with, nor the meta's, which constraint checks complete a narrow
+    batch with (code-review r7). Raises ValueError when neither of two
+    scalar types holds the other (a string batch into a long column);
+    nested types take the staged type."""
+    from pyspark.sql.types import ArrayType, MapType, StructType
 
     if not stored:
         return staged
     new = StructType.fromJson(json.loads(staged))
     by_name = {f.name: f for f in new.fields}
     old = StructType.fromJson(json.loads(stored)).fields
+    nested = (ArrayType, MapType, StructType)
+    out = []
+    for f in old:
+        n = by_name.get(f.name)
+        if n is None:
+            out.append(f)
+        elif (
+            _holds(n.dataType, f.dataType)
+            or isinstance(f.dataType, nested)
+            or isinstance(n.dataType, nested)
+        ):
+            out.append(n)  # the same type, a wider one, or nested
+        elif _holds(f.dataType, n.dataType):
+            out.append(f)  # narrower in the batch: the table's type
+        else:
+            raise ValueError(
+                f"column {f.name!r} is {f.dataType.simpleString()} in the "
+                f"table and {n.dataType.simpleString()} in the batch: "
+                "neither type holds the other"
+            )
     have = {f.name for f in old}
-    return StructType(
-        [by_name.get(f.name, f) for f in old]
-        + [f for f in new.fields if f.name not in have]
-    ).json()
+    return StructType(out + [f for f in new.fields if f.name not in have]).json()
 
 
 @dataclass(frozen=True)
 class _Snapshot:
-    """One verb attempt's view of a table: its meta and, when a
-    manifest describes the table, the base version and that manifest.
-    Read once (``TableStore._snapshot`` / ``_pin_base``) and handed to
-    every helper, so two helpers cannot see two states of the table
-    when the meta changes in the middle of a verb. It is never the
+    """One verb's (or one write attempt's) view of a table: its meta
+    and, when a manifest describes the table, a version and that
+    manifest. Read once (``TableStore._snapshot`` / ``_pin_base``) and
+    handed to every helper, so two helpers cannot see two states of the
+    table when it changes in the middle of a verb. It is never the
     safety check: the publish re-reads the base manifest on disk and
     compares it (``_write_manifest_file``), so a stale snapshot
     surfaces as BaseVersionConflict and the retry takes a new one.
@@ -418,15 +474,70 @@ class _Snapshot:
     version: int | None = None
     doc: dict | None = None
 
-    # derived views: the manifest's uid, files, schema JSON and column
-    # map; the meta's key spec, key types and versioned flag
+    # derived views: the manifest's uid, files, stats, txn map, schema
+    # JSON and column map; the meta's key spec, key types and
+    # versioned flag
     uid = property(lambda self: (self.doc or {}).get("uid"))
     files = property(lambda self: self.doc["files"])
+    stats = property(lambda self: (self.doc or {}).get("stats", {}))
+    txn = property(lambda self: (self.doc or {}).get("txn", {}))
     schema_json = property(lambda self: (self.doc or {}).get("schema"))
     colmap = property(lambda self: (self.doc or {}).get("colmap"))
     spec = property(lambda self: TableStore._keyed_spec_of(self.meta))
     key_types = property(lambda self: self.meta.get("key_types"))
     versioned = property(lambda self: bool(self.meta.get("versioned")))
+
+    @cached_property
+    def schema(self):
+        """The recorded schema (physical names, ``_kb`` included) as a
+        StructType, or None when the manifest records none."""
+        return _parse_schema(self.schema_json)
+
+    def dtype(self, phys: str) -> str | None:
+        """The recorded type of physical column ``phys``, or None."""
+        if self.schema is None or phys not in self.schema.names:
+            return None
+        return self.schema[phys].dataType.simpleString()
+
+    def physical(self, col: str) -> str:
+        """The physical name of logical column ``col`` under the column
+        map. ValueError for a dropped column: its carried-forward stats
+        and retained data are artifacts the logical table no longer
+        has. A renamed-then-dropped column has its renames entry popped
+        by drop_column, so only ``dropped_logical`` still knows it
+        (ADVICE r13)."""
+        cm = self.colmap or {}
+        phys = cm.get("renames", {}).get(col, col)
+        if phys in cm.get("dropped", []) or col in cm.get("dropped_logical", []):
+            raise ValueError(
+                f"{self.name}: no column {col!r} (dropped from the "
+                "logical schema)"
+            )
+        return phys
+
+    def require_manifest(self, verb: str, versioned: bool = True) -> "_Snapshot":
+        """This snapshot, when a published manifest describes it (and
+        the table is versioned, for ``versioned=True``); ValueError
+        otherwise. A read never publishes the manifest a keyed table
+        lacks in overwrite_keyed's reset window: the next write does."""
+        if versioned and not self.versioned:
+            raise ValueError(
+                f"{self.name}: {verb} needs a versioned table "
+                "(overwrite_keyed(..., versioned=True)): the stats and "
+                "indexes live in and beside its snapshot manifests"
+            )
+        if self.version is None:
+            if not TableStore._manifest_backed(self.meta):
+                raise ValueError(
+                    f"{self.name}: {verb} needs a keyed table "
+                    "(overwrite_keyed): a snapshot manifest names its files"
+                )
+            raise ValueError(
+                f"{self.name}: {verb} needs a published snapshot manifest "
+                "(table is mid-heal); retry after the next write "
+                "republishes"
+            )
+        return self
 
 
 def _acquire_claim(path: str, stale_s: float) -> str | None:
@@ -1110,11 +1221,7 @@ class TableStore:
         # skipping, read_where): carried forward for already-covered
         # files (immutable), footer-read only for new ones
         prev_stats = dict(seed_stats or {})
-        if base is not None:
-            prev_stats.update(base.doc.get("stats", {}))
-        else:
-            _v, latest = self._latest_doc(name)
-            prev_stats.update((latest or {}).get("stats", {}))
+        prev_stats.update((base or self._snapshot(name)).stats)
         doc["stats"] = self._collect_stats(name, doc["files"], prev_stats)
         if schema_json is not None:
             doc["schema"] = schema_json
@@ -1433,17 +1540,8 @@ class TableStore:
         This is the stats-only specialized verb; ``read(name,
         where=...)`` (r13) is the general entry point that also
         consults bloom sidecars and bucket routing per conjunct."""
-        meta = read_meta(self.root, name)
-        if not meta.get("versioned"):
-            raise ValueError(
-                f"{name}: read_where needs a versioned table (the stats "
-                "live in the snapshot manifests)"
-            )
         where = self._normalize_ranges(col, between, ranges)
-        v = self._ensure_latest(name) if version is None else version
-        return self._read_planned(
-            name, where, v, self._manifest_doc(name, v), meta
-        )
+        return self.read(name, version=version, where=where)
 
     @staticmethod
     def _normalize_ranges(col, between, ranges) -> dict:
@@ -1477,7 +1575,9 @@ class TableStore:
             raise ValueError(f"between must be (lo, hi), got {between!r}")
         return {col: slice(*between)}
 
-    def _pruned_files(self, doc: dict, col: str, between: tuple) -> list[str]:
+    def _pruned_files(
+        self, snap: _Snapshot, col: str, between: tuple
+    ) -> list[str]:
         """The ONE stats pruning decision (plan_read's, for ranges and
         equalities, so the observability counters can never drift
         from what the plan actually opens — the _key_match lesson):
@@ -1489,10 +1589,10 @@ class TableStore:
         stats say the column is ALL NULL is skipped regardless of the
         bounds (r13): BETWEEN/equality semantics never match NULL, so
         no row in it can pass the exact filter."""
-        stats = doc.get("stats", {})
+        stats = snap.stats
         lo, hi = self._stat_val(between[0]), self._stat_val(between[1])
         keep = []
-        for f in doc["files"]:
+        for f in snap.files:
             s = stats.get(f, {}).get(col)
             if s is None:
                 keep.append(f)
@@ -1525,7 +1625,7 @@ class TableStore:
         )
 
     def _null_pruned_files(
-        self, doc: dict, col: str, want_null: bool
+        self, snap: _Snapshot, col: str, want_null: bool
     ) -> list[str]:
         """Kept files for an IS_NULL (``want_null=True``) or NOT_NULL
         probe, from the manifests' null-count stats: an IS_NULL probe
@@ -1535,9 +1635,9 @@ class TableStore:
         (including files that predate a late-added column — their rows
         read back as NULL under schema merge, so they MUST stay in an
         IS_NULL scan) always keep."""
-        stats = doc.get("stats", {})
+        stats = snap.stats
         keep = []
-        for f in doc["files"]:
+        for f in snap.files:
             s = stats.get(f, {}).get(col)
             if s is None or len(s) < 4 or s[2] is None or s[3] is None:
                 keep.append(f)
@@ -1570,7 +1670,7 @@ class TableStore:
         return None
 
     def _prefix_pruned_files(
-        self, doc: dict, col: str, p: str
+        self, snap: _Snapshot, col: str, p: str
     ) -> list[str]:
         """Kept files for a Prefix probe: a string starting with ``p``
         satisfies ``p <= x < _next_prefix(p)``, so a file is skipped
@@ -1579,10 +1679,10 @@ class TableStore:
         (the column is not a string at this file — schema evolution)
         and absent entries keep; all-NULL files skip (startswith never
         matches NULL)."""
-        stats = doc.get("stats", {})
+        stats = snap.stats
         hi = self._next_prefix(p)
         keep = []
-        for f in doc["files"]:
+        for f in snap.files:
             s = stats.get(f, {}).get(col)
             if s is None:
                 keep.append(f)
@@ -1640,15 +1740,9 @@ class TableStore:
             )
         if agg != "count" and col is None:
             raise ValueError(f"{agg} needs col=")
-        if not self.is_versioned(name):
-            raise ValueError(
-                f"{name}: stats_scalar needs a versioned table (the "
-                "stats live in the snapshot manifests)"
-            )
-        v = self._ensure_latest(name) if version is None else version
-        doc = self._manifest_doc(name, v)
-        stats = doc.get("stats", {})
-        files = doc["files"]
+        snap = self._snapshot(name, version).require_manifest("stats_scalar")
+        stats = snap.stats
+        files = snap.files
         if agg == "count":
             total = 0
             for f in files:
@@ -1668,21 +1762,9 @@ class TableStore:
                     )
                 total += rows
             return total
-        cm = doc.get("colmap") or {}
-        phys = cm.get("renames", {}).get(col, col)
-        # a renamed-then-dropped column has its renames entry popped by
-        # drop_column, so the logical name resolves to itself and only
-        # dropped_logical still knows it (ADVICE r13)
-        if phys in set(cm.get("dropped", [])) or col in set(
-            cm.get("dropped_logical", [])
-        ):
-            # carried-forward physical stats survive a drop_column,
-            # but the table no longer logically HAS the column — the
-            # scan-based aggregate would raise, so refuse (review)
-            raise ValueError(
-                f"{name}: no column {col!r} (dropped from the logical "
-                "schema) — stats for it are retention artifacts"
-            )
+        # carried-forward physical stats survive a drop_column, but the
+        # scan-based aggregate would raise on the column, so refuse
+        phys = snap.physical(col)
         if agg == "count_col":
             total = 0
             for f in files:
@@ -1695,7 +1777,7 @@ class TableStore:
                 total += s[3] - s[2]
             return total
         # min / max
-        dtype = self._live_dtype(doc, phys)
+        dtype = snap.dtype(phys)
         if dtype is None:
             # no manifest-recorded schema (heal-window publish, or a
             # column the snapshot never carried): without the type we
@@ -1773,40 +1855,19 @@ class TableStore:
                 "count a disjunction as branch counts minus overlaps, "
                 "or scan read(where=[...])"
             )
-        meta = read_meta(self.root, name)
-        if not meta.get("versioned"):
-            raise ValueError(
-                f"{name}: count_where needs a versioned table (the "
-                "stats live in the snapshot manifests)"
-            )
-        v = self._ensure_latest(name) if version is None else version
-        doc = self._manifest_doc(name, v)
-        stats = doc.get("stats", {})
-        cm = doc.get("colmap") or {}
-        cm_renames = cm.get("renames", {})
-        dropped = set(cm.get("dropped", []))
-        dropped_logical = set(cm.get("dropped_logical", []))
-        bad = [
-            c for c in where
-            if cm_renames.get(c, c) in dropped or c in dropped_logical
-        ]
-        if bad:
-            # the boundary-scan path would raise on these anyway; the
-            # all-proven path must not silently answer from retention
-            # artifacts (review)
-            raise ValueError(
-                f"{name}: no column(s) {bad} (dropped from the "
-                "logical schema)"
-            )
-        keep_set, _cols = self._plan_branch(name, where, v, doc, meta)
+        snap = self._snapshot(name, version).require_manifest("count_where")
+        stats = snap.stats
+        # a dropped column raises here: the all-proven path must not
+        # answer from retention artifacts (review)
         specs = [
-            (cm_renames.get(c, c), *self._classify_spec(c, spec))
+            (snap.physical(c), *self._classify_spec(c, spec))
             for c, spec in where.items()
         ]
+        keep_set, _cols = self._plan_branch(snap, where)
         from_stats = 0
         n_full = 0
         boundary: list[str] = []
-        for f in doc["files"]:
+        for f in snap.files:
             if f not in keep_set:
                 continue
             fs = stats.get(f, {})
@@ -1829,15 +1890,17 @@ class TableStore:
         n = from_stats
         if boundary:
             n += (
-                self._scan_files(name, v, doc, boundary)
+                self._to_logical(
+                    self._read_manifest_df(snap, boundary), snap.colmap
+                )
                 .filter(self._branch_expr(where))
                 .count()
             )
         if not with_report:
             return n
         return n, {
-            "total_files": len(doc["files"]),
-            "pruned": len(doc["files"]) - len(keep_set),
+            "total_files": len(snap.files),
+            "pruned": len(snap.files) - len(keep_set),
             "stats_counted": n_full,
             "scanned": len(boundary),
             "rows_from_stats": from_stats,
@@ -1921,7 +1984,7 @@ class TableStore:
         )
         return len(keep), report["total_files"]
 
-    def _warn_if_stats_inert(self, name: str, doc: dict, col: str) -> None:
+    def _warn_if_stats_inert(self, snap: _Snapshot, col: str) -> None:
         """LOUD no-stats signal (VERDICT r8 item 3 'what's wrong'):
         when a requested prune column carries NO [min, max] stat in
         ANY of the snapshot's files, data skipping on it is silently
@@ -1934,10 +1997,10 @@ class TableStore:
         mean 'cannot prune', never 'no rows'), so this warns and
         counts — ``prune_stat_misses`` is the observability counter —
         instead of raising."""
-        files = doc.get("files", [])
+        files = snap.files
         if not files:
             return
-        stats = doc.get("stats", {})
+        stats = snap.stats
         # a [None, None, nulls, rows] extension entry carries NO
         # usable min/max — range/prefix pruning on it is just as
         # inert as no entry at all, so it must not silence the
@@ -1955,10 +2018,10 @@ class TableStore:
             return
         import warnings
 
-        key = (name, col)
+        key = (snap.name, col)
         self.prune_stat_misses[key] = self.prune_stat_misses.get(key, 0) + 1
         warnings.warn(
-            f"{name}: no min/max stats recorded for prune column "
+            f"{snap.name}: no min/max stats recorded for prune column "
             f"{col!r} in any of {len(files)} files — data skipping is "
             "INERT (every file scans). Likely cause: the files were "
             "written without column statistics for this type (e.g. a "
@@ -1985,30 +2048,21 @@ class TableStore:
         compact skips healthy buckets and would be a no-op on a
         well-maintained table). Kilobyte manifest read, zero Spark
         jobs."""
-        v = self._ensure_latest(name) if version is None else version
-        doc = self._manifest_doc(name, v)
-        stats = doc.get("stats", {})
-        files = doc["files"]
-        cm = doc.get("colmap") or {}
-        renames = cm.get("renames", {})
+        snap = self._snapshot(name, version).require_manifest(
+            "stats_coverage", versioned=False
+        )
+        stats = snap.stats
+        files = snap.files
+        cm = snap.colmap or {}
         dropped = set(cm.get("dropped", []))
-        to_logical = {p: l for l, p in renames.items()}
+        to_logical = {p: l for l, p in cm.get("renames", {}).items()}
         out: dict = {}
         # schema-known columns first, so never-covered ones show 0s
-        schema_json = doc.get("schema")
-        if schema_json is not None:
-            from pyspark.sql.types import StructType
-
-            try:
-                for fld in StructType.fromJson(
-                    json.loads(schema_json)
-                ).fields:
-                    if fld.name != "_kb" and fld.name not in dropped:
-                        out[to_logical.get(fld.name, fld.name)] = {
-                            "minmax": 0, "nulls": 0, "total": len(files)
-                        }
-            except (ValueError, TypeError, KeyError):
-                pass
+        for phys in snap.schema.names if snap.schema is not None else []:
+            if phys != "_kb" and phys not in dropped:
+                out[to_logical.get(phys, phys)] = {
+                    "minmax": 0, "nulls": 0, "total": len(files)
+                }
         for f in files:
             for phys, s in stats.get(f, {}).items():
                 if phys in dropped:
@@ -2023,9 +2077,7 @@ class TableStore:
                     ent["nulls"] += 1
         return out
 
-    def _warn_if_null_stats_inert(
-        self, name: str, doc: dict, col: str
-    ) -> None:
+    def _warn_if_null_stats_inert(self, snap: _Snapshot, col: str) -> None:
         """_warn_if_stats_inert's twin for IS_NULL/NOT_NULL probes:
         those prune on the NULL-COUNT extension (4-element entries,
         r13), which legacy manifests' carried-forward 2-element
@@ -2035,10 +2087,10 @@ class TableStore:
         (``compact(name, max_files_per_bucket=0)`` — the default
         compact skips healthy buckets) republishes with the extended
         entries."""
-        files = doc.get("files", [])
+        files = snap.files
         if not files:
             return
-        stats = doc.get("stats", {})
+        stats = snap.stats
         if any(
             (s := stats.get(f, {}).get(col)) is not None
             and len(s) >= 4
@@ -2051,10 +2103,10 @@ class TableStore:
         # distinct key from the min/max-inert counter: conflating the
         # two made "why is my probe inert" ambiguous and double-counted
         # probes hitting both warnings (ADVICE r13)
-        key = (name, col, "nulls")
+        key = (snap.name, col, "nulls")
         self.prune_stat_misses[key] = self.prune_stat_misses.get(key, 0) + 1
         warnings.warn(
-            f"{name}: no null-count stats recorded for prune column "
+            f"{snap.name}: no null-count stats recorded for prune column "
             f"{col!r} in any of {len(files)} files — IS_NULL/NOT_NULL "
             "skipping is INERT (every file scans). Likely cause: the "
             "manifest carries pre-r13 stats entries; rewrite the files "
@@ -2165,11 +2217,6 @@ class TableStore:
             .applyInPandas(or_merge, "file string, bitmap binary")
         )
 
-    def _bloom_resolve(self, name: str, col: str, doc: dict) -> str:
-        """Physical column name for an index request (stats and files
-        are keyed physically; the index dir likewise)."""
-        return (doc.get("colmap") or {}).get("renames", {}).get(col, col)
-
     def _bloom_claim(self, name: str, phys: str, body):
         """Run ``body()`` as a sidecar MAINTENANCE verb, serialized per
         (table, column) behind the store's create-exclusive heartbeated
@@ -2188,6 +2235,49 @@ class TableStore:
             claim, lambda: None, body,
             f"{name}.{phys}: bloom index maintenance",
         )
+
+    @staticmethod
+    def _bloom_publish(final: str, stage):
+        """Publish a sidecar index directory failure-atomically — the
+        one swap of build and compact — and return what ``stage``
+        returned: ``stage(tmp)`` writes the new index into a private
+        ``tmp`` dir, the live index (if any) renames aside, ``tmp``
+        renames in, and a failed second rename restores the live index
+        before the error propagates (code-review r12), so a failure
+        anywhere leaves the old index serving probes. A probe racing
+        the two renames finds no index, which only costs it its
+        pruning."""
+        import uuid
+
+        tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
+        old = f"{final}.old-{uuid.uuid4().hex[:8]}"
+        try:
+            staged = stage(tmp)
+            live = os.path.isdir(final)
+            if live:
+                _fs.rename(final, old)
+            try:
+                _fs.rename(tmp, final)
+            except OSError:
+                if live:
+                    _fs.rename(old, final)
+                raise
+            if live:
+                shutil.rmtree(old, ignore_errors=True)
+            return staged
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+
+    @staticmethod
+    def _bloom_meta_of(bdir: str) -> dict | None:
+        """The one reader of a sidecar's ``meta.json``: the dict, or
+        None when no index is published at ``bdir``. An unreadable or
+        malformed file raises (OSError / ValueError)."""
+        try:
+            with open(os.path.join(bdir, "meta.json")) as fh:
+                return json.load(fh)
+        except FileNotFoundError:
+            return None
 
     def build_bloom_index(
         self,
@@ -2214,23 +2304,18 @@ class TableStore:
         per-file cardinality (for element indexes: distinct ELEMENTS
         per file), not the table's.
 
-        The index publishes atomically (tmp dir + rename); a probe
-        that races the rebuild sees either the old index or none, both
-        correct (no index = no pruning). File immutability makes
-        coverage permanent: a bitmap stays valid for its file forever,
-        and files written later are caught up INCREMENTALLY by
+        The index publishes failure-atomically (``_bloom_publish``); a
+        probe that races the rebuild sees the old index, the new one or
+        none, all correct (no index = no pruning). File immutability
+        makes coverage permanent: a bitmap stays valid for its file
+        forever, and files written later are caught up INCREMENTALLY by
         ``update_bloom_index`` — the nightly maintenance verb — which
         scans only the uncovered files."""
-        import uuid
-
-        if not self.is_versioned(name):
-            raise ValueError(
-                f"{name}: build_bloom_index needs a versioned table"
-            )
-        v = self._ensure_latest(name) if version is None else version
-        doc = self._manifest_doc(name, v)
-        phys = self._bloom_resolve(name, col, doc)
-        df = self._read_manifest_df(name, v, doc=doc)
+        snap = self._snapshot(name, version).require_manifest(
+            "build_bloom_index"
+        )
+        phys = snap.physical(col)
+        df = self._read_manifest_df(snap)
         if phys not in df.columns:
             raise ValueError(
                 f"{name}: no column {col!r} (physical {phys!r}) to index"
@@ -2258,36 +2343,32 @@ class TableStore:
         merged = self._bloom_bitmaps(
             df, phys, m_bits, k, seed, elements=elements
         )
-        final = self._bloom_dir(name, phys)
-        tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
 
-        def _publish() -> None:
-            try:
-                merged.write.mode("overwrite").parquet(
-                    os.path.join(tmp, "parts", "full.parquet")
+        def _stage(tmp: str) -> None:
+            merged.write.mode("overwrite").parquet(
+                os.path.join(tmp, "parts", "full.parquet")
+            )
+            with open(os.path.join(tmp, "meta.json"), "w") as fh:
+                json.dump(
+                    {
+                        "version": snap.version,
+                        "m_bits": m_bits,
+                        "k": k,
+                        "seed": seed,
+                        "col": col,
+                        "phys": phys,
+                        "dtype": dtype,
+                        "elements": elements,
+                        "n_files": len(snap.files),
+                    },
+                    fh,
                 )
-                with open(os.path.join(tmp, "meta.json"), "w") as fh:
-                    json.dump(
-                        {
-                            "version": v,
-                            "m_bits": m_bits,
-                            "k": k,
-                            "seed": seed,
-                            "col": col,
-                            "phys": phys,
-                            "dtype": dtype,
-                            "elements": elements,
-                            "n_files": len(doc["files"]),
-                        },
-                        fh,
-                    )
-                shutil.rmtree(final, ignore_errors=True)
-                os.rename(tmp, final)
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
 
-        self._bloom_claim(name, phys, _publish)
-        return len(doc["files"])
+        self._bloom_claim(
+            name, phys,
+            lambda: self._bloom_publish(self._bloom_dir(name, phys), _stage),
+        )
+        return len(snap.files)
 
     def update_bloom_index(
         self, name: str, col: str, version: int | None = None
@@ -2311,12 +2392,13 @@ class TableStore:
         recorded sizing instead (ADVICE r12)."""
         import uuid
 
-        v = self._ensure_latest(name) if version is None else version
-        doc = self._manifest_doc(name, v)
-        phys = self._bloom_resolve(name, col, doc)
+        snap = self._snapshot(name, version).require_manifest(
+            "update_bloom_index", versioned=False
+        )
+        phys = snap.physical(col)
         bdir = self._bloom_dir(name, phys)
         meta = self._bloom_meta(name, col, bdir)
-        live_dtype = self._live_dtype(doc, phys)
+        live_dtype = snap.dtype(phys)
         expected = self._bloom_expected_dtype(meta)
         if live_dtype is not None and live_dtype != expected:
             import warnings
@@ -2330,29 +2412,27 @@ class TableStore:
                 RuntimeWarning,
                 stacklevel=2,
             )
-            self.build_bloom_index(
-                name, col, m_bits=meta["m_bits"], k=meta["k"], version=v,
-                elements=bool(meta.get("elements")),
+            return self.build_bloom_index(
+                name, col, m_bits=meta["m_bits"], k=meta["k"],
+                version=snap.version, elements=bool(meta.get("elements")),
             )
-            return len(doc["files"])
 
         def _update() -> int:
             covered = {
                 r["file"] for r in self._bloom_index_df(bdir)
                 .select("file").collect()
             }
-            new = [f for f in doc["files"] if f not in covered]
+            new = [f for f in snap.files if f not in covered]
             if not new:
                 return 0
-            df = self._read_manifest_df(name, v, doc={**doc, "files": new})
             merged = self._bloom_bitmaps(
-                df, phys, meta["m_bits"], meta["k"], meta["seed"],
-                elements=bool(meta.get("elements")),
+                self._read_manifest_df(snap, new), phys, meta["m_bits"],
+                meta["k"], meta["seed"], elements=bool(meta.get("elements")),
             )
             tmp = os.path.join(bdir, f".tmp-{uuid.uuid4().hex[:8]}")
             try:
                 merged.write.mode("overwrite").parquet(tmp)
-                os.rename(
+                _fs.rename(
                     tmp,
                     os.path.join(
                         bdir, "parts", f"inc-{uuid.uuid4().hex[:8]}.parquet"
@@ -2373,7 +2453,6 @@ class TableStore:
         explicitly instead of the misleading 'run build_bloom_index
         first'. The maintenance claim makes the live-race window
         internal; the distinction still matters for crash leftovers."""
-        meta_p = os.path.join(bdir, "meta.json")
         parent, leaf = os.path.dirname(bdir), os.path.basename(bdir)
 
         def _swap_sibling() -> bool:
@@ -2384,16 +2463,13 @@ class TableStore:
                 for e in os.listdir(parent)
             )
 
-        for attempt in range(3):
-            if os.path.isfile(meta_p):
-                with open(meta_p) as fh:
-                    return json.load(fh)
-            if not _swap_sibling():
+        for attempt in range(4):
+            meta = self._bloom_meta_of(bdir)
+            if meta is not None:
+                return meta
+            if attempt == 3 or not _swap_sibling():
                 break
             time.sleep(0.1 * (attempt + 1))
-        if os.path.isfile(meta_p):
-            with open(meta_p) as fh:
-                return json.load(fh)
         if _swap_sibling():
             raise RuntimeError(
                 f"{name}: bloom index on {col!r} is MID-SWAP (a "
@@ -2406,25 +2482,6 @@ class TableStore:
             f"{name}: no bloom index on {col!r} — run "
             "build_bloom_index first"
         )
-
-    @staticmethod
-    def _live_dtype(doc: dict, phys: str) -> str | None:
-        """The snapshot's recorded type for a physical column (from
-        the manifest-carried schema JSON — no data/footer reads), or
-        None when the manifest predates schema recording."""
-        schema_json = doc.get("schema")
-        if schema_json is None:
-            return None
-        from pyspark.sql.types import StructType
-
-        try:
-            st = StructType.fromJson(json.loads(schema_json))
-        except (ValueError, TypeError, KeyError):
-            return None
-        for fld in st.fields:
-            if fld.name == phys:
-                return fld.dataType.simpleString()
-        return None
 
     @staticmethod
     def _bloom_expected_dtype(meta: dict) -> str:
@@ -2455,17 +2512,17 @@ class TableStore:
         dropped). This touches only the sidecar — n_files rows — so it
         costs seconds at any table size; ``build_bloom_index`` remains
         the full data-rescanning rebuild (e.g. after changing m_bits).
-        Publishes atomically like the build (tmp dir + rename); a
-        probe racing it sees the old sidecar or the new one, both
-        correct. Maintenance verbs (build/update/compact) are
-        serialized per (table, column) behind the store's heartbeated
-        claim (VERDICT r12 item 5), so an update can no longer land
-        its part in the retiring directory mid-swap and lose it."""
-        import uuid
-
-        v = self._ensure_latest(name)
-        doc = self._manifest_doc(name, v)
-        phys = self._bloom_resolve(name, col, doc)
+        Publishes failure-atomically like the build
+        (``_bloom_publish``); a probe racing it sees the old sidecar,
+        the new one or none, all correct. Maintenance verbs
+        (build/update/compact) are serialized per (table, column)
+        behind the store's heartbeated claim (VERDICT r12 item 5), so
+        an update can no longer land its part in the retiring directory
+        mid-swap and lose it."""
+        snap = self._snapshot(name).require_manifest(
+            "compact_bloom_index", versioned=False
+        )
+        phys = snap.physical(col)
         bdir = self._bloom_dir(name, phys)
 
         def _compact() -> tuple[int, int]:
@@ -2474,16 +2531,15 @@ class TableStore:
             # isin: the list is driver-small either way, but the join
             # keeps the plan sane at large file counts
             live_df = local_frame(
-                self.spark, [(f,) for f in doc["files"]], "file string"
+                self.spark, [(f,) for f in snap.files], "file string"
             )
             idx = self._bloom_index_df(bdir)
             total = idx.count()
             kept = idx.join(
                 F.broadcast(live_df), "file", "left_semi"
             ).dropDuplicates(["file"])
-            final = self._bloom_dir(name, phys)
-            tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
-            try:
+
+            def _stage(tmp: str) -> int:
                 kept.write.mode("overwrite").parquet(
                     os.path.join(tmp, "parts", "full.parquet")
                 )
@@ -2497,20 +2553,9 @@ class TableStore:
                 )
                 with open(os.path.join(tmp, "meta.json"), "w") as fh:
                     json.dump({**meta, "n_files": n_live}, fh)
-                old = f"{final}.old-{uuid.uuid4().hex[:8]}"
-                os.rename(final, old)
-                try:
-                    os.rename(tmp, final)
-                except OSError:
-                    # failure-atomic swap (code-review r12): a failed
-                    # second rename must not strand the index in the
-                    # retiring dir while finally deletes the compacted
-                    # copy — restore the original and re-raise
-                    os.rename(old, final)
-                    raise
-                shutil.rmtree(old, ignore_errors=True)
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
+                return n_live
+
+            n_live = self._bloom_publish(bdir, _stage)
             return n_live, total - n_live
 
         return self._bloom_claim(name, phys, _compact)
@@ -2529,25 +2574,24 @@ class TableStore:
         means probes are degrading to full scans until a rebuild
         (ADVICE r12 drift). Cost: one kilobyte manifest read + one
         n_files-row sidecar scan shipping only file NAMES."""
-        v = self._ensure_latest(name) if version is None else version
-        doc = self._manifest_doc(name, v)
-        phys = self._bloom_resolve(name, col, doc)
-        live = set(doc["files"])
+        snap = self._snapshot(name, version).require_manifest(
+            "bloom_coverage", versioned=False
+        )
+        phys = snap.physical(col)
+        live = set(snap.files)
         bdir = self._bloom_dir(name, phys)
-        meta_p = os.path.join(bdir, "meta.json")
-        if not os.path.isfile(meta_p):
+        meta = self._bloom_meta_of(bdir)
+        if meta is None:
             return {
                 "indexed": False, "n_files": len(live),
                 "covered": 0, "uncovered": len(live), "stale_rows": 0,
             }
-        with open(meta_p) as fh:
-            meta = json.load(fh)
         covered_files = {
             r["file"]
             for r in self._bloom_index_df(bdir).select("file")
             .dropDuplicates(["file"]).collect()
         }
-        live_dtype = self._live_dtype(doc, phys)
+        live_dtype = snap.dtype(phys)
         return {
             "indexed": True,
             "n_files": len(live),
@@ -2672,7 +2716,7 @@ class TableStore:
 
     def bloom_kept_files(
         self, name: str, col: str, value, version: int | None = None,
-        doc: dict | None = None, elements: bool | None = None,
+        elements: bool | None = None,
     ) -> tuple[list[str], int]:
         """(files an equality probe must open, total live files) — the
         pruning decision read_point plans with, exposed for
@@ -2694,30 +2738,38 @@ class TableStore:
         pruning LOUDLY — testing tokens against whole-array bitmaps
         (or vice versa) would be a silent false negative. ``None``
         (legacy/observability callers) accepts whichever mode the
-        sidecar holds."""
+        sidecar holds. Probes one snapshot (the latest, or
+        ``version``) through ``_bloom_probe``, the planner's probe."""
+        values = self._bloom_values(value)
+        snap = self._snapshot(name, version).require_manifest(
+            "bloom_kept_files", versioned=False
+        )
+        kept = self._bloom_probe(snap, col, values, elements)
+        return (list(snap.files) if kept is None else kept), len(snap.files)
+
+    def _bloom_probe(
+        self, snap: _Snapshot, col: str, values: list, elements: bool | None
+    ) -> list[str] | None:
+        """The bloom pruning decision on one snapshot (bloom_kept_files
+        and the planner's): the files a probe of ``values`` must open,
+        or None when no index on ``col`` is published."""
         import numpy as np
         import pandas as pd
 
-        values = self._bloom_values(value)
-        v = self._ensure_latest(name) if version is None else version
-        if doc is None:
-            doc = self._manifest_doc(name, v)
-        phys = self._bloom_resolve(name, col, doc)
-        files = doc["files"]
+        name, files = snap.name, snap.files
+        phys = snap.physical(col)
         bdir = self._bloom_dir(name, phys)
-        meta_p = os.path.join(bdir, "meta.json")
-        if not os.path.isfile(meta_p):
-            return list(files), len(files)
         try:
-            with open(meta_p) as fh:
-                meta = json.load(fh)
+            meta = self._bloom_meta_of(bdir)
         except (OSError, ValueError) as e:
-            # the sidecar vanished or is mid-swap under this probe
-            # (compact_bloom_index race): degrade to no pruning —
-            # LOUDLY (ADVICE r12: a permanently corrupt meta.json must
-            # not read as pruning-working-slowly forever)
+            # the sidecar is mid-swap under this probe or corrupt:
+            # degrade to no pruning — LOUDLY (ADVICE r12: a permanently
+            # corrupt meta.json must not read as pruning-working-slowly
+            # forever)
             self._bloom_degrade_warn(name, col, f"meta.json unreadable: {e}")
-            return list(files), len(files)
+            return list(files)
+        if meta is None:
+            return None
         if elements is not None and bool(meta.get("elements")) != elements:
             self._bloom_degrade_warn(
                 name, col,
@@ -2725,8 +2777,8 @@ class TableStore:
                 f"not serve a {'membership' if elements else 'equality'} "
                 "probe — rebuild with the matching elements= flag",
             )
-            return list(files), len(files)
-        live_dtype = self._live_dtype(doc, phys)
+            return list(files)
+        live_dtype = snap.dtype(phys)
         expected = self._bloom_expected_dtype(meta)
         if live_dtype is not None and live_dtype != expected:
             # probe-side safety net for the ADVICE r12 false-negative
@@ -2741,7 +2793,7 @@ class TableStore:
                 f"{live_dtype!r} — rebuild via update_bloom_index/"
                 "build_bloom_index",
             )
-            return list(files), len(files)
+            return list(files)
         m_bits, k, seed = meta["m_bits"], meta["k"], meta["seed"]
         # r15 (optimization, guide §1.2): a DRIVER fast path for small
         # sidecars. The distributed probe below pays one Spark job +
@@ -2759,7 +2811,7 @@ class TableStore:
             bdir, meta, values, files
         )
         if kept_fast is not None:
-            return kept_fast, len(files)
+            return kept_fast
         # probe positions from the SAME JVM expression as the build,
         # with each literal cast to the column's recorded type —
         # xxhash64(int 42) != xxhash64(bigint 42)
@@ -2784,7 +2836,7 @@ class TableStore:
             idx = self._bloom_index_df(bdir).withColumn("_pos", probe)
         except Exception as e:  # noqa: BLE001 — parts dir mid-swap/vanished
             self._bloom_degrade_warn(name, col, f"sidecar unreadable: {e}")
-            return list(files), len(files)
+            return list(files)
 
         def probe_test(batches):
             # ONE index scan answers both questions a probe needs —
@@ -2818,7 +2870,7 @@ class TableStore:
             self._bloom_degrade_warn(
                 name, col, f"sidecar scan failed mid-probe: {e}"
             )
-            return list(files), len(files)
+            return list(files)
         for r in collected:
             covered.add(r["file"])
             if r["hit"]:
@@ -2826,7 +2878,7 @@ class TableStore:
         kept = [
             f for f in files if f in hit_files or f not in covered
         ]
-        return kept, len(files)
+        return kept
 
     def read_point(
         self, name: str, col: str, value, version: int | None = None
@@ -2849,14 +2901,11 @@ class TableStore:
         bucket routing for free; ``read(name, where=...)`` is the
         general multi-conjunct entry point."""
         self._bloom_values(value)  # validate probe shape loudly
-        meta = self._planning_meta(name)
-        v = self._ensure_latest(name) if version is None else version
-        doc = self._manifest_doc(name, v)
         spec = (
             list(value) if isinstance(value, (list, tuple, set))
             else value
         )
-        return self._read_planned(name, {col: spec}, v, doc, meta)
+        return self.read(name, version=version, where={col: spec})
 
     def read_point_where(
         self, name: str, eq: dict, version: int | None = None
@@ -2876,14 +2925,11 @@ class TableStore:
         ``read(name, where=...)`` additionally accepts ranges."""
         if not eq:
             raise ValueError("read_point_where needs at least one column")
-        meta = self._planning_meta(name)
-        v = self._ensure_latest(name) if version is None else version
-        doc = self._manifest_doc(name, v)
         where = {
             c: (list(val) if isinstance(val, (list, tuple, set)) else val)
             for c, val in eq.items()
         }
-        return self._read_planned(name, where, v, doc, meta)
+        return self.read(name, version=version, where=where)
 
     # -- unified predicate-driven read planning (VERDICT r12 item 3) ---
     #
@@ -2983,11 +3029,7 @@ class TableStore:
         )
 
     def plan_read(
-        self,
-        name: str,
-        where,
-        version: int | None = None,
-        doc: dict | None = None,
+        self, name: str, where, version: int | None = None
     ) -> tuple[list[str], dict]:
         """THE file-skipping planner. ``where`` is one conjunct dict
         (``{col: scalar | [v, ...] | slice(lo, hi)}`` — AND of the
@@ -3011,30 +3053,17 @@ class TableStore:
         optimization, never a correctness gate: absent stats keep,
         uncovered files keep, loosely-typed key probes skip bucket
         routing, and read() re-applies the exact predicate on the
-        scan."""
-        meta = self._planning_meta(name)
-        v = self._ensure_latest(name) if version is None else version
-        if doc is None:
-            doc = self._manifest_doc(name, v)
-        return self._plan(name, where, v, doc, meta)
+        scan. The plan reads one snapshot of the table (the latest, or
+        ``version``) and never publishes one: a versioned table in
+        overwrite_keyed's reset window raises until a write heals it."""
+        return self._plan(
+            self._snapshot(name, version).require_manifest("where= planning"),
+            where,
+        )
 
-    def _planning_meta(self, name: str) -> dict:
-        """The table's meta, read once for a whole plan; raises when
-        the table is not versioned."""
-        meta = read_meta(self.root, name)
-        if not meta.get("versioned"):
-            raise ValueError(
-                f"{name}: where= planning needs a versioned table (the "
-                "stats and indexes live in/next to snapshot manifests)"
-            )
-        return meta
-
-    def _plan(
-        self, name: str, where, v: int, doc: dict, meta: dict
-    ) -> tuple[list[str], dict]:
-        """plan_read's body over a resolved version and an already-read
-        meta."""
-        files = doc["files"]
+    def _plan(self, snap: _Snapshot, where) -> tuple[list[str], dict]:
+        """plan_read's body over one snapshot."""
+        files = snap.files
         if isinstance(where, (list, tuple)):
             branches = list(where)
             if not branches:
@@ -3049,46 +3078,43 @@ class TableStore:
                         "a disjunctive where is a list of conjunct "
                         f"DICTS ({{col: spec}}), got {type(b).__name__}"
                     )
-                b_keep, b_cols = self._plan_branch(name, b, v, doc, meta)
+                b_keep, b_cols = self._plan_branch(snap, b)
                 keep_set |= b_keep
                 branch_reports.append(
                     {"columns": b_cols, "kept": len(b_keep)}
                 )
             report = {
-                "table": name,
-                "version": v,
+                "table": snap.name,
+                "version": snap.version,
                 "total_files": len(files),
                 "branches": branch_reports,
                 "kept_files": len(keep_set),
             }
             return [f for f in files if f in keep_set], report
-        keep_set, cols = self._plan_branch(name, where, v, doc, meta)
+        keep_set, cols = self._plan_branch(snap, where)
         report = {
-            "table": name,
-            "version": v,
+            "table": snap.name,
+            "version": snap.version,
             "total_files": len(files),
             "columns": cols,
             "kept_files": len(keep_set),
         }
         return [f for f in files if f in keep_set], report
 
-    def _plan_branch(
-        self, name: str, where: dict, v: int, doc: dict, meta: dict
-    ) -> tuple[set, dict]:
+    def _plan_branch(self, snap: _Snapshot, where: dict) -> tuple[set, dict]:
         """One conjunct dict's kept set (intersection across its
         columns) + per-column report — plan_read's branch core."""
         if not where:
             raise ValueError("where must name at least one column")
-        files = doc["files"]
-        cm_renames = (doc.get("colmap") or {}).get("renames", {})
+        files = snap.files
         # bucket routing applies to single-column merge keys (the
         # composite-tuple form stays lookup()'s job: routing needs
         # full key tuples, not independent conjuncts). Safe across
         # version pins: rebucket is a reseed (new incarnation, old
         # manifests retired), so any resolvable version of this table
         # shares the current spec's bucketing.
-        kspec = self._keyed_spec_of(meta)
-        ktypes = meta.get("key_types")
+        kspec = snap.spec
+        ktypes = snap.key_types
         key_phys = key_nb = key_type = None
         if kspec is not None and len(kspec[0]) == 1:
             key_phys, key_nb = kspec[0][0], kspec[1]
@@ -3097,15 +3123,15 @@ class TableStore:
         columns: dict = {}
         for c, spec in where.items():
             kind, payload = self._classify_spec(c, spec)
-            phys = cm_renames.get(c, c)
+            phys = snap.physical(c)
             pruners: dict = {"stats": None, "bloom": None, "bucket": None}
             kept_col = set(files)
             if kind == "range":
                 # the only pruner for a range is stats — warn loudly
                 # if the column has none anywhere (read_where parity)
-                self._warn_if_stats_inert(name, doc, phys)
+                self._warn_if_stats_inert(snap, phys)
                 stats_kept = set(
-                    self._pruned_files(doc, phys, tuple(payload))
+                    self._pruned_files(snap, phys, tuple(payload))
                 )
                 pruners["stats"] = {
                     "kept": len(stats_kept), "total": len(files)
@@ -3114,20 +3140,18 @@ class TableStore:
             elif kind == "prefix":
                 # prefix probes are range probes over [p, next(p)) —
                 # stats-only, same inert warning
-                self._warn_if_stats_inert(name, doc, phys)
+                self._warn_if_stats_inert(snap, phys)
                 stats_kept = set(
-                    self._prefix_pruned_files(doc, phys, payload[0])
+                    self._prefix_pruned_files(snap, phys, payload[0])
                 )
                 pruners["stats"] = {
                     "kept": len(stats_kept), "total": len(files)
                 }
                 kept_col &= stats_kept
             elif kind in ("isnull", "notnull"):
-                self._warn_if_null_stats_inert(name, doc, phys)
+                self._warn_if_null_stats_inert(snap, phys)
                 stats_kept = set(
-                    self._null_pruned_files(
-                        doc, phys, kind == "isnull"
-                    )
+                    self._null_pruned_files(snap, phys, kind == "isnull")
                 )
                 pruners["stats"] = {
                     "kept": len(stats_kept), "total": len(files)
@@ -3137,14 +3161,8 @@ class TableStore:
                 # array membership: the ELEMENT bloom index is the
                 # only pruner (arrays carry no top-level min/max
                 # stats, and buckets hash keys, not elements)
-                if os.path.isfile(
-                    os.path.join(self._bloom_dir(name, phys), "meta.json")
-                ):
-                    bloom_kept, _total = self.bloom_kept_files(
-                        name, c,
-                        payload if len(payload) > 1 else payload[0],
-                        version=v, doc=doc, elements=True,
-                    )
+                bloom_kept = self._bloom_probe(snap, c, payload, True)
+                if bloom_kept is not None:
                     pruners["bloom"] = {
                         "kept": len(bloom_kept), "total": len(files)
                     }
@@ -3153,20 +3171,14 @@ class TableStore:
                 stats_kept: set = set()
                 for val in payload:
                     stats_kept |= set(
-                        self._pruned_files(doc, phys, (val, val))
+                        self._pruned_files(snap, phys, (val, val))
                     )
                 pruners["stats"] = {
                     "kept": len(stats_kept), "total": len(files)
                 }
                 kept_col &= stats_kept
-                if os.path.isfile(
-                    os.path.join(self._bloom_dir(name, phys), "meta.json")
-                ):
-                    bloom_kept, _total = self.bloom_kept_files(
-                        name, c,
-                        payload if kind == "in" else payload[0],
-                        version=v, doc=doc, elements=False,
-                    )
+                bloom_kept = self._bloom_probe(snap, c, payload, False)
+                if bloom_kept is not None:
                     pruners["bloom"] = {
                         "kept": len(bloom_kept), "total": len(files)
                     }
@@ -3203,8 +3215,7 @@ class TableStore:
             keys, n_b = kspec
             if ktypes and len(ktypes) == len(keys):
                 phys_specs = {
-                    cm_renames.get(c, c): spec
-                    for c, spec in where.items()
+                    snap.physical(c): spec for c, spec in where.items()
                 }
                 vals_per_key = []
                 for k in keys:
@@ -3280,15 +3291,14 @@ class TableStore:
             expr = e if expr is None else expr & e
         return expr
 
-    def _read_planned(
-        self, name: str, where, version: int, doc: dict, meta: dict
-    ) -> DataFrame:
-        """read(where=...)'s body: plan the pruned scan, then apply
-        the EXACT predicate on it (correctness never rides pruning).
-        A dict filters as an AND chain; a list of dicts as the OR of
-        its branches' AND chains (matching plan_read's union)."""
-        keep, _report = self._plan(name, where, version, doc, meta)
-        out = self._scan_files(name, version, doc, keep)
+    def _read_planned(self, snap: _Snapshot, where) -> DataFrame:
+        """read(where=...)'s body: plan the pruned scan of ``snap``,
+        then apply the EXACT predicate on it (correctness never rides
+        pruning). A dict filters as an AND chain; a list of dicts as
+        the OR of its branches' AND chains (matching plan_read's
+        union)."""
+        keep, _report = self._plan(snap, where)
+        out = self._to_logical(self._read_manifest_df(snap, keep), snap.colmap)
         if isinstance(where, (list, tuple)):
             expr = None
             for b in where:
@@ -3297,29 +3307,11 @@ class TableStore:
             return out.filter(expr)
         return out.filter(self._branch_expr(where))
 
-    def _scan_files(
-        self, name: str, version: int, doc: dict, keep: list[str]
-    ) -> DataFrame:
-        """Plan a logical-schema scan over a pruned subset of a
-        snapshot's files (shared by _read_planned and count_where), under
-        the manifest-recorded schema like ``_read_manifest_df``: no
-        footer job, and a late-added column stays in the frame even
-        when pruning dropped every file carrying it. Translates
-        physical → logical names and drops the bucket column."""
-        if keep:
-            out = self._read_manifest_df(name, version, doc={**doc, "files": keep})
-        else:
-            out = self._read_manifest_df(name, version, doc=doc).limit(0)
-        return self._to_logical(out, doc.get("colmap")).drop("_kb")
-
     def last_txn(self, name: str, app_id: str) -> int | None:
         """The highest transactional write version applied for
         ``app_id`` (recorded by upsert_txn / txn= writes; carried
         forward across every publish incl. compaction), or None."""
-        v = self.latest_version(name)
-        if v is None:
-            return None
-        t = self._manifest_doc(name, v).get("txn", {}).get(app_id)
+        t = self._snapshot(name).txn.get(app_id)
         return None if t is None else int(t)
 
     def _assert_committed_dir(self, name: str) -> None:
@@ -3329,8 +3321,8 @@ class TableStore:
         completion, and overwrite mode deletes it first, so a crash
         mid-write leaves the marker absent. Without this check a
         partially committed directory would be served (and then
-        published as permanent history by _ensure_latest) as if it
-        were the whole table — silent data loss where the pre-heal
+        published as permanent history by the next write's heal) as if
+        it were the whole table — silent data loss where the pre-heal
         code at least failed loudly (code-review r6, second pass)."""
         if not os.path.isfile(os.path.join(self._dir(name), "_SUCCESS")):
             raise RuntimeError(
@@ -3340,12 +3332,13 @@ class TableStore:
             )
 
     def _ensure_latest(self, name: str) -> int:
-        """Latest published version, HEALING a versioned table whose
+        """Latest published version, HEALING a keyed table whose
         manifest history is missing (a crash between overwrite_keyed's
         manifest reset and its first publish): the directory was fully
         overwritten in that window (enforced via the _SUCCESS marker),
         so its listing IS the consistent snapshot — publish it as v1
-        and continue (code-review r6)."""
+        and continue (code-review r6). Only ``_pin_base`` calls this:
+        the heal is a write, and reads never publish."""
         v = self.latest_version(name)
         if v is None:
             self._assert_committed_dir(name)
@@ -3421,47 +3414,53 @@ class TableStore:
                 time.sleep(min(0.05 * (2 ** i), 1.0) * random.random())
         raise last
 
-    def _latest_doc(self, name: str) -> tuple[int | None, dict | None]:
-        """(latest published version, its manifest), or (None, None)
-        with no manifest. Lists again when an unversioned commit
-        removed the listed version before its manifest was read."""
+    def _snapshot(
+        self, name: str, version: int | None = None, meta: dict | None = None
+    ) -> _Snapshot:
+        """The one resolver of a table for a verb: the meta, read once,
+        and, when a manifest describes the table, the manifest of
+        ``version`` or of the latest published version (listed again
+        when an unversioned commit removed the listed version before
+        its manifest was read). ``meta`` is the meta the verb already
+        read, for a second snapshot of it (the other end of a
+        ``table_changes`` range). An explicit version that is not
+        retained raises FileNotFoundError. Version None when no
+        manifest is published (overwrite_keyed's reset window): reads
+        then serve the committed directory or refuse, and never heal —
+        a write pins with ``_pin_base``, which does."""
+        if meta is None:
+            meta = read_meta(self.root, name)
+        if not self._manifest_backed(meta):
+            return _Snapshot(name, meta)
+        if version is not None:
+            return _Snapshot(name, meta, version, self._manifest_doc(name, version))
         while True:
             v = self.latest_version(name)
             if v is None:
-                return None, None
+                return _Snapshot(name, meta)
             try:
-                return v, self._manifest_doc(name, v)
+                return _Snapshot(name, meta, v, self._manifest_doc(name, v))
             except FileNotFoundError:
                 continue
 
-    def _snapshot(self, name: str) -> _Snapshot:
-        """The table as one read verb sees it: the meta and, when a
-        manifest describes the table, the latest published version and
-        its manifest — one read of each. Version None when the manifest
-        history is missing (reads then serve the committed directory;
-        a write pins with ``_pin_base``, which heals it)."""
-        meta = read_meta(self.root, name)
-        if not self._manifest_backed(meta):
-            return _Snapshot(name, meta)
-        return _Snapshot(name, meta, *self._latest_doc(name))
-
     def _pin_base(self, name: str) -> _Snapshot:
         """The snapshot a write verb validates its arguments with and an
-        OCC attempt derives from and CASes its publish on: the meta
-        and, for a keyed or versioned table, the current version
-        (``_ensure_latest``, which heals a missing manifest history)
-        with its manifest. The base uid detects a reseed restarting
-        version numbering (the number alone cannot, and inode identity
-        is unreliable — inodes recycle; code-review r10 wave 3);
-        pre-r10 manifests carry none, and the CAS then degrades to the
-        version-number check alone."""
+        OCC attempt derives from and CASes its publish on: ``_snapshot``
+        of the version ``_ensure_latest`` names — the write path's one
+        heal of a missing manifest history. The base uid detects a
+        reseed restarting version numbering (the number alone cannot,
+        and inode identity is unreliable — inodes recycle; code-review
+        r10 wave 3); pre-r10 manifests carry none, and the CAS then
+        degrades to the version-number check alone."""
+        snap = self._snapshot(name)
+        if not self._manifest_backed(snap.meta):
+            return snap
         while True:
-            meta = read_meta(self.root, name)
-            if not self._manifest_backed(meta):
-                return _Snapshot(name, meta)
             v = self._ensure_latest(name)
+            if v == snap.version:
+                return snap
             try:
-                return _Snapshot(name, meta, v, self._manifest_doc(name, v))
+                return self._snapshot(name, v, meta=snap.meta)
             except FileNotFoundError:
                 continue  # an unversioned commit removed v meanwhile
 
@@ -3508,6 +3507,28 @@ class TableStore:
         name = base.name
         token = uuid.uuid4().hex[:12]
         stage = os.path.join(self.root, f".stage-{name}-{token}")
+        # a column the batch carries narrower than the table stages at
+        # the table's type: the manifest keeps the wider one, and the
+        # table's files would not read under the narrower
+        staged = stamped.schema
+        wide = _parse_schema(_widened_schema_json(base.schema_json, staged.json()))
+        casts = {
+            f.name: wide[f.name].dataType
+            for f in staged.fields
+            if wide[f.name].dataType != f.dataType
+        }
+        if casts:
+            from pyspark.sql.types import StructField, StructType
+
+            stamped = stamped.withColumns(
+                {c: F.col(c).cast(t) for c, t in casts.items()}
+            )
+            staged = StructType([
+                StructField(
+                    f.name, casts.get(f.name, f.dataType), f.nullable, f.metadata
+                )
+                for f in staged.fields
+            ])
         if base.spec is not None and not pre_clustered:
             # one part-file per bucket per write (see _cluster_kb) —
             # centralizing here covers every versioned write verb
@@ -3535,7 +3556,7 @@ class TableStore:
                     new_files.append(f"{d}/{dst}")
         finally:
             shutil.rmtree(stage, ignore_errors=True)
-        staged_schema = stamped.schema.json()
+        staged_schema = staged.json()
 
         def publish(base: _Snapshot) -> int:
             live = (base.files if kept is None else list(kept)) + sorted(
@@ -3699,15 +3720,17 @@ class TableStore:
                     if "no bloom index" not in str(e):
                         raise
                     # declarative first build: element mode is
-                    # inferred from the live column type (array →
-                    # element index serving Has probes)
-                    live = self._live_dtype(
-                        {"schema": schema_json},
-                        self._bloom_resolve(name, col, base.doc),
-                    )
+                    # inferred from the just-published column type
+                    # (array → element index serving Has probes)
+                    from pyspark.sql.types import ArrayType
+
+                    schema = _parse_schema(schema_json)
+                    phys = base.physical(col)
                     self.build_bloom_index(
                         name, col,
-                        elements=bool(live and live.startswith("array<")),
+                        elements=schema is not None
+                        and phys in schema.names
+                        and isinstance(schema[phys].dataType, ArrayType),
                     )
             except Exception as e:  # noqa: BLE001 — best-effort
                 warnings.warn(
@@ -3777,11 +3800,8 @@ class TableStore:
     ) -> int:
         # the rewrite is purely physical; clustering column args are
         # logical — translate through the snapshot's map
-        _ren = (base.colmap or {}).get("renames", {})
-        sort_cols = [_ren.get(c, c) for c in sort_cols] if sort_cols else sort_cols
-        zorder_cols = (
-            [_ren.get(c, c) for c in zorder_cols] if zorder_cols else zorder_cols
-        )
+        sort_cols = [base.physical(c) for c in sort_cols or []]
+        zorder_cols = [base.physical(c) for c in zorder_cols or []]
         by_bucket: dict[int, list[str]] = {}
         for f in base.files:
             by_bucket.setdefault(self._bucket_of(f), []).append(f)
@@ -3793,8 +3813,7 @@ class TableStore:
         # under the recorded snapshot schema — no mergeSchema footer
         # job (r14)
         slice_ = self._read_manifest_df(
-            base.name, base.version,
-            doc={**base.doc, "files": [f for b in fat for f in by_bucket[b]]},
+            base, [f for b in fat for f in by_bucket[b]]
         )
         fat_set = set(fat)
         kept = [f for b, fs in by_bucket.items() if b not in fat_set for f in fs]
@@ -4412,58 +4431,37 @@ class TableStore:
         side, so backfills surface as updates exactly when a real
         value arrived. Both versions must still be retained (vacuumed
         versions raise via the manifest read)."""
-        keys_spec = self.keyed_spec(name)
-        if keys_spec is None or not self.is_versioned(name):
+        end = self._snapshot(name, to_version)
+        if end.spec is None or not end.versioned:
             raise ValueError(
                 f"{name}: table_changes needs a versioned keyed table"
             )
-        keys = list(keys_spec[0])
-        if to_version is None:
-            to_version = self._ensure_latest(name)
-        if int(to_version) < int(from_version):
+        end.require_manifest("table_changes")
+        keys = list(end.spec[0])
+        if end.version < int(from_version):
             # a transposed range would silently INVERT the feed
             # (deletes read as inserts, pre/post images swap) — fed
             # into an incremental consumer that corrupts the target
             # with no error; Delta raises here too (code-review r8)
             raise ValueError(
                 f"{name}: table_changes range is reversed "
-                f"(from_version={from_version} > to_version={to_version})"
+                f"(from_version={from_version} > to_version={end.version})"
             )
-        old_files = set(self._manifest_files(name, from_version))
-        new_files = set(self._manifest_files(name, to_version))
-        base = self._dir(name)
-
-        def _read(files: set[str], like_version: int) -> DataFrame:
-            if not files:
-                # schema from the manifest so empty diffs still type
-                return (
-                    self._read_manifest_df(name, like_version)
-                    .drop("_kb")
-                    .limit(0)
-                )
-            _doc_schema = self._manifest_doc(name, like_version).get(
-                "schema"
-            )
-            if _doc_schema is not None:
-                # recorded snapshot schema — no mergeSchema job (r14);
-                # the file set is a subset of that version's manifest,
-                # so its recorded schema covers every file
-                from pyspark.sql.types import StructType
-
-                _rdr = self.spark.read.schema(
-                    StructType.fromJson(json.loads(_doc_schema))
-                )
-            else:
-                _rdr = self.spark.read.option("mergeSchema", "true")
-            return (
-                _rdr.option("basePath", base)
-                .parquet(*[os.path.join(base, f) for f in sorted(files)])
-                .drop("_kb")
-            )
-
-        cm_end = self._manifest_doc(name, to_version).get("colmap")
-        old = self._to_logical(_read(old_files - new_files, from_version), cm_end)
-        new = self._to_logical(_read(new_files - old_files, to_version), cm_end)
+        start = (
+            end if end.version == int(from_version)
+            else self._snapshot(name, int(from_version), meta=end.meta)
+        )
+        old_files, new_files = set(start.files), set(end.files)
+        # each side under its own version's recorded schema (files the
+        # version names), both named by the END version's column map
+        old = self._to_logical(
+            self._read_manifest_df(start, sorted(old_files - new_files)),
+            end.colmap,
+        )
+        new = self._to_logical(
+            self._read_manifest_df(end, sorted(new_files - old_files)),
+            end.colmap,
+        )
         # widen both sides to the union of columns (schema evolution:
         # the old side lacks later-added columns — they read as NULL)
         for c, t_ in new.dtypes:
@@ -4550,11 +4548,12 @@ class TableStore:
     # resets the map (full rewrites by definition).
     @staticmethod
     def _to_logical(df: DataFrame, colmap: dict | None) -> DataFrame:
-        """Physical frame → the logical view ``colmap`` describes."""
+        """Physical frame → the logical view ``colmap`` describes, the
+        bucket column dropped."""
         if not colmap:
-            return df
+            return df.drop("_kb")
         phys_to_log = {p: l for l, p in colmap.get("renames", {}).items()}
-        dropped = set(colmap.get("dropped", []))
+        dropped = set(colmap.get("dropped", [])) | {"_kb"}
         return df.select(
             *[
                 F.col(c).alias(phys_to_log.get(c, c))
@@ -4600,15 +4599,10 @@ class TableStore:
     def _logical_columns(self, snap: _Snapshot) -> list[str]:
         """The snapshot's logical column set (plan-only: manifest schema
         or footers, no data read)."""
-        if snap.schema_json is not None:
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromJson(json.loads(snap.schema_json))
-            phys = [f.name for f in schema.fields]
+        if snap.schema is not None:
+            phys = snap.schema.names
         else:
-            phys = self._read_manifest_df(
-                snap.name, snap.version, doc=snap.doc
-            ).columns
+            phys = self._read_manifest_df(snap).columns
         cm = snap.colmap or {}
         phys_to_log = {p: l for l, p in cm.get("renames", {}).items()}
         dropped = set(cm.get("dropped", []))
@@ -4650,8 +4644,8 @@ class TableStore:
         if not cons:
             return
         others = [c for c in self._logical_columns(snap) if c != col]
-        probe = self._scan_files(
-            snap.name, snap.version, snap.doc, snap.files
+        probe = self._to_logical(
+            self._read_manifest_df(snap), snap.colmap
         ).select(*others).limit(0)
         for cname, expr in cons.items():
             try:
@@ -4758,12 +4752,23 @@ class TableStore:
         return self._publish_colmap(name, "drop_column", col, build)
 
     def _read_manifest_df(
-        self, name: str, version: int, doc: dict | None = None
+        self, snap: _Snapshot, files: list[str] | None = None
     ) -> DataFrame:
-        if doc is None:
-            doc = self._manifest_doc(name, version)
-        files = doc["files"]
+        """The one scan of a snapshot, or of ``files``, a subset of its
+        files: the PHYSICAL frame, ``_kb`` included (``_to_logical``
+        gives the logical view). No manifest published (the reset
+        window of overwrite_keyed): the committed directory, which is
+        the consistent snapshot IF the write job committed (the
+        _SUCCESS guard); the next WRITE republishes (code-review r6)."""
+        name = snap.name
         base = self._dir(name)
+        if snap.version is None:
+            self._assert_committed_dir(name)
+            return self.spark.read.option("mergeSchema", "true").parquet(base)
+        if files is not None and not files:
+            # a pruned-to-nothing scan keeps the snapshot's columns
+            return self._read_manifest_df(snap).limit(0)
+        files = snap.files if files is None else files
         if not files:
             # an existing-but-empty snapshot (empty versioned overwrite,
             # or every bucket emptied by deletes) reads as an EMPTY
@@ -4771,18 +4776,13 @@ class TableStore:
             # — not a ValueError that makes the table unreadable
             # (ADVICE r6). Manifests predating schema recording (or the
             # heal path, which can't know the schema) still fail loudly.
-            schema_json = doc.get("schema")
-            if schema_json is None:
+            if snap.schema is None:
                 raise ValueError(
-                    f"{name} v{version}: empty manifest with no recorded schema"
+                    f"{name} v{snap.version}: empty manifest with no "
+                    "recorded schema"
                 )
-            from pyspark.sql.types import StructType
-
-            return local_frame(
-                self.spark, [], StructType.fromJson(json.loads(schema_json))
-            )
-        schema_json = doc.get("schema")
-        if schema_json is not None:
+            return local_frame(self.spark, [], snap.schema)
+        if snap.schema is not None:
             # r14 (optimization): the manifest already records the
             # snapshot's exact schema, so supply it instead of letting
             # a mergeSchema job re-derive it from every file footer —
@@ -4791,23 +4791,13 @@ class TableStore:
             # missing a newer column read as NULL (the same widening
             # mergeSchema produced); physical columns a file carries
             # beyond the snapshot schema are simply not read.
-            from pyspark.sql.types import StructType
-
-            return (
-                self.spark.read.schema(
-                    StructType.fromJson(json.loads(schema_json))
-                )
-                # basePath keeps the _kb partition column derivable from
-                # the explicit file list, so bucket-pruned filters work
-                .option("basePath", base)
-                .parquet(*[os.path.join(base, f) for f in files])
-            )
-        return (
-            self.spark.read.option("mergeSchema", "true")
-            # basePath keeps the _kb partition column derivable from the
-            # explicit file list, so bucket-pruned filters still work
-            .option("basePath", base)
-            .parquet(*[os.path.join(base, f) for f in files])
+            reader = self.spark.read.schema(snap.schema)
+        else:
+            reader = self.spark.read.option("mergeSchema", "true")
+        # basePath keeps the _kb partition column derivable from the
+        # explicit file list, so bucket-pruned filters work
+        return reader.option("basePath", base).parquet(
+            *[os.path.join(base, f) for f in files]
         )
 
     # -- reads -------------------------------------------------------------
@@ -4831,7 +4821,9 @@ class TableStore:
         supersedes it removes its files, so a plan racing a write can
         fail on a vanished file (no snapshot isolation), and
         ``version=``/``as_of_ts=`` refuse. Other tables read their
-        directory.
+        directory. A keyed table whose manifest history is missing
+        (overwrite_keyed's reset window) reads its committed directory
+        and publishes nothing: the next write heals it (``_pin_base``).
 
         ``where={col: scalar | [v, ...] | slice(lo, hi)}`` (VERDICT
         r12 item 3) plans the scan through EVERY applicable
@@ -4842,53 +4834,28 @@ class TableStore:
         The caller states the predicate; the engine picks the index,
         Delta/Iceberg data-skipping parity. Composes with version=/
         as_of_ts= (prune within the pinned snapshot). Versioned keyed
-        tables only — everything else should filter an ordinary read."""
+        tables only — everything else should filter an ordinary read —
+        with a published manifest: in the reset window ``where=``
+        raises until a write heals the table, like every read verb
+        that needs the manifest."""
         if version is not None and as_of_ts is not None:
             raise ValueError("pass version= or as_of_ts=, not both")
         if as_of_ts is not None:
             version = self.version_as_of(name, as_of_ts)
-        meta = read_meta(self.root, name)
-        if where is not None and not meta.get("versioned"):
-            raise ValueError(
-                f"{name}: where= planning needs a versioned table "
-                "(overwrite_keyed(..., versioned=True)); filter an "
-                "ordinary read instead"
+        snap = self._snapshot(name, version)
+        if where is not None:
+            return self._read_planned(
+                snap.require_manifest("where= planning"), where
             )
-        if version is not None and not meta.get("versioned"):
+        if version is not None and not snap.versioned:
             raise ValueError(
                 f"{name} is not versioned (overwrite_keyed(..., versioned=True))"
             )
-        if self._manifest_backed(meta):
-            if version is None:
-                v, doc = self._latest_doc(name)
-            else:
-                v, doc = version, self._manifest_doc(name, version)
-            if v is not None and where is not None:
-                return self._read_planned(name, where, v, doc, meta)
-            if v is None and where is not None:
-                raise ValueError(
-                    f"{name}: where= planning needs a published "
-                    "snapshot manifest (table is mid-heal); retry "
-                    "after the next write republishes"
-                )
-            if v is None:
-                # manifest history missing (crash inside overwrite_keyed's
-                # reset window): the freshly overwritten directory is the
-                # consistent snapshot IF the write job committed (the
-                # _SUCCESS guard) — read it; the next WRITE republishes
-                # (code-review r6)
-                self._assert_committed_dir(name)
-                return (
-                    self.spark.read.option("mergeSchema", "true")
-                    .parquet(self._dir(name))
-                    .drop("_kb")
-                )
-            return self._to_logical(
-                self._read_manifest_df(name, v, doc=doc), doc.get("colmap")
-            ).drop("_kb")
-        return self.spark.read.option("mergeSchema", "true").parquet(
-            self._dir(name)
-        )
+        if not self._manifest_backed(snap.meta):
+            return self.spark.read.option("mergeSchema", "true").parquet(
+                self._dir(name)
+            )
+        return self._to_logical(self._read_manifest_df(snap), snap.colmap)
 
     def max_value(self, name: str, col: str):
         """A1+S11 watermark: MAX(col) fetched as a scalar
@@ -5025,7 +4992,7 @@ class TableStore:
         if snap.spec is not None and list(snap.spec[0]) == keys:
             self._upsert_keyed(incoming, snap, keys)
             return
-        if self._table_initialized(name):
+        if self._table_initialized(snap):
             existing = self.read(name)
             # null-safe key equality: plain `on=keys` never matches NULL
             # keys, so a NULL-key row would be appended again every call
@@ -5090,7 +5057,7 @@ class TableStore:
         # (4) stamp the full meta LAST — a crash before it leaves no
         # phantom keyed/versioned marker, and a retry completes the
         # table. A crash between (1) and (3) on a previously keyed
-        # table is healed by the read fallback + _ensure_latest.
+        # table is read from its directory and healed by the next write.
         #
         # The retiring history's txn watermark map carries FORWARD into
         # the reseeded v1 manifest (ADVICE r7): a reseed overwrite must
@@ -5249,19 +5216,9 @@ class TableStore:
         snapshot of the keyed table: ``table`` itself, or the latest
         when it is a table name."""
         snap = self._snapshot(table) if isinstance(table, str) else table
-        name = snap.name
-        if snap.version is None:
-            # manifest history missing (a crash inside overwrite_keyed's
-            # reset window, or a keyed table written before every keyed
-            # table had a manifest): the directory is the consistent
-            # snapshot iff the write committed; see read()
-            self._assert_committed_dir(name)
-            raw = self.spark.read.option("mergeSchema", "true").parquet(
-                self._dir(name)
-            )
-        else:
-            raw = self._read_manifest_df(name, snap.version, doc=snap.doc)
-        out = raw.filter(F.col("_kb").isin(list(buckets))).drop("_kb")
+        out = self._read_manifest_df(snap).filter(
+            F.col("_kb").isin(list(buckets))
+        )
         return self._to_logical(out, snap.colmap)
 
     def lookup(self, name: str, values) -> DataFrame:
@@ -5292,7 +5249,7 @@ class TableStore:
             for v in values
         ]
         if not rows:
-            return self.read(name).limit(0)
+            return self.read_buckets(snap, [])
         types = snap.key_types
         # EXPLICIT schema from the stored key types (code-review r7
         # wave 3): inference dies on an all-None probe, and a lazy cast
@@ -5377,17 +5334,20 @@ class TableStore:
             txn_assert=txn_assert,
         )
 
-    def _table_initialized(self, name: str) -> bool:
+    def _table_initialized(self, snap: _Snapshot) -> bool:
         """Has any WRITE ever landed for this table? Distinguishes a
         real (possibly empty) table from a meta-only shell, which
         set_constraints on a not-yet-written table creates — exists()
         affirms the shell (it sees the meta file), so routing
         create-vs-merge on exists() broke contract-first creation
-        (code-review r7 wave 2: declare constraints, then upsert)."""
+        (code-review r7 wave 2: declare constraints, then upsert).
+        A keyed snapshot answers; only a plain one walks the
+        directory."""
         return (
-            self._dir_has_parquet(name)
-            or bool(self.versions(name))
-            or self.keyed_spec(name) is not None
+            snap.spec is not None
+            or snap.version is not None
+            or self._dir_has_parquet(snap.name)
+            or bool(self.versions(snap.name))
         )
 
     def set_constraints(self, name: str, constraints: dict[str, str]) -> None:
@@ -5517,15 +5477,12 @@ class TableStore:
             return df
         df = df.localCheckpoint(eager=True)
         probe = df
-        s = meta.get("schema")
-        if s:
-            from pyspark.sql.types import StructType
-
-            for fld in StructType.fromJson(json.loads(s)).fields:
-                if fld.name not in probe.columns and fld.name != "_kb":
-                    probe = probe.withColumn(
-                        fld.name, F.lit(None).cast(fld.dataType)
-                    )
+        schema = _parse_schema(meta.get("schema"))
+        for fld in schema.fields if schema is not None else []:
+            if fld.name not in probe.columns and fld.name != "_kb":
+                probe = probe.withColumn(
+                    fld.name, F.lit(None).cast(fld.dataType)
+                )
         bad = {
             c: n
             for c, n in self._violation_counts(name, cons, probe).items()
@@ -5589,7 +5546,7 @@ class TableStore:
         ``CLAIM_STALE_S`` safely."""
         keys = [key] if isinstance(key, str) else list(key)
         snap = self._pin_base(name)
-        if not self._table_initialized(name) or (
+        if not self._table_initialized(snap) or (
             snap.spec is None and self._creation_crashed(name)
         ):
             # creation path (or its retry after a crash between the
@@ -5629,8 +5586,8 @@ class TableStore:
             raise ValueError(
                 f"{name}: upsert_txn key {keys} != table key {list(spec[0])}"
             )
-        last = self.last_txn(name, app_id)
-        if last is not None and last >= int(txn_version):
+        last = snap.txn.get(app_id)
+        if last is not None and int(last) >= int(txn_version):
             # replayed transaction: already applied. Checked BEFORE
             # constraint enforcement (code-review r7 wave 2): a replay
             # must skip for free even if constraints have since
@@ -5713,10 +5670,7 @@ class TableStore:
         claim = os.path.join(self.root, f".createclaim_{name}")
 
         def _created() -> bool:
-            return (
-                self._table_initialized(name)
-                and self.keyed_spec(name) is not None
-            )
+            return self.keyed_spec(name) is not None
 
         def _create() -> bool:
             self.overwrite_keyed(
@@ -5770,7 +5724,9 @@ class TableStore:
         route future upserts to the wrong buckets (silent duplicate
         keys). One scan over the one-commit snapshot; this is a rare
         repair path."""
-        df = self._read_manifest_df(name, 1)
+        # the v1 manifest alone describes the table: the meta is lost
+        snap = _Snapshot(name, {}, 1, self._manifest_doc(name, 1))
+        df = self._read_manifest_df(snap)
         missing = [k for k in keys if k not in df.columns]
         if missing:
             raise ValueError(
@@ -5789,7 +5745,6 @@ class TableStore:
             )
         import uuid
 
-        doc = self._manifest_doc(name, 1)
         self._touch_meta(
             name,
             keyed_on=keys,
@@ -5800,7 +5755,7 @@ class TableStore:
             # fresh lifetime: downstream incremental consumers must
             # re-seed rather than trust cursors from before the loss
             incarnation=uuid.uuid4().hex,
-            schema=doc.get("schema") or df.schema.json(),
+            schema=snap.schema_json or df.schema.json(),
         )
 
     def merge_when(
@@ -6169,11 +6124,9 @@ class TableStore:
         filters the whole snapshot. Pinned at the base, so the OCC
         retry re-plans against the new snapshot."""
         if where is not None:
-            return self._read_planned(
-                base.name, where, base.version, base.doc, base.meta
-            )
-        return self._scan_files(
-            base.name, base.version, base.doc, base.files
+            return self._read_planned(base, where)
+        return self._to_logical(
+            self._read_manifest_df(base), base.colmap
         ).filter(condition)
 
     def delete_where(

@@ -618,7 +618,7 @@ def sync_rollup(
     (table_changes' requirement)."""
     from ..io import TxnAlreadyApplied
 
-    current = store._ensure_latest(base_table)
+    current = store._pin_base(base_table).version
     inc = store.table_incarnation(base_table) or "0"
     app_id = f"rollup_sync:{base_table}:{inc}"
     synced = (

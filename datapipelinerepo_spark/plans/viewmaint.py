@@ -160,8 +160,8 @@ def sync_join_view(
             f"{list(store.keyed_spec(dim_table)[0])}) — key-level "
             "dedup is what guarantees one dim row per join value"
         )
-    cur_f = store._ensure_latest(fact_table)
-    cur_d = store._ensure_latest(dim_table)
+    cur_f = store._pin_base(fact_table).version
+    cur_d = store._pin_base(dim_table).version
     fact_app = _fact_app(store, fact_table)
     dim_app = _dim_app(store, dim_table)
     view_exists = store.exists(view_table)

@@ -495,7 +495,7 @@ def cdc_ingest_stream(
         # _table_initialized, not exists(): a meta-only shell from
         # contract-first set_constraints must route to CREATE, not a
         # read of a fileless directory (code-review r7 wave 4)
-        if store._table_initialized(base_table):
+        if store._table_initialized(store._snapshot(base_table)):
             base = store.read(base_table)
         else:
             base = batch.drop(seq_col, op_col).limit(0)

@@ -818,3 +818,31 @@ def test_bloom_driver_probe_matches_distributed(spark, tmp_path):
     finally:
         TableStore._BLOOM_DRIVER_PROBE_BYTES = old
     assert (d_kept, d_tot) == (s_kept, s_tot)
+
+
+def test_failed_rebuild_keeps_the_old_index(spark, tmp_path, monkeypatch):
+    """A rebuild that fails between moving the live index aside and
+    renaming the new one in restores the live index: probes keep
+    pruning with it, and no staged or retired directory is left."""
+    import os
+
+    store = _mk(spark, tmp_path)
+    store.build_bloom_index("t", "cust", m_bits=1 << 14)
+    kept, total = store.bloom_kept_files("t", "cust", 5)
+    assert len(kept) < total
+    final = os.path.join(str(tmp_path), "t", ".bloomidx", "cust")
+    real_rename = os.rename
+
+    def failing_rename(src, dst, *a, **kw):
+        if os.fspath(dst) == final and ".tmp-" in os.fspath(src):
+            raise OSError("injected: second rename of the swap")
+        return real_rename(src, dst, *a, **kw)
+
+    monkeypatch.setattr(os, "rename", failing_rename)
+    with pytest.raises(OSError, match="injected"):
+        store.build_bloom_index("t", "cust", m_bits=1 << 14)
+    monkeypatch.undo()
+    assert store.bloom_kept_files("t", "cust", 5) == (kept, total)
+    assert store.bloom_coverage("t", "cust")["uncovered"] == 0
+    assert sorted(os.listdir(os.path.dirname(final))) == ["cust"]
+    assert _probe_rows(store, 5) == _exact_rows(store, 5)

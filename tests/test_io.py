@@ -4744,6 +4744,11 @@ def test_keyed_writes_read_the_table_once_per_attempt(
             "t", {"amt": "amt + 1"}, condition=f"k = {10 + i}"
         ),
     }
+    if versioned:
+        # the replay check reads the pinned snapshot's txn map
+        verbs["upsert_txn"] = lambda i: store.upsert_txn(
+            rows(500 + 20 * i), "t", "k", "app", i
+        )
     meta_reads, in_update = [0], [0]
     real_read_meta, real_update = io_mod.read_meta, store._update_meta
 
@@ -4926,3 +4931,179 @@ def test_keyed_writes_leave_one_file_per_touched_bucket(
         if not (300 > k >= 230 or (k % 7 == 3 and k < 150) or (20 <= k < 60 and k % 5 == 0))
     }
     assert {r["k"] for r in store.read("t").collect()} == want
+
+
+@pytest.mark.parametrize("versioned", [True, False])
+def test_narrower_typed_append_keeps_the_table_type(spark, tmp_path, versioned):
+    """An append carrying a column at a narrower type than the table
+    stages it at the table's type, so the table stays readable; a type
+    neither holds the other (a string batch into a long column) raises
+    before anything lands."""
+    store = TableStore(spark, str(tmp_path))
+    store.overwrite_keyed(
+        spark.createDataFrame([(1, 10), (2, 20)], "k long, v long"),
+        "t", "k", n_buckets=2, versioned=versioned,
+    )
+    store.append(spark.createDataFrame([(3, 30)], "k long, v int"), "t")
+    df = store.read("t")
+    assert df.schema["v"].dataType.simpleString() == "bigint"
+    assert {r["k"]: r["v"] for r in df.collect()} == {1: 10, 2: 20, 3: 30}
+    v = store.latest_version("t")
+    with pytest.raises(ValueError, match="neither type holds"):
+        store.append(
+            spark.createDataFrame([(4, "x")], "k long, v string"), "t"
+        )
+    assert store.latest_version("t") == v
+    store.upsert(spark.createDataFrame([(1, 11)], "k long, v long"), "t", "k")
+    assert {r["k"]: r["v"] for r in store.read("t").collect()} == {
+        1: 11, 2: 20, 3: 30
+    }
+
+
+def _reset_window_table(spark, tmp_path):
+    """A versioned keyed table in overwrite_keyed's reset window: the
+    manifest history is gone, the committed directory (``_SUCCESS``
+    present) holds the rows."""
+    import os
+    import shutil
+
+    store = TableStore(spark, str(tmp_path))
+    store.overwrite_keyed(
+        spark.range(0, 40).select(
+            F.col("id").alias("k"), (F.col("id") % 5).alias("cust")
+        ),
+        "t", "k", n_buckets=4, versioned=True,
+    )
+    shutil.rmtree(store._manifest_dir("t"))
+    assert os.path.isfile(os.path.join(store._dir("t"), "_SUCCESS"))
+    return store
+
+
+def test_reads_never_publish_a_heal(spark, tmp_path):
+    """In the reset window every manifest-only read verb raises the
+    mid-heal ValueError and publishes nothing; read, read_buckets and
+    lookup serve the committed directory; the next write heals."""
+    store = _reset_window_table(spark, tmp_path)
+    manifest_only = {
+        "read(where=)": lambda: store.read("t", where={"k": 3}),
+        "read_where": lambda: store.read_where("t", "k", (1, 5)),
+        "read_point": lambda: store.read_point("t", "cust", 2),
+        "read_point_where": lambda: store.read_point_where("t", {"cust": 2}),
+        "plan_read": lambda: store.plan_read("t", {"k": 3}),
+        "pruned_file_count": lambda: store.pruned_file_count(
+            "t", "k", (1, 5)
+        ),
+        "stats_scalar": lambda: store.stats_scalar("t", "count"),
+        "count_where": lambda: store.count_where("t", {"k": 3}),
+        "stats_coverage": lambda: store.stats_coverage("t"),
+        "table_changes": lambda: store.table_changes("t", 1),
+        "build_bloom_index": lambda: store.build_bloom_index("t", "cust"),
+        "update_bloom_index": lambda: store.update_bloom_index("t", "cust"),
+        "compact_bloom_index": lambda: store.compact_bloom_index(
+            "t", "cust"
+        ),
+        "bloom_coverage": lambda: store.bloom_coverage("t", "cust"),
+        "bloom_kept_files": lambda: store.bloom_kept_files("t", "cust", 2),
+    }
+    for verb, call in manifest_only.items():
+        with pytest.raises(ValueError, match="mid-heal"):
+            call()
+        assert store.versions("t") == [], verb
+    assert store.last_txn("t", "app") is None
+    assert sorted(r["k"] for r in store.read("t").collect()) == list(range(40))
+    assert store.read_buckets("t", list(range(4))).count() == 40
+    assert [r["k"] for r in store.lookup("t", [7]).collect()] == [7]
+    assert store.versions("t") == []
+    store.upsert(
+        spark.createDataFrame([(7, 99)], "k long, cust long"), "t", "k"
+    )
+    assert store.versions("t") == [1, 2]
+    assert store.read("t", where={"k": 7}).first()["cust"] == 99
+
+
+def test_read_verbs_read_the_table_once(spark, tmp_path, monkeypatch):
+    """Every read verb reads the table meta at most once and opens each
+    manifest it names once: one snapshot per verb (two, sharing the
+    meta, for the ends of a table_changes range)."""
+    import builtins
+    import os
+
+    import datapipelinerepo_spark.io as io_mod
+
+    store = TableStore(spark, str(tmp_path))
+    store.overwrite_keyed(
+        spark.range(0, 2000).select(
+            F.col("id").alias("k"),
+            (F.col("id") % 97).alias("cust"),
+            (F.col("id") * 1.5).alias("amt"),
+        ),
+        "t", "k", n_buckets=8, versioned=True,
+    )
+    store.upsert(
+        spark.range(0, 50).select(
+            F.col("id").alias("k"),
+            (F.col("id") % 97).alias("cust"),
+            (F.col("id") * 2.5).alias("amt"),
+        ),
+        "t", "k",
+    )
+    store.build_bloom_index("t", "cust", m_bits=1 << 14)
+    latest = store.latest_version("t")
+    mdir = store._manifest_dir("t")
+    verbs = {
+        "read": lambda: store.read("t"),
+        "read(version=1)": lambda: store.read("t", version=1),
+        "read(where=)": lambda: store.read("t", where={"k": 7}),
+        "read_where": lambda: store.read_where("t", "k", (10, 20)),
+        "read_point": lambda: store.read_point("t", "cust", 3),
+        "read_point_where": lambda: store.read_point_where(
+            "t", {"cust": 3, "k": 3}
+        ),
+        "plan_read": lambda: store.plan_read("t", [{"k": 7}, {"cust": 3}]),
+        "pruned_file_count": lambda: store.pruned_file_count(
+            "t", "k", (10, 20)
+        ),
+        "stats_scalar": lambda: store.stats_scalar("t", "max", "amt"),
+        "count_where": lambda: store.count_where("t", {"k": slice(0, 99)}),
+        "stats_coverage": lambda: store.stats_coverage("t"),
+        "bloom_coverage": lambda: store.bloom_coverage("t", "cust"),
+        "bloom_kept_files": lambda: store.bloom_kept_files("t", "cust", 3),
+        "lookup": lambda: store.lookup("t", [7, 8]),
+        "last_txn": lambda: store.last_txn("t", "app"),
+        "table_changes(1)": lambda: store.table_changes("t", 1),
+    }
+    meta_reads = [0]
+    opens: dict[str, int] = {}
+    real_read_meta, real_open = io_mod.read_meta, builtins.open
+
+    def counting_read_meta(root, name):
+        meta_reads[0] += 1
+        return real_read_meta(root, name)
+
+    def counting_open(f, *a, **kw):
+        if isinstance(f, (str, os.PathLike)):
+            p = os.fspath(f)
+            if os.path.dirname(p) == mdir:
+                opens[os.path.basename(p)] = opens.get(
+                    os.path.basename(p), 0
+                ) + 1
+        return real_open(f, *a, **kw)
+
+    counts = {}
+    for verb, call in verbs.items():
+        meta_reads[0] = 0
+        opens.clear()
+        monkeypatch.setattr(io_mod, "read_meta", counting_read_meta)
+        monkeypatch.setattr(builtins, "open", counting_open)
+        try:
+            call()
+        finally:
+            monkeypatch.setattr(builtins, "open", real_open)
+            monkeypatch.setattr(io_mod, "read_meta", real_read_meta)
+        counts[verb] = (meta_reads[0], dict(opens))
+    assert {verb: m for verb, (m, _) in counts.items() if m > 1} == {}
+    v1, vn = "v000001.json", f"v{latest:06d}.json"
+    want = {verb: {vn: 1} for verb in verbs}
+    want["read(version=1)"] = {v1: 1}
+    want["table_changes(1)"] = {v1: 1, vn: 1}
+    assert {verb: o for verb, (_, o) in counts.items()} == want
