@@ -10,10 +10,12 @@ Write semantics re-homed from the reference (SURVEY.md §2.1):
 - S3/S4 catalog probes (``:136``, ``:394-396`` __TABLES__ queries)
 - A1/S11 watermark scalar fetch (``:140-142`` MAX(Date) → tolist()[0])
 
-At scale: tables are directories of parquet partitioned by a date
-column; S10 uses dynamic partition overwrite so a re-run replaces only
-the touched partitions (exactly-once under re-run, proven in
-tests/test_io.py). No driver-side collects except the scalar gates.
+At scale: tables are directories of parquet (Hive layout, optionally
+partitioned by a date column) whose snapshot manifest names the
+committed files; S10 publishes its partitions with every other
+partition's files, so a re-run replaces only the touched partitions
+(exactly-once under re-run, proven in tests/test_io.py). No
+driver-side collects except the scalar gates.
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import re
 import shutil
 import time
 from dataclasses import dataclass
@@ -457,6 +460,49 @@ def _widened_schema_json(stored: str | None, staged: str) -> str:
     return StructType(out + [f for f in new.fields if f.name not in have]).json()
 
 
+def _parquet_files(top: str) -> list[str]:
+    """The parquet files under ``top``, relative to it, in any layout:
+    root files, ``col=value`` partitions or ``_kb=`` buckets. Skips
+    what Spark's partition discovery skips: names starting with ``.``,
+    or with ``_`` and holding no ``=`` (``_SUCCESS``, ``_temporary``,
+    the ``.bloomidx`` sidecars; a ``_kb=3`` directory is data)."""
+
+    def hidden(n: str) -> bool:
+        return n.startswith(".") or (n.startswith("_") and "=" not in n)
+
+    out = []
+    for d, dirs, files in os.walk(top):
+        dirs[:] = [x for x in dirs if not hidden(x)]
+        rel = os.path.relpath(d, top)
+        out += [
+            f if rel == "." else f"{rel}/{f}"
+            for f in files
+            if f.endswith(".parquet") and not hidden(f)
+        ]
+    return sorted(out)
+
+
+#: a part-file ``_append_and_publish`` renamed into its table
+#: (``<token>-part-…``), not one Spark's committer wrote (``part-…``)
+_STAGE_RENAMED = re.compile(r"[0-9a-f]{12}-part-")
+
+
+def _layout_of(files: list[str]) -> str | None:
+    """The partition column of a snapshot's file paths: ``c`` when
+    every file sits in a ``c=value`` directory (``_kb`` for a keyed
+    table), None for root files or no files. ValueError for a layout
+    no write can extend: root files beside partition directories, or
+    partitions of two columns."""
+    cols = {f.split("=", 1)[0] if "/" in f else None for f in files}
+    if len(cols) > 1:
+        raise ValueError(
+            f"mixed table layout (partitions {sorted(c for c in cols if c)}"
+            f"{' beside root files' if None in cols else ''}); overwrite "
+            "the table to repair it"
+        )
+    return next(iter(cols), None)
+
+
 @dataclass(frozen=True)
 class _Snapshot:
     """One verb's (or one write attempt's) view of a table: its meta
@@ -478,7 +524,7 @@ class _Snapshot:
     # JSON and column map; the meta's key spec, key types and
     # versioned flag
     uid = property(lambda self: (self.doc or {}).get("uid"))
-    files = property(lambda self: self.doc["files"])
+    files = property(lambda self: (self.doc or {}).get("files", []))
     stats = property(lambda self: (self.doc or {}).get("stats", {}))
     txn = property(lambda self: (self.doc or {}).get("txn", {}))
     schema_json = property(lambda self: (self.doc or {}).get("schema"))
@@ -518,20 +564,19 @@ class _Snapshot:
     def require_manifest(self, verb: str, versioned: bool = True) -> "_Snapshot":
         """This snapshot, when a published manifest describes it (and
         the table is versioned, for ``versioned=True``); ValueError
-        otherwise. A read never publishes the manifest a keyed table
-        lacks in overwrite_keyed's reset window: the next write does."""
+        otherwise. A read never publishes the manifest a table lacks
+        in an overwrite's reset window: the next write does."""
         if versioned and not self.versioned:
             raise ValueError(
                 f"{self.name}: {verb} needs a versioned table "
                 "(overwrite_keyed(..., versioned=True)): the stats and "
                 "indexes live in and beside its snapshot manifests"
             )
+        if self.spec is None and not self.versioned:
+            raise ValueError(
+                f"{self.name}: {verb} needs a keyed table (overwrite_keyed)"
+            )
         if self.version is None:
-            if not TableStore._manifest_backed(self.meta):
-                raise ValueError(
-                    f"{self.name}: {verb} needs a keyed table "
-                    "(overwrite_keyed): a snapshot manifest names its files"
-                )
             raise ValueError(
                 f"{self.name}: {verb} needs a published snapshot manifest "
                 "(table is mid-heal); retry after the next write "
@@ -769,7 +814,8 @@ class TableStore:
         """S3 existence probe (``__TABLES__`` scan, datasources.py:136)."""
         d = self._dir(name)
         return os.path.isdir(d) and any(
-            f.endswith(".parquet") for f in os.listdir(d)
+            f.endswith(".parquet") and not _STAGE_RENAMED.match(f)
+            for f in os.listdir(d)
         ) or os.path.isfile(self._meta_path(name))
 
     def last_modified_date(self, name: str) -> dt.date | None:
@@ -781,87 +827,33 @@ class TableStore:
         millis = meta["last_modified_millis"]
         return dt.datetime.fromtimestamp(millis / 1000, dt.timezone.utc).date()
 
-    def _dir_has_parquet(self, name: str) -> bool:
-        """Does the table directory hold at least one parquet file
-        (any depth — partition dirs included)? Early-exits on first
-        hit, so the walk is O(1) for healthy tables."""
-        d = self._dir(name)
-        if not os.path.isdir(d):
-            return False
-        for _root, _dirs, files in os.walk(d):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
-
-    @staticmethod
-    def _hidden_entry(entry) -> bool:
-        """Is the ``os.DirEntry`` one Spark's partition discovery
-        skips? Names starting with ``.``, or with ``_`` and holding no
-        ``=`` (``_SUCCESS``, ``_temporary``, ``.spark-staging-*``; a
-        ``_kb=3`` directory is data)."""
-        n = entry.name
-        return n.startswith(".") or (n.startswith("_") and "=" not in n)
-
-    def _partition_col(self, name: str) -> str | None:
-        """The column ``c`` when every data entry of the table
-        directory is a ``c=value`` directory (the ``reload_partitions``
-        layout), else None: no data yet, or part-files at the root.
-        Raises ValueError for a layout no write can extend: files at
-        the root beside partition directories, or partition
-        directories of two columns (partition discovery drops the
-        root files, or fails on the mixed names)."""
-        d = self._dir(name)
-        if not os.path.isdir(d):
-            return None
-        cols = {
-            e.name.split("=", 1)[0] if e.is_dir() and "=" in e.name else None
-            for e in os.scandir(d)
-            if not self._hidden_entry(e)
-        }
-        if len(cols) > 1:
-            raise ValueError(
-                f"{name}: mixed table layout (partition directories "
-                f"{sorted(c for c in cols if c)} beside "
-                f"{'root files' if None in cols else 'each other'}); "
-                "overwrite the table to repair it"
-            )
-        return next(iter(cols), None)
-
-    def _date_partitions(self, name: str, col: str) -> dict[dt.date, list[str]] | None:
-        """The committed ``col=YYYY-MM-DD`` partitions of an
-        unversioned table partitioned by ``col`` alone (the
-        ``reload_partitions`` shape), as date → its parquet files —
-        zero Spark jobs, a directory listing. The pipeline gates answer
-        MAX(col) and a month's COUNT(*) from it (the ``stats_scalar``
+    def _date_partitions(self, name: str, col: str) -> dict[dt.date, int] | None:
+        """Rows per committed ``col=YYYY-MM-DD`` partition of a table
+        partitioned by ``col`` alone (the ``reload_partitions`` shape):
+        the latest snapshot's file paths name the partitions, and the
+        per-file row counts its manifest stats record count them — zero
+        Spark jobs, and a parquet footer read only for a file whose
+        stats carry no row count. The pipeline gates answer MAX(col)
+        and a month's COUNT(*) from it (the ``stats_scalar``
         exact-or-refuse contract for the ``Daily_Weather`` layout).
 
-        Entries Spark's partition discovery skips (``_hidden_entry``)
-        are skipped. So are the NULL partition
-        (``__HIVE_DEFAULT_PARTITION__``: it neither sets a MAX nor falls
-        in a month) and partitions holding no parquet file. Returns
-        None — the caller runs the real scan — for any layout this
-        cannot prove: a keyed or versioned table (its manifest, not
-        its directory, names its files), a file at the table root,
-        another or a nested partition column, a value that is not a
-        canonical date, or a non-parquet data file."""
-        d = self._dir(name)
-        if self._manifest_backed(read_meta(self.root, name)) or not os.path.isdir(d):
+        The NULL partition (``__HIVE_DEFAULT_PARTITION__``) is skipped:
+        it neither sets a MAX nor falls in a month. Returns None — the
+        caller runs the real scan — for any layout this cannot prove:
+        no published manifest, a file at the table root or under
+        another or a nested partition column (a keyed table's
+        ``_kb=``), or a value that is not a canonical date."""
+        import pyarrow.parquet as pq
+
+        snap = self._snapshot(name)
+        if snap.version is None:
             return None
-        out: dict[dt.date, list[str]] = {}
-        prefix = f"{col}="
-        for e in os.scandir(d):
-            if self._hidden_entry(e):
-                continue
-            if not (e.is_dir() and e.name.startswith(prefix)):
+        out: dict[dt.date, int] = {}
+        for rel in snap.files:
+            part, _, f = rel.partition("/")
+            key, eq, value = part.partition("=")
+            if key != col or not eq or "/" in f:
                 return None
-            value = e.name[len(prefix):]
-            files = []
-            for f in os.scandir(e.path):
-                if self._hidden_entry(f):
-                    continue
-                if not (f.is_file() and f.name.endswith(".parquet")):
-                    return None
-                files.append(f.path)
             if value == "__HIVE_DEFAULT_PARTITION__":
                 continue
             try:
@@ -870,8 +862,13 @@ class TableStore:
                 return None
             if day.isoformat() != value:  # e.g. 20240101, 2024-W01-1
                 return None
-            if files:
-                out[day] = files
+            rows = next(
+                (s[3] for s in snap.stats.get(rel, {}).values() if len(s) == 4),
+                None,
+            )
+            if rows is None:
+                rows = pq.read_metadata(os.path.join(self._dir(name), rel)).num_rows
+            out[day] = out.get(day, 0) + int(rows)
         return out
 
     def _touch_meta(self, name: str, **extra) -> None:
@@ -928,7 +925,7 @@ class TableStore:
     @staticmethod
     def _keyed_spec_of(meta: dict) -> tuple[list[str], int] | None:
         """keyed_spec's answer from an already-read meta dict."""
-        if "keyed_on" not in meta:
+        if meta.get("keyed_on") is None:
             return None
         return list(meta["keyed_on"]), int(meta["key_buckets"])
 
@@ -972,47 +969,6 @@ class TableStore:
                     except FileNotFoundError:
                         pass
 
-    def _clear_keyed(self, name: str) -> None:
-        """Remove the keyed marker — a plain overwrite replaces the
-        table unstamped, so a stale marker would route the NEXT upsert
-        into the bucket fast path against a table with no _kb column
-        (code-review r5: reproduced AnalysisException)."""
-        def clear(meta):
-            if not self._manifest_backed(meta):
-                return False
-            for k in (
-                "keyed_on", "key_buckets", "key_types", "versioned",
-                "version", "incarnation",
-            ):
-                meta.pop(k, None)
-
-        if self._update_meta(name, clear):
-            # the snapshot history died with the files
-            shutil.rmtree(self._manifest_dir(name), ignore_errors=True)
-            self._retire_bloom_indexes(name)
-
-    def _retire_versioned(self, name: str) -> None:
-        """Retire a table's snapshot history BEFORE a destructive
-        rewrite of its data directory (ADVICE r6: overwrite() deleted
-        the data files first and the manifests only afterwards, so a
-        crash in between left every manifest pointing at deleted files
-        — reads raised path-not-found until another overwrite). Order:
-        un-mark `versioned` in meta first (readers immediately stop
-        resolving manifests and fall back to the still-intact
-        directory), then drop the manifest files. Either crash window
-        leaves a readable table; the in-progress overwrite window
-        itself fails loudly via the _SUCCESS guard, same as
-        overwrite_keyed's reset window."""
-        def unversion(meta):
-            if not meta.get("versioned") and "version" not in meta:
-                return False
-            meta.pop("versioned", None)
-            meta.pop("version", None)
-
-        self._update_meta(name, unversion)
-        shutil.rmtree(self._manifest_dir(name), ignore_errors=True)
-        self._retire_bloom_indexes(name)
-
     @staticmethod
     def _kb_expr(keys: list[str], n_buckets: int, types: list[str] | None):
         # xxhash64 of the key tuple -> stable bucket; NULL keys hash to
@@ -1053,12 +1009,13 @@ class TableStore:
         writes: AQE sizes the clustering shuffle")."""
         return df.repartition(F.col("_kb"))
 
-    # -- snapshot manifests (keyed and versioned tables) -------------------
+    # -- snapshot manifests (every table) ----------------------------------
     #
     # A manifest generalizing the _meta sidecar is the one commit point
-    # of every keyed table: every write appends NEW part-files (never
+    # of every table: every write appends NEW part-files (never
     # deleting live ones) and atomically publishes a manifest listing
-    # the files of the new snapshot. Readers resolve a manifest once at
+    # the files of the new snapshot, and a file no manifest names is
+    # not part of the table. Readers resolve a manifest once at
     # plan time. On a versioned table (`overwrite_keyed(...,
     # versioned=True)`) superseded manifests and files stay until
     # `vacuum`, so any in-flight plan keeps a consistent version (read-
@@ -1087,15 +1044,6 @@ class TableStore:
     def is_versioned(self, name: str) -> bool:
         return bool(read_meta(self.root, name).get("versioned"))
 
-    @staticmethod
-    def _manifest_backed(meta: dict) -> bool:
-        """Does a manifest name the table's files? True for every keyed
-        table and every versioned one: the manifest is their one commit
-        point. ``versioned`` only decides what happens to the files and
-        the manifest a commit supersedes: kept for time travel until
-        ``vacuum``, or removed by the verb that superseded them."""
-        return bool(meta.get("versioned")) or "keyed_on" in meta
-
     def versions(self, name: str) -> list[int]:
         return list_versions(self.root, name)
 
@@ -1108,28 +1056,10 @@ class TableStore:
         vs = self.versions(name)
         return max(vs) if vs else None
 
-    def _data_files(self, name: str, buckets: list[int] | None = None) -> list[str]:
-        """Current physical parquet part-files (relative to the table
-        dir), optionally restricted to the given buckets."""
-        base = self._dir(name)
-        out = []
-        dirs = (
-            [f"_kb={b}" for b in buckets]
-            if buckets is not None
-            else sorted(
-                d for d in os.listdir(base) if d.startswith("_kb=")
-            )
-            if os.path.isdir(base)
-            else []
-        )
-        for d in dirs:
-            sub = os.path.join(base, d)
-            if not os.path.isdir(sub):
-                continue
-            for f in os.listdir(sub):
-                if f.endswith(".parquet"):
-                    out.append(f"{d}/{f}")
-        return sorted(out)
+    def _data_files(self, name: str) -> list[str]:
+        """The parquet part-files in the table directory, committed or
+        not (``_parquet_files``)."""
+        return _parquet_files(self._dir(name))
 
     def _manifest_doc(self, name: str, version: int) -> dict:
         p = self._manifest_path(name, version)
@@ -1233,7 +1163,7 @@ class TableStore:
         try:
             for _ in range(1000):
                 vs = self.versions(name)
-                if base is not None and max(vs, default=0) != base.version:
+                if base is not None and max(vs, default=0) != (base.version or 0):
                     # compare-and-swap on the BASE VERSION: this
                     # publish's content (file list, colmap) was derived
                     # from the base — a concurrent commit means
@@ -1332,7 +1262,9 @@ class TableStore:
                     doc["txn"] = txn_map
                 doc["version"] = v
                 with open(tmp, "w") as f:
-                    json.dump(doc, f)
+                    # dumps: json.dump streams through the pure-Python
+                    # encoder, ~50 ms per publish at 1,000 files
+                    f.write(json.dumps(doc))
                 if not _fs.link_if_absent(tmp, self._manifest_path(name, v)):
                     continue  # lost the race for v — rescan and retry
                 return v
@@ -3314,35 +3246,47 @@ class TableStore:
         t = self._snapshot(name).txn.get(app_id)
         return None if t is None else int(t)
 
-    def _assert_committed_dir(self, name: str) -> None:
-        """Guard for the manifest-missing fallback: the raw directory
-        is only a consistent snapshot if the overwrite JOB fully
-        committed — Spark writes the `_SUCCESS` marker at job-commit
-        completion, and overwrite mode deletes it first, so a crash
-        mid-write leaves the marker absent. Without this check a
-        partially committed directory would be served (and then
-        published as permanent history by the next write's heal) as if
-        it were the whole table — silent data loss where the pre-heal
-        code at least failed loudly (code-review r6, second pass)."""
-        if not os.path.isfile(os.path.join(self._dir(name), "_SUCCESS")):
+    def _dir_files(self, snap: _Snapshot) -> list[str]:
+        """The part-files that hold a table no manifest describes. A
+        meta that records a version marks overwrite's reset window: the
+        directory holds the table only if the overwrite JOB committed
+        (Spark writes `_SUCCESS` at job commit; overwrite mode deletes
+        it first), else a partial directory would be served, and
+        published as history by the heal (code-review r6). A meta that
+        records none marks a table no manifest ever described: the
+        files Spark's committer wrote are a table from before every
+        table had one, and the files ``_append_and_publish`` renamed in
+        are a first commit that died before its publish."""
+        name, base = snap.name, self._dir(snap.name)
+        files = self._data_files(name)
+        if snap.meta.get("version") is None:
+            return [
+                f for f in files
+                if not _STAGE_RENAMED.match(os.path.basename(f))
+            ]
+        if os.path.isdir(base) and not os.path.isfile(
+            os.path.join(base, "_SUCCESS")
+        ):
             raise RuntimeError(
                 f"{name}: manifest history missing and the data directory "
-                "has no _SUCCESS marker — a versioned overwrite died "
-                "mid-write. Re-run overwrite_keyed to restore the table."
+                "has no _SUCCESS marker — an overwrite died mid-write. "
+                "Re-run the overwrite to restore the table."
             )
+        return files
 
-    def _ensure_latest(self, name: str) -> int:
-        """Latest published version, HEALING a keyed table whose
-        manifest history is missing (a crash between overwrite_keyed's
-        manifest reset and its first publish): the directory was fully
-        overwritten in that window (enforced via the _SUCCESS marker),
-        so its listing IS the consistent snapshot — publish it as v1
-        and continue (code-review r6). Only ``_pin_base`` calls this:
-        the heal is a write, and reads never publish."""
-        v = self.latest_version(name)
-        if v is None:
-            self._assert_committed_dir(name)
-            v = self._publish_version(name, self._data_files(name), op="heal")
+    def _ensure_latest(self, snap: _Snapshot) -> int | None:
+        """Latest published version, HEALING a table with no manifest
+        whose directory holds committed files (``_dir_files``): they
+        are published as v1 with the schema the meta records. None for
+        a table with neither. Only ``_pin_base`` calls this: the heal
+        is a write, and reads never publish."""
+        v = self.latest_version(snap.name)
+        files = self._dir_files(snap) if v is None else []
+        if files:
+            v = self._publish_version(
+                snap.name, files, schema_json=snap.meta.get("schema"),
+                op="heal",
+            )
         return v
 
     @staticmethod
@@ -3353,8 +3297,8 @@ class TableStore:
     _CONFLICT_RETRIES = 10
 
     def _retry_base_conflicts(self, snap: _Snapshot, attempt):
-        """Optimistic-concurrency loop for the keyed write verbs
-        (ADVICE r9 medium), the package's one: each attempt derives
+        """Optimistic-concurrency loop for the write verbs (ADVICE r9
+        medium), the package's one: each attempt derives
         its rewrite from one snapshot — ``attempt(base)`` — and
         publishes with a CAS on the base version and its uid; a
         concurrent commit fails the CAS with BaseVersionConflict and
@@ -3425,13 +3369,12 @@ class TableStore:
         read, for a second snapshot of it (the other end of a
         ``table_changes`` range). An explicit version that is not
         retained raises FileNotFoundError. Version None when no
-        manifest is published (overwrite_keyed's reset window): reads
+        manifest is published (an overwrite's reset window, a table
+        written before every table had a manifest, or no table): reads
         then serve the committed directory or refuse, and never heal —
         a write pins with ``_pin_base``, which does."""
         if meta is None:
             meta = read_meta(self.root, name)
-        if not self._manifest_backed(meta):
-            return _Snapshot(name, meta)
         if version is not None:
             return _Snapshot(name, meta, version, self._manifest_doc(name, version))
         while True:
@@ -3451,12 +3394,12 @@ class TableStore:
         reseed restarting version numbering (the number alone cannot,
         and inode identity is unreliable — inodes recycle; code-review
         r10 wave 3); pre-r10 manifests carry none, and the CAS then
-        degrades to the version-number check alone."""
+        degrades to the version-number check alone. A table with
+        neither manifest nor data pins an empty base (version None),
+        and its first publish CASes on "no version"."""
         snap = self._snapshot(name)
-        if not self._manifest_backed(snap.meta):
-            return snap
         while True:
-            v = self._ensure_latest(name)
+            v = self._ensure_latest(snap)
             if v == snap.version:
                 return snap
             try:
@@ -3468,40 +3411,54 @@ class TableStore:
         self,
         stamped: DataFrame,
         base: _Snapshot,
-        kept: list[str] | None,
+        kept: list[str] | str | None,
         txn: tuple[str, int] | None = None,
         op: str | None = None,
         check_replay: bool = False,
         txn_expect: int | None = None,
         txn_assert: dict[str, int] | None = None,
         pre_clustered: bool = False,
-    ) -> int:
-        """The one commit protocol of keyed tables: append ``stamped``
-        (already _kb-stamped) as NEW part-files — never deleting live
-        ones — then publish a manifest of ``kept`` (the re-referenced
-        files of the ``base`` snapshot) + exactly the files THIS
-        writer created, with a CAS on ``base``; a conflict reaches the
-        caller's derivation-level retry. ``kept=None`` (appends, whose
-        staged files are base-independent) keeps every file of the
-        base, and a conflict retries JUST the publish on a new base
-        (``_retry_base_conflicts``). The manifest schema is the base
-        manifest's widened by ``stamped``'s, so a batch narrower than
-        the table hides no column from later reads. ``check_replay``
-        makes the publish raise TxnAlreadyApplied when ``txn`` is
-        already covered at commit time (the appended files then stay
-        invisible orphans until vacuum). After the publish a versioned
-        table runs its write-path maintenance; an unversioned one
-        removes what the publish superseded (``_remove_superseded``).
+    ) -> int | None:
+        """The one incremental commit of every table: append
+        ``stamped`` as NEW part-files — never deleting live ones — then
+        publish a manifest of the base files ``kept`` names plus
+        exactly the files THIS writer created, with a CAS on ``base``.
+        ``kept`` keeps, of the ``base`` snapshot's files:
+
+        - None: every one (an append);
+        - a column name: those outside the ``col=value`` partitions the
+          stage wrote (``reload_partitions``: dynamic partition
+          overwrite, CAS-protected);
+        - a list: those it names (a rewrite derived from ``base``: a
+          keyed bucket rewrite, or a whole-table rewrite with ``[]``);
+          a conflict reaches the caller's derivation-level retry. The
+          other two kinds stage base-independent files, so a conflict
+          retries JUST the publish (``_retry_base_conflicts``).
+
+        The stage is partitioned by ``_kb`` on a keyed table (after
+        ``_cluster_kb``'s shuffle), by the column ``kept`` names, else
+        by the partition column of the base snapshot's file paths (a
+        ``reload_partitions`` table keeps its Hive layout), else not at
+        all. A stage that wrote no file onto a table with no published
+        version publishes nothing and returns None: an empty first
+        load creates no table. The manifest schema is the base's
+        widened by ``stamped``'s, and a column the batch carries
+        narrower is cast to the table's type. ``check_replay`` makes
+        the publish raise TxnAlreadyApplied when ``txn`` is already
+        covered at commit time (the appended files then stay invisible
+        orphans until vacuum). After the publish a versioned table runs
+        its write-path maintenance; an unversioned one removes what the
+        publish superseded (``_remove_superseded``).
 
         Attribution is by writer, not by directory diff (ADVICE r8):
         the write job lands in a writer-private staging dir, and each
         produced part-file is renamed into the table under a
         stage-unique filename prefix — so a concurrent writer's files
-        can never be captured into this writer's manifest (the old
-        before/after listing diff could publish a racing loser's rows
-        as the winner's). Private staging also gives each job its own
-        ``_temporary`` dir, closing the local FileOutputCommitter
-        corruption two same-path append jobs otherwise race on."""
+        can never be captured into this writer's manifest, and a file
+        no publish named is never part of the table. Private staging
+        also gives each job its own ``_temporary`` dir, closing the
+        local FileOutputCommitter corruption two same-path append jobs
+        otherwise race on."""
         import uuid
 
         name = base.name
@@ -3529,39 +3486,46 @@ class TableStore:
                 )
                 for f in staged.fields
             ])
-        if base.spec is not None and not pre_clustered:
-            # one part-file per bucket per write (see _cluster_kb) —
-            # centralizing here covers every versioned write verb
-            # (upsert/delete/update/merge/append staging); compact
-            # passes pre_clustered=True because it already
-            # repartitioned by _kb and SORTED within partitions, which
-            # a re-shuffle would undo
-            stamped = self._cluster_kb(stamped)
+        if base.spec is not None:
+            part = "_kb"
+            if not pre_clustered:
+                # one part-file per bucket per write (see _cluster_kb) —
+                # centralizing here covers every keyed write verb;
+                # compact passes pre_clustered=True because it already
+                # repartitioned by _kb and SORTED within partitions,
+                # which a re-shuffle would undo
+                stamped = self._cluster_kb(stamped)
+        else:
+            part = kept if isinstance(kept, str) else _layout_of(base.files)
         try:
-            stamped.write.mode("append").partitionBy("_kb").parquet(stage)
+            w = stamped.write.mode("append")
+            (w.partitionBy(part) if part else w).parquet(stage)
             table_dir = self._dir(name)
             new_files: list[str] = []
-            for d in sorted(os.listdir(stage)):
-                if not d.startswith("_kb="):
-                    continue
+            for rel in _parquet_files(stage):
+                d, f = os.path.split(rel)
+                dst = os.path.join(d, f"{token}-{f}")
                 os.makedirs(os.path.join(table_dir, d), exist_ok=True)
-                for f in sorted(os.listdir(os.path.join(stage, d))):
-                    if not f.endswith(".parquet"):
-                        continue
-                    dst = f"{token}-{f}"
-                    _fs.replace(
-                        os.path.join(stage, d, f),
-                        os.path.join(table_dir, d, dst),
-                    )
-                    new_files.append(f"{d}/{dst}")
+                _fs.replace(
+                    os.path.join(stage, rel), os.path.join(table_dir, dst)
+                )
+                new_files.append(dst)
         finally:
             shutil.rmtree(stage, ignore_errors=True)
         staged_schema = staged.json()
+        replaced = {os.path.dirname(f) for f in new_files}
 
-        def publish(base: _Snapshot) -> int:
-            live = (base.files if kept is None else list(kept)) + sorted(
-                new_files
-            )
+        def publish(base: _Snapshot) -> int | None:
+            if base.version is None and not new_files:
+                return None
+            if kept is None or isinstance(kept, str):
+                live = [
+                    f for f in base.files
+                    if kept is None or os.path.dirname(f) not in replaced
+                ]
+            else:
+                live = list(kept)
+            live += new_files
             schema_json = _widened_schema_json(base.schema_json, staged_schema)
             v = self._publish_version(
                 name,
@@ -3581,9 +3545,9 @@ class TableStore:
                 self._remove_superseded(base, live)
             return v
 
-        if kept is None:
-            return self._retry_base_conflicts(base, publish)
-        return publish(base)
+        if isinstance(kept, list):
+            return publish(base)
+        return self._retry_base_conflicts(base, publish)
 
     def _remove_superseded(self, base: _Snapshot, live: list[str]) -> None:
         """After an unversioned publish: remove the base manifest, then
@@ -3599,6 +3563,8 @@ class TableStore:
         a crash or an error here leaves orphans for ``vacuum``, never
         an error."""
         name = base.name
+        if base.version is None:
+            return  # the first publish supersedes nothing
         try:
             doc = self._manifest_doc(name, base.version)
             if doc.get("uid") != base.uid:
@@ -3615,7 +3581,7 @@ class TableStore:
                     _fs.remove(p)
                 except OSError:
                     pass
-        for d in sorted({rel.split("/", 1)[0] for rel in gone}):
+        for d in sorted({os.path.dirname(rel) for rel in gone} - {""}):
             try:
                 _fs.remove_empty_dir(os.path.join(table_dir, d))
             except OSError:
@@ -3810,8 +3776,7 @@ class TableStore:
         )
         if not fat:
             return base.version
-        # under the recorded snapshot schema — no mergeSchema footer
-        # job (r14)
+        # under the recorded snapshot schema — no footer job (r14)
         slice_ = self._read_manifest_df(
             base, [f for b in fat for f in by_bucket[b]]
         )
@@ -4032,11 +3997,11 @@ class TableStore:
                     continue
             os.remove(path)
             deleted.append(rel)
-        # prune now-empty bucket dirs and the dropped manifests
+        # prune now-empty bucket/partition dirs and the dropped manifests
         base = self._dir(name)
         for d in os.listdir(base):
             sub = os.path.join(base, d)
-            if d.startswith("_kb=") and os.path.isdir(sub) and not os.listdir(sub):
+            if "=" in d and os.path.isdir(sub) and not os.listdir(sub):
                 os.rmdir(sub)
         for v in vs:
             if v not in keep:
@@ -4048,8 +4013,8 @@ class TableStore:
 
     def tables(self) -> list[str]:
         """Catalog listing: every table this store holds (manifested
-        versioned tables and plain directories alike) — one directory
-        scan, no data I/O."""
+        tables and directories written before every table had a
+        manifest alike) — one directory scan, no data I/O."""
         out: set[str] = set()
         if not os.path.isdir(self.root):
             return []
@@ -4105,34 +4070,19 @@ class TableStore:
             if os.path.isdir(bdir)
             else []
         )
-        vs = self.versions(name) if self._manifest_backed(meta) else []
+        # an unversioned table's mod-time is the S4 stamp its meta
+        # carries, so describe_detail stays the one catalog verb
+        # pipeline gates need (VERDICT r12 item 7); a versioned one's
+        # is its latest commit's
+        out["last_modified_ts_millis"] = meta.get("last_modified_millis")
+        vs = self.versions(name)
         if not vs:
-            # plain tables have no _kb layout (walk the dir); a
-            # keyed table with NO retained manifests is the
-            # overwrite-reset/heal window — report what exists
-            # instead of crashing on max([]) (code-review r12)
+            # a table with NO retained manifests (the overwrite
+            # reset/heal window, or written before every table had a
+            # manifest) — report what its directory holds instead of
+            # crashing on max([]) (code-review r12)
             out.update({"version": None, "n_versions": 0})
-            # unversioned tables carry their S4 mod-time in meta, not
-            # manifests — surface it so describe_detail is the one
-            # catalog verb pipeline gates need (VERDICT r12 item 7).
-            out["last_modified_ts_millis"] = meta.get("last_modified_millis")
-            files = []
-            base_dir = self._dir(name)
-            for dirpath, dirnames, fnames in os.walk(base_dir):
-                # hidden dirs (.bloomidx sidecars, crashed .tmp-/.old-
-                # swaps) hold bitmap parquet, not data — a versioned
-                # table healing through this window must not count
-                # them (ADVICE r12); prune in-place so walk skips them
-                dirnames[:] = [
-                    x for x in dirnames if not x.startswith(".")
-                ]
-                for f in fnames:
-                    if f.endswith(".parquet"):
-                        files.append(
-                            os.path.relpath(
-                                os.path.join(dirpath, f), base_dir
-                            )
-                        )
+            files = self._data_files(name)
         else:
             v = max(vs)
             doc = self._manifest_doc(name, v)
@@ -4141,7 +4091,8 @@ class TableStore:
             out["created_ts_millis"] = self._manifest_doc(
                 name, vs[0]
             ).get("ts")
-            out["last_modified_ts_millis"] = doc.get("ts")
+            if meta.get("versioned"):
+                out["last_modified_ts_millis"] = doc.get("ts")
             out["txn_apps"] = {
                 a: int(w) for a, w in (doc.get("txn", {}) or {}).items()
             }
@@ -4204,13 +4155,13 @@ class TableStore:
         if (
             meta_issue is None
             and not meta.get("versioned")
-            and (self._manifest_backed(meta) or not vs)
+            and (meta or not vs)
         ):
             # a CLEARLY unversioned table keeps no history to audit
             # (code-review r8 wave 5: a keyed one written before its
             # manifests would report EVERY live file as a reclaimable
-            # orphan). A table with manifests but no meta marker (or
-            # an unreadable meta) still audits.
+            # orphan). A table with manifests but a lost (or
+            # unreadable) meta still audits.
             raise ValueError(
                 f"{name}: fsck audits versioned tables "
                 "(overwrite_keyed(..., versioned=True))"
@@ -4353,28 +4304,35 @@ class TableStore:
         gone (vacuum) or never existed, and silently serving the oldest
         snapshot would misattribute data to a time it wasn't live.
         Reads only the kilobyte manifests."""
+        return self._snapshot_as_of(name, ts).version
+
+    def _snapshot_as_of(self, name: str, ts) -> _Snapshot:
+        """The snapshot ``version_as_of`` resolves, read once: the meta
+        once and each retained manifest once (``read(as_of_ts=)`` scans
+        the manifest it resolved)."""
         millis = self._as_millis(ts)
+        meta = read_meta(self.root, name)
         vs = self.versions(name)
-        if not vs or not self.is_versioned(name):
+        if not vs or not meta.get("versioned"):
             raise ValueError(
                 f"{name}: no manifest history — timestamp time travel "
                 "needs a versioned table (overwrite_keyed(..., "
                 "versioned=True))"
             )
-        best = None
-        for v in vs:  # ascending: the last qualifying version wins
-            doc_ts = self._manifest_doc(name, v).get("ts")
-            if doc_ts is not None and int(doc_ts) <= millis:
-                best = v
-        if best is None:
+        docs = {v: self._manifest_doc(name, v) for v in vs}
+        # ascending: the last qualifying version wins
+        best = [
+            v for v in vs
+            if docs[v].get("ts") is not None and int(docs[v]["ts"]) <= millis
+        ]
+        if not best:
             raise ValueError(
                 f"{name}: no retained version existed at ts={millis} "
-                f"(earliest retained commit: "
-                f"{self._manifest_doc(name, vs[0]).get('ts')}) — the "
-                "history was vacuumed or the table is younger than the "
-                "requested timestamp"
+                f"(earliest retained commit: {docs[vs[0]].get('ts')}) — "
+                "the history was vacuumed or the table is younger than "
+                "the requested timestamp"
             )
-        return best
+        return _Snapshot(name, meta, best[-1], docs[best[-1]])
 
     def restore(self, name: str, version: int) -> int:
         """RESTORE TABLE ... TO VERSION parity: make snapshot
@@ -4542,7 +4500,7 @@ class TableStore:
     # travel reads each version under ITS OWN map. Key columns cannot be renamed or dropped (they route
     # buckets and thread through every merge — model a key change as
     # a rewrite); re-adding a dropped logical name is refused (the old
-    # physical data would resurrect through mergeSchema — Delta avoids
+    # physical data would resurrect under the widened schema — Delta avoids
     # this with field ids, we avoid it loudly). A reseed
     # overwrite_keyed or rebucket bakes the logical schema in and
     # resets the map (full rewrites by definition).
@@ -4756,15 +4714,22 @@ class TableStore:
     ) -> DataFrame:
         """The one scan of a snapshot, or of ``files``, a subset of its
         files: the PHYSICAL frame, ``_kb`` included (``_to_logical``
-        gives the logical view). No manifest published (the reset
-        window of overwrite_keyed): the committed directory, which is
-        the consistent snapshot IF the write job committed (the
-        _SUCCESS guard); the next WRITE republishes (code-review r6)."""
+        gives the logical view). No manifest published (an overwrite's
+        reset window, or a table written before every table had a
+        manifest): the committed files of the directory
+        (``_dir_files``), the package's one directory read; the next
+        WRITE republishes them (code-review r6). FileNotFoundError
+        when it holds none."""
         name = snap.name
         base = self._dir(name)
         if snap.version is None:
-            self._assert_committed_dir(name)
-            return self.spark.read.option("mergeSchema", "true").parquet(base)
+            files = self._dir_files(snap)
+            if not files:
+                raise FileNotFoundError(f"{name}: no committed data")
+            reader = self.spark.read.option("mergeSchema", "true")
+            return reader.option("basePath", base).parquet(
+                *[os.path.join(base, f) for f in files]
+            )
         if files is not None and not files:
             # a pruned-to-nothing scan keeps the snapshot's columns
             return self._read_manifest_df(snap).limit(0)
@@ -4808,22 +4773,25 @@ class TableStore:
         as_of_ts=None,
         where: dict | None = None,
     ) -> DataFrame:
-        """Scan a table. On a versioned keyed table the scan resolves a
-        snapshot manifest at PLAN time — ``version=None`` pins the
-        latest published version, an explicit ``version=N`` pins that
+        """Scan a table. The scan resolves a snapshot manifest at PLAN
+        time and takes its schema from it, so planning runs no Spark
+        job. On a versioned table ``version=None`` pins the latest
+        published version, an explicit ``version=N`` pins that
         snapshot, and ``as_of_ts=`` (epoch ms or datetime; naive = UTC)
         pins the version current at that wall-clock instant (Delta's
-        ``TIMESTAMP AS OF`` — see version_as_of); either way the plan
-        keeps reading those exact files even if upserts publish newer
+        ``TIMESTAMP AS OF`` — see version_as_of), resolved from the
+        one snapshot's meta and manifests; either way the plan keeps
+        reading those exact files even if upserts publish newer
         versions mid-query (snapshot isolation; vacuumed versions fail
-        loudly). An unversioned keyed table resolves its latest manifest
-        the same way — no footer job at plan time — but the verb that
-        supersedes it removes its files, so a plan racing a write can
-        fail on a vanished file (no snapshot isolation), and
-        ``version=``/``as_of_ts=`` refuse. Other tables read their
-        directory. A keyed table whose manifest history is missing
-        (overwrite_keyed's reset window) reads its committed directory
-        and publishes nothing: the next write heals it (``_pin_base``).
+        loudly). An unversioned table, keyed or not, resolves its
+        latest manifest the same way, but the verb that supersedes it
+        removes its files, so a plan racing a write can fail on a
+        vanished file (no snapshot isolation), and
+        ``version=``/``as_of_ts=`` refuse. A table whose manifest
+        history is missing (an overwrite's reset window, or a table
+        written before every table had a manifest) reads its committed
+        directory and publishes nothing: the next write heals it
+        (``_pin_base``).
 
         ``where={col: scalar | [v, ...] | slice(lo, hi)}`` (VERDICT
         r12 item 3) plans the scan through EVERY applicable
@@ -4840,9 +4808,10 @@ class TableStore:
         that needs the manifest."""
         if version is not None and as_of_ts is not None:
             raise ValueError("pass version= or as_of_ts=, not both")
-        if as_of_ts is not None:
-            version = self.version_as_of(name, as_of_ts)
-        snap = self._snapshot(name, version)
+        snap = (
+            self._snapshot(name, version) if as_of_ts is None
+            else self._snapshot_as_of(name, as_of_ts)
+        )
         if where is not None:
             return self._read_planned(
                 snap.require_manifest("where= planning"), where
@@ -4850,10 +4819,6 @@ class TableStore:
         if version is not None and not snap.versioned:
             raise ValueError(
                 f"{name} is not versioned (overwrite_keyed(..., versioned=True))"
-            )
-        if not self._manifest_backed(snap.meta):
-            return self.spark.read.option("mergeSchema", "true").parquet(
-                self._dir(name)
             )
         return self._to_logical(self._read_manifest_df(snap), snap.colmap)
 
@@ -4892,78 +4857,63 @@ class TableStore:
 
     # -- writes ------------------------------------------------------------
     def append(self, df: DataFrame, name: str) -> None:
-        """S8: WRITE_APPEND + ALLOW_FIELD_ADDITION → parquet append; new
-        columns surface on read via mergeSchema=true. A keyed table
-        stamps the rows into their buckets and commits them with a
-        manifest like every keyed write; a table ``reload_partitions``
-        wrote appends in its ``col=value`` layout (ValueError for a
-        layout mixing root files and partition directories)."""
+        """S8: WRITE_APPEND + ALLOW_FIELD_ADDITION. The rows stage as
+        new part-files and commit with a manifest that keeps every
+        file of the base (``_append_and_publish`` with ``kept=None``):
+        a keyed table stamps them into their buckets, a table
+        ``reload_partitions`` wrote takes them in its ``col=value``
+        layout, any other lands them at the root. New columns widen
+        the manifest schema and read as NULL in older files; a column
+        the batch carries narrower than the table is cast to the
+        table's type, and one neither type holds raises ValueError."""
         snap = self._pin_base(name)
         df = self._enforce_constraints(name, df, snap.meta)
         if snap.spec is not None:
             df = self._to_physical(df, snap.colmap)
             df = df.withColumn("_kb", self._kb_expr(*snap.spec, snap.key_types))
-            # appends never remove files: against whatever version a
-            # concurrent writer just published, 'kept' is simply ALL of
-            # its files — no re-merge, the staged rows are
-            # base-independent
-            self._append_and_publish(df, snap, None, op="append")
-            return
-        # a reload_partitions table: root files would be invisible to
-        # partition discovery, so land in its layout
-        part_col = self._partition_col(name)
-        w = df.write.mode("append")
-        (w.partitionBy(part_col) if part_col else w).parquet(self._dir(name))
-        self._touch_meta(name)
+        # appends never remove files: against whatever version a
+        # concurrent writer just published, 'kept' is simply ALL of its
+        # files — no re-merge, the staged rows are base-independent
+        self._append_and_publish(df, snap, None, op="append")
 
     def overwrite(self, df: DataFrame, name: str) -> None:
-        """S9: TRUNCATE + WRITE_TRUNCATE → full overwrite. On a
-        previously versioned table the snapshot history retires FIRST
-        (_retire_versioned), mirroring overwrite_keyed's crash-window
-        ordering: the overwrite is about to delete the files the
-        manifests reference, and manifests pointing at deleted files
-        would wedge every read until another overwrite (ADVICE r6)."""
-        self._overwrite_raw(
+        """S9: TRUNCATE + WRITE_TRUNCATE → full overwrite: the reset
+        ``overwrite_keyed`` runs, with no key (``_reset``). The snapshot
+        history and bloom sidecars retire first, a static overwrite
+        replaces the directory, v1 publishes from its listing, and the
+        meta, stamped last, drops any key spec and the versioned flag
+        (ADVICE r6: a crash in between leaves a readable directory,
+        never manifests pointing at deleted files)."""
+        self._reset(
             self._enforce_constraints(name, df, read_meta(self.root, name)),
             name,
         )
 
-    def _overwrite_raw(self, df: DataFrame, name: str) -> None:
-        """overwrite() minus constraint enforcement — the internal
-        landing path for frames that CONTAIN historical table rows
-        (unkeyed upsert's merged frame, delete_where's survivors).
-        Validating those would re-judge rows written before a
-        constraint existed, wedging the table (code-review r7 wave 2);
-        the public verbs validate their INCOMING batches instead."""
-        self._retire_versioned(name)
-        df.write.mode("overwrite").parquet(self._dir(name))
-        self._clear_keyed(name)
-        self._touch_meta(name)
-
     def reload_partitions(self, df: DataFrame, name: str, part_col: str) -> None:
         """S10: idempotent partition re-load. The reference deletes the
-        date slice then appends (datasources.py:50-59); here dynamic
-        partition overwrite replaces exactly the partitions present in
-        ``df`` and leaves all others intact — exactly-once under re-run.
-        """
-        df = self._enforce_constraints(name, df, read_meta(self.root, name))
-        (
-            df.write.mode("overwrite")
-            .partitionBy(part_col)
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(self._dir(name))
-        )
-        # Stamp the catalog only if the table actually holds data: a
-        # dynamic partitioned write of an EMPTY frame writes no files
-        # (no partition receives data), and stamping it would create a
-        # table that exists() affirms but reads crash on ("unable to
-        # infer schema" on a fileless directory) — which wedges a
-        # streaming foreachBatch whose first batch had zero survivors
-        # into a permanent replay-crash loop (code-review r6). An empty
-        # re-load of an EXISTING table still stamps (it is a completed,
-        # if trivial, load).
-        if self._dir_has_parquet(name):
-            self._touch_meta(name)
+        date slice then appends (datasources.py:50-59); here the rows
+        stage partitioned by ``part_col`` and commit with every base
+        file outside the partitions they fill (``_append_and_publish``
+        with ``kept=part_col``, CAS-protected like every commit):
+        exactly the partitions present in ``df`` are replaced and all
+        others stay — exactly-once under re-run. A frame with no rows
+        publishes nothing onto a new table — no table shell that
+        exists() affirms but reads cannot serve, which wedged a
+        streaming foreachBatch whose first batch had zero survivors
+        (code-review r6) — and re-publishes an existing table
+        unchanged, stamping its meta. ValueError onto a table laid out
+        otherwise (root files, a keyed table, another partition
+        column)."""
+        snap = self._pin_base(name)
+        layout = _layout_of(snap.files)
+        if snap.spec is not None or (snap.files and layout != part_col):
+            raise ValueError(
+                f"{name}: mixed table layout (reload_partitions by "
+                f"{part_col!r} onto a table laid out by {layout!r}); "
+                "overwrite the table to repair it"
+            )
+        df = self._enforce_constraints(name, df, snap.meta)
+        self._append_and_publish(df, snap, part_col, op="reload_partitions")
 
     def upsert(self, df: DataFrame, name: str, key: str | list[str]) -> None:
         """Keyed merge (MERGE/upsert): incoming rows replace existing
@@ -4971,16 +4921,21 @@ class TableStore:
         generalization of the reference's delete-then-append (S10) from
         a date slice to arbitrary keys.
 
-        Two routes, semantically identical:
+        Two routes, semantically identical, both committed by snapshot
+        manifest with a CAS on the pinned base:
 
         - A keyed table (``overwrite_keyed``) merged on its own key:
           only the buckets the batch's keys hash to are rewritten,
           through ``overwrite_buckets`` like every other keyed write
-          verb — appended and published by snapshot manifest; an
-          unversioned table then removes the files it superseded.
-        - Any other table: anti-join + union + overwrite, which
-          rewrites the whole table (fine for dimension-sized tables;
-          key the table to avoid it at scale).
+          verb; an unversioned table then removes the files it
+          superseded.
+        - Any other table: anti-join + union, staged as a whole-table
+          rewrite (``_append_and_publish`` with ``kept=[]``; fine for
+          dimension-sized tables; key the table to avoid it at scale).
+          The old files stay until after the publish, so the merge
+          reads them without a pin, and a writer committing inside the
+          read→publish window makes the whole merge re-run on the new
+          base (``_retry_base_conflicts``) instead of losing its rows.
 
         The incoming batch is deduplicated on the key (last-writer-wins
         within a batch is not defined — dropDuplicates keeps one)
@@ -4992,21 +4947,25 @@ class TableStore:
         if snap.spec is not None and list(snap.spec[0]) == keys:
             self._upsert_keyed(incoming, snap, keys)
             return
-        if self._table_initialized(snap):
-            existing = self.read(name)
-            # null-safe key equality: plain `on=keys` never matches NULL
-            # keys, so a NULL-key row would be appended again every call
-            inc_keys, cond = _key_match(keys, incoming, "_ik_")
-            survivors = existing.join(inc_keys, cond, how="left_anti")
-            merged = survivors.unionByName(incoming, allowMissingColumns=True)
-        else:
+
+        def rewrite(base: _Snapshot) -> None:
             merged = incoming
-        # materialize before overwriting the directory being read;
-        # land via the RAW path — merged holds historical rows that
-        # must not be re-judged by constraints (the incoming batch was
-        # validated above)
-        merged = merged.localCheckpoint()
-        self._overwrite_raw(merged, name)
+            if self._table_initialized(base):
+                existing = self._to_logical(
+                    self._read_manifest_df(base), base.colmap
+                )
+                # null-safe key equality: plain `on=keys` never matches
+                # NULL keys, so a NULL-key row would be appended again
+                # every call
+                inc_keys, cond = _key_match(keys, incoming, "_ik_")
+                merged = existing.join(
+                    inc_keys, cond, how="left_anti"
+                ).unionByName(incoming, allowMissingColumns=True)
+            # merged holds historical rows that constraints must not
+            # re-judge: the incoming batch was validated above
+            self._rewrite_table(merged, base, op="upsert")
+
+        self._retry_base_conflicts(snap, rewrite)
 
     def overwrite_keyed(
         self,
@@ -5045,27 +5004,48 @@ class TableStore:
             )
         df = self._enforce_constraints(name, df, read_meta(self.root, name))
         key_types = [df.schema[k].dataType.simpleString() for k in keys]
-        stamped = df.withColumn(
-            "_kb", self._kb_expr(keys, n_buckets, key_types)
+        self._reset(
+            df.withColumn("_kb", self._kb_expr(keys, n_buckets, key_types)),
+            name,
+            {"keyed_on": keys, "key_buckets": n_buckets, "key_types": key_types},
+            versioned,
+            txn,
         )
-        # Crash-window ordering (code-review r5 + r6): (1) retire the
-        # old manifest history FIRST — the overwrite is about to delete
-        # the files it references, and a manifest pointing at deleted
-        # files is worse than no manifest (reads fall back to the
-        # directory, which stays consistent through every window
-        # below); (2) write the data; (3) publish the v1 manifest file;
-        # (4) stamp the full meta LAST — a crash before it leaves no
-        # phantom keyed/versioned marker, and a retry completes the
-        # table. A crash between (1) and (3) on a previously keyed
-        # table is read from its directory and healed by the next write.
-        #
-        # The retiring history's txn watermark map carries FORWARD into
-        # the reseeded v1 manifest (ADVICE r7): a reseed overwrite must
-        # not let an already-applied streaming batch (same app_id, old
-        # txn_version) silently re-apply — the same reasoning restore()
-        # documents, and Delta's behavior (txnAppId watermarks survive
-        # overwrites). Only when the NEW table is versioned: the
-        # watermark verbs refuse unversioned tables.
+
+    def _reset(
+        self,
+        df: DataFrame,
+        name: str,
+        keyed: dict | None = None,
+        versioned: bool = False,
+        txn: tuple[str, int] | None = None,
+    ) -> None:
+        """The one reset of a table, shared by ``overwrite`` and
+        ``overwrite_keyed``: replace every row with ``df``'s (already
+        ``_kb``-stamped when ``keyed`` carries the key spec the meta
+        records) and restart the history at v1 under a fresh
+        incarnation.
+
+        Crash-window ordering (code-review r5 + r6): (1) retire the
+        old manifest history FIRST — the overwrite is about to delete
+        the files it references, and a manifest pointing at deleted
+        files is worse than no manifest (reads fall back to the
+        directory, which stays consistent through every window
+        below); (2) write the data; (3) publish the v1 manifest file;
+        (4) stamp the full meta LAST — a crash before it leaves no
+        phantom keyed/versioned marker, and a retry completes the
+        table. A crash between (1) and (3) is read from the committed
+        directory and healed by the next write.
+
+        The retiring history's txn watermark map carries FORWARD into
+        the reseeded v1 manifest (ADVICE r7): a reseed overwrite must
+        not let an already-applied streaming batch (same app_id, old
+        txn_version) silently re-apply — the same reasoning restore()
+        documents, and Delta's behavior (txnAppId watermarks survive
+        overwrites). Only when the NEW table is versioned: the
+        watermark verbs refuse unversioned tables."""
+        import uuid
+
         carried_txn: dict = {}
         if versioned:
             prev_v = self.latest_version(name)
@@ -5081,37 +5061,37 @@ class TableStore:
         # a surviving index hashes under the OLD incarnation's dtype —
         # probes casting to it could silently false-negative)
         self._retire_bloom_indexes(name)
+        w = (
+            self._cluster_kb(df).write.partitionBy("_kb") if keyed
+            else df.write
+        )
         (
-            self._cluster_kb(stamped)
-            .write.mode("overwrite")
-            .partitionBy("_kb")
-            # STATIC overwrite, explicitly: the session default is
-            # dynamic (for S10 reloads), under which this "full"
-            # overwrite would only replace the buckets receiving data —
-            # a re-overwrite with a smaller/reshaped dataset would
-            # silently keep every other bucket's stale rows (reproduced
-            # r6: 1-row re-overwrite of a 40-row table read back 36
-            # stale rows). Static truncates the directory first, which
-            # also makes the directory listing + _SUCCESS marker the
-            # trustworthy heal source for the manifest fallback.
+            w.mode("overwrite")
+            # STATIC overwrite, whatever the caller's session sets:
+            # under dynamic, a partitioned "full" overwrite would only
+            # replace the buckets receiving data — a re-overwrite with
+            # a smaller/reshaped dataset would silently keep every
+            # other bucket's stale rows (reproduced r6: 1-row
+            # re-overwrite of a 40-row table read back 36 stale rows).
+            # Static truncates the directory first, which also makes
+            # the directory listing + _SUCCESS marker the trustworthy
+            # heal source for the manifest fallback.
             .option("partitionOverwriteMode", "static")
             .parquet(self._dir(name))
         )
+        schema_json = df.schema.json()
         v = self._write_manifest_file(
             name,
             self._data_files(name),
-            schema_json=stamped.schema.json(),
+            schema_json=schema_json,
             txn=txn if versioned else None,
             op="overwrite",
             seed_txn=carried_txn,
         )
-        import uuid
 
         self._touch_meta(
             name,
-            keyed_on=keys,
-            key_buckets=n_buckets,
-            key_types=key_types,
+            **(keyed or dict.fromkeys(("keyed_on", "key_buckets", "key_types"))),
             versioned=versioned,
             version=v,
             # fresh per reseed: downstream incremental consumers
@@ -5120,7 +5100,7 @@ class TableStore:
             # detected as a NEW table, not a stale/garbage feed source
             # (code-review r8 wave 3)
             incarnation=uuid.uuid4().hex,
-            schema=stamped.schema.json(),
+            schema=schema_json,
         )
 
     def _upsert_keyed(
@@ -5334,6 +5314,16 @@ class TableStore:
             txn_assert=txn_assert,
         )
 
+    def _rewrite_table(self, rows: DataFrame, base: _Snapshot, op: str) -> None:
+        """Commit ``rows``, the logical view of the whole table derived
+        from ``base``, as a rewrite (``kept=[]``); a keyed table's rows
+        go back into their physical names and buckets."""
+        if base.spec is not None:
+            rows = self._to_physical(rows, base.colmap).withColumn(
+                "_kb", self._kb_expr(*base.spec, base.key_types)
+            )
+        self._append_and_publish(rows, base, [], op=op)
+
     def _table_initialized(self, snap: _Snapshot) -> bool:
         """Has any WRITE ever landed for this table? Distinguishes a
         real (possibly empty) table from a meta-only shell, which
@@ -5341,14 +5331,9 @@ class TableStore:
         affirms the shell (it sees the meta file), so routing
         create-vs-merge on exists() broke contract-first creation
         (code-review r7 wave 2: declare constraints, then upsert).
-        A keyed snapshot answers; only a plain one walks the
-        directory."""
-        return (
-            snap.spec is not None
-            or snap.version is not None
-            or self._dir_has_parquet(snap.name)
-            or bool(self.versions(snap.name))
-        )
+        A pinned snapshot (``_pin_base``) answers: its heal published
+        any directory that holds committed rows."""
+        return snap.spec is not None or snap.version is not None
 
     def set_constraints(self, name: str, constraints: dict[str, str]) -> None:
         """Declare CHECK constraints for a table (Delta's ALTER TABLE
@@ -5613,8 +5598,8 @@ class TableStore:
         window — bucket-partitioned data (_kb= dirs) but no keyed
         meta, and no READABLE committed snapshot? A legitimate plain
         table never has _kb= dirs (plain writes land at the directory
-        root; _clear_keyed only runs after the overwrite already
-        truncated them away). The manifest gates narrow the signature
+        root or in their own partitions; an overwrite of a keyed table
+        truncates its buckets away). The manifest gates narrow the signature
         (code-review r8 + ADVICE r8): a MATURE versioned table that
         lost only its meta file also reads keyed_spec()=None with
         _kb= dirs present, but carries a multi-version history the
@@ -6146,9 +6131,14 @@ class TableStore:
         manifest stops referencing the affected buckets' old files and
         prior snapshots stay pinnable until vacuum (overwrite_buckets
         handles both, including fully-emptied buckets). Unkeyed tables
-        fall back to filter + full overwrite, the same trade as
-        unkeyed upsert. Returns the affected bucket ids ([] if nothing
-        matched; [-1] for the unkeyed full rewrite).
+        stage the survivors as a whole-table rewrite
+        (``_append_and_publish`` with ``kept=[]``), the same trade as
+        unkeyed upsert; either way the rewrite is derived from one
+        pinned snapshot and published with a CAS on it, so a writer
+        committing inside the window makes it re-run on the new base
+        (``_retry_base_conflicts``) instead of losing its rows. Returns
+        the affected bucket ids ([] if nothing matched; [-1] for the
+        unkeyed full rewrite).
 
         ``where=`` (r13, versioned keyed tables; mutually exclusive
         with ``condition``) states the delete as a PLANNER spec —
@@ -6163,16 +6153,20 @@ class TableStore:
         snap = self._pin_base(name)
         condition = self._where_to_condition(snap, "delete", condition, where)
         keep = F.coalesce(~condition, F.lit(True))
-        if snap.spec is None:
-            df = self.read(name)
-            if df.filter(condition).isEmpty():
-                return []
-            survivors = df.filter(keep).localCheckpoint()
-            # survivors are existing rows: constraint enforcement does
-            # not apply (deletes on legacy-violating tables must work)
-            self._overwrite_raw(survivors, name)
-            return [-1]
+
         def _attempt(base: _Snapshot) -> list[int]:
+            if base.spec is None:
+                df = self._read_manifest_df(base)
+                if df.filter(condition).isEmpty():
+                    return []
+                # survivors are existing rows: constraint enforcement
+                # does not apply (deletes on legacy-violating tables
+                # must work); no pin: the old files stay until after
+                # the publish
+                self._append_and_publish(
+                    df.filter(keep), base, [], op="delete"
+                )
+                return [-1]
             matches = self._find(base, condition, where)
             affected = self.keyed_buckets(base, matches)
             if not affected:
@@ -6212,9 +6206,11 @@ class TableStore:
         retry all compose as with delete). Declared constraints are
         enforced on the post-update MATCHED rows only — judged on the
         write's real effect, while untouched legacy rows can't wedge
-        the verb (the _enforce_constraints contract). Returns affected
-        bucket ids ([] if nothing matched; [-1] unkeyed full
-        rewrite)."""
+        the verb (the _enforce_constraints contract). Unkeyed tables
+        stage the updated table as a whole-table rewrite with a CAS on
+        the pinned base, retried on a conflict like delete_where's.
+        Returns affected bucket ids ([] if nothing matched; [-1]
+        unkeyed full rewrite)."""
         from pyspark.sql import Column
 
         if not isinstance(set, dict) or not set:
@@ -6269,18 +6265,18 @@ class TableStore:
                 ]
             )
 
-        if kspec is None:
-            df = self.read(name)
-            matched = df.filter(condition)
-            if matched.isEmpty():
-                return []
-            self._enforce_constraints(
-                name, _apply(matched, always=True), snap.meta
-            )
-            self._overwrite_raw(_apply(df).localCheckpoint(), name)
-            return [-1]
-
         def _attempt(base: _Snapshot) -> list[int]:
+            if base.spec is None:
+                df = self._read_manifest_df(base)
+                matched = df.filter(condition)
+                if matched.isEmpty():
+                    return []
+                self._enforce_constraints(
+                    name, _apply(matched, always=True), base.meta
+                )
+                # no pin: the old files stay until after the publish
+                self._append_and_publish(_apply(df), base, [], op="update")
+                return [-1]
             matches = self._find(base, condition, where)
             affected = self.keyed_buckets(base, matches)
             if not affected:
@@ -6356,10 +6352,10 @@ def write_clustered(
         .sortWithinPartitions(partition_col, *sort_cols)
         .write.mode("overwrite")
         .partitionBy(partition_col)
-        # full replacement intended: under the session's dynamic
-        # default, a re-run covering fewer partition values would keep
-        # the stale directories (same class as the overwrite_keyed bug
-        # fixed r6)
+        # full replacement intended, whatever the caller's session
+        # sets: under dynamic, a re-run covering fewer partition values
+        # would keep the stale directories (same class as the
+        # overwrite_keyed bug fixed r6)
         .option("partitionOverwriteMode", "static")
         .parquet(path)
     )

@@ -2144,8 +2144,8 @@ def s3_exists_probe(spark, sf_dir):
 )
 def s8_append_roundtrip(spark, sf_dir):
     """S8: WRITE_APPEND + ALLOW_FIELD_ADDITION (datasources.py:60-66)
-    round-trip: batch 2 carries a column batch 1 lacks; mergeSchema
-    read surfaces it as NULL on the old rows."""
+    round-trip: batch 2 carries a column batch 1 lacks; the read under
+    the manifest's widened schema surfaces it as NULL on the old rows."""
     store = _tmp_store(spark)
     base = t(spark, sf_dir, "region").select(
         F.col("r_regionkey").alias("rkey"), F.col("r_name").alias("rname")
@@ -2183,8 +2183,8 @@ def s9_replace_roundtrip(spark, sf_dir):
 )
 def s10_reload_roundtrip(spark, sf_dir):
     """S10: idempotent partition re-load (datasources.py:50-59)
-    round-trip: the month-2 partition is loaded TWICE via dynamic
-    partition overwrite; the second load replaces (not duplicates) it,
+    round-trip: the month-2 partition is loaded TWICE via
+    reload_partitions; the second load replaces (not duplicates) it,
     so the read-back equals a single clean copy."""
     store = _tmp_store(spark)
     df = (

@@ -36,10 +36,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine defaults.
 
-    At 100 TB the operative knobs are AQE (coalesces the ~2000-partition
-    shuffles this config requests down to what the data needs, splits
-    skewed partitions) and partitionOverwriteMode=dynamic (so re-loads
-    replace only the touched date partitions, not the table).
+    At 100 TB the operative knob is AQE: it coalesces the ~2000-partition
+    shuffles this config requests down to what the data needs and splits
+    skewed partitions.
 
     Python workers start from ``_worker_daemon``, which takes Spark's
     pyspark/py4j zips and the spark-core jar off their ``sys.path`` (SCALE.md
@@ -89,7 +88,6 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.session.timeZone", "UTC")
         # INT96 (the legacy default) writes NO parquet min/max
         # statistics, which silently disables manifest-stats data

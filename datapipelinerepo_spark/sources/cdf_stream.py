@@ -159,7 +159,7 @@ class TableChangesStreamReader(DataSourceStreamReader):
         self.table = options["table"]
         self.start_opt = options.get("starting_version")
         meta = read_meta(self.root, self.table)
-        if not meta.get("versioned") or "keyed_on" not in meta:
+        if not meta.get("versioned") or meta.get("keyed_on") is None:
             raise ValueError(
                 f"{self.table}: the CDF stream needs a versioned keyed "
                 "table (overwrite_keyed(..., versioned=True))"

@@ -248,7 +248,7 @@ def near_dup_ingest_stream(
     (operators/dedup.minhash_band_index semantics, streamed).
 
     Exactly-once without a lakehouse: all three writes go through
-    dynamic partition overwrite on a ``_batch_id`` partition column, so
+    ``reload_partitions`` on a ``_batch_id`` partition column, so
     a replayed micro-batch (foreachBatch is at-least-once on retry)
     overwrites its own partition instead of double-appending — the
     same mechanism as S10 idempotent re-loads. Intra-batch duplicates
@@ -322,7 +322,7 @@ def curate_ingest_stream(
     reason column, keeping the drop accounting auditable.
 
     Exactly-once like near_dup_ingest_stream: both writes go through
-    dynamic partition overwrite on a ``_batch_id`` partition, so a
+    ``reload_partitions`` on a ``_batch_id`` partition, so a
     replayed micro-batch overwrites its own partition. Near-dup
     handling stays with near_dup_ingest_stream (standing LSH index);
     this operator is the gate+redact+exact-dedup front of the same
@@ -393,7 +393,7 @@ def curate_ingest_stream(
         # write back-fills executor slots the clean write's task tail
         # leaves idle (guide-standard overlap; measured ~1.3 s of the
         # ~3 s batch at sf0.1). Same exactly-once posture: each write
-        # still lands via _batch_id dynamic partition overwrite, and
+        # still lands via reload_partitions on _batch_id, and
         # awaiting both before returning keeps the micro-batch commit
         # AFTER both sinks, exactly as the sequential form did (r14).
         from concurrent.futures import ThreadPoolExecutor
@@ -449,8 +449,9 @@ def cdc_ingest_stream(
     cdc_apply is idempotent on re-application of the same batch to its
     own output (pinned by test_cdc_apply_idempotent_replay), so an
     at-least-once foreachBatch retry converges to the same table. The
-    merged result is localCheckpoint'ed before the overwrite because
-    it reads the very table it replaces.
+    merge rewrites the whole table and commits it with a CAS on the
+    snapshot it read, so a writer committing meanwhile makes it re-run
+    on the new base instead of losing its rows.
 
     ``exactly_once_app`` upgrades replay handling from convergence to
     TRANSACTIONAL skip when ``base_table`` is a VERSIONED keyed table:
@@ -467,7 +468,6 @@ def cdc_ingest_stream(
     deletes is pruned from disk), so per-batch cost tracks the batch,
     not the table — the lakehouse MERGE cost profile for a streaming
     dimension at 100 TB."""
-    from ..io import read_meta
     from ..operators.relational import cdc_apply
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
@@ -492,22 +492,29 @@ def cdc_ingest_stream(
                 "the watermark"
             )
         batch = batch.localCheckpoint(eager=True)
-        # _table_initialized, not exists(): a meta-only shell from
-        # contract-first set_constraints must route to CREATE, not a
-        # read of a fileless directory (code-review r7 wave 4)
-        if store._table_initialized(store._snapshot(base_table)):
-            base = store.read(base_table)
-        else:
-            base = batch.drop(seq_col, op_col).limit(0)
-        merged = cdc_apply(
-            base, batch, key=key, seq_col=seq_col, op_col=op_col
-        ).localCheckpoint(eager=True)
-        # judge the POST-MERGE rows the batch lands (see cdc_apply_txn)
-        _check_landed_rows(
-            store, base_table, merged, batch, key,
-            read_meta(store.root, base_table),
-        )
-        store._overwrite_raw(merged, base_table)
+
+        def _rewrite(snap) -> None:
+            # _table_initialized, not exists(): a meta-only shell from
+            # contract-first set_constraints must route to CREATE, not
+            # a read of a fileless directory (code-review r7 wave 4)
+            if store._table_initialized(snap):
+                base = store._to_logical(
+                    store._read_manifest_df(snap), snap.colmap
+                )
+            else:
+                base = batch.drop(seq_col, op_col).limit(0)
+            # pinned once: the constraint check and the write read it
+            merged = cdc_apply(
+                base, batch, key=key, seq_col=seq_col, op_col=op_col
+            ).localCheckpoint(eager=True)
+            # judge the POST-MERGE rows the batch lands (see
+            # cdc_apply_txn)
+            _check_landed_rows(store, base_table, merged, batch, key, snap.meta)
+            store._rewrite_table(merged, snap, op="cdc_apply")
+
+        # a whole-table rewrite with a CAS on the snapshot it merged;
+        # a commit inside the window re-runs the merge on the new base
+        store._retry_base_conflicts(store._pin_base(base_table), _rewrite)
 
     return _start_foreach_batch(
         changes, _apply, checkpoint_dir, available_now, "update"

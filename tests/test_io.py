@@ -4,6 +4,7 @@ idempotent partition reload (SURVEY.md §5.3 / §7 hard part 2)."""
 from __future__ import annotations
 
 import datetime as dt
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -54,13 +55,21 @@ def test_partition_reload_idempotent(spark, tmp_path):
     # and re-running the identical load changes nothing
     store.reload_partitions(day2b, "w", "date")
     assert _rows(store, "w") == after
+    # an empty re-load is a completed load: it stamps the catalog and
+    # changes no row
+    stamped = store.describe_detail("w")["last_modified_ts_millis"]
+    time.sleep(0.01)
+    store.reload_partitions(day2b.limit(0), "w", "date")
+    assert store.describe_detail("w")["last_modified_ts_millis"] > stamped
+    assert _rows(store, "w") == after
 
 
 def test_append_onto_reloaded_table_keeps_its_layout(spark, tmp_path):
     """An append onto a table reload_partitions wrote lands in its
     date= layout: part-files at the root are dropped by partition
-    discovery, which lost the appended rows silently. A layout mixing
-    root files and partition directories refuses."""
+    discovery, which lost the appended rows silently. A root part-file
+    no verb committed is not part of the table, and a reload onto a
+    table laid out otherwise refuses."""
     store = TableStore(spark, str(tmp_path))
     d1, d2, d3 = dt.date(2026, 8, 1), dt.date(2026, 8, 2), dt.date(2026, 8, 3)
     schema = "zip string, date date, v double"
@@ -73,12 +82,21 @@ def test_append_onto_reloaded_table_keeps_its_layout(spark, tmp_path):
     assert {(r["zip"], r["date"], r["v"]) for r in got.collect()} == set(
         rows + [("z2", d3, 3.0)]
     )
-    # a root part-file beside the partitions: no append can extend it
+    # a root part-file beside the partitions that no verb committed
+    # changes neither the reads nor the next append's layout
     spark.createDataFrame([("z3", d3, 4.0)], schema).write.mode(
         "append"
     ).parquet(store._dir("w"))
+    assert store.read("w").count() == 3
+    store.append(spark.createDataFrame([("z4", d3, 5.0)], schema), "w")
+    assert store.read("w").count() == 4
+    assert all("/" in f for f in store._snapshot("w").files)
+    # partitions beside root files: a reload onto an appended table
+    store.append(spark.createDataFrame([("z5", d3, 6.0)], schema), "r")
     with pytest.raises(ValueError, match="mixed table layout"):
-        store.append(spark.createDataFrame([("z4", d3, 5.0)], schema), "w")
+        store.reload_partitions(
+            spark.createDataFrame([("z6", d3, 7.0)], schema), "r", "date"
+        )
 
 
 def test_catalog_probes(spark, tmp_path):
@@ -715,7 +733,7 @@ def test_versioned_partial_overwrite_fails_loudly(spark, tmp_path, monkeypatch):
 
 def test_overwrite_keyed_reoverwrite_truncates_all_buckets(spark, tmp_path):
     """A re-overwrite_keyed must replace the WHOLE table even when the
-    new dataset leaves some buckets empty: the session-wide dynamic
+    new dataset leaves some buckets empty: a session set to dynamic
     partitionOverwriteMode would otherwise keep every no-data bucket's
     stale rows (reproduced r6: a 1-row re-overwrite of a 40-row table
     read back 36 stale rows). The write forces static overwrite."""
@@ -855,7 +873,7 @@ def test_overwrite_on_versioned_table_retires_history_first(spark, tmp_path):
     after the retire step alone (the simulated crash point) the table
     still reads from the intact directory, and the completed overwrite
     reads the new rows."""
-    import os
+    import shutil
 
     store = _mk_versioned(spark, tmp_path, n=20, buckets=4)
     store.upsert(
@@ -863,9 +881,9 @@ def test_overwrite_on_versioned_table_retires_history_first(spark, tmp_path):
         "t",
         "id",
     )
-    # simulated crash: retire ran, the destructive write never did
-    store._retire_versioned("t")
-    assert not os.path.isdir(store._manifest_dir("t"))
+    # simulated crash: the reset's retire step ran, the destructive
+    # write never did
+    shutil.rmtree(store._manifest_dir("t"))
     got = {r["id"]: r["price"] for r in store.read("t").collect()}
     # the heal serves the DIRECTORY (union of every version's files):
     # the upserted key appears in both its v1 and v2 file, so which
@@ -3951,7 +3969,8 @@ def test_tables_and_describe_detail(spark, tmp_path):
     assert d["created_ts_millis"] <= d["last_modified_ts_millis"]
     assert d["incarnation"]
 
-    assert p["version"] is None and p["n_versions"] == 0
+    # every table commits through its manifest: the overwrite is v1
+    assert p["version"] == 1 and p["n_versions"] == 1
     assert p["n_files"] > 0 and p["size_bytes"] > 0
     assert p["bloom_index_cols"] == []
 
@@ -5071,7 +5090,9 @@ def test_read_verbs_read_the_table_once(spark, tmp_path, monkeypatch):
         "lookup": lambda: store.lookup("t", [7, 8]),
         "last_txn": lambda: store.last_txn("t", "app"),
         "table_changes(1)": lambda: store.table_changes("t", 1),
+        "read(as_of_ts=)": lambda: store.read("t", as_of_ts=as_of),
     }
+    as_of = store.history("t")[0]["ts_millis"]
     meta_reads = [0]
     opens: dict[str, int] = {}
     real_read_meta, real_open = io_mod.read_meta, builtins.open
@@ -5106,4 +5127,165 @@ def test_read_verbs_read_the_table_once(spark, tmp_path, monkeypatch):
     want = {verb: {vn: 1} for verb in verbs}
     want["read(version=1)"] = {v1: 1}
     want["table_changes(1)"] = {v1: 1, vn: 1}
+    # the timestamp resolves from every retained manifest, each read once
+    want["read(as_of_ts=)"] = {v1: 1, vn: 1}
     assert {verb: o for verb, (_, o) in counts.items()} == want
+
+
+@pytest.mark.parametrize("verb", ["upsert", "delete_where"])
+def test_unkeyed_rewrite_keeps_a_concurrent_append(
+    spark, tmp_path, monkeypatch, verb
+):
+    """An unkeyed whole-table rewrite publishes with a CAS on the
+    snapshot it read. An append another store commits inside the
+    rewrite's read→commit window (here: just before its write job)
+    fails that CAS, and the rewrite re-runs on the new base, so the
+    appended row survives; a rewrite that replaced the table with the
+    rows it had read would lose it."""
+    from pyspark.sql import DataFrameWriter
+
+    store = TableStore(spark, str(tmp_path))
+    other = TableStore(spark, str(tmp_path))
+    schema = "k long, v string"
+    store.append(spark.createDataFrame([(i, "a") for i in range(10)], schema), "t")
+    real, fired = DataFrameWriter.parquet, []
+
+    def racing(self, path, *a, **kw):
+        if not fired:
+            fired.append(path)
+            other.append(spark.createDataFrame([(100, "x")], schema), "t")
+        return real(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", racing)
+    want = {i: "a" for i in range(10)}
+    want[100] = "x"
+    if verb == "upsert":
+        store.upsert(spark.createDataFrame([(1, "b")], schema), "t", "k")
+        want[1] = "b"
+    else:
+        assert store.delete_where("t", condition="k = 1") == [-1]
+        del want[1]
+    monkeypatch.undo()
+    assert fired
+    assert {r["k"]: r["v"] for r in store.read("t").collect()} == want
+
+
+@pytest.mark.parametrize("verb", ["append", "reload_partitions"])
+def test_unkeyed_narrower_write_keeps_the_table_type(spark, tmp_path, verb):
+    """A column an unkeyed write carries narrower than the table (int
+    into long) is cast to the table's type: the table stays readable at
+    the wider type, where files of both types would fail to merge on
+    the next read. A type neither holds raises before anything
+    lands."""
+    store = TableStore(spark, str(tmp_path))
+
+    def write(rows, schema):
+        df = spark.createDataFrame(rows, schema)
+        if verb == "append":
+            store.append(df, "t")
+        else:
+            store.reload_partitions(df, "t", "d")
+
+    write([("a", 1)], "d string, v long")
+    write([("b", 2)], "d string, v int")
+    got = store.read("t")
+    assert dict(got.dtypes)["v"] == "bigint"
+    assert sorted((r["d"], r["v"]) for r in got.collect()) == [("a", 1), ("b", 2)]
+    with pytest.raises(ValueError, match="neither type holds"):
+        write([("c", "x")], "d string, v string")
+    assert store.read("t").count() == 2
+
+
+def test_heal_records_the_schema(spark, tmp_path):
+    """The heal publishes the directory listing with the schema the
+    meta records, so after a write heals a versioned keyed table whose
+    history was removed, the stats answer a typed aggregate and a read
+    of v1 plans from the manifest with no footer job."""
+    import shutil
+
+    from .test_job_budget import _jobs
+
+    store = TableStore(spark, str(tmp_path))
+    store.overwrite_keyed(
+        spark.range(0, 40).select(
+            F.col("id").alias("k"), (F.col("id") % 5).alias("cust")
+        ),
+        "t", "k", n_buckets=4, versioned=True,
+    )
+    shutil.rmtree(store._manifest_dir("t"))
+    assert store.delete_where("t", condition="k < 0") == []  # heals v1
+    assert store.versions("t") == [1]
+    assert store.stats_scalar("t", "max", "cust") == 4
+    assert _jobs(spark, lambda: store.read("t", version=1).schema) == 0
+
+
+@pytest.mark.parametrize("versioned", [False, True])
+def test_upsert_on_another_key_keeps_the_table_keyed(spark, tmp_path, versioned):
+    """An upsert on a key other than the table's own rewrites the whole
+    table and stamps every row back into its bucket under the table's
+    key: the table stays keyed, a lookup on its key finds the new rows,
+    and a keyed upsert on it still merges. The versioned case renames
+    the merge column first, so the rewrite also maps the logical names
+    back to the physical ones."""
+    store = TableStore(spark, str(tmp_path))
+    store.overwrite_keyed(
+        spark.createDataFrame(
+            [(i, f"v{i}") for i in range(8)], "id long, v string"
+        ),
+        "t", "id", n_buckets=4, versioned=versioned,
+    )
+    col = "v"
+    if versioned:
+        store.rename_column("t", "v", "w")
+        col = "w"
+    schema = f"id long, {col} string"
+    store.upsert(
+        spark.createDataFrame([(100, "v1"), (101, "new")], schema), "t", col
+    )
+    want = {i: f"v{i}" for i in range(8) if i != 1}
+    want.update({100: "v1", 101: "new"})
+    assert store.keyed_spec("t")[0] == ["id"]
+    assert {r["id"]: r[col] for r in store.read("t").collect()} == want
+    assert {r["id"] for r in store.lookup("t", [100, 101, 3]).collect()} == {
+        100, 101, 3
+    }
+    store.upsert(spark.createDataFrame([(100, "z")], schema), "t", "id")
+    want[100] = "z"
+    assert {r["id"]: r[col] for r in store.read("t").collect()} == want
+
+
+@pytest.mark.parametrize("verb", ["append", "reload_partitions", "upsert"])
+def test_first_write_that_died_before_its_publish_is_no_table(
+    spark, tmp_path, monkeypatch, verb
+):
+    """A first write whose files reached the table directory but whose
+    publish never ran committed nothing: the files are not part of the
+    table, so the table does not exist, and the verb's re-run (a
+    streaming replay of the batch) commits exactly its own rows."""
+    store = TableStore(spark, str(tmp_path))
+
+    def write(rows):
+        df = spark.createDataFrame(rows, "d string, v long")
+        if verb == "append":
+            store.append(df, "t")
+        elif verb == "reload_partitions":
+            store.reload_partitions(df, "t", "d")
+        else:
+            store.upsert(df, "t", "v")
+
+    def died(*a, **kw):
+        raise OSError("injected: died before the publish")
+
+    monkeypatch.setattr(TableStore, "_publish_version", died)
+    with pytest.raises(OSError, match="injected"):
+        write([("a", 1)])
+    monkeypatch.undo()
+    assert store._data_files("t")  # the dead write's files stay on disk
+    assert not store.exists("t")
+    with pytest.raises(FileNotFoundError):
+        store.read("t")
+    write([("a", 1), ("b", 2)])
+    got = store.read("t")
+    assert {(r["d"], r["v"]) for r in got.collect()} == {("a", 1), ("b", 2)}
+    write([("c", 3)])
+    assert store.read("t").count() == 3

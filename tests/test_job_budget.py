@@ -1,9 +1,9 @@
 """Spark-job budgets of the store verbs: the exact number of Spark jobs
 each verb launches on a small versioned keyed table with a bloom index,
-and on a small unversioned keyed table (the same manifest commit, so
-never more jobs than versioned); the tasks of an upsert's write
-stage; and the jobs of the pipeline's gates and load on a
-date-partitioned table.
+on a small unversioned keyed table (the same manifest commit, so
+never more jobs than versioned) and on a small unkeyed table; the
+tasks of an upsert's write stage; and the jobs of the pipeline's gates
+and load on a date-partitioned table.
 
 Job counts do not vary between runs, so they pin the Spark layer
 without timing noise: a verb that gains a job (a parquet footer read, a
@@ -51,6 +51,17 @@ UNVERSIONED_BUDGETS = {
     "update_where": 4,
     "lookup": 3,
     "cdc_apply_txn": 9,
+}
+
+
+# unkeyed tables commit through the same manifest: an append stages its
+# rows, and upsert/delete_where/update_where stage a whole-table rewrite
+# (the old files stay until after the publish, so nothing is pinned)
+UNKEYED_BUDGETS = {
+    "upsert": 2,
+    "delete_where": 2,
+    "update_where": 2,
+    "append": 1,
 }
 
 
@@ -173,6 +184,38 @@ def unversioned_jobs(spark, unversioned_store):
     return {name: _jobs(spark, fn) for name, fn in verbs.items()}
 
 
+@pytest.fixture(scope="module")
+def unkeyed_store(spark, tmp_path_factory):
+    """A 400-row appended table and a 17-partition reloaded one."""
+    store = TableStore(spark, str(tmp_path_factory.mktemp("budget_unk")))
+    store.append(_rows(spark, 0, 400), "a")
+    days = [dt.date(2026, 2, 20) + dt.timedelta(days=i) for i in range(17)]
+    store.reload_partitions(_days(spark, days), "r", "date")
+    return store
+
+
+@pytest.fixture(scope="module")
+def unkeyed_jobs(spark, unkeyed_store):
+    """The unkeyed write verbs, in order, on the appended table."""
+    store = unkeyed_store
+    verbs = {
+        "upsert": lambda: store.upsert(_rows(spark, 390, 410, 1.0), "a", "k"),
+        "delete_where": lambda: store.delete_where(
+            "a", condition="k >= 200 AND k < 210"
+        ),
+        "update_where": lambda: store.update_where(
+            "a", {"amt": "amt + 1"}, condition="k >= 300 AND k < 305"
+        ),
+        "append": lambda: store.append(_rows(spark, 500, 520), "a"),
+    }
+    return {name: _jobs(spark, fn) for name, fn in verbs.items()}
+
+
+@pytest.mark.parametrize("verb", sorted(UNKEYED_BUDGETS))
+def test_unkeyed_verb_job_budget(unkeyed_jobs, verb):
+    assert unkeyed_jobs[verb] == UNKEYED_BUDGETS[verb]
+
+
 @pytest.mark.parametrize("verb", sorted(BUDGETS))
 def test_store_verb_job_budget(verb_jobs, verb):
     assert verb_jobs[verb] == BUDGETS[verb]
@@ -190,13 +233,17 @@ def test_unversioned_never_costs_more_jobs(verb_jobs, unversioned_jobs, verb):
     assert unversioned_jobs[verb] <= verb_jobs[verb]
 
 
-def test_pruned_reads_plan_without_a_job(spark, store, unversioned_store):
-    """Planning a pruned read, or any read of a keyed table, takes its
-    schema from the manifest, so no footer job runs before the caller
-    asks for rows."""
+def test_pruned_reads_plan_without_a_job(
+    spark, store, unversioned_store, unkeyed_store
+):
+    """Planning a pruned read, or any read of a table, keyed or not,
+    takes its schema from the manifest, so no footer job runs before
+    the caller asks for rows."""
     assert _jobs(spark, lambda: store.read("t", where={"k": 57}).schema) == 0
     assert _jobs(spark, lambda: store.read_point("t", "cust", 13).schema) == 0
     assert _jobs(spark, lambda: unversioned_store.read("t").schema) == 0
+    assert _jobs(spark, lambda: unkeyed_store.read("a").schema) == 0
+    assert _jobs(spark, lambda: unkeyed_store.read("r").schema) == 0
 
 
 def test_upsert_write_stage_tasks(spark, store, verb_jobs):

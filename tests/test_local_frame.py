@@ -195,9 +195,10 @@ def test_direct_fs_mutations_in_io_only_fall():
     """Porting the store means implementing ``_fs``; every direct
     ``os.replace``/``os.rename``/``os.remove``/``os.rmdir``/
     ``shutil.rmtree`` left in io.py is a mutation that port would miss.
-    Their count may only fall (20 once the bloom sidecar swaps went
-    through one ``_fs`` swap; 27 once the unversioned keyed tables
-    committed through the manifest; 33 before)."""
+    Their count may only fall (18 once every table committed through
+    its manifest; 20 once the bloom sidecar swaps went through one
+    ``_fs`` swap; 27 once the unversioned keyed tables committed
+    through the manifest; 33 before)."""
     with open(os.path.join(_PKG, "io.py")) as fh:
         tree = ast.parse(fh.read())
     mutations = {
@@ -212,7 +213,98 @@ def test_direct_fs_mutations_in_io_only_fall():
         and isinstance(n.func.value, ast.Name)
         and (n.func.value.id, n.func.attr) in mutations
     ]
-    assert len(direct) <= 20, direct
+    assert len(direct) <= 18, direct
+
+
+def _io_functions():
+    with open(os.path.join(_PKG, "io.py")) as fh:
+        src = fh.read()
+    tree = ast.parse(src)
+    return src, [
+        fn for fn in ast.walk(tree)
+        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+    ]
+
+
+def test_table_directory_writes_only_in_the_commits():
+    """One commit protocol for every table: a DataFrame write lands in
+    a table directory (``self._dir(...)``, directly or through a local
+    name assigned from it) only in the reset of ``overwrite`` and
+    ``overwrite_keyed``; every other write stages privately and
+    ``_append_and_publish`` renames the files in and publishes a
+    manifest. A write straight into the directory commits through
+    Spark's committer, which no manifest names."""
+
+    def table_dir(expr, names) -> bool:
+        return any(
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "_dir"
+            or isinstance(n, ast.Name) and n.id in names
+            for n in ast.walk(expr)
+        )
+
+    def writer(expr, names) -> bool:
+        return any(
+            isinstance(n, ast.Attribute) and n.attr == "write"
+            or isinstance(n, ast.Name) and n.id in names
+            for n in ast.walk(expr)
+        )
+
+    writers = []
+    for fn in _io_functions()[1]:
+        dirs: set[str] = set()
+        ws: set[str] = set()
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Assign):
+                for names, test in ((dirs, table_dir), (ws, writer)):
+                    if test(node.value, names):
+                        names.update(
+                            n.id for t in node.targets for n in ast.walk(t)
+                            if isinstance(n, ast.Name)
+                        )
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("parquet", "save", "saveAsTable")
+                and writer(node.func.value, ws)
+                and any(table_dir(a, dirs) for a in node.args)
+            ):
+                writers.append(fn.name)
+    assert sorted(set(writers)) == ["_reset"], writers
+    stagers = {
+        fn.name for fn in _io_functions()[1]
+        if any(
+            isinstance(n, ast.Attribute) and n.attr == "write"
+            for n in ast.walk(fn)
+        )
+        and any(
+            isinstance(n, ast.Call)
+            and getattr(n.func, "attr", None) == "replace"
+            and getattr(n.func.value, "id", None) == "_fs"
+            for n in ast.walk(fn)
+        )
+    }
+    assert stagers == {"_append_and_publish"}, stagers
+
+
+def test_merge_schema_only_in_the_directory_read():
+    """``mergeSchema`` derives a schema from every file footer with a
+    Spark job. A snapshot manifest records the schema, so the one scan,
+    ``_read_manifest_df``, needs it only for a table no manifest
+    describes (a reset window, or a table written before every table
+    had a manifest) or a manifest that records no schema."""
+    src, fns = _io_functions()
+    scan = next(fn for fn in fns if fn.name == "_read_manifest_df")
+    lines = [
+        i for i, line in enumerate(src.splitlines(), 1)
+        if "mergeSchema" in line
+    ]
+    assert lines, "the directory read lost its mergeSchema"
+    assert [
+        i for i in lines if not scan.lineno <= i <= scan.end_lineno
+    ] == [], lines
 
 
 def _meta_path_opens(fn) -> list[int]:

@@ -94,15 +94,15 @@ def test_quota_gate(spark, store):
 
 
 # Gates on a table reloaded by date partition (the Daily_Weather shape)
-# answer from the partition directories and parquet footers; each case
-# below checks both gates against a Spark scan of the same files.
+# answer from the committed partitions' manifest row counts; each case
+# below checks both gates against a scan of the committed table.
 
 
 def _assert_gates_match_scan(spark, store, clock, fast):
     """Both gates at the exact boundary of the scanned MAX(date) and
     this month's COUNT(*); ``fast`` says which path the layout proves."""
     assert (store._date_partitions("w", "date") is not None) == fast
-    scan = spark.read.parquet(store._dir("w"))
+    scan = store.read("w")
     today = clock.today()
     used = scan.where(
         f"month(date) = {today.month} AND year(date) = {today.year}"
@@ -142,8 +142,9 @@ def test_partition_gates_skip_the_null_partition(spark, two_years):
 
 
 def test_partition_gates_skip_partitions_without_rows(spark, two_years):
-    """A newest partition left without rows — no parquet file, or a
-    zero-row one from another writer — sets no MAX and counts 0."""
+    """A newest partition no verb committed — a directory with no
+    parquet file, or a zero-row file from another writer — is not part
+    of the table: it sets no MAX and counts 0, like the table's scan."""
     import os
 
     import pyarrow as pa
@@ -161,6 +162,9 @@ def test_partition_gates_skip_partitions_without_rows(spark, two_years):
 
 
 def test_partition_gates_fall_back_on_a_root_level_file(spark, two_years):
+    """A root-level file no verb committed is not part of the table:
+    the gates keep answering from the committed partitions, and agree
+    with the table's scan, which does not read the file either."""
     import os
 
     import pyarrow as pa
@@ -168,7 +172,9 @@ def test_partition_gates_fall_back_on_a_root_level_file(spark, two_years):
 
     root_file = pa.table({"zip": ["r"], "v": [1.0], "date": [dt.date(2026, 8, 9)]})
     pq.write_table(root_file, os.path.join(two_years._dir("w"), "part-root.parquet"))
-    _assert_gates_match_scan(spark, two_years, FixedClock(MONDAY), False)
+    assert _assert_gates_match_scan(spark, two_years, FixedClock(MONDAY), True) == (
+        6, dt.date(2026, 8, 3),
+    )
 
 
 def test_partition_gates_fall_back_on_a_keyed_table(spark, store):

@@ -571,6 +571,61 @@ def test_near_dup_ingest_replay_same_batch_id(spark, tmp_path, docs_df=None):
     assert flags2 == {(2, 1)}  # no (2, 2) self-match
 
 
+def test_cdc_ingest_stream_on_a_table_keyed_otherwise(spark, tmp_path):
+    """CDC on a key other than the table's own takes the whole-table
+    rewrite, which stamps every row back into its bucket: the table
+    stays keyed on its own key, a lookup on it finds the batch's rows,
+    and a keyed upsert on it still merges."""
+    from datapipelinerepo_spark.io import TableStore
+    from datapipelinerepo_spark.streaming.ingest import cdc_ingest_stream
+
+    src = tmp_path / "cdc_in"
+    src.mkdir()
+    store = TableStore(spark, str(tmp_path / "store"))
+    ckpt = str(tmp_path / "ckpt")
+    schema = "k long, price double, status string"
+    store.overwrite_keyed(
+        spark.createDataFrame(
+            [(k, float(k), f"s{k}") for k in range(1, 9)], schema
+        ),
+        "dim_current", "status", n_buckets=4,
+    )
+    (src / "b1.json").write_text(
+        "\n".join(
+            json.dumps(d)
+            for d in [
+                {"k": 1, "seq": 1, "op": "U", "price": 11.0, "status": "A"},
+                {"k": 2, "seq": 1, "op": "D", "price": 0.0, "status": "X"},
+                {"k": 9, "seq": 1, "op": "U", "price": 90.0, "status": "N"},
+            ]
+        )
+    )
+    stream = spark.readStream.schema(
+        "k long, seq long, op string, price double, status string"
+    ).json(str(src))
+    cdc_ingest_stream(stream, store, ckpt, key="k", seq_col="seq").awaitTermination()
+
+    def rows():
+        return {
+            r["k"]: (r["price"], r["status"])
+            for r in store.read("dim_current").collect()
+        }
+
+    want = {k: (float(k), f"s{k}") for k in range(3, 9)}
+    want.update({1: (11.0, "A"), 9: (90.0, "N")})
+    assert rows() == want
+    assert store.keyed_spec("dim_current")[0] == ["status"]
+    assert {
+        r["k"] for r in store.lookup("dim_current", ["A", "N", "s3"]).collect()
+    } == {1, 9, 3}
+    store.upsert(
+        spark.createDataFrame([(30, 3.5, "s3")], schema), "dim_current", "status"
+    )
+    del want[3]
+    want[30] = (3.5, "s3")
+    assert rows() == want
+
+
 def test_cdc_ingest_stream_versioned_table_keeps_snapshots(spark, tmp_path):
     """Streaming CDC into a snapshot-versioned keyed dimension: the
     per-bucket maintenance routes through the manifest (logical
